@@ -575,7 +575,7 @@ def _extract_cascade_oracled(spark: SparkSession, sf_dir: str) -> DataFrame:
     profile ties the full ensemble per url (main-content blocks are
     long), so gate-accepted and retried documents alike must reproduce
     the oracle's rows exactly — a full driver-verified end-to-end gate
-    of the cascade plan (two mapInPandas passes + semi join + merge)."""
+    of the cascade plan (two mapInArrow passes + semi join + merge)."""
     _prep(spark)
     from webextract import pipeline
     pipeline.ship_package(spark)

@@ -186,7 +186,7 @@ def warc_corpus(n_archives: int, per_archive: int) -> tuple[str, int]:
 def run_warc_bench(spark, n_archives: int = 96,
                    per_archive: int = 6250) -> dict:
     """Fused raw-archive extraction (warc.extract_warc: WARC parse +
-    the whole extraction oracle in ONE mapInPandas stage) over the
+    the whole extraction oracle in ONE mapInArrow stage) over the
     multi-archive fixture. WARC.gz is not splittable, so parallelism is
     file-granular — n_archives/cores waves; disk MB/s is the headline
     (the number a crawl-ingest pipeline is sized by)."""

@@ -1,0 +1,133 @@
+"""The fused ``mapInArrow`` body and what sits in front of it: its Arrow
+output types, its in-process (pandas) form, the worker import-path trim,
+and the ``with_bucket`` range guard."""
+
+import importlib
+import sys
+import zipfile
+import zipimport
+
+import pandas as pd
+import pyarrow as pa
+import pytest
+from pyspark.sql.pandas.types import to_arrow_schema
+
+from webextract import fixtures, oracle, pipeline, udfs
+
+
+def test_arrow_types_match_the_declared_schema(spark):
+    declared = to_arrow_schema(
+        spark.createDataFrame([], udfs.EXTRACTED_FIELDS_SCHEMA).schema)
+    assert declared.names == udfs._EXTRACTED_NAMES
+    assert declared.field("spans").type == udfs.SPANS_PA
+    assert declared.field("blocks").type == udfs.BLOCKS_PA
+
+
+def _import_state():
+    cache = dict(sys.path_importer_cache)
+    return list(sys.path), cache
+
+
+def _same_import_state(before) -> bool:
+    path, cache = before
+    return sys.path == path and all(
+        sys.path_importer_cache.get(k) is v for k, v in cache.items())
+
+
+@pytest.fixture
+def zipped_imports(tmp_path):
+    """Give this process what the trim drops in a worker: a ``.jar`` on
+    ``sys.path`` with no Python in it, and a sub-package zipimporter."""
+    jar, pkg = str(tmp_path / "nopython.jar"), str(tmp_path / "pkg.zip")
+    with zipfile.ZipFile(jar, "w") as z:
+        z.writestr("org/Example.class", b"")
+    with zipfile.ZipFile(pkg, "w") as z:
+        z.writestr("wxzipprobe/__init__.py", "")
+        z.writestr("wxzipprobe/sub/__init__.py", "")
+    saved = list(sys.path)
+    sys.path[:0] = [jar, pkg]
+    try:
+        importlib.import_module("wxzipprobe.sub")
+        yield
+    finally:
+        sys.path[:] = saved
+        for name in ("wxzipprobe.sub", "wxzipprobe"):
+            sys.modules.pop(name, None)
+        for key in [k for k in sys.path_importer_cache
+                    if k.startswith(str(tmp_path))]:
+            del sys.path_importer_cache[key]
+
+
+def test_extract_batches_in_process_takes_pandas_and_keeps_imports(
+        zipped_imports):
+    before = _import_state()
+    assert any(isinstance(f, zipimport.zipimporter) and f.prefix
+               for f in before[1].values())
+    docs = [fixtures.gen_page(i) for i in range(12)]
+    frame = pd.DataFrame({
+        "url": [d[0] for d in docs],
+        "warc_ts": [d[1] for d in docs],
+        "bucket": pd.array([3] * len(docs), dtype="int32"),
+        "html": [d[2] for d in docs],
+    })
+    rows = pa.Table.from_batches(
+        list(udfs.extract_batches(iter([frame])))).to_pylist()
+    assert len(rows) == len(docs)
+    for (url, _ts, payload, _t, _l), row in zip(docs, rows):
+        want = oracle.extract_document(url, payload)
+        assert {k: row[k] for k in want} == want
+        assert row["bucket"] == 3 and row["bytes_in"] == len(payload)
+    assert _same_import_state(before)
+
+
+def test_worker_import_path_trim(spark, pages_parquet):
+    """After an extraction, a Python worker holds no ``.jar`` on
+    ``sys.path`` and no sub-package zipimporter; the driver's import
+    state is untouched."""
+    before = _import_state()
+    pages = spark.read.parquet(pages_parquet).limit(64)
+    pipeline.run_extract(pages).write.format("noop").mode("overwrite").save()
+
+    def probe(it):
+        import sys
+        import zipimport
+
+        import pyarrow as pa
+
+        from webextract import udfs
+        # whichever worker runs this task, a fused body has run in it
+        for _ in udfs.extract_batches(it):
+            pass
+        yield pa.RecordBatch.from_pylist([{
+            "jars": [p for p in sys.path if p.endswith(".jar")],
+            "prefixed": sorted(
+                k for k, f in sys.path_importer_cache.items()
+                if isinstance(f, zipimport.zipimporter) and f.prefix),
+        }], schema=pa.schema([("jars", pa.list_(pa.string())),
+                              ("prefixed", pa.list_(pa.string()))]))
+
+    prepped = pipeline.with_bucket(
+        spark.read.parquet(pages_parquet).limit(8)
+        .select("url", "warc_ts", "html")).repartition(4)
+    rows = prepped.mapInArrow(
+        probe, "jars array<string>, prefixed array<string>").collect()
+    assert len(rows) == 4
+    for r in rows:
+        assert r["jars"] == [] and r["prefixed"] == [], r
+    assert _same_import_state(before)
+
+
+def test_with_bucket_guards_a_kept_bucket_column(spark):
+    df = spark.createDataFrame(
+        [("https://a.example/x", 3), ("https://a.example/y", 63)],
+        "url string, bucket int")
+    assert [r["bucket"] for r in pipeline.with_bucket(df, 64).collect()] \
+        == [3, 63]
+    # lazy: building the plan runs nothing; the stale row fails the job
+    stale = pipeline.with_bucket(df, 8)
+    with pytest.raises(Exception, match=r"bucket outside \[0, 8\): 63"):
+        stale.collect()
+    nulls = pipeline.with_bucket(
+        spark.createDataFrame([("u", None)], "url string, bucket int"), 8)
+    with pytest.raises(Exception, match="NULL"):
+        nulls.collect()

@@ -48,7 +48,7 @@ applicable to any user corpus):
 
 The byte-identical contract: every operator on the golden text path runs
 the SAME Python code in the single-node oracle and inside the Spark
-pandas UDFs (shared modules), so the Spark output is byte-identical per
+Arrow UDF bodies (shared modules), so the Spark output is byte-identical per
 url to the oracle by construction — divergence means a vectorization bug.
 """
 

@@ -194,7 +194,8 @@ def dedup_paragraphs(df: DataFrame, id_col: str = "doc_id",
         F.posexplode(combo).alias("_pos", "_para"),
     ).withColumn(
         "_pkey",
-        # 'S:'-prefixed keys are 34+ chars — disjoint from 32-char md5s
+        # 'S:'-prefixed keys never collide with md5 keys: an md5 is hex
+        # digits only, so no md5 holds the ':' of the 'S:' prefix
         F.when(F.col("_pos") == 0,
                F.concat(F.lit("S:"), F.col(id_col).cast("string")))
         .otherwise(F.md5("_para")))

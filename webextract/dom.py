@@ -37,7 +37,6 @@ NAMED_ENTITIES = {
 }
 
 _ENTITY_RE = re.compile(r"&(#x[0-9a-fA-F]{1,6}|#[0-9]{1,7}|[a-zA-Z]{1,12});")
-_TAGNAME_RE = re.compile(r"[a-zA-Z][a-zA-Z0-9:-]*")
 _CHARSET_RE = re.compile(rb"charset\s*=\s*[\"']?([a-zA-Z0-9_\-]+)")
 
 
@@ -109,83 +108,84 @@ class Dom:
             i = self.parent[i]
 
 
+# One token per match: the next '<' and what follows it. Groups: 1
+# ``!--`` (comment), 2 close-tag name, 3 open-tag name, 4 the open tag's
+# attributes through its real '>' (quoted values may hold '>'; None when
+# the tag never closes, which consumes the rest of the input). ``!``/``?``
+# (doctype, PI) match with no group set, and a '<' that starts none of
+# these matches alone (stray, kept as text).
+_TOKEN_RE = re.compile(
+    r"<(?:(!--)|[!?]|/([a-zA-Z][a-zA-Z0-9:-]*+)?"
+    r"|([a-zA-Z][a-zA-Z0-9:-]*+)((?:[^>\"']++|\"[^\"]*+\"|'[^']*+')*+>)?)?")
+
+
 def parse_html(payload: bytes) -> Dom:
     """Tokenize + build the DOM in one pass. Always terminates; malformed
-    input degrades to text/skip, never raises (C2: failures are data)."""
+    input degrades to text/skip, never raises (C2: failures are data).
+    Linear in the input: one ``_TOKEN_RE`` search per tag, and per-name
+    counts of open elements make an unmatched close tag one lookup."""
     s = decode_payload(payload)
     n = len(s)
     dom = Dom()
+    tag, parent = dom.tag, dom.parent
     stack: list[int] = [0]  # open-element node indices, root always open
-    anchor_depth = 0
+    open_count: dict[str, int] = {}  # tag name → its elements on the stack
     low: str | None = None  # lazily-built lowercase copy for rawtext scans
+    search = _TOKEN_RE.search
     i = 0
     while i < n:
-        lt = s.find("<", i)
-        if lt == -1:
-            _add_text(dom, stack[-1], s[i:], anchor_depth)
+        m = search(s, i)
+        if m is None:
+            _add_text(dom, stack[-1], s[i:], open_count.get("a", 0))
             break
+        lt = m.start()
         if lt > i:
-            _add_text(dom, stack[-1], s[i:lt], anchor_depth)
-        if lt + 1 >= n:
-            break
-        c = s[lt + 1]
-        if c == "!":
-            if s.startswith("<!--", lt):
+            _add_text(dom, stack[-1], s[i:lt], open_count.get("a", 0))
+        k = m.lastindex
+        if k is None or k == 1:
+            if lt + 1 >= n:
+                break
+            c = s[lt + 1]
+            if k == 1:  # comment
                 end = s.find("-->", lt + 4)
                 i = n if end == -1 else end + 3
-            else:  # doctype etc.
+            elif c == "!" or c == "?":  # doctype, processing instruction
                 end = s.find(">", lt + 2)
                 i = n if end == -1 else end + 1
+            elif c == "/":  # close tag without a name
+                end = s.find(">", lt + 1)
+                if end == -1:
+                    break
+                i = end + 1
+            else:  # stray '<' — literal text
+                _add_text(dom, stack[-1], "<", open_count.get("a", 0))
+                i = lt + 1
             continue
-        if c == "?":  # processing instruction
-            end = s.find(">", lt + 2)
-            i = n if end == -1 else end + 1
-            continue
-        if c == "/":  # close tag
-            m = _TAGNAME_RE.match(s, lt + 2)
+        if k == 2:  # close tag
             end = s.find(">", lt + 1)
             if end == -1:
                 break
             i = end + 1
-            if m:
-                name = m.group(0).lower()
-                # pop to the matching open element if present (soup-tolerant)
-                for d in range(len(stack) - 1, 0, -1):
-                    if dom.tag[stack[d]] == name:
-                        for p in range(len(stack) - 1, d - 1, -1):
-                            if dom.tag[stack[p]] == "a":
-                                anchor_depth -= 1
-                        del stack[d:]
+            name = m.group(2).lower()
+            # pop to the innermost open element of that name, if any
+            # (soup-tolerant); an unmatched close tag is ignored
+            if open_count.get(name):
+                while True:
+                    top = tag[stack.pop()]
+                    open_count[top] -= 1
+                    if top == name:
                         break
             continue
-        m = _TAGNAME_RE.match(s, lt + 1)
-        if not m:  # stray '<' — literal text
-            _add_text(dom, stack[-1], "<", anchor_depth)
-            i = lt + 1
-            continue
-        name = m.group(0).lower()
-        # scan attributes respecting quotes, find the real '>' — jump
-        # between delimiters with C-speed str.find instead of per-char
-        j = m.end()
-        self_close = False
-        while j < n:
-            gt = s.find(">", j)
-            if gt == -1:
-                j = n
-                break
-            dq = s.find('"', j, gt)
-            sq = s.find("'", j, gt)
-            if dq == -1 and sq == -1:
-                self_close = s[gt - 1] == "/"
-                j = gt + 1
-                break
-            p = dq if sq == -1 else (sq if dq == -1 else min(dq, sq))
-            q = s.find(s[p], p + 1)
-            j = n if q == -1 else q + 1
-        node = len(dom.tag)
-        dom.parent.append(stack[-1])
-        dom.tag.append(name)
-        i = j
+        name = m.group(3).lower()
+        if k == 3:  # no closing '>' (or an unclosed quote): rest is tag
+            i = n
+            self_close = False
+        else:
+            i = m.end()
+            self_close = s[i - 2] == "/"
+        node = len(tag)
+        parent.append(stack[-1])
+        tag.append(name)
         if name in RAWTEXT_ELEMENTS and not self_close:
             # raw-text mode: content is NOT document text — skip to close tag
             if low is None:
@@ -199,8 +199,7 @@ def parse_html(payload: bytes) -> Dom:
         if self_close or name in VOID_ELEMENTS:
             continue
         stack.append(node)
-        if name == "a":
-            anchor_depth += 1
+        open_count[name] = open_count.get(name, 0) + 1
     return dom
 
 

@@ -58,13 +58,14 @@ Divergences decided by spec (SURVEY.md §7.4 — goldens pin these):
   value-cleanup shape, zero model inference
 
 Everything here is pure Python ``re`` — the same module runs in the
-single-node oracle and inside the Spark pandas UDF, never mixed with Java
+single-node oracle and inside the Spark UDF bodies, never mixed with Java
 regex on the golden path (SURVEY.md §4.3).
 """
 
 from __future__ import annotations
 
 import re
+from bisect import bisect_right
 
 DOC_BIA = "THONG_TIN_HO_SO"
 DOC_MUCLUC = "MUC_LUC_TAI_LIEU"
@@ -200,16 +201,35 @@ ENTITY_LABELS_FOR_TYPE: dict[str, tuple[str, ...]] = {
 
 _SENT_RUN = re.compile(r"[^.!?;\n]+")  # F11 complement, keeps offsets
 
-_KW_PRESENT: dict[str, re.Pattern] = {}
+_KW_SCAN: dict[str, re.Pattern] = {}
 _KW_STRIP: dict[str, re.Pattern] = {}
 
 
-def _kw_present_re(kw: str) -> re.Pattern:
-    p = _KW_PRESENT.get(kw)
+def _kw_scan_re(kw: str) -> re.Pattern:
+    """Case-insensitive occurrences of ``kw`` not followed by a word
+    char. The left half of the whole-word test, ``(?<!\\w)``, is
+    ``_keyword_starts``'s job: a pattern that opens with a lookbehind
+    is tried at every position and scans ~3× slower."""
+    p = _KW_SCAN.get(kw)
     if p is None:
-        p = _KW_PRESENT[kw] = re.compile(
-            _B_L + "(?:" + re.escape(kw) + ")" + _B_R, re.IGNORECASE)
+        p = _KW_SCAN[kw] = re.compile(re.escape(kw) + r"(?!\w)",
+                                      re.IGNORECASE)
     return p
+
+
+def _keyword_starts(text: str, kw: str) -> list[int]:
+    """Start of every whole-word, case-insensitive occurrence of ``kw``
+    in ``text`` — the matches of ``(?<!\\w)kw(?!\\w)``, overlapping ones
+    included (``str.isalnum() or '_'`` is exactly ``re``'s ``\\w``)."""
+    search = _kw_scan_re(kw).search
+    out: list[int] = []
+    pos = 0
+    while (m := search(text, pos)) is not None:
+        pos = m.start()
+        if pos == 0 or not (text[pos - 1].isalnum() or text[pos - 1] == "_"):
+            out.append(pos)
+        pos += 1
+    return out
 
 
 def _kw_strip_re(kw: str) -> re.Pattern:
@@ -271,19 +291,41 @@ def value_from_sentence(sentence: str, field_type: str,
 
 def proximity_candidate(
     sentences: list[tuple[str, int]], text: str, name: str, field_type: str,
+    hits: dict[str, set[int]] | None = None,
 ) -> tuple[str, float, int, int]:
     """M8's deterministic analogue: similarity = fraction of the field's
     keywords present in the sentence (word-boundary, case-insensitive);
-    argmax sentence, threshold > 0.6, confidence = min(sim, 0.8)."""
+    argmax sentence, threshold > 0.6, confidence = min(sim, 0.8).
+
+    ``sentences`` must be ``sentences_of(text)``. Each keyword is found
+    by ONE scan of the whole text, and its hits map to sentences by
+    bisecting the sentence starts: a keyword starts and ends with a
+    word char and holds no sentence delimiter, and the characters
+    around a sentence (delimiters, stripped whitespace) are non-word,
+    so a whole-word hit in the text is a whole-word hit in the
+    sentence that contains it, and vice versa. ``hits`` caches the
+    sentence ids per keyword across the fields of one document."""
     keywords = KEYWORDS.get(name, ())
     if not keywords or not sentences:
         return "", 0.0, -1, -1
-    pats = [_kw_present_re(kw) for kw in keywords]
-    best_sim, best_idx = 0.0, -1
-    for idx, (sent, _) in enumerate(sentences):
-        sim = sum(1 for p in pats if p.search(sent)) / len(keywords)
-        if sim > best_sim:  # strict: first sentence keeps ties (argmax)
-            best_sim, best_idx = sim, idx
+    if hits is None:
+        hits = {}
+    counts: dict[int, int] = {}
+    starts = None
+    for kw in keywords:
+        ids = hits.get(kw)
+        if ids is None:
+            if starts is None:
+                starts = [st for _, st in sentences]
+            ids = hits[kw] = {bisect_right(starts, p) - 1
+                              for p in _keyword_starts(text, kw)}
+        for idx in ids:
+            counts[idx] = counts.get(idx, 0) + 1
+    if not counts:
+        return "", 0.0, -1, -1
+    # strict argmax: the first sentence keeps ties
+    best_idx = min(counts, key=lambda idx: (-counts[idx], idx))
+    best_sim = counts[best_idx] / len(keywords)
     if best_sim <= PROXIMITY_THRESHOLD:
         return "", 0.0, -1, -1
     sent, sent_start = sentences[best_idx]
@@ -324,9 +366,12 @@ def entity_candidate(
 def extract_field(
     text: str, name: str, field_type: str,
     sentences: list[tuple[str, int]] | None = None,
+    hits: dict[str, set[int]] | None = None,
 ) -> tuple[str, float, int, int, str]:
     """Arm A: patterns → keyword proximity → generic fallbacks.
-    → (value, confidence, start, end, method); start=end=-1 on miss."""
+    → (value, confidence, start, end, method); start=end=-1 on miss.
+    ``sentences``/``hits``: the document's sentence split and keyword
+    cache, shared across its fields (see proximity_candidate)."""
     for pat in _COMPILED.get(name, ()):
         m = pat.search(text)
         if m and m.group(1):
@@ -335,7 +380,8 @@ def extract_field(
                 return value, 0.8, s, e, "pattern"
     if sentences is None:
         sentences = sentences_of(text)
-    value, conf, s, e = proximity_candidate(sentences, text, name, field_type)
+    value, conf, s, e = proximity_candidate(sentences, text, name, field_type,
+                                            hits)
     if value:
         return value, conf, s, e, "proximity"
     if field_type == "DATE":
@@ -404,10 +450,12 @@ def extract_spans(text: str, doc_type: str,
         return spans, sum(confs) / len(confs)
     sentences = sentences_of(text)
     firsts = entity_firsts(text)
+    hits: dict[str, set[int]] = {}
     spans: list[dict] = []
     confs: list[float] = []
     for name, ftype, required in DOC_FIELDS.get(doc_type, DOC_FIELDS[DOC_VANBAN]):
-        value, conf, s, e, method = extract_field(text, name, ftype, sentences)
+        value, conf, s, e, method = extract_field(text, name, ftype,
+                                                  sentences, hits)
         e_value, e_conf, e_s, e_e = entity_candidate(firsts, ftype)
         if e_conf > conf:
             value, conf, s, e, method = e_value, e_conf, e_s, e_e, "entity"

@@ -1,7 +1,7 @@
 """Single-node pure-Python oracle: bytes → extracted record.
 
-This is the golden source (SURVEY.md §5.2): the Spark pipeline's pandas
-UDFs call EXACTLY these functions per document, so Spark output is
+This is the golden source (SURVEY.md §5.2): the Spark pipeline's Arrow
+UDF bodies call EXACTLY these functions per document, so Spark output is
 byte-identical per url by construction. It mirrors the reference's
 pipeline compose (ocr-ai-service/app/services/document_service.py:90-182,
 C1): validate → detect type → parse → best-of assemble → field extract,

@@ -34,9 +34,11 @@ from pyspark.sql import DataFrame
 # leftmost-match + greedy semantics instead:
 # - ip: `{2,}` middle octets + unbounded final digit group swallow a
 #   5-octet string or a digit tail whole ("1.2.3.4.5" and "1.2.3.45678"
-#   are each ONE <IP>, never "<IP>.5"). Known residual (documented, not
-#   an IPv4 shape): a LEADING group longer than 3 digits matches from
-#   its last 3 digits ("1234.5.6.7" → "1<IP>").
+#   are each ONE <IP>, never "<IP>.5"). Known residuals (documented, not
+#   IPv4 shapes): a LEADING group longer than 3 digits matches from
+#   its last 3 digits ("1234.5.6.7" → "1<IP>"), and an INTERIOR group
+#   longer than 3 digits ends the match, whose final group then takes
+#   that group's digits ("1.2.3.4567.8" → "<IP>.8").
 # - phone: `{8,}` (9+ digits, single space/dot/dash separators) —
 #   a 20-digit run is one <PHONE>, no digit tail; a leftmost scan
 #   cannot start mid-run, and greed cannot stop mid-run.

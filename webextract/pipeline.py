@@ -2,7 +2,10 @@
 
 Re-expresses the reference's pipeline compose
 (ocr-ai-service/app/services/document_service.py:90-182, C1) as one lazy
-DataFrame plan with three stages (SURVEY.md §3.1):
+DataFrame plan. The default plan runs the whole per-document oracle in
+ONE fused ``mapInArrow`` pass (udfs.extract_batches: Arrow record
+batches in and out, no pandas conversion). The staged plan, kept for
+reprocess-from-checkpoint (C4), has three stages (SURVEY.md §3.1):
 
   Stage 1 ``parse``     mapInPandas(oracle.parse_candidates)  — Python
   Stage 2 ``assemble``  native Catalyst: best-of argmax (O3) over the
@@ -129,10 +132,19 @@ def with_bucket(df: DataFrame, n_buckets: int = DEFAULT_BUCKETS,
     page co-locate in a bucket — runner canonical_keys). When ``key``
     is None and the frame ALREADY carries a bucket column, it is kept:
     callers like the runner pre-bucket with their chosen key, and the
-    extract paths must not silently re-key it back to raw url."""
+    extract paths must not silently re-key it back to raw url. A kept
+    bucket outside ``[0, n_buckets)`` (or NULL) — a stale column from a
+    different bucket count — fails the job when the row is evaluated:
+    the guard is a lazy ``raise_error`` in the projection, no extra
+    Spark action."""
     if key is None:
         if "bucket" in df.columns:
-            return df
+            b = F.col("bucket")
+            return df.withColumn("bucket", F.when(
+                (b >= 0) & (b < n_buckets), b.cast("int")).otherwise(
+                F.raise_error(F.concat(
+                    F.lit(f"bucket outside [0, {n_buckets}): "),
+                    F.coalesce(b.cast("string"), F.lit("NULL"))))))
         key = F.col("url")
     return df.withColumn(
         "bucket", F.pmod(F.xxhash64(key), F.lit(n_buckets)).cast("int")
@@ -208,8 +220,10 @@ def run_extract_full(pages: DataFrame, n_buckets: int = DEFAULT_BUCKETS,
     """pages → extracted, keeping the lineage side-band columns
     (bucket, bytes_in, _wall_ms).
 
-    fused=True (default): ONE mapInPandas pass running the complete
-    per-document oracle — candidate texts never cross the Arrow boundary.
+    fused=True (default): ONE mapInArrow pass running the complete
+    per-document oracle (udfs.extract_batches) — candidate texts never
+    cross the Arrow boundary, and no pandas frame is built on either
+    side of it.
     fused=False: the 3-stage path (parse pUDF → native HOF argmax →
     fields pUDF) used where stage outputs must materialize separately
     (reprocess-from-checkpoint, C4) — byte-identical output by
@@ -238,7 +252,7 @@ def run_extract_full(pages: DataFrame, n_buckets: int = DEFAULT_BUCKETS,
         prepped = prepped.repartition(int(n_parts), "bucket")
     body = (udfs.extract_batches if profiles is None and not patterns_only
             else udfs.make_extract_batches(profiles, patterns_only))
-    return prepped.mapInPandas(body, udfs.EXTRACTED_FIELDS_SCHEMA)
+    return prepped.mapInArrow(body, udfs.EXTRACTED_FIELDS_SCHEMA)
 
 
 def run_extract(pages: DataFrame, n_buckets: int = DEFAULT_BUCKETS,
@@ -271,7 +285,7 @@ def run_extract_cascade_in_batch_full(
         prepped = prepped.repartition(int(n_parts), "bucket")
     body = udfs.make_extract_batches(cheap_profiles, cheap_fields,
                                      cascade_accept=accept)
-    return prepped.mapInPandas(body, udfs.EXTRACTED_FIELDS_SCHEMA)
+    return prepped.mapInArrow(body, udfs.EXTRACTED_FIELDS_SCHEMA)
 
 
 def run_extract_cascade_in_batch(pages: DataFrame, accept: float = 0.7,
@@ -279,7 +293,7 @@ def run_extract_cascade_in_batch(pages: DataFrame, accept: float = 0.7,
                                  n_buckets: int = DEFAULT_BUCKETS,
                                  cheap_fields: bool = False) -> DataFrame:
     """M12 cascade, IN-BATCH plan (r4): the gate/escalation runs per
-    document inside the single fused ``mapInPandas`` pass
+    document inside the single fused ``mapInArrow`` pass
     (oracle.extract_document_cascade), so the plan is IDENTICAL to the
     fixed path — zero shuffle, no pass-1 cache materialization, no
     second input scan, no merge joins. Output is row-identical to

@@ -1,11 +1,17 @@
 """Arrow-batched UDF bodies wrapping the oracle components.
 
-Each function here is a ``mapInPandas`` body: it receives an iterator of
-pandas batches for ONE physical partition and yields transformed batches.
-Per-row Python exists only *inside* a batch loop over documents (the cost
-model SURVEY.md §7.2 accepts: Arrow in/out, no Python row UDFs, no RDDs).
+The fused body ``extract_batches`` is a ``mapInArrow`` body: it receives
+an iterator of pyarrow record batches for ONE physical partition and
+yields record batches in the ``EXTRACTED_FIELDS_SCHEMA`` layout. url,
+warc_ts and bucket pass through as Arrow columns, the payloads are read
+with one ``to_pylist()`` and every output column is built with
+``pa.array(..., type)`` — no pandas frame on either side. The staged
+path's bodies (``parse_batches``, ``fields_batches``) are ``mapInPandas``
+bodies. Per-row Python exists only *inside* a batch loop over documents
+(the cost model SURVEY.md §7.2 accepts: Arrow in/out, no Python row
+UDFs, no RDDs).
 
-Lineage side-band (SURVEY.md §4.3): both stage bodies stamp
+Lineage side-band (SURVEY.md §4.3): the stage bodies stamp
 ``_wall_ms`` = cumulative wall time of this partition's processing so the
 driver can aggregate per-partition wall time without a second pass
 (reference analogue: the request-latency middleware,
@@ -14,10 +20,15 @@ ocr-ai-service/app/main.py:53-68, C5).
 
 from __future__ import annotations
 
+import sys
 import time
+import zipfile
+import zipimport
 from collections.abc import Iterator
 
 import pandas as pd
+import pyarrow as pa
+from pyspark import TaskContext
 
 from . import oracle
 from .fields import extract_spans
@@ -46,6 +57,55 @@ EXTRACTED_FIELDS_SCHEMA = (
     "confidence double, n_pages int, bytes_in bigint, error string, "
     "_wall_ms double"
 )
+_EXTRACTED_NAMES = [c.split()[0] for c in EXTRACTED_FIELDS_SCHEMA.split(", ")]
+
+# Arrow types of the EXTRACTED_FIELDS_SCHEMA columns the fused body
+# builds (url, warc_ts and bucket pass through from its input)
+SPANS_PA = pa.list_(pa.struct([
+    ("name", pa.string()), ("value", pa.string()),
+    ("field_type", pa.string()), ("start", pa.int64()), ("end", pa.int64()),
+    ("confidence", pa.float64()), ("is_required", pa.bool_()),
+    ("method", pa.string())]))
+BLOCKS_PA = pa.list_(pa.struct([
+    ("page", pa.int32()), ("score", pa.float64()), ("n_chars", pa.int32())]))
+
+
+def _holds_python(archive: str) -> bool:
+    names = zipimport._zip_directory_cache.get(archive)
+    if names is None:
+        with zipfile.ZipFile(archive) as z:
+            names = z.namelist()
+    return any(n.endswith((".py", ".pyc")) for n in names)
+
+
+def trim_worker_imports() -> None:
+    """Shrink what ``importlib.invalidate_caches`` re-reads in this
+    Python worker. PySpark calls it at the start of every task, and on
+    CPython 3.11 each cached zipimporter then re-reads its whole archive
+    directory: a worker holds two over the spark-core jar (no Python in
+    it; it is on PYTHONPATH for Spark builds that ship PySpark inside the
+    jar) and one per imported sub-package of pyspark.zip. With Spark
+    4.1.2 on a 4-core x86-64 VM that was 17 importers and ~185 ms of
+    CPU per task, cut to 3 importers and ~10 ms.
+
+    Drops the ``.jar`` entries that hold no Python from ``sys.path`` and
+    every sub-package zipimporter (non-empty ``prefix``) from
+    ``sys.path_importer_cache``; a later import recreates the latter
+    from the archive directory already in memory. ``sys.modules`` is
+    left alone. Only inside a Spark task, so a driver calling a body
+    in-process keeps its import state. Cheap enough to run at every
+    fused-body start (a scan of a few dozen entries), which also drops
+    importers that other UDF bodies in a reused worker re-created."""
+    if TaskContext.get() is None:
+        return
+    cache = sys.path_importer_cache
+    jars = {p for p in sys.path if p.endswith(".jar") and not _holds_python(p)}
+    if jars:
+        sys.path[:] = [p for p in sys.path if p not in jars]
+    for key, finder in list(cache.items()):
+        if key in jars or (isinstance(finder, zipimport.zipimporter)
+                           and finder.prefix):
+            del cache[key]
 
 
 def make_extract_batches(profiles: tuple[str, ...] | None = None,
@@ -57,23 +117,25 @@ def make_extract_batches(profiles: tuple[str, ...] | None = None,
     (oracle.extract_document_cascade: cheap pass, below-gate documents
     escalate to the full ensemble inside the same batch — ``profiles``/
     ``patterns_only`` then describe the cheap pass). The closure ships
-    to executors via cloudpickle like any mapInPandas body."""
-    def body(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    to executors via cloudpickle like any mapInArrow body."""
+    def body(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         return extract_batches(it, profiles, patterns_only, cascade_accept)
     return body
 
 
-def extract_batches(it: Iterator[pd.DataFrame],
+def extract_batches(it: Iterator[pa.RecordBatch | pd.DataFrame],
                     profiles: tuple[str, ...] | None = None,
                     patterns_only: bool = False,
                     cascade_accept: float | None = None
-                    ) -> Iterator[pd.DataFrame]:
+                    ) -> Iterator[pa.RecordBatch]:
     """Fused single-pass body: the whole per-document pipeline
     (oracle.extract_document: parse → best-of → fields) in ONE Python
     stage. Preferred for throughput: candidate texts never cross the
     Arrow boundary (the staged path ships every candidate profile's full
     text through two extra JVM↔Python hops — measured 2-3× slower).
-    Input batches carry url, warc_ts, bucket, html."""
+    Input batches carry url, warc_ts, bucket, html: Arrow record batches
+    (the mapInArrow body), or pandas frames from in-process callers."""
+    trim_worker_imports()
     t0 = time.monotonic()
     if cascade_accept is not None:
         def one(url, payload):
@@ -85,32 +147,29 @@ def extract_batches(it: Iterator[pd.DataFrame],
         def one(url, payload):
             return oracle.extract_document(url, payload, profiles,
                                            patterns_only)
-    for pdf in it:
-        payloads = pdf["html"]
-        recs = [
-            one(url, bytes(b) if b is not None else b"")
-            for url, b in zip(pdf["url"], payloads)
-        ]
-        out = pd.DataFrame(
-            {
-                "url": pdf["url"].values,
-                "warc_ts": pdf["warc_ts"].values,
-                "doc_type": [r["doc_type"] for r in recs],
-                "bucket": pdf["bucket"].values,
-                "status": [r["status"] for r in recs],
-                "text": [r["text"] for r in recs],
-                "spans": [r["spans"] for r in recs],
-                "blocks": [r["blocks"] for r in recs],
-                "confidence": [r["confidence"] for r in recs],
-                "n_pages": pd.array([r["n_pages"] for r in recs], dtype="int32"),
-                "bytes_in": pd.array(
-                    [len(b) if b is not None else 0 for b in payloads], dtype="int64"
-                ),
-                "error": [r["error"] for r in recs],
-            }
-        )
-        out["_wall_ms"] = (time.monotonic() - t0) * 1000.0
-        yield out
+    for batch in it:
+        if not isinstance(batch, pa.RecordBatch):
+            batch = pa.RecordBatch.from_pandas(batch, preserve_index=False)
+        payloads = batch.column("html").to_pylist()
+        recs = [one(url, b if b is not None else b"")
+                for url, b in zip(batch.column("url").to_pylist(), payloads)]
+        wall_ms = (time.monotonic() - t0) * 1000.0
+        yield pa.RecordBatch.from_arrays([
+            batch.column("url"),
+            batch.column("warc_ts"),
+            pa.array([r["doc_type"] for r in recs], pa.string()),
+            batch.column("bucket"),
+            pa.array([r["status"] for r in recs], pa.string()),
+            pa.array([r["text"] for r in recs], pa.string()),
+            pa.array([r["spans"] for r in recs], SPANS_PA),
+            pa.array([r["blocks"] for r in recs], BLOCKS_PA),
+            pa.array([r["confidence"] for r in recs], pa.float64()),
+            pa.array([r["n_pages"] for r in recs], pa.int32()),
+            pa.array([len(b) if b is not None else 0 for b in payloads],
+                     pa.int64()),
+            pa.array([r["error"] for r in recs], pa.string()),
+            pa.array([wall_ms] * len(recs), pa.float64()),
+        ], names=_EXTRACTED_NAMES)
 
 
 def parse_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
