@@ -1,12 +1,18 @@
-"""Adversarial input families for the HTML tokenizer: parse time at n
-and at 4n must grow about linearly (ratio ≤ 6, against 16 for a
-quadratic parser), and stay under a µs-per-byte ceiling."""
+"""Adversarial input families for the HTML tokenizer and the PDF
+content-stream tokenizer: parse time at n and at 4n must grow about
+linearly (ratio ≤ 6, against 16 for a quadratic parser), and stay under
+a µs-per-byte ceiling. FlateDecode streams inflate within a per-document
+budget: in budget they decode exactly as ``zlib.decompress``, past it
+the document is FAILED with bounded memory."""
 
+import gc
 import time
+import tracemalloc
+import zlib
 
 import pytest
 
-from webextract import dom
+from webextract import MAX_PAYLOAD_BYTES, dom, oracle, pdfrun
 
 N = 5000
 
@@ -23,11 +29,11 @@ FAMILIES = {
 }
 
 
-def _best_time(payload: bytes, reps: int = 3) -> float:
+def _best_time(payload: bytes, parse=dom.parse_html, reps: int = 3) -> float:
     best = float("inf")
     for _ in range(reps):
         t0 = time.perf_counter()
-        dom.parse_html(payload)
+        parse(payload)
         best = min(best, time.perf_counter() - t0)
     return best
 
@@ -39,3 +45,113 @@ def test_parse_html_is_linear(family):
     t_small, t_large = _best_time(small), _best_time(large)
     assert t_large / t_small <= 6, (family, t_small, t_large)
     assert t_large * 1e6 / len(large) < 5, (family, t_large, len(large))
+
+
+# ------------------------------------------------------------ PDF
+
+
+def _pdf(*streams: bytes, flate: bool = False) -> bytes:
+    """A one-page PDF whose page content is ``streams``, in order."""
+    ids = range(3, 3 + len(streams))
+    objs = [b"<< /Type /Pages /Kids [2 0 R] /Count 1 >>",
+            b"<< /Type /Page /Parent 1 0 R /Contents [%s] >>"
+            % b" ".join(b"%d 0 R" % i for i in ids)]
+    for st in streams:
+        objs.append(b"<< /Length %d%s >>\nstream\n%s\nendstream" % (
+            len(st), b" /Filter /FlateDecode" if flate else b"", st))
+    return b"%PDF-1.4\n" + b"".join(
+        b"%d 0 obj\n%s\nendobj\n" % (i, o) for i, o in enumerate(objs, 1))
+
+
+PDF_N = 200_000  # content-stream bytes
+
+# family → (content stream of about n bytes, µs/byte ceiling)
+PDF_FAMILIES = {
+    # bytes that start no token: skipped by one regex, not one Python
+    # loop turn each (~0.8 µs/byte)
+    "zero_runs": (lambda n: b"BT " + b"\x00" * n + b" ET", 0.15),
+    "ff_runs": (lambda n: b"BT " + b"\xff" * n + b" ET", 0.15),
+    # one text run per 7 bytes
+    "tj_runs": (lambda n: b"BT /F1 12 Tf 72 712 Td " + b"(a) Tj " * (n // 7)
+                + b"ET", 1.5),
+    # one literal string of escapes, decoded by the nested-string path
+    "escaped_string": (lambda n: b"BT (" + b"\\(" * (n // 2) + b") Tj ET",
+                       1.5),
+}
+
+
+@pytest.mark.parametrize("family", sorted(PDF_FAMILIES))
+def test_pdf_content_stream_is_linear(family):
+    make, ceiling = PDF_FAMILIES[family]
+    small, large = _pdf(make(PDF_N)), _pdf(make(4 * PDF_N))
+    parse = pdfrun.extract_pdf
+    # timed with the cyclic collector paused, as timeit does: tj_runs
+    # allocates a run per 7 bytes, and in a process whose heap earlier
+    # tests have grown, each full collection costs in the heap's size,
+    # not the input's
+    gc.collect()
+    gc.disable()
+    try:
+        t_small, t_large = _best_time(small, parse), _best_time(large, parse)
+    finally:
+        gc.enable()
+    assert t_large / t_small <= 6, (family, t_small, t_large)
+    assert t_large * 1e6 / len(large) < ceiling, (family, t_large, len(large))
+
+
+_TEXT = b"BT /F1 12 Tf 72 712 Td (Hello flate) Tj ET" * 40
+_DEFLATED = zlib.compress(_TEXT)
+
+FLATE_CASES = {
+    "whole": _DEFLATED,
+    "truncated": _DEFLATED[:-7],
+    "empty": b"",
+    "corrupt_header": b"\x00\x01" + _DEFLATED[2:],
+    "trailing_bytes": _DEFLATED + b"trailing garbage",
+}
+
+
+@pytest.mark.parametrize("case", sorted(FLATE_CASES))
+def test_inflate_matches_zlib_within_budget(case):
+    raw = FLATE_CASES[case]
+    try:
+        expected = zlib.decompress(raw)
+    except zlib.error as e:
+        with pytest.raises(ValueError) as got:
+            pdfrun._inflate(raw, MAX_PAYLOAD_BYTES)
+        assert str(got.value) == f"pdf: bad flate stream: {e}"
+    else:
+        assert pdfrun._inflate(raw, MAX_PAYLOAD_BYTES) == expected
+
+
+def test_truncated_flate_document_error_is_zlibs():
+    rec = oracle.extract_document("https://ex.org/t.pdf",
+                                  _pdf(_DEFLATED[:-7], flate=True))
+    assert rec["status"] == "FAILED"
+    assert rec["error"] == ("ValueError: pdf: bad flate stream: Error -5 "
+                            "while decompressing data: incomplete or "
+                            "truncated stream")
+
+
+def _zeros_deflated(n_mib: int) -> bytes:
+    c = zlib.compressobj(9)
+    return b"".join([c.compress(bytes(1 << 20)) for _ in range(n_mib)]
+                    + [c.flush()])
+
+
+@pytest.mark.parametrize("streams_mib", [(51,), (26, 26)],
+                         ids=["one_stream", "two_streams"])
+def test_over_budget_flate_fails_in_bounded_memory(streams_mib):
+    """The budget is MAX_PAYLOAD_BYTES of stream bytes per document, all
+    of its streams together; a stream that passes it is never held."""
+    payload = _pdf(*map(_zeros_deflated, streams_mib), flate=True)
+    assert len(payload) < MAX_PAYLOAD_BYTES // 100
+    tracemalloc.start()
+    try:
+        rec = oracle.extract_document("https://ex.org/bomb.pdf", payload)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert rec["status"] == "FAILED"
+    assert rec["error"] == "ValueError: pdf: stream exceeds budget"
+    assert peak < 1.2 * MAX_PAYLOAD_BYTES, peak

@@ -1,19 +1,25 @@
-"""Differential tests for the two rewritten oracle layers: the HTML
-tokenizer (dom.parse_html: one master-regex search per tag, per-name
-open-element counts) and the field proximity arm
-(fields.proximity_candidate: one whole-text scan per keyword, hits
-bisected onto sentences). Each is compared with the implementation it
-replaced, kept here as the reference: all five ``Dom`` arrays, and the
-whole proximity result, must be equal."""
+"""Differential tests for the rewritten oracle layers, each compared
+with the implementation it replaced, kept here as the reference:
+
+- the HTML tokenizer (dom.parse_html: one master-regex search per tag,
+  per-name open-element counts) — all five ``Dom`` arrays must be equal;
+- the field proximity arm (fields.proximity_candidate: one whole-text
+  scan per keyword, hits bisected onto sentences) — the whole result;
+- the field arms on the case fold (fields.fold: case-sensitive lowered
+  patterns on one folded copy, an exact proximity prefilter) — the
+  whole ``extract_spans`` result against the ``re.IGNORECASE`` arms;
+- the PDF content-stream tokenizer (pdfrun._tokens: one master-regex
+  match per token) — the whole token stream against the per-byte loop."""
 
 import re
+import sys
 
 from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from test_fuzz import _mutants
 from test_property import _KW_WORDS
-from webextract import dom, fields, fixtures
+from webextract import dom, fields, fixtures, oracle, pdfrun
 from webextract.dom import RAWTEXT_ELEMENTS, VOID_ELEMENTS, Dom, _add_text
 
 COMMON = dict(max_examples=300, deadline=None, derandomize=True)
@@ -226,3 +232,352 @@ def test_proximity_matches_reference_on_keyword_soup(parts, sep):
             assert fields.proximity_candidate(
                 sentences, text, name, ftype, hits) == \
                 reference_proximity_candidate(sentences, text, name, ftype)
+
+
+# ------------------------------------------------------------ case fold
+
+_REF_PATTERNS = {name: [re.compile(p, re.IGNORECASE) for p in pats]
+                 for name, pats in fields.PATTERNS.items()}
+_REF_ENTITIES = {
+    label: re.compile(fields._B_L + "(" + body + ")" + fields._B_R,
+                      re.IGNORECASE)
+    for label, body in fields.ENTITY_BODIES.items()}
+_REF_KW_SCAN: dict[str, re.Pattern] = {}
+
+
+def reference_keyword_starts(text, kw):
+    """The IGNORECASE whole-text keyword scan _keyword_starts replaced."""
+    if kw not in _REF_KW_SCAN:
+        _REF_KW_SCAN[kw] = re.compile(re.escape(kw) + r"(?!\w)",
+                                      re.IGNORECASE)
+    search = _REF_KW_SCAN[kw].search
+    out = []
+    pos = 0
+    while (m := search(text, pos)) is not None:
+        pos = m.start()
+        if pos == 0 or not (text[pos - 1].isalnum() or text[pos - 1] == "_"):
+            out.append(pos)
+        pos += 1
+    return out
+
+
+def reference_entity_firsts(text):
+    out = {}
+    for label, pat in _REF_ENTITIES.items():
+        m = pat.search(text)
+        out[label] = (m.group(1), m.start(1), m.end(1)) if m else None
+    return out
+
+
+def _reference_pattern_hit(text, name):
+    for pat in _REF_PATTERNS.get(name, ()):
+        m = pat.search(text)
+        if m and m.group(1):
+            value, s, e = fields._strip_span(text, m.start(1), m.end(1))
+            if value:
+                return value, s, e
+    return None
+
+
+def _reference_fallback(text, field_type):
+    pat, conf = {"DATE": (fields._DATE_FALLBACK, 0.6),
+                 "NUMERIC": (fields._NUM_FALLBACK, 0.4)}.get(field_type,
+                                                              (None, 0.0))
+    m = pat.search(text) if pat is not None else None
+    if m is None:
+        return "", 0.0, -1, -1, "none"
+    value, s, e = fields._strip_span(text, m.start(1), m.end(1))
+    return value, conf, s, e, "fallback"
+
+
+def reference_extract_spans(text, doc_type, patterns_only=False):
+    """extract_spans as it was before the fold: every arm IGNORECASE on
+    ``text``, the sentence split always made, the proximity arm always
+    run (in its per-sentence reference form)."""
+    registry = fields.DOC_FIELDS.get(doc_type,
+                                     fields.DOC_FIELDS[fields.DOC_VANBAN])
+    if not patterns_only:
+        sentences = fields.sentences_of(text)
+        firsts = reference_entity_firsts(text)
+    spans, confs = [], []
+    required_total = required_hit = 0
+    for name, ftype, required in registry:
+        hit = _reference_pattern_hit(text, name)
+        if hit is not None:
+            value, conf, s, e, method = hit[0], 0.8, hit[1], hit[2], "pattern"
+        else:
+            value, conf, s, e, method = "", 0.0, -1, -1, "none"
+        if hit is None and not patterns_only:
+            value, conf, s, e = reference_proximity_candidate(
+                sentences, text, name, ftype)
+            method = "proximity"
+            if not value:
+                value, conf, s, e, method = _reference_fallback(text, ftype)
+        if not patterns_only:
+            e_value, e_conf, e_s, e_e = fields.entity_candidate(firsts, ftype)
+            if e_conf > conf:
+                value, conf, s, e, method = e_value, e_conf, e_s, e_e, "entity"
+        spans.append({"name": name, "value": value, "field_type": ftype,
+                      "start": s, "end": e, "confidence": conf,
+                      "is_required": required, "method": method})
+        confs.append(conf)
+        if required:
+            required_total += 1
+            required_hit += conf > 0
+    hits = [c for c in confs if c > 0]
+    if not patterns_only:
+        return spans, sum(hits) / len(hits) if hits else 0.0
+    if not confs:
+        return spans, 0.0
+    if hits and required_total and required_hit == required_total:
+        return spans, sum(hits) / len(hits)
+    return spans, sum(confs) / len(confs)
+
+
+def _same_spans(text):
+    for doc_type in fields.DOC_FIELDS:
+        for patterns_only in (False, True):
+            assert fields.extract_spans(text, doc_type, patterns_only) == \
+                reference_extract_spans(text, doc_type, patterns_only), \
+                (doc_type, patterns_only, text[:200])
+
+
+# every code point (lone surrogates included) and its fold. str.lower()
+# depends on context only for Greek final sigma, which no pattern holds
+# and which re's classes treat like any other letter
+_ALL = "".join(map(chr, range(sys.maxunicode + 1)))
+_FOLDED = "".join(fields.fold(c) for c in _ALL)
+_SOURCES = ([p for pats in fields.PATTERNS.values() for p in pats]
+            + list(fields.ENTITY_BODIES.values())
+            + [kw for kws in fields.KEYWORDS.values() for kw in kws])
+
+
+def test_fold_is_one_char_per_char():
+    assert all(len(c) == 1 for c in map(fields.fold, _ALL))
+
+
+def test_fold_agrees_with_ignorecase_on_every_code_point():
+    """For each literal of the patterns' alphabet, and each character
+    class they use, the IGNORECASE form matches a code point exactly
+    where the lowered form matches its fold."""
+    alphabet = sorted({c for src in _SOURCES
+                       for c in re.sub(r"\\.", "", src) if c.isalpha()})
+    atoms = [re.escape(x) for x in alphabet]
+    atoms += sorted({m.group() for src in _SOURCES
+                     for m in re.finditer(r"\[(?:\\.|[^\]\\])*\]", src)})
+    atoms += [r"\w", r"\d", r"\s"]
+    # lowering a pattern must not turn an escape into another one
+    assert not [src for src in _SOURCES if re.search(r"\\[A-Z]", src)]
+    for atom in atoms:
+        ignorecase = [m.start() for m in re.finditer(atom, _ALL, re.I)]
+        folded = [m.start() for m in re.finditer(atom.lower(), _FOLDED)]
+        assert ignorecase == folded, (atom, sorted(
+            hex(i) for i in set(ignorecase) ^ set(folded))[:10])
+
+
+def test_keywords_are_folded():
+    for kws in fields.KEYWORDS.values():
+        assert all(kw == fields.fold(kw) for kw in kws), kws
+
+
+def test_extract_spans_matches_reference_on_fixture_texts():
+    for i in range(400):
+        url, _ts, payload, _t, _l = fixtures.gen_page(i)
+        _same_spans(oracle.extract_document(url, payload)["text"])
+
+
+@settings(**COMMON)
+@given(st.lists(_PROX_WORDS, max_size=40),
+       st.sampled_from([" ", "", "\n", ". ", "\t"]))
+@example(["số số hồ sơ", "mã số"], " ")
+def test_extract_spans_matches_reference_on_keyword_soup(parts, sep):
+    _same_spans(sep.join(parts))
+
+
+@settings(**COMMON)
+@given(st.lists(_KW_WORDS, max_size=40))
+def test_keyword_starts_match_reference(parts):
+    text = " ".join(parts)
+    low = fields.fold(text)
+    for kws in fields.KEYWORDS.values():
+        for kw in kws:
+            assert fields._keyword_starts(low, kw) == \
+                reference_keyword_starts(text, kw)
+
+
+# the literal heads of the field patterns, the keywords and the entity
+# heads, with the characters where str.lower() and re.IGNORECASE part
+# ways (İ ı ſ) or that fold onto ASCII or each other (K ẞ ß)
+_HEADS = sorted({re.match(r"[^\\(\[]*", p).group().strip()
+                 for pats in fields.PATTERNS.values() for p in pats}
+                | {kw for kws in fields.KEYWORDS.values() for kw in kws}
+                | {"phòng ban", "công ty", "Nguyễn Văn", "ngày"} - {""})
+_ODD = "İıſKẞß"
+
+
+@st.composite
+def _field_head(draw):
+    head = draw(st.sampled_from(_HEADS))
+    case = draw(st.sampled_from(["upper", "swapcase", "title", "mixed",
+                                 "none"]))
+    if case == "mixed":
+        flips = draw(st.lists(st.booleans(), min_size=len(head),
+                              max_size=len(head)))
+        head = "".join(c.upper() if f else c for c, f in zip(head, flips))
+    elif case != "none":
+        head = getattr(head, case)()
+    pos = draw(st.integers(0, len(head)))
+    odd = draw(st.sampled_from(_ODD + "-"))
+    if odd != "-":
+        head = head[:pos] + odd + head[pos:]
+    value = draw(st.sampled_from([
+        "123/QD-UB", "01/02/2024", "7 trang", "Phòng Tổ chức", "Ông Ba",
+        "", "ı2", "ſố 5"]))
+    return head + draw(st.sampled_from([": ", " : ", " ", ":"])) + value
+
+
+@settings(**COMMON)
+@given(st.lists(_field_head(), max_size=12),
+       st.sampled_from(["\n", ". ", " ", "; "]))
+@example(["Sİ: 1", "İ1"], "\n")
+@example(["ſố hồ ſơ: 12/ab"], "\n")
+@example(["NGÀY BAN HÀNH: 01/02/2024", "ngày ban hành, ban hành"], ". ")
+def test_extract_spans_matches_reference_on_folded_heads(parts, sep):
+    _same_spans(sep.join(parts))
+
+
+# ------------------------------------------------------------ PDF tokens
+
+_REF_NAME_RE = re.compile(rb"/[^\s\[\]()<>/]*")
+_REF_NUM_RE = re.compile(rb"[+-]?(\d+\.?\d*|\.\d+)")
+_REF_OP_RE = re.compile(rb"[A-Za-z'\"*]+")
+_REF_OCTAL_RE = re.compile(rb"[0-7]{1,3}")
+
+
+def reference_tokens(content: bytes):
+    """The per-byte content-stream tokenizer pdfrun._tokens replaced."""
+    i, n = 0, len(content)
+    while i < n:
+        c = content[i:i + 1]
+        if c in b" \t\r\n":
+            i += 1
+            continue
+        if c == b"(":
+            s, i = reference_string(content, i)
+            yield ("str", s)
+            continue
+        if c == b"[":
+            yield ("arr_open", None)
+            i += 1
+            continue
+        if c == b"]":
+            yield ("arr_close", None)
+            i += 1
+            continue
+        if c == b"/":
+            m = _REF_NAME_RE.match(content, i)
+            yield ("name", m.group(0).decode("latin-1"))
+            i = m.end()
+            continue
+        m = _REF_NUM_RE.match(content, i)
+        if m:
+            yield ("num", float(m.group(0)))
+            i = m.end()
+            continue
+        m = _REF_OP_RE.match(content, i)
+        if m:
+            yield ("op", m.group(0).decode("latin-1"))
+            i = m.end()
+            continue
+        i += 1
+
+
+def reference_string(content: bytes, i: int):
+    out = []
+    depth = 1
+    i += 1
+    n = len(content)
+    while i < n:
+        c = content[i:i + 1]
+        if c == b"\\":
+            nxt = content[i + 1:i + 2]
+            if nxt.isdigit():
+                m = _REF_OCTAL_RE.match(content, i + 1)
+                if m:
+                    out.append(chr(int(m.group(0), 8)))
+                    i = m.end()
+                    continue
+            out.append(pdfrun._ESCAPES.get(nxt, nxt.decode("latin-1")))
+            i += 2
+            continue
+        if c == b"(":
+            depth += 1
+            out.append("(")
+        elif c == b")":
+            depth -= 1
+            if depth == 0:
+                return "".join(out), i + 1
+            out.append(")")
+        else:
+            out.append(c.decode("latin-1"))
+        i += 1
+    raise ValueError("pdf: unterminated string")
+
+
+def _token_list(tokens, content):
+    try:
+        return list(tokens(content))
+    except ValueError as e:
+        return str(e)
+
+
+def _same_tokens(content: bytes) -> None:
+    assert _token_list(pdfrun._tokens, content) == \
+        _token_list(reference_tokens, content), content[:200]
+
+
+def _streams(payload: bytes):
+    """The payload itself, then every stream body the parser decodes."""
+    yield payload
+    try:
+        objs = pdfrun._objects(payload)
+    except ValueError:
+        return
+    for body in objs.values():
+        try:
+            st_ = pdfrun._stream_of(body, pdfrun.MAX_PAYLOAD_BYTES)
+        except ValueError:
+            continue
+        if st_:
+            yield st_
+
+
+def test_pdf_tokens_match_reference_on_corpus_pdfs():
+    n = 0
+    for i in range(600):
+        payload = fixtures.gen_page(i)[2]
+        if payload.startswith(b"%PDF-"):
+            for content in _streams(payload):
+                _same_tokens(content)
+            n += 1
+    assert n > 50
+
+
+def test_pdf_tokens_match_reference_on_fuzz_mutants():
+    for _url, payload in _mutants():
+        for content in _streams(payload):
+            _same_tokens(content)
+
+
+_PDF_SOUP = b" \t\r\n\f()[]/\\+-.0123456789abTJjdmf*'\"<>\x00\xff"
+
+
+@settings(**COMMON)
+@given(st.lists(st.sampled_from([bytes([b]) for b in _PDF_SOUP]
+                                + [b"(a) Tj ", b"\\(", b"\\053", b"\\8",
+                                   b"BT", b"[(x) -12.5 (y)] TJ"]),
+                max_size=60).map(b"".join))
+@example(b"(a\\)b) (c(d)e) (f")
+@example(b"+.-. .5 5. -.5 +x /a/b//c 1.2.3")
+def test_pdf_tokens_match_reference_on_byte_soup(content):
+    _same_tokens(content)

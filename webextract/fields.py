@@ -57,6 +57,22 @@ Divergences decided by spec (SURVEY.md §7.4 — goldens pin these):
   threshold (> 0.6), same cap (min(sim, 0.8)), same argmax-sentence and
   value-cleanup shape, zero model inference
 
+One case fold per document: ``extract_spans`` lowers the text once
+(``fold``: ``str.lower()``, after mapping the three characters where it
+and ``re.IGNORECASE`` disagree — U+0130, U+0131, U+017F — onto ``i``/``s``)
+and every field pattern, entity pattern and keyword scan runs as a
+case-sensitive lower-cased twin on that copy, built at import from the
+unchanged ``PATTERNS``, ``ENTITY_BODIES`` and ``KEYWORDS``. The fold keeps
+one character per character, so a match's offsets index the original
+text, and values are taken from it. A case-sensitive search costs about
+a fifth of an IGNORECASE one. The proximity arm is skipped, exactly,
+when the fraction of the field's keywords found anywhere in the folded
+text does not clear its threshold — no sentence can then score higher —
+so the sentence split is made only for documents that can use it. Only
+the rare F10 keyword strip stays IGNORECASE. The DuckDB replay
+(``__spark_entry__._field_arm_sql``) builds its RE2 ``(?i)`` patterns
+from the same unchanged registries and is unaffected.
+
 Everything here is pure Python ``re`` — the same module runs in the
 single-node oracle and inside the Spark UDF bodies, never mixed with Java
 regex on the golden path (SURVEY.md §4.3).
@@ -130,9 +146,30 @@ PATTERNS: dict[str, list[str]] = {
     "loai_van_ban": [r"Loại văn bản\s*:\s*" + _LINE],
 }
 
-_COMPILED: dict[str, list[re.Pattern]] = {
-    name: [re.compile(p, re.IGNORECASE) for p in pats]
-    for name, pats in PATTERNS.items()
+# re.IGNORECASE folds these three onto ASCII letters, where str.lower()
+# does not: U+0130 lowers to two characters, U+0131 and U+017F stay as
+# they are (tests/test_differential.py enumerates every code point)
+_FOLD_FIXES = {0x130: "i", 0x131: "i", 0x17F: "s"}
+
+
+def fold(text: str) -> str:
+    """``text`` case-folded the way ``re.IGNORECASE`` compares characters,
+    one character for one: a case-sensitive lower-cased pattern matches
+    ``fold(text)`` exactly where the IGNORECASE pattern matches ``text``,
+    at the same offsets."""
+    if "\u0130" in text or "\u0131" in text or "\u017f" in text:
+        text = text.translate(_FOLD_FIXES)
+    return text.lower()
+
+
+def _folded(pattern: str) -> re.Pattern:
+    """Case-sensitive twin of an IGNORECASE pattern, run on ``fold(text)``
+    (the patterns hold no upper-case escape such as ``\\S``)."""
+    return re.compile(pattern.lower())
+
+
+_PATTERNS_LOW: dict[str, list[re.Pattern]] = {
+    name: [_folded(p) for p in pats] for name, pats in PATTERNS.items()
 }
 _DATE_FALLBACK = re.compile(_DATE)
 _NUM_FALLBACK = re.compile(r"(\d+)")
@@ -187,8 +224,17 @@ ENTITY_BODIES: dict[str, str] = {
     "PERSON": (r"[A-ZÀÁÂÃÈÉÊÌÍÒÓÔÕÙÚÝ][a-zàáâãèéêìíòóôõùúý]+"
                r"(?:[ \t]+[A-ZÀÁÂÃÈÉÊÌÍÒÓÔÕÙÚÝ][a-zàáâãèéêìíòóôõùúý]+)*"),
 }
-_ENTITY_RE: dict[str, re.Pattern] = {
-    label: re.compile(_B_L + "(" + body + ")" + _B_R, re.IGNORECASE)
+# every body starts with a word char, so on ``fold(text)`` the entity is
+# ``(body)(?!\w)`` at a match start not preceded by a word char: the
+# left half of _B_L/_B_R moves out of the pattern, which then scans at
+# C speed for the body's first character. DATE checks that left
+# character per hit, as _keyword_starts does; its body is at most ten
+# chars long, so a rejected hit costs O(1). The unbounded bodies keep
+# the check inside the pattern as ``\b`` — retrying one from the next
+# position after a rejected hit could rescan a long match once per
+# start (quadratic), and PERSON's body can also match inside a word.
+_ENTITY_LOW: dict[str, re.Pattern] = {
+    label: _folded(("(" if label == "DATE" else r"\b(") + body + r")(?!\w)")
     for label, body in ENTITY_BODIES.items()
 }
 # FieldType → entity labels (ai_service_local.py:379-383); LOCATION is in
@@ -203,30 +249,39 @@ _SENT_RUN = re.compile(r"[^.!?;\n]+")  # F11 complement, keeps offsets
 
 _KW_SCAN: dict[str, re.Pattern] = {}
 _KW_STRIP: dict[str, re.Pattern] = {}
+# the proximity arm's keywords as they occur in ``fold(text)``
+_KEYWORDS_LOW: dict[str, list[str]] = {
+    name: [fold(kw) for kw in kws] for name, kws in KEYWORDS.items()
+}
 
 
 def _kw_scan_re(kw: str) -> re.Pattern:
-    """Case-insensitive occurrences of ``kw`` not followed by a word
-    char. The left half of the whole-word test, ``(?<!\\w)``, is
-    ``_keyword_starts``'s job: a pattern that opens with a lookbehind
-    is tried at every position and scans ~3× slower."""
+    """Occurrences of the folded keyword ``kw`` in a folded text, not
+    followed by a word char. The left half of the whole-word test,
+    ``(?<!\\w)``, is ``_keyword_starts``'s job: a pattern that opens with
+    a lookbehind is tried at every position and scans ~3× slower."""
     p = _KW_SCAN.get(kw)
     if p is None:
-        p = _KW_SCAN[kw] = re.compile(re.escape(kw) + r"(?!\w)",
-                                      re.IGNORECASE)
+        p = _KW_SCAN[kw] = re.compile(re.escape(kw) + r"(?!\w)")
     return p
 
 
-def _keyword_starts(text: str, kw: str) -> list[int]:
-    """Start of every whole-word, case-insensitive occurrence of ``kw``
-    in ``text`` — the matches of ``(?<!\\w)kw(?!\\w)``, overlapping ones
-    included (``str.isalnum() or '_'`` is exactly ``re``'s ``\\w``)."""
+def _word_start(low: str, pos: int) -> bool:
+    """No word char right before ``pos`` (``str.isalnum() or '_'`` is
+    exactly ``re``'s ``\\w``)."""
+    return pos == 0 or not (low[pos - 1].isalnum() or low[pos - 1] == "_")
+
+
+def _keyword_starts(low: str, kw: str) -> list[int]:
+    """Start of every whole-word occurrence of the folded keyword ``kw``
+    in the folded text ``low`` — the matches of ``(?<!\\w)kw(?!\\w)``,
+    overlapping ones included."""
     search = _kw_scan_re(kw).search
     out: list[int] = []
     pos = 0
-    while (m := search(text, pos)) is not None:
+    while (m := search(low, pos)) is not None:
         pos = m.start()
-        if pos == 0 or not (text[pos - 1].isalnum() or text[pos - 1] == "_"):
+        if _word_start(low, pos):
             out.append(pos)
         pos += 1
     return out
@@ -291,34 +346,37 @@ def value_from_sentence(sentence: str, field_type: str,
 
 def proximity_candidate(
     sentences: list[tuple[str, int]], text: str, name: str, field_type: str,
-    hits: dict[str, set[int]] | None = None,
+    hits: dict[str, set[int]] | None = None, low: str | None = None,
 ) -> tuple[str, float, int, int]:
     """M8's deterministic analogue: similarity = fraction of the field's
     keywords present in the sentence (word-boundary, case-insensitive);
     argmax sentence, threshold > 0.6, confidence = min(sim, 0.8).
 
-    ``sentences`` must be ``sentences_of(text)``. Each keyword is found
-    by ONE scan of the whole text, and its hits map to sentences by
-    bisecting the sentence starts: a keyword starts and ends with a
-    word char and holds no sentence delimiter, and the characters
-    around a sentence (delimiters, stripped whitespace) are non-word,
-    so a whole-word hit in the text is a whole-word hit in the
-    sentence that contains it, and vice versa. ``hits`` caches the
-    sentence ids per keyword across the fields of one document."""
+    ``sentences`` must be ``sentences_of(text)`` and ``low`` (computed
+    when omitted) ``fold(text)``. Each keyword is found by ONE scan of
+    the whole folded text, and its hits map to sentences by bisecting
+    the sentence starts: a keyword starts and ends with a word char and
+    holds no sentence delimiter, and the characters around a sentence
+    (delimiters, stripped whitespace) are non-word, so a whole-word hit
+    in the text is a whole-word hit in the sentence that contains it,
+    and vice versa. ``hits`` caches the sentence ids per keyword across
+    the fields of one document."""
     keywords = KEYWORDS.get(name, ())
     if not keywords or not sentences:
         return "", 0.0, -1, -1
     if hits is None:
         hits = {}
+    if low is None:
+        low = fold(text)
     counts: dict[int, int] = {}
     starts = None
-    for kw in keywords:
+    for kw in _KEYWORDS_LOW[name]:
         ids = hits.get(kw)
         if ids is None:
             if starts is None:
                 starts = [st for _, st in sentences]
             ids = hits[kw] = {bisect_right(starts, p) - 1
-                              for p in _keyword_starts(text, kw)}
+                              for p in _keyword_starts(low, kw)}
         for idx in ids:
             counts[idx] = counts.get(idx, 0) + 1
     if not counts:
@@ -337,16 +395,24 @@ def proximity_candidate(
     return (value, conf, pos, pos + len(value)) if pos >= 0 else (value, conf, -1, -1)
 
 
-def entity_firsts(text: str) -> dict[str, tuple[str, int, int] | None]:
-    """First entity per label (regex NER, ai_service_local.py:112-134).
-    Only firsts are kept: the ensemble takes matching_entities[0]
-    (ai_service_local.py:390-392), so scanning for all matches — the
-    reference does finditer over the whole doc — would be pure waste on a
-    100 KB page."""
+def entity_firsts(text: str, low: str | None = None
+                  ) -> dict[str, tuple[str, int, int] | None]:
+    """First entity per label (regex NER, ai_service_local.py:112-134),
+    found on ``low`` (``fold(text)``, computed when omitted) and taken
+    from ``text``. Only firsts are kept: the ensemble takes
+    matching_entities[0] (ai_service_local.py:390-392), so scanning for
+    all matches — the reference does finditer over the whole doc — would
+    be pure waste on a 100 KB page."""
+    if low is None:
+        low = fold(text)
     out: dict[str, tuple[str, int, int] | None] = {}
-    for label, pat in _ENTITY_RE.items():
-        m = pat.search(text)
-        out[label] = (m.group(1), m.start(1), m.end(1)) if m else None
+    for label, pat in _ENTITY_LOW.items():
+        m = pat.search(low)
+        if label == "DATE":  # see _ENTITY_LOW
+            while m is not None and not _word_start(low, m.start()):
+                m = pat.search(low, m.start() + 1)
+        out[label] = (text[m.start(1):m.end(1)], m.start(1), m.end(1)) \
+            if m else None
     return out
 
 
@@ -363,27 +429,61 @@ def entity_candidate(
     return "", 0.0, -1, -1
 
 
+class _Doc:
+    """What one document's fields share: the text, its fold, and — split
+    on first use — its sentences, with the sentence ids of each
+    keyword's hits (see proximity_candidate)."""
+
+    __slots__ = ("text", "low", "hits", "_sentences")
+
+    def __init__(self, text: str, low: str):
+        self.text = text
+        self.low = low
+        self.hits: dict[str, set[int]] = {}
+        self._sentences: list[tuple[str, int]] | None = None
+
+    @property
+    def sentences(self) -> list[tuple[str, int]]:
+        if self._sentences is None:
+            self._sentences = sentences_of(self.text)
+        return self._sentences
+
+
+def _pattern_hit(text: str, low: str, name: str) -> tuple[str, int, int] | None:
+    """The pattern arm: the first of the field's ordered patterns whose
+    group 1 is non-blank, searched on ``low`` (``fold(text)``) → the
+    stripped (value, start, end) in ``text``; None on a miss."""
+    for pat in _PATTERNS_LOW.get(name, ()):
+        m = pat.search(low)
+        if m and m.end(1) > m.start(1):
+            value, s, e = _strip_span(text, m.start(1), m.end(1))
+            if value:
+                return value, s, e
+    return None
+
+
 def extract_field(
-    text: str, name: str, field_type: str,
-    sentences: list[tuple[str, int]] | None = None,
-    hits: dict[str, set[int]] | None = None,
+    text: str, name: str, field_type: str, doc: _Doc | None = None,
 ) -> tuple[str, float, int, int, str]:
     """Arm A: patterns → keyword proximity → generic fallbacks.
     → (value, confidence, start, end, method); start=end=-1 on miss.
-    ``sentences``/``hits``: the document's sentence split and keyword
-    cache, shared across its fields (see proximity_candidate)."""
-    for pat in _COMPILED.get(name, ()):
-        m = pat.search(text)
-        if m and m.group(1):
-            value, s, e = _strip_span(text, m.start(1), m.end(1))
-            if value:
-                return value, 0.8, s, e, "pattern"
-    if sentences is None:
-        sentences = sentences_of(text)
-    value, conf, s, e = proximity_candidate(sentences, text, name, field_type,
-                                            hits)
-    if value:
-        return value, conf, s, e, "proximity"
+    ``doc``: the document's fold, sentences and keyword cache, shared
+    across its fields (made for ``text`` when omitted)."""
+    if doc is None:
+        doc = _Doc(text, fold(text))
+    hit = _pattern_hit(text, doc.low, name)
+    if hit is not None:
+        return hit[0], 0.8, hit[1], hit[2], "pattern"
+    # exact prefilter: a sentence's whole-word keyword count never
+    # exceeds the number of keywords found anywhere in the text, so the
+    # arm's own threshold test on that number rules it out early
+    kws = _KEYWORDS_LOW.get(name, ())
+    if kws and sum(kw in doc.low for kw in kws) / len(kws) \
+            > PROXIMITY_THRESHOLD:
+        value, conf, s, e = proximity_candidate(
+            doc.sentences, text, name, field_type, doc.hits, doc.low)
+        if value:
+            return value, conf, s, e, "proximity"
     if field_type == "DATE":
         m = _DATE_FALLBACK.search(text)
         if m:
@@ -421,23 +521,20 @@ def extract_spans(text: str, doc_type: str,
     arms fill optional fields at below-gate confidences anyway. This
     keeps pass 1 cheaper than the full fields stage by ~4× even when
     the DOM parse dominates (r3 verdict #5)."""
+    low = fold(text)
+    registry = DOC_FIELDS.get(doc_type, DOC_FIELDS[DOC_VANBAN])
     if patterns_only:
         spans = []
         confs = []
         required_total = required_hit = 0
-        for name, ftype, required in DOC_FIELDS.get(doc_type,
-                                                    DOC_FIELDS[DOC_VANBAN]):
-            value, conf, s, e, method = "", 0.0, -1, -1, "none"
-            for pat in _COMPILED.get(name, ()):
-                m = pat.search(text)
-                if m and m.group(1):
-                    v, vs, ve = _strip_span(text, m.start(1), m.end(1))
-                    if v:
-                        value, conf, s, e, method = v, 0.8, vs, ve, "pattern"
-                        break
+        for name, ftype, required in registry:
+            hit = _pattern_hit(text, low, name)
+            value, s, e = hit if hit is not None else ("", -1, -1)
+            conf = 0.8 if hit is not None else 0.0
             spans.append({"name": name, "value": value, "field_type": ftype,
                           "start": s, "end": e, "confidence": conf,
-                          "is_required": required, "method": method})
+                          "is_required": required,
+                          "method": "pattern" if hit is not None else "none"})
             confs.append(conf)
             if required:
                 required_total += 1
@@ -448,14 +545,12 @@ def extract_spans(text: str, doc_type: str,
         if hits and required_total and required_hit == required_total:
             return spans, sum(hits) / len(hits)
         return spans, sum(confs) / len(confs)
-    sentences = sentences_of(text)
-    firsts = entity_firsts(text)
-    hits: dict[str, set[int]] = {}
+    doc = _Doc(text, low)
+    firsts = entity_firsts(text, low)
     spans: list[dict] = []
     confs: list[float] = []
-    for name, ftype, required in DOC_FIELDS.get(doc_type, DOC_FIELDS[DOC_VANBAN]):
-        value, conf, s, e, method = extract_field(text, name, ftype,
-                                                  sentences, hits)
+    for name, ftype, required in registry:
+        value, conf, s, e, method = extract_field(text, name, ftype, doc)
         e_value, e_conf, e_s, e_e = entity_candidate(firsts, ftype)
         if e_conf > conf:
             value, conf, s, e, method = e_value, e_conf, e_s, e_e, "entity"

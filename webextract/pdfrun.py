@@ -11,6 +11,17 @@ uncompressed and /FlateDecode content streams, text operators
 ``BT ET Tf Td TD Tm Tj TJ ' "``, literal ``( )`` strings with the
 standard escapes, WinAnsi/ASCII text. 1–3 pages, 1–2 columns.
 
+Tokenizer: one master-regex match per content-stream token. The match
+first skips, in one possessive run, every byte that cannot start a
+token (whitespace and anything outside the subset), then tries the
+token branches in a fixed order; a simple literal string ``(...)``
+with no escape or nested parenthesis is decoded whole, and only nested
+or escaped strings take the ``_string`` path. Stream bytes
+are budgeted per document: all of its streams together may decode to
+at most ``MAX_PAYLOAD_BYTES``, and /FlateDecode output is inflated in
+chunks against that budget, so a decompression bomb fails without
+being held.
+
 Reading order (SURVEY.md §7.3, O7): column detection by x-gap split,
 then sort runs by (column, -y, x); runs on the same baseline
 (|Δy| < 2.0) join with a single space, lines join with "\\n", pages join
@@ -24,6 +35,8 @@ from __future__ import annotations
 import re
 import zlib
 
+from . import MAX_PAYLOAD_BYTES
+
 _OBJ_RE = re.compile(rb"(\d+)\s+(\d+)\s+obj\b", re.S)
 _STREAM_RE = re.compile(rb"stream\r?\n")
 _ESCAPES = {
@@ -34,12 +47,22 @@ _ESCAPES = {
 COLUMN_GAP = 120.0   # min x gap (pts) splitting two columns
 LINE_TOL = 2.0       # same-baseline tolerance (pts)
 
-# position-anchored token patterns (match(content, pos) — no per-token
-# buffer slicing, keeps the tokenizer linear in stream size)
-_NAME_RE = re.compile(rb"/[^\s\[\]()<>/]*")
-_NUM_RE = re.compile(rb"[+-]?(\d+\.?\d*|\.\d+)")
-_OP_RE = re.compile(rb"[A-Za-z'\"*]+")
+# bytes that start no token: whitespace, and anything outside the subset
+_SKIP = rb"[^(\[\]/0-9+\-.A-Za-z'\"*]*+"
+# one content-stream token after the bytes skipped before it (see _tokens)
+_TOKEN_RE = re.compile(_SKIP + rb"""(?:
+    \((?P<lit>[^()\\]*)\)
+  | (?P<str>\()
+  | (?P<open>\[)
+  | (?P<close>\])
+  | (?P<name>/[^\s\[\]()<>/]*)
+  | (?P<num>[+-]?(?:\d+\.?\d*|\.\d+))
+  | (?P<op>[A-Za-z'"*]+)
+)""", re.X)
+_SKIP_RE = re.compile(_SKIP)
+_STRING_RUN_RE = re.compile(rb"[^()\\]+")
 _OCTAL_RE = re.compile(rb"[0-7]{1,3}")
+_INFLATE_CHUNK = 1 << 20
 
 
 def _objects(data: bytes) -> dict[int, bytes]:
@@ -56,7 +79,36 @@ def _objects(data: bytes) -> dict[int, bytes]:
     return objs
 
 
-def _stream_of(body: bytes) -> bytes | None:
+def _inflate(raw: bytes, budget: int) -> bytes:
+    """``zlib.decompress(raw)``, inflating at most ``budget`` bytes: the
+    same bytes, and the same errors, for a stream within budget; one
+    over it fails when its output passes the budget, holding no more
+    than that plus one chunk."""
+    d = zlib.decompressobj()
+    parts: list[bytes] = []
+    size = 0
+    try:
+        while not d.eof:
+            part = d.decompress(raw, _INFLATE_CHUNK)
+            if not part and not d.eof:
+                # input spent before the end of the stream — decompressobj
+                # reports this as eof False, zlib.decompress raises
+                raise ValueError(
+                    "pdf: bad flate stream: Error -5 while decompressing "
+                    "data: incomplete or truncated stream")
+            size += len(part)
+            if size > budget:
+                raise ValueError("pdf: stream exceeds budget")
+            parts.append(part)
+            raw = d.unconsumed_tail
+    except zlib.error as e:
+        raise ValueError(f"pdf: bad flate stream: {e}") from None
+    return b"".join(parts)
+
+
+def _stream_of(body: bytes, budget: int) -> bytes | None:
+    """The object's stream bytes, decoded; ``budget`` caps their length
+    (ValueError past it)."""
     sm = _STREAM_RE.search(body)
     if not sm:
         return None
@@ -69,10 +121,9 @@ def _stream_of(body: bytes) -> bytes | None:
     elif raw.endswith(b"\n"):
         raw = raw[:-1]
     if b"/FlateDecode" in body[:sm.start()]:
-        try:
-            raw = zlib.decompress(raw)
-        except zlib.error as e:
-            raise ValueError(f"pdf: bad flate stream: {e}") from None
+        return _inflate(raw, budget)
+    if len(raw) > budget:
+        raise ValueError("pdf: stream exceeds budget")
     return raw
 
 
@@ -116,41 +167,32 @@ def _page_content_ids(objs: dict[int, bytes]) -> list[list[int]]:
 
 def _tokens(content: bytes):
     """Minimal content-stream tokenizer: strings, arrays, numbers, names,
-    operators."""
+    operators. One ``_TOKEN_RE`` match per token, skipping the bytes
+    before it; a byte that could start a token but starts none (``+``,
+    ``-`` or ``.`` before no digit) is skipped on its own."""
     i, n = 0, len(content)
+    match = _TOKEN_RE.match
     while i < n:
-        c = content[i:i + 1]
-        if c in b" \t\r\n":
-            i += 1
+        m = match(content, i)
+        if m is None:
+            i = _SKIP_RE.match(content, i).end() + 1
             continue
-        if c == b"(":
-            s, i = _string(content, i)
+        kind = m.lastgroup
+        if kind == "lit":
+            yield ("str", m.group("lit").decode("latin-1"))
+        elif kind == "str":
+            s, i = _string(content, m.start("str"))
             yield ("str", s)
             continue
-        if c == b"[":
+        elif kind == "open":
             yield ("arr_open", None)
-            i += 1
-            continue
-        if c == b"]":
+        elif kind == "close":
             yield ("arr_close", None)
-            i += 1
-            continue
-        if c == b"/":
-            m = _NAME_RE.match(content, i)
-            yield ("name", m.group(0).decode("latin-1"))
-            i = m.end()
-            continue
-        m = _NUM_RE.match(content, i)
-        if m:
-            yield ("num", float(m.group(0)))
-            i = m.end()
-            continue
-        m = _OP_RE.match(content, i)
-        if m:
-            yield ("op", m.group(0).decode("latin-1"))
-            i = m.end()
-            continue
-        i += 1  # unknown byte: skip, stay deterministic
+        elif kind == "num":
+            yield ("num", float(m.group("num")))
+        else:
+            yield (kind, m.group(kind).decode("latin-1"))
+        i = m.end()
 
 
 def _string(content: bytes, i: int) -> tuple[str, int]:
@@ -160,6 +202,11 @@ def _string(content: bytes, i: int) -> tuple[str, int]:
     i += 1
     n = len(content)
     while i < n:
+        m = _STRING_RUN_RE.match(content, i)
+        if m:
+            out.append(m.group(0).decode("latin-1"))
+            i = m.end()
+            continue
         c = content[i:i + 1]
         if c == b"\\":
             nxt = content[i + 1:i + 2]
@@ -177,13 +224,11 @@ def _string(content: bytes, i: int) -> tuple[str, int]:
         if c == b"(":
             depth += 1
             out.append("(")
-        elif c == b")":
+        else:  # ")"
             depth -= 1
             if depth == 0:
                 return "".join(out), i + 1
             out.append(")")
-        else:
-            out.append(c.decode("latin-1"))
         i += 1
     raise ValueError("pdf: unterminated string")
 
@@ -287,6 +332,7 @@ def extract_pdf(payload: bytes) -> list[str]:
     anything outside the supported subset."""
     objs = _objects(payload)
     pages = _page_content_ids(objs)
+    budget = MAX_PAYLOAD_BYTES  # stream bytes, shared by the document
     out: list[str] = []
     for content_ids in pages:
         chunks: list[bytes] = []
@@ -294,9 +340,10 @@ def extract_pdf(payload: bytes) -> list[str]:
             body = objs.get(cid)
             if body is None:
                 raise ValueError(f"pdf: missing content object {cid}")
-            st = _stream_of(body)
+            st = _stream_of(body, budget)
             if st is None:
                 raise ValueError(f"pdf: object {cid} has no stream")
+            budget -= len(st)
             chunks.append(st)
         out.append(page_text(runs_of_page(b"\n".join(chunks))))
     return out
