@@ -567,38 +567,18 @@ _register("extract_flagship_oracled", _extract_flagship_oracled,
           _FLAGSHIP_ORACLE_SQL)
 
 
-def _extract_cascade_oracled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """[M12] the confidence-gated cascade (pipeline.run_extract_cascade:
-    cheap strict-profile pass → full ensemble only below the 0.7 gate →
-    strictly-better wins) over the SAME synthesized corpus, against the
-    SAME DuckDB oracle as the flagship: on this corpus the strict
-    profile ties the full ensemble per url (main-content blocks are
-    long), so gate-accepted and retried documents alike must reproduce
-    the oracle's rows exactly — a full driver-verified end-to-end gate
-    of the cascade plan (two mapInArrow passes + semi join + merge)."""
-    _prep(spark)
-    from webextract import pipeline
-    pipeline.ship_package(spark)
-    ext = pipeline.run_extract_cascade(
-        _pages_from_documents(spark, sf_dir), accept=0.7, n_buckets=16)
-    return ext.select(
-        "url", "doc_type", "status", "text", "n_pages", "error",
-        F.round("confidence", 4).alias("confidence"),
-        F.size("spans").alias("n_spans"),
-    )
-
-
-_register("extract_cascade_oracled", _extract_cascade_oracled,
-          _FLAGSHIP_ORACLE_SQL)
-
-
 def _extract_cascade_in_batch_oracled(spark: SparkSession,
                                       sf_dir: str) -> DataFrame:
-    """[M12, in-batch plan] pipeline.run_extract_cascade_in_batch — the
-    r4 plan running the gate/escalation per document inside the single
-    fused map (zero shuffle, no pass-1 cache, no second scan). Output is
-    row-identical to the two-pass cascade by construction, so it shares
-    the flagship oracle exactly like extract_cascade_oracled."""
+    """[M12] the confidence-gated cascade
+    (pipeline.run_extract_cascade_in_batch: cheap strict-profile pass →
+    full ensemble only below the 0.7 gate → strictly-better wins, per
+    document inside the single fused map) over the SAME synthesized
+    corpus, against the SAME DuckDB oracle as the flagship: on this
+    corpus the strict profile ties the full ensemble per url
+    (main-content blocks are long), so gate-accepted and escalated
+    documents alike must reproduce the oracle's rows exactly.
+    Registered twice: ``extract_cascade_oracled`` is the older name of
+    the same check."""
     _prep(spark)
     from webextract import pipeline
     pipeline.ship_package(spark)
@@ -612,6 +592,8 @@ def _extract_cascade_in_batch_oracled(spark: SparkSession,
     )
 
 
+_register("extract_cascade_oracled", _extract_cascade_in_batch_oracled,
+          _FLAGSHIP_ORACLE_SQL)
 _register("extract_cascade_in_batch_oracled",
           _extract_cascade_in_batch_oracled, _FLAGSHIP_ORACLE_SQL)
 
@@ -913,11 +895,10 @@ def _needs_ocr_route(spark: SparkSession, sf_dir: str) -> DataFrame:
     """[NEEDS_OCR → OCR-stage handoff] the routing table a downstream
     OCR engine consumes: extract over the media-mix corpus, keep the
     NEEDS_OCR rows, join their payloads back by url (at scale: the
-    OCR stage re-reads exactly the flagged fraction of source bytes —
-    the same bounded-re-read shape as the cascade's pass 2), and run
-    the multimodal decode stub for format/dimension metadata. Output:
-    one work item per raster document with sniffed kind, byte size,
-    stub dims, and the parser's page count."""
+    OCR stage re-reads exactly the flagged fraction of source bytes),
+    and run the multimodal decode stub for format/dimension metadata.
+    Output: one work item per raster document with sniffed kind, byte
+    size, stub dims, and the parser's page count."""
     _prep(spark)
     from webextract import multimodal, pipeline
     pipeline.ship_package(spark)

@@ -89,10 +89,10 @@ def pages_corpus(n_docs: int) -> str:
 
 
 def run_extract_bench(spark, n_docs: int, cascade: bool = True) -> dict:
-    """Time the full extraction DAG (parse → assemble → fields) over the
+    """Time the full extraction DAG (the fused extraction map) over the
     cached corpus; a small warmup first so JIT/Python-worker startup isn't
-    billed to the measured run. ``cascade=False`` skips the two cascade
-    variants (the 1M scale point measures the fixed path only)."""
+    billed to the measured run. ``cascade=False`` skips the cascade
+    variant (the 1M scale point measures the fixed path only)."""
     from webextract import pipeline
 
     path = pages_corpus(n_docs)
@@ -101,41 +101,26 @@ def run_extract_bench(spark, n_docs: int, cascade: bool = True) -> dict:
     warm = spark.read.parquet(path).limit(512)
     pipeline.run_extract(warm).write.format("noop").mode("overwrite").save()
     repeats = int(os.environ.get("WEBEXTRACT_BENCH_REPEATS", "2"))
-    wall = float("inf")
-    for _ in range(max(1, repeats)):
-        t0 = time.monotonic()
-        pipeline.run_extract(pages).write.format("noop").mode("overwrite").save()
-        wall = min(wall, time.monotonic() - t0)  # best-of-N: this VM has
-        # noisy neighbors; interference only ever slows a run down
-    out = {"docs": n_docs, "wall_sec": round(wall, 3),
-           "docs_per_sec": round(n_docs / wall, 1),
-           "split_bytes": split}
-    if not cascade:
-        return out
-    # adaptive-cost variant (M12): cheap pass + ensemble retries only
-    # below the gate. Three presets: the r3 two-pass cascade (strict
-    # profile, full fields arms), the two-pass cheap_fields one (strict
-    # + patterns-only pass 1 — honest gate: every REQUIRED field must
-    # pattern-hit to accept), and the r4 IN-BATCH plan (same decision
-    # rule per document, escalation inside the fused map — no pass-1
-    # cache, no second scan, no joins). The in-batch row is the one
-    # expected to land AT OR UNDER the fixed-ensemble wall (verdict #5).
-    from webextract import cache
-    for key, fn in [
-        ("cascade_wall_sec",
-         lambda: pipeline.run_extract_cascade(pages)),
-        ("cascade_cheap_wall_sec",
-         lambda: pipeline.run_extract_cascade(pages, cheap_fields=True)),
-        ("cascade_in_batch_wall_sec",
-         lambda: pipeline.run_extract_cascade_in_batch(pages)),
-    ]:
+
+    def best_of(frame) -> float:
         best = float("inf")
         for _ in range(max(1, repeats)):
             t0 = time.monotonic()
-            fn().write.format("noop").mode("overwrite").save()
-            best = min(best, time.monotonic() - t0)
-            cache.release_all()
-        out[key] = round(best, 3)
+            frame().write.format("noop").mode("overwrite").save()
+            best = min(best, time.monotonic() - t0)  # best-of-N: this VM
+            # has noisy neighbors; interference only ever slows a run down
+        return best
+
+    wall = best_of(lambda: pipeline.run_extract(pages))
+    out = {"docs": n_docs, "wall_sec": round(wall, 3),
+           "docs_per_sec": round(n_docs / wall, 1),
+           "split_bytes": split}
+    if cascade:
+        # adaptive-cost variant (M12): the cascade's cheap pass plus
+        # in-batch escalation below the gate, expected to land AT OR
+        # UNDER the fixed-ensemble wall
+        out["cascade_in_batch_wall_sec"] = round(best_of(
+            lambda: pipeline.run_extract_cascade_in_batch(pages)), 3)
     return out
 
 

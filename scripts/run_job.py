@@ -38,16 +38,11 @@ def main() -> None:
     ap.add_argument("--sorted-layout", action="store_true",
                     help="range-partition each commit's output by url for "
                          "point-lookup min-max pruning")
-    ap.add_argument("--cascade", nargs="?", const="two_pass", default=None,
-                    choices=["two_pass", "in_batch"],
+    ap.add_argument("--cascade", action="store_true",
                     help="M12 confidence-gated cascade per commit group: "
                          "cheap strict-profile pass, full ensemble only "
-                         "below --accept. Bare --cascade = the two-pass "
-                         "plan; --cascade in_batch escalates per document "
-                         "inside the fused map (row-identical to two_pass "
-                         "for the same --cheap-fields setting, no pass-1 "
-                         "cache or second scan — the faster plan when "
-                         "pass 2 is this engine's own ensemble)")
+                         "below --accept, escalating per document inside "
+                         "the fused map")
     ap.add_argument("--accept", type=float, default=0.7,
                     help="cascade confidence gate (with --cascade)")
     ap.add_argument("--canonical-keys", action="store_true",
@@ -57,10 +52,9 @@ def main() -> None:
                          "range); rows are unchanged. Use a fresh "
                          "--output when flipping this flag")
     ap.add_argument("--cheap-fields", action="store_true",
-                    help="cascade pass 1 runs the patterns-only fields arm "
-                         "(accepts only when every required field is "
-                         "pattern-hit); applies to BOTH cascade modes, so "
-                         "they stay row-identical")
+                    help="the cascade's cheap pass runs the patterns-only "
+                         "fields arm (accepts only when every required "
+                         "field is pattern-hit; with --cascade)")
     args = ap.parse_args()
 
     # under spark-submit the session already exists; standalone we build one
@@ -94,8 +88,7 @@ def main() -> None:
         n_buckets=args.buckets, commit_groups=args.commit_groups,
         max_groups=args.max_groups, resume=not args.no_resume,
         stage_input=args.stage_input, sorted_layout=args.sorted_layout,
-        cascade=({"two_pass": True, "in_batch": "in_batch"}
-                 .get(args.cascade, False)),
+        cascade=args.cascade,
         accept=args.accept,
         cheap_fields=args.cheap_fields,
         canonical_keys=args.canonical_keys,

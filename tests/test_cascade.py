@@ -1,22 +1,35 @@
-"""M12 — confidence-gated engine cascade (pipeline.run_extract_cascade).
+"""M12 — confidence-gated engine cascade
+(pipeline.run_extract_cascade_in_batch).
 
 Reference shape: ai_service_local.py:513-537 (local result ≥ threshold →
 accept; below → run the expensive engine, keep the strictly-better
 result). Ours is deterministic on both arms, so the cascade's exact
-output is pinned against the two fixed engines it composes.
+output is pinned against the two fixed engines it composes, run
+in-process through oracle.extract_document.
 """
 
 import datetime as dt
 
-from webextract import pipeline
+from webextract import oracle, pipeline
 
 
-def _rows(df):
-    return {r["url"]: r for r in df.collect()}
+def _spark_rows(df):
+    out = {}
+    for r in df.collect():
+        d = r.asDict(recursive=True)
+        del d["warc_ts"]
+        out[d["url"]] = d
+    return out
+
+
+def _oracle_rows(rows, profiles=None, patterns_only=False):
+    return {r["url"]: oracle.extract_document(r["url"], bytes(r["html"]),
+                                              profiles, patterns_only)
+            for r in rows}
 
 
 def _short_block_pages(spark, n=3):
-    """Adversarial docs where the cascade's second pass genuinely wins:
+    """Adversarial docs where the cascade's escalation genuinely wins:
     every content paragraph is < 25 chars, so the strict profile
     (min_chars 25) keeps nothing → confidence 0; the lenient profile
     (min_chars 10) keeps the planted field sentences and recovers
@@ -35,42 +48,46 @@ def _short_block_pages(spark, n=3):
               "text string, lang string")
 
 
-def test_cascade_gate_semantics(spark, pages_parquet):
+def _gate_pages(spark, pages_parquet):
     pages = (spark.read.parquet(pages_parquet).limit(100)
              .unionByName(_short_block_pages(spark)))
-    strict = _rows(pipeline.run_extract(pages, profiles=("strict",)))
-    full = _rows(pipeline.run_extract(pages))
-    casc = _rows(pipeline.run_extract_cascade(pages, accept=0.7))
+    return pages, pages.select("url", "html").collect()
+
+
+def test_cascade_gate_semantics(spark, pages_parquet):
+    pages, rows = _gate_pages(spark, pages_parquet)
+    strict = _oracle_rows(rows, ("strict",))
+    full = _oracle_rows(rows)
+    casc = _spark_rows(pipeline.run_extract_cascade_in_batch(pages,
+                                                             accept=0.7))
     assert set(casc) == set(strict)
     n_accepted = n_retried = n_improved = 0
     for url, r in casc.items():
         s = strict[url]
         if s["status"] != "COMPLETED" or s["confidence"] >= 0.7:
             n_accepted += 1
-            assert r == s          # gate accepted pass 1 verbatim
+            assert r == s          # gate accepted the cheap pass verbatim
         else:
             n_retried += 1
             f = full[url]
             want = f if f["confidence"] > s["confidence"] else s
-            assert r == want       # strictly-better wins, pass 1 keeps ties
+            assert r == want       # strictly-better wins, cheap pass keeps ties
             assert r["confidence"] >= s["confidence"]
             if r["confidence"] > s["confidence"]:
                 n_improved += 1
-    # the corpus must exercise both branches AND a genuine pass-2 win
+    # the corpus must exercise both branches AND a genuine escalation win
     assert n_accepted > 0 and n_retried >= 3 and n_improved >= 3
 
 
 def test_cascade_cheap_fields_gate_semantics(spark, pages_parquet):
-    # cheap_fields=True: pass 1 is strict-profile + patterns-only fields.
-    # Same gate contract as the full cascade, pinned against the two
-    # fixed engines it composes (r3 verdict #5).
-    pages = (spark.read.parquet(pages_parquet).limit(100)
-             .unionByName(_short_block_pages(spark)))
-    cheap = _rows(pipeline.run_extract(pages, profiles=("strict",),
-                                       patterns_only=True))
-    full = _rows(pipeline.run_extract(pages))
-    casc = _rows(pipeline.run_extract_cascade(pages, accept=0.7,
-                                              cheap_fields=True))
+    # cheap_fields=True: the cheap pass is strict-profile + patterns-only
+    # fields. Same gate contract as the full cascade, pinned against the
+    # two fixed engines it composes (r3 verdict #5).
+    pages, rows = _gate_pages(spark, pages_parquet)
+    cheap = _oracle_rows(rows, ("strict",), patterns_only=True)
+    full = _oracle_rows(rows)
+    casc = _spark_rows(pipeline.run_extract_cascade_in_batch(
+        pages, accept=0.7, cheap_fields=True))
     assert set(casc) == set(cheap)
     n_accepted = n_retried = 0
     for url, r in casc.items():
@@ -88,31 +105,20 @@ def test_cascade_cheap_fields_gate_semantics(spark, pages_parquet):
     assert n_accepted > 0 and n_retried >= 3
 
 
-def test_cascade_in_batch_equals_two_pass(spark, pages_parquet):
-    # the r4 in-batch plan (per-document escalation inside the fused
-    # map) must emit EXACTLY the two-pass plan's rows — same gate, same
-    # strictly-better pick — at both cheap_fields settings
-    pages = (spark.read.parquet(pages_parquet).limit(100)
-             .unionByName(_short_block_pages(spark)))
-    for cf in (False, True):
-        two = _rows(pipeline.run_extract_cascade(pages, accept=0.7,
-                                                 cheap_fields=cf))
-        one = _rows(pipeline.run_extract_cascade_in_batch(
-            pages, accept=0.7, cheap_fields=cf))
-        assert one == two, f"cheap_fields={cf}"
-
-
 def test_cascade_accept_zero_equals_cheap_pass(spark, pages_parquet):
     pages = spark.read.parquet(pages_parquet).limit(80)
-    strict = _rows(pipeline.run_extract(pages, profiles=("strict",)))
-    casc = _rows(pipeline.run_extract_cascade(pages, accept=0.0))
+    strict = _oracle_rows(pages.select("url", "html").collect(), ("strict",))
+    casc = _spark_rows(pipeline.run_extract_cascade_in_batch(pages,
+                                                             accept=0.0))
     assert casc == strict
 
 
 def test_cascade_deterministic(spark, pages_parquet):
     pages = spark.read.parquet(pages_parquet).limit(80)
-    one = _rows(pipeline.run_extract_cascade(pages, accept=0.7))
-    two = _rows(pipeline.run_extract_cascade(pages, accept=0.7))
+    one = _spark_rows(pipeline.run_extract_cascade_in_batch(pages,
+                                                            accept=0.7))
+    two = _spark_rows(pipeline.run_extract_cascade_in_batch(pages,
+                                                            accept=0.7))
     assert one == two
 
 
@@ -128,84 +134,50 @@ def test_profiles_restrict_candidates():
         == ["strict"]
 
 
-def test_staged_path_rejects_profiles(spark, pages_parquet):
-    import pytest
+def _final(df):
+    rows = df.select("url", "text", "status", "confidence").collect()
+    return sorted((r["url"], r["text"], r["status"], r["confidence"])
+                  for r in rows)
 
-    pages = spark.read.parquet(pages_parquet).limit(4)
-    with pytest.raises(ValueError):
-        pipeline.run_extract(pages, fused=False, profiles=("strict",))
+
+def _runner_kill_resume(spark, pages_parquet, tmp_path, cheap_fields):
+    """run_job(cascade=True) with the given cheap_fields: the unchunked
+    run and a killed-then-resumed run both give the unchunked cascade's
+    table."""
+    from webextract import runner
+
+    pages = (spark.read.parquet(pages_parquet).limit(100)
+             .unionByName(_short_block_pages(spark)))
+    want = _final(pipeline.run_extract_cascade_in_batch(
+        pages, accept=0.7, cheap_fields=cheap_fields))
+    full = runner.run_job(spark, pages, str(tmp_path / "full"),
+                          commit_groups=4, cascade=True,
+                          cheap_fields=cheap_fields)
+    assert _final(full) == want
+
+    out = str(tmp_path / "killed")
+    partial = runner.run_job(spark, pages, out, commit_groups=4,
+                             max_groups=2, cascade=True,
+                             cheap_fields=cheap_fields)
+    assert 0 < partial.count() < 103
+    resumed = runner.run_job(spark, pages, out, commit_groups=4,
+                             cascade=True, cheap_fields=cheap_fields)
+    assert _final(resumed) == want
 
 
 def test_runner_cascade_kill_resume(spark, pages_parquet, tmp_path):
-    """run_job(cascade=True): same resume mechanics — a killed cascade
-    run resumes to the byte-identical final table, and the final table
-    equals the unchunked cascade over the same pages."""
-    from webextract import runner
-
-    pages = (spark.read.parquet(pages_parquet).limit(100)
-             .unionByName(_short_block_pages(spark)))
-
-    def final(df):
-        rows = df.select("url", "text", "status", "confidence").collect()
-        return sorted((r["url"], r["text"], r["status"], r["confidence"])
-                      for r in rows)
-
-    want = final(pipeline.run_extract_cascade(pages, accept=0.7))
-    full = runner.run_job(spark, pages, str(tmp_path / "cf"),
-                          commit_groups=4, cascade=True)
-    assert final(full) == want
-
-    out = str(tmp_path / "ck")
-    partial = runner.run_job(spark, pages, out, commit_groups=4,
-                             max_groups=2, cascade=True)
-    assert 0 < partial.count() < 103
-    resumed = runner.run_job(spark, pages, out, commit_groups=4,
-                             cascade=True)
-    assert final(resumed) == want
+    _runner_kill_resume(spark, pages_parquet, tmp_path, cheap_fields=False)
 
 
 def test_runner_cascade_in_batch_kill_resume(spark, pages_parquet, tmp_path):
-    """run_job(cascade='in_batch'): the r4 in-batch plan under the same
-    resume mechanics — a killed run resumes to the same final table,
-    which equals both the unchunked in-batch cascade AND the two-pass
-    cascade at the SAME cheap_fields setting (defaults aligned at
-    False, r4 advice; the kill/resume half runs cheap_fields=True to
-    pin the run_job plumbing)."""
-    from webextract import runner
-
-    pages = (spark.read.parquet(pages_parquet).limit(100)
-             .unionByName(_short_block_pages(spark)))
-
-    def final(df):
-        rows = df.select("url", "text", "status", "confidence").collect()
-        return sorted((r["url"], r["text"], r["status"], r["confidence"])
-                      for r in rows)
-
-    # default-vs-default: the two runner cascade modes share defaults now
-    want = final(pipeline.run_extract_cascade(pages, accept=0.7))
-    full = runner.run_job(spark, pages, str(tmp_path / "ibf"),
-                          commit_groups=4, cascade="in_batch")
-    assert final(full) == want
-
-    want_cheap = final(pipeline.run_extract_cascade(pages, accept=0.7,
-                                                    cheap_fields=True))
-    out = str(tmp_path / "ibk")
-    partial = runner.run_job(spark, pages, out, commit_groups=4,
-                             max_groups=2, cascade="in_batch",
-                             cheap_fields=True)
-    assert 0 < partial.count() < 103
-    resumed = runner.run_job(spark, pages, out, commit_groups=4,
-                             cascade="in_batch", cheap_fields=True)
-    assert final(resumed) == want_cheap
+    # cheap_fields=True must reach the cascade body through run_job
+    _runner_kill_resume(spark, pages_parquet, tmp_path, cheap_fields=True)
 
 
 def test_cascade_multi_snapshot_urls(spark):
     """(url, warc_ts) is the document key: two snapshots of one url —
     one confident, one below the gate — must yield exactly two output
-    rows (keying on url alone cross-joined all snapshots of any url
-    with a low one)."""
-    import datetime as dt
-
+    rows, and the low snapshot escalates to the full-ensemble result."""
     good = ("<html><body><p>" + "Số văn bản: 77/QD và đây là một đoạn "
             "văn dài đủ ký tự để profile strict giữ lại trọn vẹn." * 3
             + "</p></body></html>").encode()
@@ -220,7 +192,7 @@ def test_cascade_multi_snapshot_urls(spark):
     pages = spark.createDataFrame(
         rows, "url string, warc_ts timestamp, html binary, "
               "text string, lang string")
-    out = pipeline.run_extract_cascade(pages, accept=0.7).collect()
+    out = pipeline.run_extract_cascade_in_batch(pages, accept=0.7).collect()
     assert len(out) == 2
     by_ts = {r["warc_ts"]: r for r in out}
     assert len(by_ts) == 2
@@ -234,8 +206,7 @@ def test_cascade_multi_snapshot_urls(spark):
 
 def test_runner_cascade_with_staged_input(spark, pages_parquet, tmp_path):
     """cascade=True composes with stage_input=True (the staged read
-    feeds the cascade's pass 1; pass-2 retries still semi-join against
-    the staged chunk)."""
+    feeds the cascade map)."""
     from webextract import runner
 
     pages = (spark.read.parquet(pages_parquet).limit(60)
@@ -245,10 +216,4 @@ def test_runner_cascade_with_staged_input(spark, pages_parquet, tmp_path):
     staged = runner.run_job(spark, pages, str(tmp_path / "c2"),
                             commit_groups=3, cascade=True,
                             stage_input=True)
-
-    def final(df):
-        rows = df.select("url", "text", "status", "confidence").collect()
-        return sorted((r["url"], r["text"], r["status"], r["confidence"])
-                      for r in rows)
-
-    assert final(staged) == final(ref)
+    assert _final(staged) == _final(ref)

@@ -65,26 +65,6 @@ def test_spark_pipeline_byte_identical(spark, pages_parquet, goldens):
         assert (got["error"] or None) == (want["error"] or None)
 
 
-def test_staged_path_matches_fused(spark, pages_parquet, goldens):
-    """The 3-stage path (parse pUDF → native HOF argmax → fields pUDF)
-    must stay byte-identical to the fused single-pass path — they share
-    the oracle components but split the best-of argmax between Python
-    (oracle.best_candidate) and Catalyst (aggregate HOF, stage_assemble)."""
-    pages = spark.read.parquet(pages_parquet)
-    rows = {r["url"]: r for r in pipeline.run_extract(pages, fused=False).collect()}
-    assert len(rows) == N_GOLDEN
-    for url, want in goldens.items():
-        got = rows[url]
-        assert got["text"] == want["text"], url
-        assert _spans_key(got["spans"]) == _spans_key(want["spans"]), url
-        assert _blocks_key(got["blocks"]) == _blocks_key(want["blocks"]), url
-        assert got["status"] == want["status"]
-        assert got["confidence"] == want["confidence"]
-        # the NEEDS_OCR error metadata is synthesized in Catalyst on this
-        # path (stage_assemble) — must match the fused path byte-for-byte
-        assert (got["error"] or None) == (want["error"] or None), url
-
-
 def test_needs_ocr_status_taxonomy(goldens):
     """Raster-only inputs are CLASSIFIED, not failed (VERDICT r4 #1):
     scanned (image-only) PDFs and raw image payloads → status=NEEDS_OCR,

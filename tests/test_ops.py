@@ -53,6 +53,8 @@ FAST_QUERIES = [
     "unicode_nfc_normalize",
     "content_blocklist_flags",
     "host_disjoint_split",
+    # the one cascade plan: no other tier-1 test DuckDB-checks it
+    "extract_cascade_in_batch_oracled",
 ]
 
 

@@ -170,14 +170,6 @@ def test_dedup_clusters_plan_window_free(spark):
     cache.release(sig)
 
 
-def test_cascade_retry_join_is_left_semi(spark, pages_parquet):
-    """The cascade's pass-2 input must be a left-semi join on url (the
-    mechanism bounding pass-2 payload reads to the low-conf fraction)."""
-    pages = spark.read.parquet(pages_parquet).limit(32)
-    plan = _explain(pipeline.run_extract_cascade(pages), "extended")
-    assert "LeftSemi" in plan, plan
-
-
 def test_gopher_flags_zero_exchange(spark):
     """gopher_quality_flags is pure in-row Catalyst — the rule battery
     must ride the scan with NO shuffle (and no Python UDF stage)."""

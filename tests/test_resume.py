@@ -55,21 +55,53 @@ def test_idempotent_rerun(spark, pages_parquet, tmp_path):
 
 
 def test_reprocess_from_parse_checkpoint(spark, pages_parquet, tmp_path):
-    """C4: staged run materializes the parse stage; reprocess derives a
-    new extracted table from the checkpoint WITHOUT re-reading payloads,
-    and (with an unchanged registry) reproduces the original exactly."""
-    pages = _pages(spark, pages_parquet)
-    out = str(tmp_path / "staged")
-    first = runner.run_job_staged(spark, pages, out)
+    """C4: reprocess derives a new extracted table from the saved
+    ``extracted`` text WITHOUT re-reading payloads (the input pages are
+    deleted first), and (with an unchanged registry) reproduces the
+    original exactly."""
+    import shutil
+
+    src = str(tmp_path / "pages.parquet")
+    _pages(spark, pages_parquet).write.parquet(src)
+    out = str(tmp_path / "job")
+    first = runner.run_job(spark, spark.read.parquet(src), out)
     want = _final(first)
     assert len(want) == N
+    shutil.rmtree(src)
 
     redone = runner.reprocess_fields(spark, out)
     assert _final(redone) == want
+    cols = ["url", "spans", "blocks", "doc_type", "n_pages", "error"]
+    assert sorted(map(tuple, redone.select(*cols).collect())) == \
+        sorted(map(tuple, first.select(*cols).collect()))
 
     lin = Catalog(out).read(spark, runner.LINEAGE_TABLE)
     stages = {r["stage"] for r in lin.select("stage").distinct().collect()}
     assert stages == {"final", "reprocess"}
+
+
+def test_resume_skips_empty_buckets(spark, pages_parquet, tmp_path,
+                                    monkeypatch):
+    """A bucket with no input rows still gets a lineage row, so a second
+    run over a finished catalog runs no commit group at all."""
+    from webextract import pipeline
+
+    pages = _pages(spark, pages_parquet).limit(20)
+    out = str(tmp_path / "sparse")
+    runner.run_job(spark, pages, out, n_buckets=64, commit_groups=8)
+    lin = Catalog(out).read(spark, runner.LINEAGE_TABLE)
+    counts = {r["partition_id"]: r["input_count"] for r in lin.collect()}
+    assert sorted(counts) == list(range(64))
+    assert 0 in counts.values()          # some buckets are empty
+    assert sum(counts.values()) == 20
+
+    calls = []
+    real = pipeline.run_extract_full
+    monkeypatch.setattr(pipeline, "run_extract_full",
+                        lambda *a, **k: calls.append(1) or real(*a, **k))
+    again = runner.run_job(spark, pages, out, n_buckets=64, commit_groups=8)
+    assert calls == []
+    assert again.count() == 20
 
 
 def test_lineage_counters(spark, pages_parquet, tmp_path):
@@ -349,8 +381,12 @@ def test_runner_canonical_keys_kill_resume(spark, tmp_path):
                          commit_groups=4)
     assert _final(off) == want
 
-    # lineage partition ids ARE the canonical buckets
+    # lineage partition ids ARE the canonical buckets: the buckets with
+    # input rows are exactly the canonical ones, and every bucket of the
+    # run has a row (empty ones with input_count 0)
     lin = Catalog(out).read(spark, runner.LINEAGE_TABLE)
     parts = {r["partition_id"]
-             for r in lin.select("partition_id").distinct().collect()}
+             for r in lin.filter(F.col("input_count") > 0)
+             .select("partition_id").distinct().collect()}
     assert parts == set(canon_b.values())
+    assert lin.select("partition_id").distinct().count() == 16

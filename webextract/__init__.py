@@ -15,10 +15,11 @@ Layering (see SURVEY.md §7):
 - ``fields``   — regex field registry + char-span extraction
 - ``oracle``   — single-document pure-Python pipeline (golden source)
 - ``udfs``     — Arrow-batched wrappers of the oracle components
-- ``pipeline`` — the Spark DAG (scan → parse → assemble → fields → write)
+- ``pipeline`` — the Spark DAG (scan → prune/bucket → extract → write)
 - ``checkpoint`` — parquet+manifest snapshot catalog shim, resume anti-join
 - ``skew``     — hot-host detection + salting helpers
-- ``runner``   — resumable commit-group job + staged reprocess (C4)
+- ``runner``   — resumable commit-group job + fields reprocess from the
+  ``extracted`` table (C4)
 - ``multimodal`` — opaque-binary media plumbing (decode / features /
   resize plan / frame sampling; stub kernels, real Spark contract)
 - ``fixtures`` — deterministic synthetic pages generator (tests + bench)

@@ -128,7 +128,7 @@ def candidates(blocks: list[Block],
                profiles: tuple[str, ...] | None = None) -> list[dict]:
     """Build per-profile candidates: dedup (first occurrence), '\\n\\n' join,
     conf = mean(1 - link_density) over kept blocks, precomputed best-of
-    score (D5). Returns list of dicts matching the Spark candidate struct:
+    score (D5). Returns a list of dicts
     {profile, conf, score, text, blocks:[{page,score,n_chars}]}.
     ``profiles`` restricts to the named subset (the M12 cascade's cheap
     first pass); None = the full ensemble, profile order preserved."""

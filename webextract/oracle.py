@@ -58,7 +58,7 @@ def sniff_kind(payload: bytes) -> str:
 
 def parse_candidates(payload: bytes,
                      profiles: tuple[str, ...] | None = None) -> dict:
-    """Stage-1 semantics: payload → candidate texts + per-candidate blocks.
+    """Parse: payload → candidate texts + per-candidate blocks.
 
     Returns {kind, n_pages, candidates:[{profile,conf,score,text,
     blocks:[{page,score,n_chars}]}], error}. Candidates empty + error set
@@ -110,8 +110,7 @@ def parse_candidates(payload: bytes,
 
 def best_candidate(cands: list[dict]) -> dict | None:
     """O3 argmax on precomputed score, first-wins ties (strictly-greater
-    replaces). The Spark pipeline does this step natively (aggregate HOF)
-    with identical semantics."""
+    replaces)."""
     best = None
     for c in cands:
         if best is None or c["score"] > best["score"]:
@@ -173,18 +172,15 @@ def extract_document(url: str, payload: bytes,
 
 
 def extract_document_cascade(url: str, payload: bytes, accept: float = 0.7,
-                             cheap_profiles: tuple[str, ...] = ("strict",),
                              cheap_fields: bool = False) -> dict:
-    """In-process M12 cascade (r4): the document-level twin of
-    pipeline.run_extract_cascade's two-pass plan — cheap pass first;
-    a COMPLETED result below the ``accept`` gate is re-extracted with
-    the full ensemble and the strictly-better result wins (the cheap
-    pass keeps ties, exactly the reference's openai-vs-local pick,
-    ai_service_local.py:513-537). Running the escalation inside the
-    SAME batch skips the two-pass plan's cache materialization, second
-    input scan, and merge joins — per-document output is IDENTICAL
-    (pinned by tests/test_cascade.py)."""
-    first = extract_document(url, payload, cheap_profiles,
+    """Per-document M12 cascade: the cheap strict-profile pass first
+    (patterns-only fields when ``cheap_fields``); a COMPLETED result
+    below the ``accept`` gate is re-extracted with the full ensemble and
+    the strictly-better result wins (the cheap pass keeps ties, exactly
+    the reference's openai-vs-local pick, ai_service_local.py:513-537).
+    The escalation runs inside the same batch as the cheap pass, so the
+    Spark plan is the fixed path's single fused map."""
+    first = extract_document(url, payload, ("strict",),
                              patterns_only=cheap_fields)
     if first["status"] != STATUS_COMPLETED or first["confidence"] >= accept:
         return first

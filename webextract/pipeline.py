@@ -1,18 +1,13 @@
-"""The Spark DAG: scan → salt/partition → parse → assemble → fields → write.
+"""The Spark DAG: scan → prune/bucket → extract → write.
 
 Re-expresses the reference's pipeline compose
 (ocr-ai-service/app/services/document_service.py:90-182, C1) as one lazy
-DataFrame plan. The default plan runs the whole per-document oracle in
-ONE fused ``mapInArrow`` pass (udfs.extract_batches: Arrow record
-batches in and out, no pandas conversion). The staged plan, kept for
-reprocess-from-checkpoint (C4), has three stages (SURVEY.md §3.1):
-
-  Stage 1 ``parse``     mapInPandas(oracle.parse_candidates)  — Python
-  Stage 2 ``assemble``  native Catalyst: best-of argmax (O3) over the
-                        precomputed candidate scores via the ``aggregate``
-                        higher-order function, first-wins ties, plus
-                        status/error derivation — zero Python
-  Stage 3 ``fields``    mapInPandas(fields.extract_spans)     — Python
+DataFrame plan. Extraction is ONE fused ``mapInArrow`` pass
+(udfs.extract_batches: Arrow record batches in and out, no pandas
+conversion) that runs the whole per-document oracle — parse, best-of
+argmax (O3), fields — so Spark output is the oracle's output by
+construction. The M12 cascade runs in the same single pass
+(udfs.cascade_batches).
 
 Scale design (the part that must survive 1000 executors / 100 TB):
 - rows are heavy (html blobs up to 50 MB) → Arrow batch size is capped
@@ -23,8 +18,8 @@ Scale design (the part that must survive 1000 executors / 100 TB):
   which also spreads any single skewed host across buckets because the
   hash keys on the full url, not the host (see skew.py for the groupBy
   side of skew handling).
-- column pruning: stage 1 selects only (url, warc_ts, html) + derived
-  doc_type/bucket; the wide ``text``/``lang`` input columns never leave
+- column pruning: extraction reads only (url, warc_ts, html) + the
+  derived bucket; the wide ``text``/``lang`` input columns never leave
   the scan (verified by test_plans.py on PushedFilters/ReadSchema).
 """
 
@@ -33,6 +28,7 @@ from __future__ import annotations
 import os
 import time
 import uuid
+from collections.abc import Iterable
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -151,83 +147,28 @@ def with_bucket(df: DataFrame, n_buckets: int = DEFAULT_BUCKETS,
     )
 
 
-def _PRUNED_COLS(pages: DataFrame) -> list[str]:
-    """Column pruning for the payload-touching stages: url/ts/html, plus
-    a caller-computed ``bucket`` if one rides along (the runner's
-    canonical-url keying — with_bucket keeps it instead of re-keying)."""
-    keep = ["url", "warc_ts", "html"]
-    if "bucket" in pages.columns:
-        keep.append("bucket")
-    return keep
-
-
-def stage_parse(pages: DataFrame, n_buckets: int = DEFAULT_BUCKETS,
-                partitions: int | None = None) -> DataFrame:
-    """Stage 1: prune to needed columns, bucket, parse payloads."""
-    prepped = with_bucket(
-        with_doc_type(pages.select(*_PRUNED_COLS(pages))), n_buckets)
-    n_parts = partitions or prepped.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    prepped = prepped.repartition(int(n_parts), "bucket")
-    return prepped.mapInPandas(udfs.parse_batches, udfs.PARSED_SCHEMA)
-
-
-def stage_assemble(parsed: DataFrame) -> DataFrame:
-    """Stage 2 (pure Catalyst): best-of-candidates argmax O3/D5 with
-    first-wins ties — IF(c.score > acc.score) keeps the earlier profile on
-    ties, exactly like oracle.best_candidate. Raster-only documents
-    (parse kind 'pdf-raster' / 'image/<fmt>') become status=NEEDS_OCR
-    with the format stamped into ``error`` — byte-identical to the fused
-    path's oracle.extract_document."""
-    best = F.expr(
-        "CASE WHEN size(candidates) > 0 THEN "
-        "aggregate(slice(candidates, 2, size(candidates)), candidates[0], "
-        "(acc, c) -> IF(c.score > acc.score, c, acc)) END"
-    )
-    needs_ocr = (F.col("kind") == "pdf-raster") | \
-        F.col("kind").startswith("image/")
-    df = parsed.withColumn("best", best)
-    return df.select(
-        "url", "warc_ts", "doc_type", "bucket",
-        F.when(F.col("error").isNotNull(), F.lit("FAILED"))
-        .when(needs_ocr, F.lit("NEEDS_OCR"))
-        .otherwise(F.lit("COMPLETED")).alias("status"),
-        F.coalesce(F.col("best.text"), F.lit("")).alias("text"),
-        F.coalesce(F.col("best.blocks"), F.expr(f"CAST(array() AS {udfs.BLOCK_T})"))
-        .alias("blocks"),
-        F.col("n_pages"), F.col("bytes_in"),
-        F.when(F.col("error").isNull() & needs_ocr,
-               F.concat(F.lit("needs_ocr: "), F.col("kind")))
-        .otherwise(F.col("error")).alias("error"),
-        F.col("_wall_ms"),
-    )
-
-
-def stage_fields(assembled: DataFrame) -> DataFrame:
-    """Stage 3: regex field registry → spans with char offsets."""
-    cols = ("url string, warc_ts timestamp, doc_type string, bucket int, "
-            "status string, text string, "
-            f"blocks {udfs.BLOCK_T}, n_pages int, bytes_in bigint, error string, "
-            f"_wall_ms double, spans {udfs.SPAN_T}, confidence double")
-    return assembled.mapInPandas(udfs.fields_batches, cols)
+def _prepped(pages: DataFrame, n_buckets: int, repartition: bool) -> DataFrame:
+    """The extraction input, pruned to url/warc_ts/html plus ``bucket``:
+    a caller-computed bucket rides along (the runner's canonical-url
+    keying — with_bucket keeps it instead of re-keying). Extraction runs
+    directly on the scan partitions unless ``repartition`` asks for the
+    explicit bucket shuffle."""
+    keep = ["url", "warc_ts", "html"] + (
+        ["bucket"] if "bucket" in pages.columns else [])
+    prepped = with_bucket(pages.select(*keep), n_buckets)
+    if repartition:
+        n_parts = prepped.sparkSession.conf.get("spark.sql.shuffle.partitions")
+        prepped = prepped.repartition(int(n_parts), "bucket")
+    return prepped
 
 
 def run_extract_full(pages: DataFrame, n_buckets: int = DEFAULT_BUCKETS,
-                     partitions: int | None = None,
-                     fused: bool = True,
-                     repartition: bool = False,
-                     profiles: tuple[str, ...] | None = None,
-                     patterns_only: bool = False) -> DataFrame:
+                     repartition: bool = False) -> DataFrame:
     """pages → extracted, keeping the lineage side-band columns
-    (bucket, bytes_in, _wall_ms).
-
-    fused=True (default): ONE mapInArrow pass running the complete
-    per-document oracle (udfs.extract_batches) — candidate texts never
-    cross the Arrow boundary, and no pandas frame is built on either
-    side of it.
-    fused=False: the 3-stage path (parse pUDF → native HOF argmax →
-    fields pUDF) used where stage outputs must materialize separately
-    (reprocess-from-checkpoint, C4) — byte-identical output by
-    construction (both call the same oracle components; tests pin it).
+    (bucket, bytes_in, _wall_ms): ONE mapInArrow pass running the
+    complete per-document oracle (udfs.extract_batches) — candidate
+    texts never cross the Arrow boundary, and no pandas frame is built
+    on either side of it.
 
     repartition=False (default): extraction runs DIRECTLY on the scan
     partitions — zero shuffle. Extraction is row-local, so shuffling
@@ -239,186 +180,56 @@ def run_extract_full(pages: DataFrame, n_buckets: int = DEFAULT_BUCKETS,
     bucket shuffle for callers that need bucket-aligned output partitions
     (the checkpointed runner's commit groups).
     """
-    if not fused:
-        if profiles is not None or patterns_only:
-            raise ValueError("profiles/patterns_only are fused-path options "
-                             "(the staged path materializes the full "
-                             "ensemble for C4)")
-        return stage_fields(stage_assemble(stage_parse(pages, n_buckets, partitions)))
-    prepped = with_bucket(pages.select(*_PRUNED_COLS(pages)), n_buckets)
-    if repartition:
-        n_parts = partitions or prepped.sparkSession.conf.get(
-            "spark.sql.shuffle.partitions")
-        prepped = prepped.repartition(int(n_parts), "bucket")
-    body = (udfs.extract_batches if profiles is None and not patterns_only
-            else udfs.make_extract_batches(profiles, patterns_only))
-    return prepped.mapInArrow(body, udfs.EXTRACTED_FIELDS_SCHEMA)
+    return _prepped(pages, n_buckets, repartition).mapInArrow(
+        udfs.extract_batches, udfs.EXTRACTED_FIELDS_SCHEMA)
 
 
 def run_extract(pages: DataFrame, n_buckets: int = DEFAULT_BUCKETS,
-                partitions: int | None = None, fused: bool = True,
-                repartition: bool = False,
-                profiles: tuple[str, ...] | None = None,
-                patterns_only: bool = False) -> DataFrame:
+                repartition: bool = False) -> DataFrame:
     """pages → extracted (no checkpointing; see runner.py for the
     checkpointed, resumable job)."""
-    return run_extract_full(
-        pages, n_buckets, partitions, fused, repartition, profiles,
-        patterns_only
-    ).select(*EXTRACTED_COLUMNS)
+    return run_extract_full(pages, n_buckets, repartition).select(
+        *EXTRACTED_COLUMNS)
 
 
 def run_extract_cascade_in_batch_full(
         pages: DataFrame, accept: float = 0.7,
-        cheap_profiles: tuple[str, ...] = ("strict",),
         n_buckets: int = DEFAULT_BUCKETS, repartition: bool = False,
         cheap_fields: bool = False) -> DataFrame:
-    """In-batch cascade keeping the lineage side-band columns (bucket,
+    """The M12 cascade keeping the lineage side-band columns (bucket,
     bytes_in, _wall_ms) — the checkpointed runner's variant
-    (runner.run_job(cascade='in_batch')). _wall_ms is the cumulative
-    batch wall including in-line escalations; lineage takes the
-    per-bucket max as usual."""
-    prepped = with_bucket(pages.select(*_PRUNED_COLS(pages)), n_buckets)
-    if repartition:
-        n_parts = prepped.sparkSession.conf.get(
-            "spark.sql.shuffle.partitions")
-        prepped = prepped.repartition(int(n_parts), "bucket")
-    body = udfs.make_extract_batches(cheap_profiles, cheap_fields,
-                                     cascade_accept=accept)
-    return prepped.mapInArrow(body, udfs.EXTRACTED_FIELDS_SCHEMA)
+    (runner.run_job(cascade=True)). _wall_ms is the cumulative batch
+    wall including in-line escalations; lineage takes the per-bucket
+    max as usual."""
+    return _prepped(pages, n_buckets, repartition).mapInArrow(
+        udfs.cascade_batches(accept, cheap_fields),
+        udfs.EXTRACTED_FIELDS_SCHEMA)
 
 
 def run_extract_cascade_in_batch(pages: DataFrame, accept: float = 0.7,
-                                 cheap_profiles: tuple[str, ...] = ("strict",),
                                  n_buckets: int = DEFAULT_BUCKETS,
                                  cheap_fields: bool = False) -> DataFrame:
-    """M12 cascade, IN-BATCH plan (r4): the gate/escalation runs per
-    document inside the single fused ``mapInArrow`` pass
-    (oracle.extract_document_cascade), so the plan is IDENTICAL to the
-    fixed path — zero shuffle, no pass-1 cache materialization, no
-    second input scan, no merge joins. Output is row-identical to
-    ``run_extract_cascade`` *for a matching ``cheap_fields`` value*
-    (same per-document decision rule; pinned at both settings by
-    tests/test_cascade.py), and both paths default to
-    ``cheap_fields=False`` — this is the cascade shape
-    that actually beats the fixed path on a DOM-dominated corpus
-    (BENCH.md r4), and the one to reach for at 100 TB: the two-pass
-    plan re-reads escalated payload bytes from the source, which only
-    wins when escalation is rare AND the source re-scan is cheaper than
-    in-line escalation (never, for an in-memory batch)."""
-    return run_extract_cascade_in_batch_full(
-        pages, accept, cheap_profiles, n_buckets,
-        cheap_fields=cheap_fields).select(*EXTRACTED_COLUMNS)
-
-
-def run_extract_cascade(pages: DataFrame, accept: float = 0.7,
-                        cheap_profiles: tuple[str, ...] = ("strict",),
-                        n_buckets: int = DEFAULT_BUCKETS,
-                        cheap_fields: bool = False) -> DataFrame:
     """M12 — the reference's confidence-gated engine cascade
     (ai_service_local.py:513-537: local result ≥ threshold → accept;
-    below → try the expensive engine, keep the strictly-better result) as
-    a deterministic document-level two-pass plan:
+    below → try the expensive engine, keep the strictly-better result),
+    run per document inside the single fused ``mapInArrow`` pass
+    (oracle.extract_document_cascade): a cheap strict-profile pass, and
+    only a COMPLETED document whose field confidence lands below
+    ``accept`` is re-extracted with the full candidate ensemble; the
+    cheap result keeps ties. The plan is the fixed path's plan — zero
+    shuffle, no cache, no second input scan.
 
-    - pass 1 extracts EVERYTHING with the cheap single-profile engine;
-    - only COMPLETED documents whose overall field confidence lands below
-      ``accept`` are re-extracted with the full candidate ensemble
-      (left-semi join on url before the payload-touching map, so pass 2
-      re-reads only that fraction of the input bytes);
-    - per document the higher-confidence result wins, pass-1 keeping ties
-      (strictly-greater, like the reference's openai-vs-local pick).
+    ``cheap_fields=True`` also runs the cheap pass with the
+    patterns-only fields arm (fields.extract_spans patterns_only): it
+    accepts only when every REQUIRED field is pattern-hit, else the
+    document escalates.
 
     Config-off by design: ``run_extract`` stays the fixed deterministic
     default (SURVEY §7.4); the cascade is itself deterministic, just a
-    different accept policy. At 100 TB this is the adaptive-cost story —
-    the confident majority never pays the ensemble.
-
-    ``cheap_fields=True`` additionally runs pass 1 with the patterns-only
-    fields arm (fields.extract_spans patterns_only — no sentence split /
-    proximity / entity / fallback scans): pass 1 accepts only when every
-    REQUIRED field is pattern-hit (fields.py gate semantics, r4), else
-    escalates. NOTE on economics (r4, honest numbers): this TWO-PASS
-    plan pays a pass-1 cache materialization + second input scan +
-    merge joins, which on a DOM-dominated corpus eats the cheap-arm
-    saving (~1.2-1.8× the fixed wall); use
-    ``run_extract_cascade_in_batch`` for the plan whose adaptive cost
-    actually lands under the fixed path (row-identical output). The
-    two-pass shape remains the right one when pass-2 must run a
-    DIFFERENT, externally-costed engine (the reference's rules-vs-LLM
-    regime) or materialize pass-1 results anyway (the checkpointed
-    runner)."""
-    return _cascade(
-        pages, accept, EXTRACTED_COLUMNS,
-        lambda p, prof: run_extract(
-            p, n_buckets=n_buckets, profiles=prof,
-            patterns_only=cheap_fields and prof is not None),
-        cheap_profiles)
-
-
-def run_extract_cascade_full(pages: DataFrame, accept: float = 0.7,
-                             cheap_profiles: tuple[str, ...] = ("strict",),
-                             n_buckets: int = DEFAULT_BUCKETS,
-                             repartition: bool = False,
-                             cheap_fields: bool = False) -> DataFrame:
-    """Cascade variant keeping the lineage side-band columns (bucket,
-    bytes_in, _wall_ms) — what the checkpointed runner commits
-    (runner.run_job(cascade=True)). _wall_ms of a retried document is
-    the winning pass's cumulative batch wall; lineage takes the
-    per-bucket max either way (an upper bound, same contract)."""
-    cols = ["url", "warc_ts", "doc_type", "bucket", "status", "text",
-            "spans", "blocks", "confidence", "n_pages", "bytes_in",
-            "error", "_wall_ms"]
-    return _cascade(
-        pages, accept, cols,
-        lambda p, prof: run_extract_full(
-            p, n_buckets=n_buckets, repartition=repartition, profiles=prof,
-            patterns_only=cheap_fields and prof is not None),
-        cheap_profiles)
-
-
-def _cascade(pages: DataFrame, accept: float, cols: list[str],
-             extractor, cheap_profiles: tuple[str, ...]) -> DataFrame:
-    first = extractor(pages, cheap_profiles)
-    first = first.persist()
-    # eager: THREE consumers fan out over pass 1 (accepted rows, low rows,
-    # and the retry semi-join) — racing a cold cache recomputes the whole
-    # extraction per consumer (measured 13 s → 32 s at 240k docs), so pay
-    # one materialization up front and let everyone read the cached rows
-    first.count()
-    is_low = ((F.col("status") == "COMPLETED")
-              & (F.col("confidence") < F.lit(accept)))
-    accepted = first.filter(~is_low)
-    low = first.filter(is_low)
-    # document key is (url, warc_ts): a Common-Crawl-style corpus holds
-    # multiple snapshots of one url, and keying the retry/merge on url
-    # alone would re-extract and cross-join ALL snapshots of a url that
-    # has any low one (row amplification in the committed output)
-    key = ["url", "warc_ts"]
-    semi_on = None
-    for k in key:  # null-safe: a null warc_ts must not silently exclude
-        cond = F.col(f"p.{k}").eqNullSafe(F.col(f"l.{k}"))
-        semi_on = cond if semi_on is None else semi_on & cond
-    retry = (pages.alias("p")
-             .join(low.select(*key).alias("l"), semi_on, "left_semi"))
-    second = extractor(retry, None)
-    a, b = low.alias("a"), second.alias("b")
-    pick = F.when(
-        F.col("b.confidence") > F.col("a.confidence"),
-        F.struct(*[F.col(f"b.{c}").alias(c) for c in cols]),
-    ).otherwise(
-        F.struct(*[F.col(f"a.{c}").alias(c) for c in cols]))
-    on = None
-    for k in key:
-        cond = F.col(f"a.{k}").eqNullSafe(F.col(f"b.{k}"))
-        on = cond if on is None else on & cond
-    # LEFT join: a low row can never be dropped (extraction is total, so
-    # a pass-2 twin always exists, but the merge must not rely on it);
-    # a missing b side leaves the strictly-greater test false → a wins
-    merged = (a.join(b, on, "left")
-              .select(pick.alias("_r")).select("_r.*"))
-    out = accepted.select(*cols).unionByName(merged)
-    from .cache import track
-    return track(out, first)
+    different accept policy."""
+    return run_extract_cascade_in_batch_full(
+        pages, accept, n_buckets,
+        cheap_fields=cheap_fields).select(*EXTRACTED_COLUMNS)
 
 
 def layout_by_url(extracted: DataFrame, n_files: int | None = None,
@@ -454,23 +265,47 @@ def tune_input_splits(spark: SparkSession, input_bytes: int,
     return target
 
 
-def lineage_of(stage_df: DataFrame, run_id: str, stage: str) -> DataFrame:
+def lineage_of(stage_df: DataFrame, run_id: str, stage: str,
+               buckets: Iterable[int]) -> DataFrame:
     """Per-bucket lineage rows (FIXTURES.md §3) from a stage output that
-    carries bucket/bytes_in/error/_wall_ms. ``wall_ms`` is the max
-    cumulative batch wall time observed in the bucket's physical
-    partition (upper bound of the bucket's processing time).
+    carries bucket/bytes_in/error/_wall_ms, one row for every bucket in
+    ``buckets`` (the buckets the stage processed) and for every bucket
+    the rows carry. A processed bucket with no input rows gets zero
+    counters and ``wall_ms`` 0: it still counts as done, so a resume
+    never re-runs its commit group. ``wall_ms`` is the max cumulative
+    batch wall time observed in the bucket's physical partition (upper
+    bound of the bucket's processing time).
     NEEDS_OCR rows (error 'needs_ocr: <fmt>') count as OK — the job
     successfully CLASSIFIED them for a downstream OCR stage; fail_count
     remains exactly the FAILED rows, so lineage dashboards don't page
     on a corpus that is simply full of scans."""
     ok = F.col("error").isNull() | F.col("error").startswith("needs_ocr: ")
+    rows = stage_df.select(
+        F.col("bucket").alias("partition_id"),
+        F.lit(1).alias("n"),
+        "bytes_in",
+        F.when(ok, 1).otherwise(0).alias("ok"),
+        F.when(ok, 0).otherwise(1).alias("fail"),
+        "_wall_ms",
+    )
+    # one all-zero row per processed bucket rides the same aggregation;
+    # built in Catalyst (createDataFrame would run a Python task)
+    zeros = stage_df.sparkSession.range(1, numPartitions=1).select(
+        F.explode(F.array(*[F.lit(int(b)) for b in buckets]))
+        .alias("partition_id"),
+        F.lit(0).alias("n"),
+        F.lit(0).cast("bigint").alias("bytes_in"),
+        F.lit(0).alias("ok"),
+        F.lit(0).alias("fail"),
+        F.lit(0.0).alias("_wall_ms"),
+    )
     return (
-        stage_df.groupBy(F.col("bucket").alias("partition_id"))
+        rows.unionByName(zeros).groupBy("partition_id")
         .agg(
-            F.count("*").alias("input_count"),
+            F.sum("n").alias("input_count"),
             F.sum("bytes_in").alias("bytes_in"),
-            F.sum(F.when(ok, 1).otherwise(0)).alias("ok_count"),
-            F.sum(F.when(ok, 0).otherwise(1)).alias("fail_count"),
+            F.sum("ok").alias("ok_count"),
+            F.sum("fail").alias("fail_count"),
             F.max("_wall_ms").alias("wall_ms"),
         )
         .select(

@@ -42,7 +42,7 @@ import shutil
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from . import cache, pipeline
+from . import pipeline, udfs
 from .checkpoint import Catalog
 
 EXTRACTED_TABLE = "extracted"
@@ -99,16 +99,10 @@ def run_job(
     commit group, so per-group jobs read 1/G of the payload bytes
     instead of re-scanning everything (see module docstring).
     ``cascade=True`` extracts each commit group with the M12
-    confidence-gated cascade (pipeline.run_extract_cascade_full,
-    ``accept`` gate) — same resume/lineage mechanics, adaptive cost;
-    ``cascade='in_batch'`` uses the r4 in-batch plan
-    (pipeline.run_extract_cascade_in_batch_full: per-document
-    escalation inside the fused map — row-identical to the two-pass
-    mode for a matching ``cheap_fields``, no pass-1 cache or second
-    scan per group; the faster choice when pass 2 is this engine's own
-    ensemble rather than an external one). ``cheap_fields`` is
-    forwarded to BOTH cascade modes (pass 1 patterns-only when True),
-    so the two modes always agree row-for-row.
+    confidence-gated cascade (pipeline.run_extract_cascade_in_batch_full:
+    ``accept`` gate, per-document escalation inside the fused map, the
+    cheap pass patterns-only when ``cheap_fields``) — same
+    resume/lineage mechanics, adaptive cost.
 
     ``canonical_keys=True`` keys the resume bucketing AND the sorted
     output layout on ``urls.canonical_url(url)`` instead of the raw
@@ -180,12 +174,8 @@ def run_job(
                 chunk = prepped.filter(F.col("cgroup") == g).drop("cgroup")
             else:
                 chunk = prepped.filter(F.col("bucket").isin(buckets))
-            if cascade == "in_batch":
+            if cascade:
                 extracted = pipeline.run_extract_cascade_in_batch_full(
-                    chunk, accept=accept, n_buckets=n_buckets,
-                    repartition=True, cheap_fields=cheap_fields)
-            elif cascade:
-                extracted = pipeline.run_extract_cascade_full(
                     chunk, accept=accept, n_buckets=n_buckets,
                     repartition=True, cheap_fields=cheap_fields)
             else:
@@ -198,12 +188,13 @@ def run_job(
                 if sorted_layout:
                     out_rows = pipeline.layout_by_url(out_rows, key=key)
                 catalog.append(EXTRACTED_TABLE, out_rows)
-                catalog.append(
-                    LINEAGE_TABLE, pipeline.lineage_of(extracted, run_id, "final")
-                )
+                # every bucket of the group gets a row, empty ones too:
+                # completed_buckets reads lineage, so a bucket missing
+                # from it would re-run its group on every resume
+                catalog.append(LINEAGE_TABLE, pipeline.lineage_of(
+                    extracted, run_id, "final", buckets))
             finally:
                 extracted.unpersist()
-                cache.release(extracted)  # cascade pass-1 cache, per group
             processed += 1
     finally:
         if staged_dir is not None:
@@ -218,40 +209,6 @@ def run_job(
     return out
 
 
-PARSED_TABLE = "ckpt_parsed"
-
-
-def run_job_staged(
-    spark: SparkSession,
-    pages: DataFrame,
-    out_root: str,
-    run_id: str | None = None,
-    n_buckets: int = pipeline.DEFAULT_BUCKETS,
-) -> DataFrame:
-    """Staged variant of run_job: materializes the parse stage (the
-    expensive payload-touching pass) to the checkpoint catalog, then
-    derives extracted from it. Enables C4-style reprocessing: a changed
-    field registry re-runs ONLY assemble+fields from ``ckpt_parsed``,
-    never re-reading/re-parsing payloads (reference analogue:
-    reprocess-with-cached-OCR, document_service.py:253-282)."""
-    run_id = run_id or pipeline.new_run_id()
-    catalog = Catalog(out_root)
-    parsed = pipeline.stage_parse(pages, n_buckets).persist()
-    try:
-        catalog.append(PARSED_TABLE, parsed)
-        extracted = pipeline.stage_fields(pipeline.stage_assemble(parsed)).persist()
-        try:
-            catalog.append(EXTRACTED_TABLE,
-                           extracted.select(*pipeline.EXTRACTED_COLUMNS))
-            catalog.append(LINEAGE_TABLE,
-                           pipeline.lineage_of(extracted, run_id, "final"))
-        finally:
-            extracted.unpersist()
-    finally:
-        parsed.unpersist()
-    return catalog.read(spark, EXTRACTED_TABLE)
-
-
 def reprocess_fields(
     spark: SparkSession,
     out_root: str,
@@ -259,29 +216,38 @@ def reprocess_fields(
     run_id: str | None = None,
     version: int | None = None,
 ) -> DataFrame:
-    """Re-run assemble+fields from the checkpointed parse output (pinned
-    to a catalog snapshot) — zero payload re-reads. Returns the new
-    extracted table; writes it + lineage under ``out_table``."""
+    """C4 reprocess-from-cache: re-run field extraction over the saved
+    text of the ``extracted`` table (pinned to catalog snapshot
+    ``version``, the latest by default) — zero payload re-reads.
+    Candidate scores are fixed at parse time, so a field-registry
+    change needs only (text, doc_type, status) (reference analogue:
+    reprocess-with-cached-OCR, document_service.py:253-282). Returns the
+    new extracted table; writes it under ``out_table`` and lineage rows
+    with stage 'reprocess' (bucketed by url over DEFAULT_BUCKETS;
+    ``bytes_in`` counts the text bytes read)."""
     run_id = run_id or pipeline.new_run_id()
     catalog = Catalog(out_root)
-    parsed = catalog.read(spark, PARSED_TABLE, version=version)
-    if parsed is None:
-        raise ValueError(f"no {PARSED_TABLE} checkpoint under {out_root}")
-    extracted = pipeline.stage_fields(pipeline.stage_assemble(parsed)).persist()
+    saved = catalog.read(spark, EXTRACTED_TABLE, version=version)
+    if saved is None:
+        raise ValueError(f"no {EXTRACTED_TABLE} table under {out_root}")
+    n_buckets = pipeline.DEFAULT_BUCKETS
+    redone = (
+        pipeline.with_bucket(saved, n_buckets)
+        .withColumn("bytes_in", F.octet_length("text").cast("bigint"))
+        .mapInArrow(udfs.respan_batches, udfs.EXTRACTED_FIELDS_SCHEMA)
+        .persist())
     try:
-        catalog.append(out_table, extracted.select(*pipeline.EXTRACTED_COLUMNS))
-        catalog.append(LINEAGE_TABLE,
-                       pipeline.lineage_of(extracted, run_id, "reprocess"))
+        catalog.append(out_table, redone.select(*pipeline.EXTRACTED_COLUMNS))
+        catalog.append(LINEAGE_TABLE, pipeline.lineage_of(
+            redone, run_id, "reprocess", range(n_buckets)))
     finally:
-        extracted.unpersist()
+        redone.unpersist()
     return catalog.read(spark, out_table)
 
 
 def pipeline_schema(spark: SparkSession):
-    from .udfs import BLOCK_T, SPAN_T
-
     return (
         "url string, warc_ts timestamp, doc_type string, status string, "
-        f"text string, spans {SPAN_T}, blocks {BLOCK_T}, confidence double, "
-        "n_pages int, error string"
+        f"text string, spans {udfs.SPAN_T}, blocks {udfs.BLOCK_T}, "
+        "confidence double, n_pages int, error string"
     )

@@ -5,13 +5,13 @@ an iterator of pyarrow record batches for ONE physical partition and
 yields record batches in the ``EXTRACTED_FIELDS_SCHEMA`` layout. url,
 warc_ts and bucket pass through as Arrow columns, the payloads are read
 with one ``to_pylist()`` and every output column is built with
-``pa.array(..., type)`` — no pandas frame on either side. The staged
-path's bodies (``parse_batches``, ``fields_batches``) are ``mapInPandas``
-bodies. Per-row Python exists only *inside* a batch loop over documents
-(the cost model SURVEY.md §7.2 accepts: Arrow in/out, no Python row
-UDFs, no RDDs).
+``pa.array(..., type)`` — no pandas frame on either side. The M12
+cascade body (``cascade_batches``) and the reprocess body
+(``respan_batches``) have the same shape. Per-row Python exists only
+*inside* a batch loop over documents (the cost model SURVEY.md §7.2
+accepts: Arrow in/out, no Python row UDFs, no RDDs).
 
-Lineage side-band (SURVEY.md §4.3): the stage bodies stamp
+Lineage side-band (SURVEY.md §4.3): the bodies stamp
 ``_wall_ms`` = cumulative wall time of this partition's processing so the
 driver can aggregate per-partition wall time without a second pass
 (reference analogue: the request-latency middleware,
@@ -35,20 +35,10 @@ from .fields import extract_spans
 
 # Struct DDL fragments shared by pipeline schemas
 BLOCK_T = "array<struct<page:int,score:double,n_chars:int>>"
-CANDIDATE_T = (
-    "array<struct<profile:string,conf:double,score:double,text:string,"
-    f"blocks:{BLOCK_T}>>"
-)
 SPAN_T = (
     "array<struct<name:string,value:string,field_type:string,"
     "start:bigint,end:bigint,confidence:double,is_required:boolean,"
     "method:string>>"
-)
-
-PARSED_SCHEMA = (
-    "url string, warc_ts timestamp, doc_type string, bucket int, "
-    "kind string, n_pages int, bytes_in bigint, "
-    f"candidates {CANDIDATE_T}, error string, _wall_ms double"
 )
 
 EXTRACTED_FIELDS_SCHEMA = (
@@ -59,8 +49,8 @@ EXTRACTED_FIELDS_SCHEMA = (
 )
 _EXTRACTED_NAMES = [c.split()[0] for c in EXTRACTED_FIELDS_SCHEMA.split(", ")]
 
-# Arrow types of the EXTRACTED_FIELDS_SCHEMA columns the fused body
-# builds (url, warc_ts and bucket pass through from its input)
+# Arrow types of the EXTRACTED_FIELDS_SCHEMA columns the bodies build
+# (url, warc_ts and bucket pass through from their input)
 SPANS_PA = pa.list_(pa.struct([
     ("name", pa.string()), ("value", pa.string()),
     ("field_type", pa.string()), ("start", pa.int64()), ("end", pa.int64()),
@@ -108,45 +98,35 @@ def trim_worker_imports() -> None:
             del cache[key]
 
 
-def make_extract_batches(profiles: tuple[str, ...] | None = None,
-                         patterns_only: bool = False,
-                         cascade_accept: float | None = None):
-    """Factory for the fused body with a restricted candidate-profile
-    ensemble and/or the patterns-only fields arm (M12 cascade cheap
-    pass). ``cascade_accept`` switches the body to the IN-BATCH cascade
-    (oracle.extract_document_cascade: cheap pass, below-gate documents
-    escalate to the full ensemble inside the same batch — ``profiles``/
-    ``patterns_only`` then describe the cheap pass). The closure ships
-    to executors via cloudpickle like any mapInArrow body."""
-    def body(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        return extract_batches(it, profiles, patterns_only, cascade_accept)
-    return body
-
-
-def extract_batches(it: Iterator[pa.RecordBatch | pd.DataFrame],
-                    profiles: tuple[str, ...] | None = None,
-                    patterns_only: bool = False,
-                    cascade_accept: float | None = None
+def extract_batches(it: Iterator[pa.RecordBatch | pd.DataFrame]
                     ) -> Iterator[pa.RecordBatch]:
     """Fused single-pass body: the whole per-document pipeline
     (oracle.extract_document: parse → best-of → fields) in ONE Python
-    stage. Preferred for throughput: candidate texts never cross the
-    Arrow boundary (the staged path ships every candidate profile's full
-    text through two extra JVM↔Python hops — measured 2-3× slower).
+    stage, so candidate texts never cross the Arrow boundary.
     Input batches carry url, warc_ts, bucket, html: Arrow record batches
     (the mapInArrow body), or pandas frames from in-process callers."""
+    return _document_batches(it, oracle.extract_document)
+
+
+def cascade_batches(accept: float, cheap_fields: bool):
+    """The fused body for the M12 cascade
+    (oracle.extract_document_cascade: cheap pass, below-gate documents
+    escalate to the full ensemble inside the same batch). The closure
+    ships to executors via cloudpickle like any mapInArrow body."""
+    def one(url, payload):
+        return oracle.extract_document_cascade(url, payload, accept,
+                                               cheap_fields)
+
+    def body(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        return _document_batches(it, one)
+    return body
+
+
+def _document_batches(it, one) -> Iterator[pa.RecordBatch]:
+    """Run ``one(url, payload)`` → extracted record over every document
+    of every batch."""
     trim_worker_imports()
     t0 = time.monotonic()
-    if cascade_accept is not None:
-        def one(url, payload):
-            return oracle.extract_document_cascade(
-                url, payload, accept=cascade_accept,
-                cheap_profiles=profiles or ("strict",),
-                cheap_fields=patterns_only)
-    else:
-        def one(url, payload):
-            return oracle.extract_document(url, payload, profiles,
-                                           patterns_only)
     for batch in it:
         if not isinstance(batch, pa.RecordBatch):
             batch = pa.RecordBatch.from_pandas(batch, preserve_index=False)
@@ -172,49 +152,26 @@ def extract_batches(it: Iterator[pa.RecordBatch | pd.DataFrame],
         ], names=_EXTRACTED_NAMES)
 
 
-def parse_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Stage 1 body: html:binary → candidates (oracle.parse_candidates).
-    Input batches must carry url, warc_ts, doc_type, bucket, html."""
+def respan_batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    """Reprocess body (C4): re-run fields.extract_spans over the saved
+    (text, doc_type, status) of extracted rows. Input batches carry
+    every EXTRACTED_FIELDS_SCHEMA column but ``_wall_ms``; spans and
+    confidence are rebuilt, the rest passes through. NEEDS_OCR and
+    FAILED rows keep empty spans and confidence 0.0, as the oracle
+    gives them."""
+    trim_worker_imports()
     t0 = time.monotonic()
-    for pdf in it:
-        payloads = pdf["html"]
-        recs = [oracle.parse_candidates(bytes(b) if b is not None else b"") for b in payloads]
-        out = pd.DataFrame(
-            {
-                "url": pdf["url"].values,
-                "warc_ts": pdf["warc_ts"].values,
-                "doc_type": pdf["doc_type"].values,
-                "bucket": pdf["bucket"].values,
-                "kind": [r["kind"] for r in recs],
-                "n_pages": pd.array([r["n_pages"] for r in recs], dtype="int32"),
-                "bytes_in": pd.array(
-                    [len(b) if b is not None else 0 for b in payloads], dtype="int64"
-                ),
-                "candidates": [r["candidates"] for r in recs],
-                "error": [r["error"] for r in recs],
-            }
-        )
-        out["_wall_ms"] = (time.monotonic() - t0) * 1000.0
-        yield out
-
-
-def fields_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Stage 3 body: (text, doc_type, status) → spans + confidence
-    (shared fields module — same ``re`` engine as the oracle)."""
-    t0 = time.monotonic()
-    for pdf in it:
-        spans_col: list[list[dict]] = []
-        conf_col: list[float] = []
-        for text, doc_type, status in zip(pdf["text"], pdf["doc_type"], pdf["status"]):
-            if status != oracle.STATUS_COMPLETED:
-                spans_col.append([])
-                conf_col.append(0.0)
-                continue
-            spans, conf = extract_spans(text if text is not None else "", doc_type)
-            spans_col.append(spans)
-            conf_col.append(conf)
-        out = pdf.copy()
-        out["spans"] = spans_col
-        out["confidence"] = conf_col
-        out["_wall_ms"] = (time.monotonic() - t0) * 1000.0
-        yield out
+    for batch in it:
+        recs = [extract_spans(text, doc_type)
+                if status == oracle.STATUS_COMPLETED else ([], 0.0)
+                for text, doc_type, status in zip(
+                    batch.column("text").to_pylist(),
+                    batch.column("doc_type").to_pylist(),
+                    batch.column("status").to_pylist())]
+        cols = dict(zip(batch.schema.names, batch.columns))
+        cols["spans"] = pa.array([r[0] for r in recs], SPANS_PA)
+        cols["confidence"] = pa.array([r[1] for r in recs], pa.float64())
+        cols["_wall_ms"] = pa.array(
+            [(time.monotonic() - t0) * 1000.0] * len(recs), pa.float64())
+        yield pa.RecordBatch.from_arrays(
+            [cols[c] for c in _EXTRACTED_NAMES], names=_EXTRACTED_NAMES)
