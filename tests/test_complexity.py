@@ -1,9 +1,10 @@
-"""Adversarial input families for the HTML tokenizer and the PDF
-content-stream tokenizer: parse time at n and at 4n must grow about
-linearly (ratio ≤ 6, against 16 for a quadratic parser), and stay under
-a µs-per-byte ceiling. FlateDecode streams inflate within a per-document
-budget: in budget they decode exactly as ``zlib.decompress``, past it
-the document is FAILED with bounded memory."""
+"""Adversarial input families for the HTML tokenizer, the PDF object
+scan and the PDF content-stream tokenizer: parse time at n and at 4n
+must grow about linearly (ratio ≤ 6, against 16 for a quadratic
+parser), and stay under a µs-per-byte ceiling. FlateDecode streams
+inflate within a per-document budget: in budget they decode exactly as
+``zlib.decompress``, past it the document is FAILED with bounded
+memory."""
 
 import gc
 import time
@@ -26,6 +27,12 @@ FAMILIES = {
     "stray_lt": lambda n: "a < b </> " * n,
     # quoted attribute values holding '>' and quotes of the other kind
     "quoted_attrs": lambda n: "<p title='a>b\"' data-x=\"c>'d\">t</p>" * n,
+    # an open tag that never closes takes the rest of the page: a scan
+    # that failed the tag and went on at the next '<' would rescan the
+    # tail from every '<'
+    "unclosed_quote": lambda n: '<a "' * n,
+    # the same for a raw-text element, whose body scan comes first
+    "unclosed_rawtext": lambda n: '<script x="' * n,
 }
 
 
@@ -48,6 +55,28 @@ def test_parse_html_is_linear(family):
 
 
 # ------------------------------------------------------------ PDF
+
+OBJ_N = 50_000  # bytes
+
+OBJ_FAMILIES = {
+    # N 0 obj headers with no endobj: each one searched to the end of
+    # the file (1.9 s at 270 KB)
+    "headers_without_endobj": lambda n: b"1 0 obj\n" * (n // 8),
+    # a digit run that starts no header: one header attempt per digit,
+    # each rescanning the rest of the run (61 s at 80 KB)
+    "digit_run": lambda n: b"1" * n + b"\n1 0 obj\nendobj\n",
+}
+
+
+@pytest.mark.parametrize("family", sorted(OBJ_FAMILIES))
+def test_pdf_object_scan_is_linear(family):
+    make = OBJ_FAMILIES[family]
+    small, large = (b"%PDF-1.4\n" + make(n) for n in (OBJ_N, 4 * OBJ_N))
+    parse = lambda p: oracle.extract_document("https://ex.org/o.pdf", p)  # noqa: E731
+    assert parse(small)["status"] == "FAILED"
+    t_small, t_large = _best_time(small, parse), _best_time(large, parse)
+    assert t_large / t_small <= 6, (family, t_small, t_large)
+    assert t_large * 1e6 / len(large) < 0.5, (family, t_large, len(large))
 
 
 def _pdf(*streams: bytes, flate: bool = False) -> bytes:

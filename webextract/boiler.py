@@ -1,4 +1,4 @@
-"""Text-density / link-density boilerplate stripping over the flat DOM.
+"""Text-density / link-density boilerplate stripping over the page's blocks.
 
 This is the deterministic analogue of the reference's hybrid OCR ensemble
 (ocr-ai-service/app/services/ocr_service_advanced.py):
@@ -19,13 +19,14 @@ This is the deterministic analogue of the reference's hybrid OCR ensemble
 
 Spec decided here (the oracle IS the spec; goldens pin it):
 
-block = element with tag in BLOCK_TAGS owning at least one direct text
-segment, where a segment's owning block is the NEAREST block-tag ancestor
-of the element it is attached to. block text = segments concatenated in
-document order, whitespace runs collapsed to single spaces, stripped.
-link chars = same collapse over the segments inside <a>.
-tags = 1 + number of elements whose nearest block ancestor is this block.
-link_density = link_chars / text_len ; text_density = text_len / tags.
+block = element with tag in dom.BLOCK_TAGS owning at least one direct
+text segment, where a segment's owning block is the NEAREST block-tag
+ancestor of the element it is attached to (the root, tag ``#root``, when
+there is none). ``dom.parse_html`` resolves this during its one scan.
+block text = segments concatenated in document order, whitespace runs
+collapsed to single spaces, stripped; blocks come in the order of their
+first segment. link chars = sum over the segments inside <a> of each
+segment's collapsed length. link_density = min(1, link_chars / text_len).
 
 Keep rules per profile (thresholds L = max link_density, M = min chars):
   strict : L=0.3, M=25 ; lenient : L=0.5, M=10
@@ -37,88 +38,43 @@ whose immediate neighbors were both initially kept is rescued.
 
 from __future__ import annotations
 
-from .dom import Dom
+from .dom import collapse
 
-BLOCK_TAGS = frozenset(
-    ["p", "div", "article", "section", "main", "li", "td", "th", "pre",
-     "blockquote", "h1", "h2", "h3", "h4", "h5", "h6", "caption", "figcaption"]
-)
 HEADING_TAGS = frozenset(["h1", "h2", "h3", "h4", "h5", "h6"])
 
 # (name, max_link_density, min_chars) — order matters: first-wins on ties
 PROFILES = (("strict", 0.3, 25), ("lenient", 0.5, 10))
 
-def _collapse(s: str) -> str:
-    # equivalent to re.sub(r"\s+", " ", s).strip() — str.split()'s
-    # whitespace set is exactly re's \s (verified over the BMP) and the
-    # C implementation is ~4x faster than the regex
-    return " ".join(s.split())
-
 
 class Block:
-    __slots__ = ("order", "tag", "text", "link_chars", "tags")
+    __slots__ = ("tag", "text", "link_chars")
 
-    def __init__(self, order: int, tag: str) -> None:
-        self.order = order          # document order of first segment
+    def __init__(self, tag: str, text: str, link_chars: int) -> None:
         self.tag = tag
-        self.text = ""              # filled at finalize
-        self.link_chars = 0
-        self.tags = 1
+        self.text = text
+        self.link_chars = link_chars
 
 
-def blocks_of(dom: Dom) -> list[Block]:
-    """Group text segments into blocks via nearest-block-ancestor, compute
-    densities. Nearest-block resolution is one O(n) array pass: parents
-    always precede children in the DOM arrays, so each node inherits its
-    parent's already-computed answer."""
-    tags, parents = dom.tag, dom.parent
-    nearest = [0] * len(tags)  # node -> nearest block-tag ancestor (or root 0)
-    for i in range(1, len(tags)):
-        nearest[i] = i if tags[i] in BLOCK_TAGS else nearest[parents[i]]
-
-    by_block: dict[int, Block] = {}
-    parts: dict[int, list[str]] = {}
-    for k in range(len(dom.seg_owner)):
-        b = nearest[dom.seg_owner[k]]
-        blk = by_block.get(b)
-        if blk is None:
-            blk = Block(k, tags[b])
-            by_block[b] = blk
-            parts[b] = []
-        parts[b].append(dom.seg_text[k])
-        if dom.seg_anchor[k]:
-            blk.link_chars += len(_collapse(dom.seg_text[k]))
-    # tag counts: every element contributes to its nearest block (if that
-    # block carries text); the block element itself is the baseline 1.
-    for node in range(1, len(tags)):
-        b = nearest[node]
-        blk = by_block.get(b)
-        if blk is not None and node != b:
-            blk.tags += 1
+def blocks_of(raw: list[list]) -> list[Block]:
+    """``dom.parse_html``'s blocks (``[tag, link_chars, segment, ...]``)
+    as ``Block``s: segments joined and collapsed, blocks left with no
+    text dropped, order kept."""
     out = []
-    for b, blk in by_block.items():
-        blk.text = _collapse("".join(parts[b]))
-        if blk.text:
-            out.append(blk)
-    out.sort(key=lambda x: x.order)
+    for b in raw:
+        text = collapse("".join(b[2:]))
+        if text:
+            out.append(Block(b[0], text, b[1]))
     return out
 
 
-def keep_mask(blocks: list[Block], max_ld: float, min_chars: int) -> list[bool]:
-    init = []
-    for blk in blocks:
-        tlen = len(blk.text)
-        ld = min(1.0, blk.link_chars / tlen) if tlen else 1.0
-        ok = ld <= max_ld and tlen >= min_chars
-        if not ok and blk.tag in HEADING_TAGS and blk.link_chars == 0 and tlen >= 3:
-            ok = True
-        init.append(ok)
+def _keep_mask(stats: list[tuple[int, float, bool]], max_ld: float,
+               min_chars: int) -> list[bool]:
+    init = [ld <= max_ld and tlen >= min_chars or head
+            for tlen, ld, head in stats]
     kept = list(init)
-    for i in range(1, len(blocks) - 1):
+    for i in range(1, len(stats) - 1):
         if not init[i] and init[i - 1] and init[i + 1]:
-            blk = blocks[i]
-            tlen = len(blk.text)
-            ld = min(1.0, blk.link_chars / tlen) if tlen else 1.0
+            tlen, ld, _ = stats[i]
             if tlen >= 10 and ld <= max_ld:
                 kept[i] = True
     return kept
@@ -132,23 +88,26 @@ def candidates(blocks: list[Block],
     {profile, conf, score, text, blocks:[{page,score,n_chars}]}.
     ``profiles`` restricts to the named subset (the M12 cascade's cheap
     first pass); None = the full ensemble, profile order preserved."""
-    cands = []
     selected = PROFILES if profiles is None else tuple(
         p for p in PROFILES if p[0] in profiles)
+    # (text_len, link_density, kept-as-heading) per block, for every profile
+    stats = []
+    for blk in blocks:
+        tlen = len(blk.text)
+        stats.append((tlen, min(1.0, blk.link_chars / tlen),
+                      blk.link_chars == 0 and tlen >= 3
+                      and blk.tag in HEADING_TAGS))
+    cands = []
     for name, max_ld, min_chars in selected:
-        mask = keep_mask(blocks, max_ld, min_chars)
         seen: set[str] = set()
         texts: list[str] = []
         lds: list[float] = []
         binfo: list[dict] = []
-        for blk, ok in zip(blocks, mask):
-            if not ok:
-                continue
-            if blk.text in seen:
+        for blk, (tlen, ld, _), ok in zip(
+                blocks, stats, _keep_mask(stats, max_ld, min_chars)):
+            if not ok or blk.text in seen:
                 continue
             seen.add(blk.text)
-            tlen = len(blk.text)
-            ld = min(1.0, blk.link_chars / tlen) if tlen else 1.0
             texts.append(blk.text)
             lds.append(ld)
             binfo.append({"page": len(binfo), "score": 1.0 - ld, "n_chars": tlen})

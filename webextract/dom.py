@@ -1,9 +1,11 @@
-"""From-scratch HTML tokenizer + parent-pointer-array DOM.
+"""From-scratch HTML front end: payload bytes → text blocks in one scan.
 
 No lxml/bs4 in the environment (SURVEY.md §7.0) and the brief forbids a
-port — this is a small deterministic state machine producing flat arrays
-(no object tree), the parent-pointer-array encoding called for by the
-north_star. It is the Spark-side analogue of the reference's image
+port — this is a small deterministic tokenizer that never builds a tree.
+One master regex (``_SCAN_RE``) walks the page with a single ``findall``;
+a Python loop keeps the open-element stack, each element with its
+nearest block-tag ancestor, and appends every text segment straight to
+that block. It is the Spark-side analogue of the reference's image
 preprocessing stages (ocr-ai-service/app/services/ocr_service.py:56-76):
 normalize raw payload bytes into a structure the scorer can consume.
 
@@ -20,7 +22,11 @@ import re
 VOID_ELEMENTS = frozenset(
     "area base br col embed hr img input link meta param source track wbr".split()
 )
-RAWTEXT_ELEMENTS = frozenset(("script", "style"))
+# elements that own text blocks (boiler.py scores them)
+BLOCK_TAGS = frozenset(
+    ["p", "div", "article", "section", "main", "li", "td", "th", "pre",
+     "blockquote", "h1", "h2", "h3", "h4", "h5", "h6", "caption", "figcaption"]
+)
 
 # The ~10 core named entities (FIXTURES.md); numeric refs handled generically.
 NAMED_ENTITIES = {
@@ -66,6 +72,16 @@ def decode_entities(s: str) -> str:
     return _ENTITY_RE.sub(_entity_sub, s)
 
 
+def collapse(s: str) -> str:
+    """``re.sub(r"\\s+", " ", s).strip()``: str.split()'s whitespace set is
+    exactly re's \\s (checked over every code point). Every such character
+    but ' ' is non-printable, so a printable string with no doubled, leading
+    or trailing space is returned as it is, without the split."""
+    if s.isprintable() and "  " not in s and s[:1] != " " and s[-1:] != " ":
+        return s
+    return " ".join(s.split())
+
+
 def decode_payload(payload: bytes) -> str:
     """bytes → str. Honor an ASCII-detectable ``<meta charset>`` in the
     first 1024 bytes (utf-8 / latin-1 / ascii only), else UTF-8 with
@@ -84,128 +100,95 @@ def decode_payload(payload: bytes) -> str:
     return payload.decode(enc, errors="replace")
 
 
-class Dom:
-    """Flat parent-pointer-array DOM.
-
-    ``parent[i]``/``tag[i]``: element arrays (index 0 = synthetic root,
-    tag '#root', parent -1). ``seg_owner[k]``/``seg_text[k]``/
-    ``seg_anchor[k]``: text segments in document order, attached to the
-    innermost open element, entity-decoded, with an "inside <a>" flag.
-    """
-
-    __slots__ = ("parent", "tag", "seg_owner", "seg_text", "seg_anchor")
-
-    def __init__(self) -> None:
-        self.parent: list[int] = [-1]
-        self.tag: list[str] = ["#root"]
-        self.seg_owner: list[int] = []
-        self.seg_text: list[str] = []
-        self.seg_anchor: list[bool] = []
-
-    def ancestors(self, i: int):
-        while i >= 0:
-            yield i
-            i = self.parent[i]
+# HTML element names and attribute runs. Attributes run through the
+# tag's real '>': a quoted value may hold '>', and an unclosed quote
+# leaves the tag without one.
+_NAME = r"[a-zA-Z][a-zA-Z0-9:-]*+"
+_ATTRS = r"""(?:[^>"']++|"[^"]*+"|'[^']*+')*+"""
 
 
-# One token per match: the next '<' and what follows it. Groups: 1
-# ``!--`` (comment), 2 close-tag name, 3 open-tag name, 4 the open tag's
-# attributes through its real '>' (quoted values may hold '>'; None when
-# the tag never closes, which consumes the rest of the input). ``!``/``?``
-# (doctype, PI) match with no group set, and a '<' that starts none of
-# these matches alone (stray, kept as text).
-_TOKEN_RE = re.compile(
-    r"<(?:(!--)|[!?]|/([a-zA-Z][a-zA-Z0-9:-]*+)?"
-    r"|([a-zA-Z][a-zA-Z0-9:-]*+)((?:[^>\"']++|\"[^\"]*+\"|'[^']*+')*+>)?)?")
+def _rawtext(name: str) -> str:
+    """A ``<script>``/``<style>`` open tag that does not end in ``/>``,
+    with its body: through the next ``</name`` (ASCII case-insensitive,
+    matched on the page itself) and the '>' after it, or to the end of
+    the page. The body is not document text."""
+    return (rf"(?ai:{name})(?![a-zA-Z0-9:-]){_ATTRS}(?<!/)>"
+            rf"[^<]*+(?:<(?!/(?ai:{name}))[^<]*+)*+[^>]*+>?")
 
 
-def parse_html(payload: bytes) -> Dom:
-    """Tokenize + build the DOM in one pass. Always terminates; malformed
-    input degrades to text/skip, never raises (C2: failures are data).
-    Linear in the input: one ``_TOKEN_RE`` search per tag, and per-name
-    counts of open elements make an unmatched close tag one lookup."""
+# One match per token, and every match ends where the next begins, so
+# ``findall`` walks the whole page in one C-level pass. Groups: 1 the
+# text before the token, 2 a close-tag name, 3 an open-tag name, 4 its
+# closing '>' unless the tag ends in '/>' (empty too when the tag never
+# closes: it takes the rest of the page), 5 a stray '<' (kept as text).
+# Comments, doctype/PI, nameless close tags and raw-text elements match
+# with no group set. Each construct that never closes takes the rest of
+# the page inside the regex: a failed match would restart the scan one
+# '<' later and rescan the tail, quadratic in the page. A trailing '<'
+# is dropped.
+_SCAN_RE = re.compile(
+    r"([^<]*+)(?:<(?:"
+    r"!--[^-]*+(?:-(?!->)[^-]*+)*+(?:-->)?"
+    r"|[!?][^>]*+>?"
+    rf"|/({_NAME})?[^>]*+>?"
+    rf"|{_rawtext('script')}|{_rawtext('style')}"
+    rf"|({_NAME})(?:{_ATTRS}(?:(?<!/)(>)|>)|[\s\S]*+)"
+    r")|(<)(?=[\s\S])|<|\Z)")
+
+
+def parse_html(payload: bytes) -> list[list]:
+    """Tokenize the page straight into its blocks, in one pass that never
+    raises (C2: malformed input degrades to text or is skipped).
+
+    Returns the blocks that received text, in first-text order, each as
+    ``[tag, link_chars, segment, ...]``: the text segments whose nearest
+    open block-tag element (or the root, tag ``#root``) it is, entity-
+    decoded, whitespace-only segments skipped. ``link_chars`` sums the
+    collapsed length of the segments inside an open ``<a>``.
+
+    Linear in the input: one ``_SCAN_RE.findall``, and per-name counts of
+    open elements make an unmatched close tag one lookup."""
     s = decode_payload(payload)
-    n = len(s)
-    dom = Dom()
-    tag, parent = dom.tag, dom.parent
-    stack: list[int] = [0]  # open-element node indices, root always open
+    owner = ["#root", 0]  # the nearest block of the innermost open element
+    out: list[list] = []  # blocks in first-text order
+    names: list[str] = []  # open elements, innermost last
+    owners: list[list] = [owner]  # nearest block per open element, root first
     open_count: dict[str, int] = {}  # tag name → its elements on the stack
-    low: str | None = None  # lazily-built lowercase copy for rawtext scans
-    search = _TOKEN_RE.search
-    i = 0
-    while i < n:
-        m = search(s, i)
-        if m is None:
-            _add_text(dom, stack[-1], s[i:], open_count.get("a", 0))
-            break
-        lt = m.start()
-        if lt > i:
-            _add_text(dom, stack[-1], s[i:lt], open_count.get("a", 0))
-        k = m.lastindex
-        if k is None or k == 1:
-            if lt + 1 >= n:
-                break
-            c = s[lt + 1]
-            if k == 1:  # comment
-                end = s.find("-->", lt + 4)
-                i = n if end == -1 else end + 3
-            elif c == "!" or c == "?":  # doctype, processing instruction
-                end = s.find(">", lt + 2)
-                i = n if end == -1 else end + 1
-            elif c == "/":  # close tag without a name
-                end = s.find(">", lt + 1)
-                if end == -1:
-                    break
-                i = end + 1
-            else:  # stray '<' — literal text
-                _add_text(dom, stack[-1], "<", open_count.get("a", 0))
-                i = lt + 1
-            continue
-        if k == 2:  # close tag
-            end = s.find(">", lt + 1)
-            if end == -1:
-                break
-            i = end + 1
-            name = m.group(2).lower()
+    for text, close, name, opens, stray in _SCAN_RE.findall(s):
+        if text and not text.isspace():
+            if len(owner) == 2:  # the block's first text
+                out.append(owner)
+            text = decode_entities(text)
+            owner.append(text)
+            if open_count.get("a"):
+                owner[1] += len(collapse(text))
+        if name:
+            if not opens:
+                continue  # self-closing, or takes the rest of the page
+            name = name.lower()
+            if name in VOID_ELEMENTS:
+                continue
+            names.append(name)
+            if name in BLOCK_TAGS:
+                owner = [name, 0]
+            owners.append(owner)
+            open_count[name] = open_count.get(name, 0) + 1
+        elif close:
             # pop to the innermost open element of that name, if any
             # (soup-tolerant); an unmatched close tag is ignored
+            name = close.lower()
             if open_count.get(name):
                 while True:
-                    top = tag[stack.pop()]
+                    top = names.pop()
+                    owners.pop()
                     open_count[top] -= 1
                     if top == name:
                         break
-            continue
-        name = m.group(3).lower()
-        if k == 3:  # no closing '>' (or an unclosed quote): rest is tag
-            i = n
-            self_close = False
-        else:
-            i = m.end()
-            self_close = s[i - 2] == "/"
-        node = len(tag)
-        parent.append(stack[-1])
-        tag.append(name)
-        if name in RAWTEXT_ELEMENTS and not self_close:
-            # raw-text mode: content is NOT document text — skip to close tag
-            if low is None:
-                low = s.lower()
-            end = low.find("</" + name, i)
-            if end == -1:
-                break
-            gt = s.find(">", end)
-            i = n if gt == -1 else gt + 1
-            continue
-        if self_close or name in VOID_ELEMENTS:
-            continue
-        stack.append(node)
-        open_count[name] = open_count.get(name, 0) + 1
-    return dom
-
-
-def _add_text(dom: Dom, owner: int, raw: str, anchor_depth: int) -> None:
-    if not raw or raw.isspace():
-        return
-    dom.seg_owner.append(owner)
-    dom.seg_text.append(decode_entities(raw))
-    dom.seg_anchor.append(anchor_depth > 0)
+                owner = owners[-1]
+        elif stray:
+            if len(owner) == 2:
+                out.append(owner)
+            owner.append("<")
+            if open_count.get("a"):
+                owner[1] += 1
+    return out

@@ -101,8 +101,7 @@ def parse_candidates(payload: bytes,
                 "blocks": blocks,
             }
             return {"kind": kind, "n_pages": len(pages), "candidates": [cand], "error": None}
-        dom = parse_html(payload)
-        cands = candidates(blocks_of(dom), profiles)
+        cands = candidates(blocks_of(parse_html(payload)), profiles)
         return {"kind": kind, "n_pages": 1, "candidates": cands, "error": None}
     except Exception as e:  # noqa: BLE001 — C2: never throw past the doc
         return {"kind": kind, "n_pages": 0, "candidates": [], "error": f"{type(e).__name__}: {e}"}

@@ -34,10 +34,14 @@ from __future__ import annotations
 
 import re
 import zlib
+from bisect import bisect_left
 
 from . import MAX_PAYLOAD_BYTES
 
-_OBJ_RE = re.compile(rb"(\d+)\s+(\d+)\s+obj\b", re.S)
+# a header starts only where a digit run starts: tried at every digit of
+# a long run, each attempt rescanned the rest of the run (quadratic)
+_OBJ_RE = re.compile(rb"(?<!\d)(\d++)\s++(\d++)\s++obj\b")
+_ENDOBJ_RE = re.compile(rb"endobj")
 _STREAM_RE = re.compile(rb"stream\r?\n")
 _ESCAPES = {
     b"n": "\n", b"r": "\r", b"t": "\t", b"b": "\b", b"f": "\f",
@@ -66,14 +70,16 @@ _INFLATE_CHUNK = 1 << 20
 
 
 def _objects(data: bytes) -> dict[int, bytes]:
-    """Scan ``N 0 obj ... endobj`` bodies. Tolerates a missing/garbled xref
-    table (we never read it) — object ids must still be well-formed."""
+    """Scan ``N 0 obj ... endobj`` bodies: a header's body runs to the
+    first ``endobj`` after it, found by bisecting the ``endobj`` offsets,
+    collected once. Tolerates a missing/garbled xref table (we never
+    read it) — object ids must still be well-formed."""
+    ends = [m.start() for m in _ENDOBJ_RE.finditer(data)]
     objs: dict[int, bytes] = {}
     for m in _OBJ_RE.finditer(data):
-        end = data.find(b"endobj", m.end())
-        if end == -1:
-            continue
-        objs[int(m.group(1))] = data[m.end():end]
+        k = bisect_left(ends, m.end())
+        if k < len(ends):
+            objs[int(m.group(1))] = data[m.end():ends[k]]
     if not objs:
         raise ValueError("pdf: no objects found")
     return objs
