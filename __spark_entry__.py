@@ -1009,7 +1009,8 @@ FROM documents
 # from hex(encode(text)). PNG/JPEG magics can never match UTF-8-encoded
 # text (0x89/0xFF cannot start a UTF-8 sequence) and the TIFF magics
 # embed NUL bytes (absent from the generated documents text), so the
-# sniff reduces to the ASCII prefixes %PDF / RIFF / GIF8.
+# sniff reduces to the ASCII prefixes %PDF / RIFF / GIF8. A RIFF form is
+# read as characters 9-12, the bytes 8-12 of an ASCII head.
 
 _register("multimodal_decode_stub", _multimodal_decode_stub, f"""
 WITH b AS (
@@ -1018,7 +1019,9 @@ WITH b AS (
   FROM documents)
 SELECT doc_id, source, cast(n as bigint) AS n_bytes,
        CASE WHEN starts_with(text, '%PDF') THEN 'pdf'
-            WHEN starts_with(text, 'RIFF') THEN 'riff'
+            WHEN starts_with(text, 'RIFF') THEN
+              CASE WHEN substr(text, 9, 4) = 'WEBP' THEN 'webp'
+                   ELSE 'riff/' || rtrim(substr(text, 9, 4)) END
             WHEN starts_with(text, 'GIF8') THEN 'gif'
             ELSE 'raw' END AS format,
        cast(CASE WHEN n = 0 THEN 0 ELSE 64 + ({_B0} * 31 + n) % 1024 END as int) AS width,

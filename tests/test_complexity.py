@@ -33,6 +33,11 @@ FAMILIES = {
     "unclosed_quote": lambda n: '<a "' * n,
     # the same for a raw-text element, whose body scan comes first
     "unclosed_rawtext": lambda n: '<script x="' * n,
+    # an element of plain text whose close tag names another element:
+    # the leaf match fails at the close and falls through
+    "leaf_mismatched_close": lambda n: "<a>text</b>" * n,
+    # a leaf open tag whose text runs to the end of the page
+    "leaf_unclosed_text": lambda n: "<p>" + "long text " * n,
 }
 
 
@@ -65,6 +70,10 @@ OBJ_FAMILIES = {
     # a digit run that starts no header: one header attempt per digit,
     # each rescanning the rest of the run (61 s at 80 KB)
     "digit_run": lambda n: b"1" * n + b"\n1 0 obj\nendobj\n",
+    # distinct headers closed by one endobj: each body ran from its
+    # header to that endobj, a copy per header (95 MB for 45 KB)
+    "overlapping_objects": lambda n: b"".join(
+        b"%d 0 obj\n" % k for k in range(n // 12)) + b"endobj\n",
 }
 
 
@@ -73,7 +82,15 @@ def test_pdf_object_scan_is_linear(family):
     make = OBJ_FAMILIES[family]
     small, large = (b"%PDF-1.4\n" + make(n) for n in (OBJ_N, 4 * OBJ_N))
     parse = lambda p: oracle.extract_document("https://ex.org/o.pdf", p)  # noqa: E731
-    assert parse(small)["status"] == "FAILED"
+    # memory first: the quadratic copy would take gigabytes at 4n
+    tracemalloc.start()
+    try:
+        rec = parse(small)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert rec["status"] == "FAILED"
+    assert peak < 20 * len(small), (family, peak, len(small))
     t_small, t_large = _best_time(small, parse), _best_time(large, parse)
     assert t_large / t_small <= 6, (family, t_small, t_large)
     assert t_large * 1e6 / len(large) < 0.5, (family, t_large, len(large))

@@ -207,6 +207,26 @@ def test_rawtext_close_tag_is_found_on_the_page(title):
                            "\n\nSecond paragraph of the page.")
 
 
+# elements whose content is plain text, matched as one token, and the
+# near misses that must fall through to the open/close tokens
+_LEAF_CASES = [
+    "<P>x</p>", "<a>x</ab>", "<br>x</br>", "<p/>x</p>", "<a><b>x</b></a>",
+    "<a><li>x</li></a>", "<k>x</\u212a>", "<a>x</a x>", "<p>x</p",
+    "<div><p>x</P >y</div>", "<td> </td><td>&amp; z</td>",
+    "<a href='>'>x</a>", "<li>x</li >", "<a>x</a><a>y</A>",
+    "<p><a>x</a> y</p>", "<a>x</a:b>", "<h1>x</h1-2>", "<b>x</bb></b>",
+    "<p>x</p<p>y</p>", "<p>x</>", "<p>x</ p>", "<script>x</script>",
+    "<style>x</style >", "<p title=\"a\">\u0130 x</p>", "<a>x</a",
+]
+
+
+@pytest.mark.parametrize("page", _LEAF_CASES)
+def test_parse_html_matches_reference_on_leaf_elements(page):
+    # text after the case shows which elements it left open
+    for wrapped in (page, page + " y", "<div>" + page + " y</div>z"):
+        _same_blocks(wrapped.encode("utf-8"))
+
+
 def test_parse_html_matches_reference_on_fixture_pages():
     for i in range(300):
         _same_blocks(fixtures.gen_page(i)[2])
@@ -359,10 +379,14 @@ def _reference_pattern_hit(text, name):
     return None
 
 
+# the generic fallbacks as the registry states them, compiled here: the
+# production ones are rewritten for speed and must not check themselves
+_REF_FALLBACKS = {"DATE": (re.compile(fields._DATE), 0.6),
+                  "NUMERIC": (re.compile(r"(\d+)"), 0.4)}
+
+
 def _reference_fallback(text, field_type):
-    pat, conf = {"DATE": (fields._DATE_FALLBACK, 0.6),
-                 "NUMERIC": (fields._NUM_FALLBACK, 0.4)}.get(field_type,
-                                                              (None, 0.0))
+    pat, conf = _REF_FALLBACKS.get(field_type, (None, 0.0))
     m = pat.search(text) if pat is not None else None
     if m is None:
         return "", 0.0, -1, -1, "none"
@@ -430,6 +454,37 @@ _FOLDED = "".join(fields.fold(c) for c in _ALL)
 _SOURCES = ([p for pats in fields.PATTERNS.values() for p in pats]
             + list(fields.ENTITY_BODIES.values())
             + [kw for kws in fields.KEYWORDS.values() for kw in kws])
+
+
+# digit runs (ASCII and other Nd digits), whitespace runs, the literal
+# the `(\d+)\s*trang` patterns are found from, dates and Vietnamese
+# words: what the rewritten digit patterns must match exactly as written
+_DIGIT_SOUP = st.one_of(
+    st.text(alphabet="0123456789٣٤٥०१۹", min_size=1, max_size=6),
+    st.text(alphabet=" \t\n\u00a0\u2003\x1c", min_size=1, max_size=4),
+    st.sampled_from([
+        "trang", "TRANG", "Trang", "trangx", "xtrang", "tr ang",
+        "1/2/2024", "01-02-2024", "1/2/24", "123/4/2024", "٣/٤/٢٠٢٤",
+        "31/12/20245", "Tổng số", ":", "Số", "trang:", "Trang: 7",
+        "ngày", "văn bản", "hồ sơ", "Phòng Tổ chức", "Nguyễn Văn",
+        "-", "/", "a", "_"]))
+
+
+@settings(**COMMON)
+@given(st.lists(_DIGIT_SOUP, max_size=30).map("".join))
+@example("12 trang 34trang")
+@example("٣٤ trang")
+@example("x1 \n trang, 7/8/2024")
+def test_extract_spans_matches_reference_on_digit_soup(text):
+    _same_spans(text)
+
+
+def test_whitespace_and_digit_tests_are_res_classes():
+    """_DigitsBefore walks back with str.isspace and str.isdecimal: on
+    a str, re's \\s and \\d are exactly those."""
+    for cls, test in ((r"\s", str.isspace), (r"\d", str.isdecimal)):
+        assert [m.start() for m in re.finditer(cls, _ALL)] == \
+            [i for i, c in enumerate(_ALL) if test(c)], cls
 
 
 def test_fold_is_one_char_per_char():

@@ -12,7 +12,7 @@ import os
 import pytest
 
 from tests.conftest import GOLDEN_DIR, N_GOLDEN
-from webextract import fixtures, golden, oracle, pipeline
+from webextract import fixtures, golden, multimodal, oracle, pipeline
 
 GOLDEN_PATH = os.path.join(GOLDEN_DIR, "extracted.parquet")
 
@@ -92,6 +92,29 @@ def test_needs_ocr_status_taxonomy(goldens):
     # statuses present in the golden corpus = the full taxonomy
     statuses = {r["status"] for r in goldens.values()}
     assert statuses == {"COMPLETED", "FAILED", "NEEDS_OCR"}
+
+
+_RIFF_HEAD = b"RIFF\x24\x08\x00\x00"
+
+
+@pytest.mark.parametrize("payload, status, error, fmt", [
+    (_RIFF_HEAD + b"WEBPVP8 " + b"\x00" * 20, "NEEDS_OCR",
+     "needs_ocr: image/webp", "webp"),
+    (_RIFF_HEAD + b"WAVEfmt " + b"\x00" * 20, "FAILED",
+     "unsupported media: riff/WAVE", "riff/WAVE"),
+    (_RIFF_HEAD + b"AVI LIST" + b"\x00" * 20, "FAILED",
+     "unsupported media: riff/AVI", "riff/AVI"),
+    (_RIFF_HEAD + b"WE", "FAILED", "unsupported media: riff/WE", "riff/WE"),
+], ids=["webp", "wave", "avi", "ten_bytes"])
+def test_riff_payloads_route_by_form(payload, status, error, fmt):
+    """A RIFF container is an image only when its form (bytes 8-12) is
+    WEBP; audio, video and truncated containers are unsupported media,
+    not scans for an OCR stage. The multimodal sniffer names the same
+    format."""
+    rec = oracle.extract_document("https://ex.org/m.bin", payload)
+    assert (rec["status"], rec["error"]) == (status, error)
+    assert rec["text"] == "" and rec["spans"] == [] and rec["n_pages"] == 0
+    assert multimodal._sniff_format(payload) == fmt
 
 
 def test_permutation_invariance(spark, pages_parquet, goldens):

@@ -28,7 +28,7 @@ def test_decode_schema_and_determinism(spark):
     ]
     rows = {r["doc_id"]: r for r in out.collect()}
     assert rows[0]["format"] == "png" and rows[1]["format"] == "jpeg"
-    assert rows[2]["format"] == "riff" and rows[3]["format"] == "raw"
+    assert rows[2]["format"] == "riff/WAVE" and rows[3]["format"] == "raw"
     # deterministic fake dims: re-running yields identical values
     again = {r["doc_id"]: r for r in multimodal.decode_media(_media_df(spark)).collect()}
     for k in rows:

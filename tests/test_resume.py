@@ -327,19 +327,16 @@ def test_delete_where_job_count_constant(spark, tmp_path):
     assert len(man["parts"]) == 9          # 8 untouched + 1 merged rewrite
 
 
-def test_runner_canonical_keys_kill_resume(spark, tmp_path):
-    """canonical_keys=True (r4 verdict #6): resume buckets + sorted
-    layout key on urls.canonical_url — spelled variants of one page
-    co-locate in ONE bucket (and hence one commit group / output
-    range), rows themselves are unchanged, and kill/resume is
-    equivalent both with the flag and against a flag-off run."""
+def _variant_pages(spark, n):
+    """``n`` pages, each under three spellings of its url that
+    canonicalise to one: (rows, url families, pages frame)."""
     import datetime as dt
 
-    from webextract import fixtures, pipeline, urls
+    from webextract import fixtures
 
     ts = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
     rows, fams = [], []
-    for i in range(40):
+    for i in range(n):
         _u, _ts, payload, _t, _l = fixtures.gen_page(i * 7 + 3)
         base = f"https://host{i:02d}.example.org/docs/VANBAN_{i:04d}.html"
         fam = [base,
@@ -351,6 +348,18 @@ def test_runner_canonical_keys_kill_resume(spark, tmp_path):
     df = spark.createDataFrame(
         rows,
         "url string, warc_ts timestamp, html binary, text string, lang string")
+    return rows, fams, df
+
+
+def test_runner_canonical_keys_kill_resume(spark, tmp_path):
+    """canonical_keys=True (r4 verdict #6): resume buckets + sorted
+    layout key on urls.canonical_url — spelled variants of one page
+    co-locate in ONE bucket (and hence one commit group / output
+    range), rows themselves are unchanged, and kill/resume is
+    equivalent both with the flag and against a flag-off run."""
+    from webextract import pipeline, urls
+
+    rows, fams, df = _variant_pages(spark, 40)
 
     # co-location: one bucket per family under the canonical key; the
     # raw-url key scatters at least one family (P(not) < 1e-90)
@@ -390,3 +399,40 @@ def test_runner_canonical_keys_kill_resume(spark, tmp_path):
              .select("partition_id").distinct().collect()}
     assert parts == set(canon_b.values())
     assert lin.select("partition_id").distinct().count() == 16
+
+
+def test_reprocess_lineage_buckets_as_the_job_did(spark, tmp_path):
+    """reprocess_fields buckets its lineage rows with the bucket count
+    and keying run_job recorded, so its rows line up with the job's
+    ``final`` rows partition by partition; with no record it keys on
+    the raw url over DEFAULT_BUCKETS."""
+    import os
+    from collections import Counter
+
+    from webextract import pipeline
+
+    _rows, _fams, df = _variant_pages(spark, 12)
+    out = str(tmp_path / "rp")
+    runner.run_job(spark, df, out, n_buckets=16, commit_groups=2,
+                   canonical_keys=True)
+    runner.reprocess_fields(spark, out, run_id="rp1")
+
+    def counts(stage, run_id=None):
+        lin = Catalog(out).read(spark, runner.LINEAGE_TABLE)
+        lin = lin.filter(F.col("stage") == stage)
+        if run_id is not None:
+            lin = lin.filter(F.col("run_id") == run_id)
+        return {r["partition_id"]: r["input_count"] for r in lin.collect()}
+
+    final = counts("final")
+    assert sorted(final) == list(range(16))
+    assert counts("reprocess", "rp1") == final
+
+    os.remove(os.path.join(out, runner.EXTRACTED_TABLE, "_properties.json"))
+    runner.reprocess_fields(spark, out, out_table="extracted_v3",
+                            run_id="rp2")
+    raw = Counter(r["bucket"] for r in
+                  pipeline.with_bucket(df.select("url")).collect())
+    got = counts("reprocess", "rp2")
+    assert sorted(got) == list(range(pipeline.DEFAULT_BUCKETS))
+    assert {b: c for b, c in got.items() if c} == raw

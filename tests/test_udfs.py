@@ -1,7 +1,8 @@
 """The fused ``mapInArrow`` body and what sits in front of it: its Arrow
-output types, its in-process (pandas) form, the worker import-path trim,
-and the ``with_bucket`` range guard."""
+output types, its in-process (pandas) form, the worker import-path trim
+and heap freeze, and the ``with_bucket`` range guard."""
 
+import gc
 import importlib
 import sys
 import zipfile
@@ -60,7 +61,7 @@ def zipped_imports(tmp_path):
 
 def test_extract_batches_in_process_takes_pandas_and_keeps_imports(
         zipped_imports):
-    before = _import_state()
+    before, frozen = _import_state(), gc.get_freeze_count()
     assert any(isinstance(f, zipimport.zipimporter) and f.prefix
                for f in before[1].values())
     docs = [fixtures.gen_page(i) for i in range(12)]
@@ -78,17 +79,22 @@ def test_extract_batches_in_process_takes_pandas_and_keeps_imports(
         assert {k: row[k] for k in want} == want
         assert row["bucket"] == 3 and row["bytes_in"] == len(payload)
     assert _same_import_state(before)
+    assert gc.get_freeze_count() == frozen
 
 
 def test_worker_import_path_trim(spark, pages_parquet):
     """After an extraction, a Python worker holds no ``.jar`` on
-    ``sys.path`` and no sub-package zipimporter; the driver's import
-    state is untouched."""
+    ``sys.path`` and no zipimporter, a pyspark module it has not
+    imported yet still imports, and its import-time heap was frozen
+    once: a later body freezes nothing more. The driver's import state
+    is untouched."""
     before = _import_state()
     pages = spark.read.parquet(pages_parquet).limit(64)
     pipeline.run_extract(pages).write.format("noop").mode("overwrite").save()
 
     def probe(it):
+        import gc
+        import importlib
         import sys
         import zipimport
 
@@ -98,22 +104,41 @@ def test_worker_import_path_trim(spark, pages_parquet):
         # whichever worker runs this task, a fused body has run in it
         for _ in udfs.extract_batches(it):
             pass
+        zipped = sorted(k for k, f in sys.path_importer_cache.items()
+                        if isinstance(f, zipimport.zipimporter))
+        # a module of pyspark.zip that this worker has not imported (or
+        # no longer has), imported through the trimmed path cache
+        fresh = "pyspark.loose_version"
+        sys.modules.pop(fresh, None)
+        imported = importlib.import_module(fresh).__name__
+        frozen = gc.get_freeze_count()
+        allocated = [[] for _ in range(1000)]  # noqa: F841 — tracked
+        for _ in udfs.extract_batches(iter([])):
+            pass
         yield pa.RecordBatch.from_pylist([{
             "jars": [p for p in sys.path if p.endswith(".jar")],
-            "prefixed": sorted(
-                k for k, f in sys.path_importer_cache.items()
-                if isinstance(f, zipimport.zipimporter) and f.prefix),
+            "zipped": zipped,
+            "fresh": fresh, "imported": imported,
+            "frozen": frozen, "frozen_after": gc.get_freeze_count(),
         }], schema=pa.schema([("jars", pa.list_(pa.string())),
-                              ("prefixed", pa.list_(pa.string()))]))
+                              ("zipped", pa.list_(pa.string())),
+                              ("fresh", pa.string()),
+                              ("imported", pa.string()),
+                              ("frozen", pa.int64()),
+                              ("frozen_after", pa.int64())]))
 
     prepped = pipeline.with_bucket(
         spark.read.parquet(pages_parquet).limit(8)
         .select("url", "warc_ts", "html")).repartition(4)
     rows = prepped.mapInArrow(
-        probe, "jars array<string>, prefixed array<string>").collect()
+        probe, "jars array<string>, zipped array<string>, fresh string, "
+        "imported string, frozen bigint, frozen_after bigint").collect()
     assert len(rows) == 4
     for r in rows:
-        assert r["jars"] == [] and r["prefixed"] == [], r
+        assert r["jars"] == [] and r["zipped"] == [], r
+        assert r["imported"] == r["fresh"], r
+        # a second freeze would add the 1000 lists allocated since
+        assert 0 < r["frozen_after"] <= r["frozen"], r
     assert _same_import_state(before)
 
 

@@ -153,6 +153,29 @@ class Catalog:
         except FileNotFoundError:
             return None
 
+    # -- table properties ----------------------------------------------------
+    def _properties_path(self, name: str) -> str:
+        return os.path.join(self._tdir(name), "_properties.json")
+
+    def set_properties(self, name: str, props: dict) -> None:
+        """Record ``props`` for table ``name`` (Iceberg table-properties
+        analogue), replacing what was there: written whole to a temp
+        file, then renamed into place."""
+        os.makedirs(self._tdir(name), exist_ok=True)
+        path = self._properties_path(name)
+        tmp = f"{path}.tmp-{uuid.uuid4().hex}"
+        with open(tmp, "w") as f:
+            json.dump(props, f)
+        os.replace(tmp, path)
+
+    def properties(self, name: str) -> dict:
+        """The properties last set for table ``name``; {} when none."""
+        try:
+            with open(self._properties_path(name)) as f:
+                return json.load(f)
+        except FileNotFoundError:
+            return {}
+
     # -- write path ----------------------------------------------------------
     def _new_part(self, name: str, df: DataFrame) -> str:
         part_id = uuid.uuid4().hex

@@ -5,9 +5,12 @@ port — this is a small deterministic tokenizer that never builds a tree.
 One master regex (``_SCAN_RE``) walks the page with a single ``findall``;
 a Python loop keeps the open-element stack, each element with its
 nearest block-tag ancestor, and appends every text segment straight to
-that block. It is the Spark-side analogue of the reference's image
-preprocessing stages (ocr-ai-service/app/services/ocr_service.py:56-76):
-normalize raw payload bytes into a structure the scorer can consume.
+that block. An element whose content is plain text (open tag, text,
+its own close tag) is one match, handled without touching the stack:
+about a quarter of a page's tokens. It is the Spark-side analogue of
+the reference's image preprocessing stages
+(ocr-ai-service/app/services/ocr_service.py:56-76): normalize raw
+payload bytes into a structure the scorer can consume.
 
 Supported grammar (FIXTURES.md §1): nested elements, ``script``/``style``
 raw-text modes, comments, doctype/PI, void elements, single/double/unquoted
@@ -118,9 +121,15 @@ def _rawtext(name: str) -> str:
 
 # One match per token, and every match ends where the next begins, so
 # ``findall`` walks the whole page in one C-level pass. Groups: 1 the
-# text before the token, 2 a close-tag name, 3 an open-tag name, 4 its
-# closing '>' unless the tag ends in '/>' (empty too when the tag never
-# closes: it takes the rest of the page), 5 a stray '<' (kept as text).
+# text before the token, 2 a close-tag name, 3 and 4 a leaf element's
+# name and text, 5 an open-tag name, 6 its closing '>' unless the tag
+# ends in '/>' (empty too when the tag never closes: it takes the rest
+# of the page), 7 a stray '<' (kept as text). A leaf element is an open
+# tag not ending in '/>', text with no '<', and the close tag of the
+# same name (ASCII case-insensitive, as the close-tag name is lowered:
+# it is ASCII) through its '>'; the tokens it replaces are exactly the
+# open tag, text and close tag the other branches would match there,
+# so anything else falls through to them.
 # Comments, doctype/PI, nameless close tags and raw-text elements match
 # with no group set. Each construct that never closes takes the rest of
 # the page inside the regex: a failed match would restart the scan one
@@ -132,6 +141,8 @@ _SCAN_RE = re.compile(
     r"|[!?][^>]*+>?"
     rf"|/({_NAME})?[^>]*+>?"
     rf"|{_rawtext('script')}|{_rawtext('style')}"
+    rf"|(?P<leaf>{_NAME}){_ATTRS}(?<!/)>([^<]*+)</(?ai:(?P=leaf))"
+    r"(?![a-zA-Z0-9:-])[^>]*+>"
     rf"|({_NAME})(?:{_ATTRS}(?:(?<!/)(>)|>)|[\s\S]*+)"
     r")|(<)(?=[\s\S])|<|\Z)")
 
@@ -147,14 +158,18 @@ def parse_html(payload: bytes) -> list[list]:
     collapsed length of the segments inside an open ``<a>``.
 
     Linear in the input: one ``_SCAN_RE.findall``, and per-name counts of
-    open elements make an unmatched close tag one lookup."""
+    open elements make an unmatched close tag one lookup. A leaf element
+    nets out to what its three tokens would do: its open tag pushed and
+    its close tag popped again, its text in between goes to a fresh
+    block when it is a block tag and to the current owner otherwise,
+    counted as link text when it is an ``<a>`` or one is open."""
     s = decode_payload(payload)
     owner = ["#root", 0]  # the nearest block of the innermost open element
     out: list[list] = []  # blocks in first-text order
     names: list[str] = []  # open elements, innermost last
     owners: list[list] = [owner]  # nearest block per open element, root first
     open_count: dict[str, int] = {}  # tag name → its elements on the stack
-    for text, close, name, opens, stray in _SCAN_RE.findall(s):
+    for text, close, leaf, inner, name, opens, stray in _SCAN_RE.findall(s):
         if text and not text.isspace():
             if len(owner) == 2:  # the block's first text
                 out.append(owner)
@@ -162,7 +177,17 @@ def parse_html(payload: bytes) -> list[list]:
             owner.append(text)
             if open_count.get("a"):
                 owner[1] += len(collapse(text))
-        if name:
+        if leaf:
+            if inner and not inner.isspace():
+                leaf = leaf.lower()
+                block = [leaf, 0] if leaf in BLOCK_TAGS else owner
+                if len(block) == 2:
+                    out.append(block)
+                inner = decode_entities(inner)
+                block.append(inner)
+                if leaf == "a" or open_count.get("a"):
+                    block[1] += len(collapse(inner))
+        elif name:
             if not opens:
                 continue  # self-closing, or takes the rest of the page
             name = name.lower()

@@ -73,6 +73,15 @@ the rare F10 keyword strip stays IGNORECASE. The DuckDB replay
 (``__spark_entry__._field_arm_sql``) builds its RE2 ``(?i)`` patterns
 from the same unchanged registries and is unaffected.
 
+A pattern that opens with a repeat gives sre no first character to
+scan for, so it tries a match at every character of the text. The
+twins, the DATE entity and the generic fallbacks are written so that
+none does (``_scannable``: ``\\d{1,2}`` as ``\\d\\d?``, ``(\\d+`` as
+``(\\d\\d*``), and ``(\\d+)\\s*trang`` is found from its literal
+(``_DigitsBefore``). Arm A runs first for every field; the entity scan
+then runs once per document, for the labels of the fields whose arm-A
+confidence arm B can still beat.
+
 Everything here is pure Python ``re`` — the same module runs in the
 single-node oracle and inside the Spark UDF bodies, never mixed with Java
 regex on the golden path (SURVEY.md §4.3).
@@ -162,17 +171,69 @@ def fold(text: str) -> str:
     return text.lower()
 
 
-def _folded(pattern: str) -> re.Pattern:
+def _scannable(pattern: str) -> str:
+    """``pattern`` with ``\\d{1,2}`` written ``\\d\\d?`` and ``(\\d+``
+    written ``(\\d\\d*``: the same matches, tried in the same order. A
+    pattern that opens with a repeat gives sre no first character to
+    scan for, so it attempts a match at every position of the text; one
+    that opens with ``\\d`` skips at C speed to the next digit."""
+    return pattern.replace(r"\d{1,2}", r"\d\d?").replace(r"(\d+", r"(\d\d*")
+
+
+# (\d+)\s*<literal>, the literal a word that starts with a letter
+_DIGITS_THEN_WORD = re.compile(r"\(\\d\+\)\\s\*([^\W\d]\w*)")
+
+
+class _DigitsBefore:
+    """``search`` for ``(\\d+)\\s*<literal>``, found from its literal.
+    A match is a whole digit run, the whitespace run after it and the
+    literal: backtracking cannot move the literal, whose first character
+    is neither a digit nor whitespace. So the first match starts at the
+    digit run before the first occurrence of the literal that has one,
+    and each occurrence is checked by walking back over ``isspace()``
+    characters, then ``isdecimal()`` ones — exactly ``re``'s ``\\s`` and
+    ``\\d``. The walks cover disjoint stretches of the text (each stops
+    at a literal's letters), so a search is linear. It returns the
+    pattern's own match at the start of that run."""
+
+    __slots__ = ("literal", "match")
+
+    def __init__(self, pattern: str, literal: str):
+        self.literal = literal
+        self.match = re.compile(pattern).match
+
+    def search(self, low: str) -> re.Match | None:
+        find, literal = low.find, self.literal
+        q = find(literal)
+        while q >= 0:
+            i = q
+            while i and low[i - 1].isspace():
+                i -= 1
+            j = i
+            while j and low[j - 1].isdecimal():
+                j -= 1
+            if j < i:
+                return self.match(low, j)
+            q = find(literal, q + 1)
+        return None
+
+
+def _folded(pattern: str) -> re.Pattern | _DigitsBefore:
     """Case-sensitive twin of an IGNORECASE pattern, run on ``fold(text)``
-    (the patterns hold no upper-case escape such as ``\\S``)."""
-    return re.compile(pattern.lower())
+    (the patterns hold no upper-case escape such as ``\\S``), written so
+    that a search need not try a match at every position."""
+    low = pattern.lower()
+    m = _DIGITS_THEN_WORD.fullmatch(low)
+    if m:
+        return _DigitsBefore(low, m.group(1))
+    return re.compile(_scannable(low))
 
 
-_PATTERNS_LOW: dict[str, list[re.Pattern]] = {
+_PATTERNS_LOW: dict[str, list[re.Pattern | _DigitsBefore]] = {
     name: [_folded(p) for p in pats] for name, pats in PATTERNS.items()
 }
-_DATE_FALLBACK = re.compile(_DATE)
-_NUM_FALLBACK = re.compile(r"(\d+)")
+_DATE_FALLBACK = re.compile(_scannable(_DATE))
+_NUM_FALLBACK = re.compile(_scannable(r"(\d+)"))
 
 # per-field keywords for the proximity arm — transplanted from the
 # reference registry (ai_service_local.py:172-281); fields the reference
@@ -234,7 +295,8 @@ ENTITY_BODIES: dict[str, str] = {
 # position after a rejected hit could rescan a long match once per
 # start (quadratic), and PERSON's body can also match inside a word.
 _ENTITY_LOW: dict[str, re.Pattern] = {
-    label: _folded(("(" if label == "DATE" else r"\b(") + body + r")(?!\w)")
+    label: re.compile(_scannable(
+        (("(" if label == "DATE" else r"\b(") + body + r")(?!\w)").lower()))
     for label, body in ENTITY_BODIES.items()
 }
 # FieldType → entity labels (ai_service_local.py:379-383); LOCATION is in
@@ -395,18 +457,21 @@ def proximity_candidate(
     return (value, conf, pos, pos + len(value)) if pos >= 0 else (value, conf, -1, -1)
 
 
-def entity_firsts(text: str, low: str | None = None
+def entity_firsts(text: str, low: str | None = None,
+                  labels: set[str] | None = None,
                   ) -> dict[str, tuple[str, int, int] | None]:
     """First entity per label (regex NER, ai_service_local.py:112-134),
     found on ``low`` (``fold(text)``, computed when omitted) and taken
-    from ``text``. Only firsts are kept: the ensemble takes
-    matching_entities[0] (ai_service_local.py:390-392), so scanning for
-    all matches — the reference does finditer over the whole doc — would
-    be pure waste on a 100 KB page."""
+    from ``text``; only for ``labels`` when given. Only firsts are kept:
+    the ensemble takes matching_entities[0] (ai_service_local.py:
+    390-392), so scanning for all matches — the reference does finditer
+    over the whole doc — would be pure waste on a 100 KB page."""
     if low is None:
         low = fold(text)
     out: dict[str, tuple[str, int, int] | None] = {}
     for label, pat in _ENTITY_LOW.items():
+        if labels is not None and label not in labels:
+            continue
         m = pat.search(low)
         if label == "DATE":  # see _ENTITY_LOW
             while m is not None and not _word_start(low, m.start()):
@@ -546,14 +611,25 @@ def extract_spans(text: str, doc_type: str,
             return spans, sum(hits) / len(hits)
         return spans, sum(confs) / len(confs)
     doc = _Doc(text, low)
-    firsts = entity_firsts(text, low)
+    # arm B wins only over a lower arm-A confidence: scan for the
+    # entities of those fields alone
+    arm_a: list[tuple[str, float, int, int, str]] = []
+    labels: set[str] = set()
+    for name, ftype, _ in registry:
+        a = extract_field(text, name, ftype, doc)
+        arm_a.append(a)
+        if a[1] < ENTITY_CONFIDENCE:
+            labels.update(ENTITY_LABELS_FOR_TYPE.get(ftype, ()))
+    firsts = entity_firsts(text, low, labels)
     spans: list[dict] = []
     confs: list[float] = []
-    for name, ftype, required in registry:
-        value, conf, s, e, method = extract_field(text, name, ftype, doc)
-        e_value, e_conf, e_s, e_e = entity_candidate(firsts, ftype)
-        if e_conf > conf:
-            value, conf, s, e, method = e_value, e_conf, e_s, e_e, "entity"
+    for (name, ftype, required), (value, conf, s, e, method) in zip(
+            registry, arm_a):
+        if conf < ENTITY_CONFIDENCE:
+            e_value, e_conf, e_s, e_e = entity_candidate(firsts, ftype)
+            if e_conf > conf:
+                value, conf, s, e, method = \
+                    e_value, e_conf, e_s, e_e, "entity"
         spans.append(
             {
                 "name": name,

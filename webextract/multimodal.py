@@ -22,24 +22,21 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from .oracle import media_format
+
 DECODED_SCHEMA = (
     "doc_id bigint, source string, n_bytes bigint, format string, "
     "width int, height int, n_frames int, decode_error string"
 )
 
-# magic table shared with the extraction pipeline's payload sniffer
-# (oracle.sniff_kind classifies raster payloads as NEEDS_OCR from the
-# same prefixes), plus PDF for media census use
-from .oracle import MEDIA_MAGICS as _MEDIA_MAGICS  # noqa: E402
-
-_MAGIC = {**_MEDIA_MAGICS, b"%PDF": "pdf"}
-
 
 def _sniff_format(payload: bytes) -> str:
-    for magic, name in _MAGIC.items():
-        if payload[: len(magic)] == magic:
-            return name
-    return "raw"
+    """The payload's format as the extraction pipeline's sniffer names
+    it (oracle.media_format: raster formats, ``riff/<form>``), plus PDF
+    for media census use."""
+    if payload[:4] == b"%PDF":
+        return "pdf"
+    return media_format(payload) or "raw"
 
 
 def _decode_one(payload: bytes) -> tuple[int, int, int]:

@@ -32,28 +32,45 @@ STATUS_NEEDS_OCR = "NEEDS_OCR"
 PDF_MAGIC = b"%PDF-"
 
 # magic-byte table shared with the multimodal sniffer
-# (multimodal._sniff_format builds its table from this one)
+# (multimodal._sniff_format names formats with media_format)
 MEDIA_MAGICS: dict[bytes, str] = {
     b"\x89PNG": "png",
     b"\xff\xd8\xff": "jpeg",
     b"GIF8": "gif",
-    b"RIFF": "riff",
     b"II*\x00": "tiff",
     b"MM\x00*": "tiff",
 }
+
+
+def media_format(payload: bytes) -> str | None:
+    """The raster format of a media payload ("png", "webp", ...),
+    ``riff/<form>`` for a RIFF container of any other form (trailing
+    padding spaces dropped), None when no magic matches."""
+    for magic, name in MEDIA_MAGICS.items():
+        if payload[: len(magic)] == magic:
+            return name
+    if payload[:4] == b"RIFF":
+        # the container's form, bytes 8-12: of the forms only WebP is a
+        # raster image (WAVE is audio, "AVI " video)
+        form = payload[8:12]
+        return "webp" if form == b"WEBP" \
+            else "riff/" + form.decode("latin-1").rstrip(" ")
+    return None
 
 
 def sniff_kind(payload: bytes) -> str:
     """Payload sniff (the reference keys on filename extension,
     document_service.py:58; we key on magic bytes like its PDF check).
     Returns "pdf", "image/<fmt>" (raw raster payload — the NEEDS_OCR
-    input class), or "html" (the permissive default: tag soup parses)."""
+    input class), "riff/<form>" (a RIFF container that holds no image:
+    audio, video — unsupported media), or "html" (the permissive
+    default: tag soup parses)."""
     if payload[:5] == PDF_MAGIC:
         return "pdf"
-    for magic, name in MEDIA_MAGICS.items():
-        if payload[: len(magic)] == magic:
-            return f"image/{name}"
-    return "html"
+    fmt = media_format(payload)
+    if fmt is None:
+        return "html"
+    return fmt if fmt.startswith("riff/") else f"image/{fmt}"
 
 
 def parse_candidates(payload: bytes,
@@ -75,6 +92,9 @@ def parse_candidates(payload: bytes,
             "error": f"payload too large: {len(payload)} > {MAX_PAYLOAD_BYTES}",
         }
     kind = sniff_kind(payload)
+    if kind.startswith("riff/"):
+        return {"kind": kind, "n_pages": 0, "candidates": [],
+                "error": f"unsupported media: {kind}"}
     if kind.startswith("image/"):
         # raw raster payload: nothing to parse deterministically —
         # classify for a downstream OCR stage (status=NEEDS_OCR)

@@ -71,15 +71,23 @@ _INFLATE_CHUNK = 1 << 20
 
 def _objects(data: bytes) -> dict[int, bytes]:
     """Scan ``N 0 obj ... endobj`` bodies: a header's body runs to the
-    first ``endobj`` after it, found by bisecting the ``endobj`` offsets,
-    collected once. Tolerates a missing/garbled xref table (we never
-    read it) — object ids must still be well-formed."""
+    first ``endobj`` after it (found by bisecting the ``endobj`` offsets,
+    collected once), or to the next header when that comes first — an
+    object left open by a missing ``endobj``. Bodies never overlap, so
+    together they hold at most the file's bytes and every later scan of
+    them is linear in the file. Tolerates a missing/garbled xref table
+    (we never read it) — object ids must still be well-formed."""
     ends = [m.start() for m in _ENDOBJ_RE.finditer(data)]
     objs: dict[int, bytes] = {}
-    for m in _OBJ_RE.finditer(data):
+    heads = _OBJ_RE.finditer(data)
+    m = next(heads, None)
+    while m is not None:
+        nxt = next(heads, None)
         k = bisect_left(ends, m.end())
         if k < len(ends):
-            objs[int(m.group(1))] = data[m.end():ends[k]]
+            end = ends[k] if nxt is None else min(ends[k], nxt.start())
+            objs[int(m.group(1))] = data[m.end():end]
+        m = nxt
     if not objs:
         raise ValueError("pdf: no objects found")
     return objs

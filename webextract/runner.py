@@ -74,6 +74,15 @@ def _sweep_stale_staged(out_root: str) -> None:
             shutil.rmtree(os.path.join(out_root, e), ignore_errors=True)
 
 
+def _bucket_key(canonical_keys: bool):
+    """The column a job hashes into buckets: None (the raw url) or the
+    canonical url."""
+    if not canonical_keys:
+        return None
+    from .urls import canonical_url
+    return canonical_url("url")
+
+
 def run_job(
     spark: SparkSession,
     pages: DataFrame,
@@ -129,6 +138,9 @@ def run_job(
     run_id = run_id or pipeline.new_run_id()
     catalog = Catalog(out_root)
     _sweep_stale_staged(out_root)
+    # the bucket keying, for reprocess_fields' lineage rows
+    catalog.set_properties(EXTRACTED_TABLE, {
+        "n_buckets": n_buckets, "canonical_keys": canonical_keys})
     done = completed_buckets(spark, catalog) if resume else set()
 
     # lineage-driven anti-join resume: done buckets never re-read payloads
@@ -138,10 +150,7 @@ def run_job(
         if b not in done:
             pending_groups[group_of(b)].append(b)
 
-    key = None
-    if canonical_keys:
-        from .urls import canonical_url
-        key = canonical_url("url")
+    key = _bucket_key(canonical_keys)
     prepped = pipeline.with_bucket(pipeline.with_doc_type(pages), n_buckets,
                                    key=key)
     if done:
@@ -223,16 +232,20 @@ def reprocess_fields(
     change needs only (text, doc_type, status) (reference analogue:
     reprocess-with-cached-OCR, document_service.py:253-282). Returns the
     new extracted table; writes it under ``out_table`` and lineage rows
-    with stage 'reprocess' (bucketed by url over DEFAULT_BUCKETS;
-    ``bytes_in`` counts the text bytes read)."""
+    with stage 'reprocess', bucketed as the job that wrote the table
+    bucketed its input (``n_buckets`` and ``canonical_keys``, as
+    ``run_job`` recorded them; by raw url over DEFAULT_BUCKETS when the
+    catalog holds no record). ``bytes_in`` counts the text bytes read."""
     run_id = run_id or pipeline.new_run_id()
     catalog = Catalog(out_root)
     saved = catalog.read(spark, EXTRACTED_TABLE, version=version)
     if saved is None:
         raise ValueError(f"no {EXTRACTED_TABLE} table under {out_root}")
-    n_buckets = pipeline.DEFAULT_BUCKETS
+    props = catalog.properties(EXTRACTED_TABLE)
+    n_buckets = props.get("n_buckets", pipeline.DEFAULT_BUCKETS)
     redone = (
-        pipeline.with_bucket(saved, n_buckets)
+        pipeline.with_bucket(saved, n_buckets,
+                             key=_bucket_key(props.get("canonical_keys")))
         .withColumn("bytes_in", F.octet_length("text").cast("bigint"))
         .mapInArrow(udfs.respan_batches, udfs.EXTRACTED_FIELDS_SCHEMA)
         .persist())

@@ -20,6 +20,7 @@ ocr-ai-service/app/main.py:53-68, C5).
 
 from __future__ import annotations
 
+import gc
 import sys
 import time
 import zipfile
@@ -69,23 +70,37 @@ def _holds_python(archive: str) -> bool:
 
 
 def trim_worker_imports() -> None:
-    """Shrink what ``importlib.invalidate_caches`` re-reads in this
-    Python worker. PySpark calls it at the start of every task, and on
-    CPython 3.11 each cached zipimporter then re-reads its whole archive
-    directory: a worker holds two over the spark-core jar (no Python in
-    it; it is on PYTHONPATH for Spark builds that ship PySpark inside the
-    jar) and one per imported sub-package of pyspark.zip. With Spark
-    4.1.2 on a 4-core x86-64 VM that was 17 importers and ~185 ms of
-    CPU per task, cut to 3 importers and ~10 ms.
+    """Shrink the fixed per-task work of this Python worker.
 
-    Drops the ``.jar`` entries that hold no Python from ``sys.path`` and
-    every sub-package zipimporter (non-empty ``prefix``) from
-    ``sys.path_importer_cache``; a later import recreates the latter
-    from the archive directory already in memory. ``sys.modules`` is
-    left alone. Only inside a Spark task, so a driver calling a body
-    in-process keeps its import state. Cheap enough to run at every
-    fused-body start (a scan of a few dozen entries), which also drops
-    importers that other UDF bodies in a reused worker re-created."""
+    PySpark calls ``importlib.invalidate_caches`` at the start of every
+    task, and on CPython 3.11 each cached zipimporter then re-reads its
+    whole archive directory: a worker holds two over the spark-core jar
+    (no Python in it; it is on PYTHONPATH for Spark builds that ship
+    PySpark inside the jar), one per imported sub-package of
+    pyspark.zip, and one each for pyspark.zip, py4j and the shipped
+    package zip. With Spark 4.1.2 on a 4-core x86-64 VM the 17 importers
+    cost ~185 ms of CPU per task; the three prefix-less ones alone still
+    cost ~4 ms, none 0.02 ms. So this drops the ``.jar`` entries that
+    hold no Python from ``sys.path`` and every zipimporter from
+    ``sys.path_importer_cache``; the archives stay on ``sys.path``, and a
+    later import recreates an importer from the archive directory
+    already in memory. ``sys.modules`` is left alone.
+
+    The daemon also runs ``gc.collect()`` after each task, and a full
+    collection walks every tracked object, most of them the import-time
+    heap (~73k objects: ~15 ms per task on the same VM, 0.1 ms once
+    they are frozen). The first call in a worker moves that heap to the
+    permanent generation with ``gc.freeze()``, which collections skip;
+    later calls find it non-empty and do not freeze again, so what a
+    task allocates stays collectable.
+
+    Only inside a Spark task, so a driver calling a body in-process
+    keeps its import state and heap. Cheap enough (a scan of a few dozen
+    entries) to run where every body starts, which drops importers that
+    other UDF bodies in a reused worker re-created, and where it ends:
+    a top-level import walks ``sys.path`` and re-creates the importers,
+    and a worker's first body still imports lazily; the next task's
+    ``invalidate_caches`` sees what the body left."""
     if TaskContext.get() is None:
         return
     cache = sys.path_importer_cache
@@ -93,9 +108,10 @@ def trim_worker_imports() -> None:
     if jars:
         sys.path[:] = [p for p in sys.path if p not in jars]
     for key, finder in list(cache.items()):
-        if key in jars or (isinstance(finder, zipimport.zipimporter)
-                           and finder.prefix):
+        if key in jars or isinstance(finder, zipimport.zipimporter):
             del cache[key]
+    if not gc.get_freeze_count():
+        gc.freeze()
 
 
 def extract_batches(it: Iterator[pa.RecordBatch | pd.DataFrame]
@@ -150,6 +166,7 @@ def _document_batches(it, one) -> Iterator[pa.RecordBatch]:
             pa.array([r["error"] for r in recs], pa.string()),
             pa.array([wall_ms] * len(recs), pa.float64()),
         ], names=_EXTRACTED_NAMES)
+    trim_worker_imports()
 
 
 def respan_batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -175,3 +192,4 @@ def respan_batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
             [(time.monotonic() - t0) * 1000.0] * len(recs), pa.float64())
         yield pa.RecordBatch.from_arrays(
             [cols[c] for c in _EXTRACTED_NAMES], names=_EXTRACTED_NAMES)
+    trim_worker_imports()
