@@ -11,18 +11,24 @@ with the implementation it replaced, kept here as the reference:
   patterns on one folded copy, an exact proximity prefilter) — the
   whole ``extract_spans`` result against the ``re.IGNORECASE`` arms;
 - the PDF content-stream tokenizer (pdfrun._tokens: one master-regex
-  match per token) — the whole token stream against the per-byte loop."""
+  match per token) — the whole token stream against the per-byte loop;
+- the Gopher quality flags (textstats.gopher_quality_flags: each row
+  split once, word lengths and stop words without per-token lambdas) —
+  every output row against the per-token lambda formulation."""
 
 import re
 import sys
 
+import pandas as pd
+import pyspark.sql.functions as F
 import pytest
 from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from test_fuzz import _mutants
 from test_property import _KW_WORDS
-from webextract import boiler, dom, fields, fixtures, oracle, pdfrun
+from webextract import (boiler, dom, fields, fixtures, oracle, pdfrun,
+                        textstats)
 from webextract.dom import BLOCK_TAGS, VOID_ELEMENTS
 
 COMMON = dict(max_examples=300, deadline=None, derandomize=True)
@@ -716,3 +722,133 @@ _PDF_SOUP = b" \t\r\n\f()[]/\\+-.0123456789abTJjdmf*'\"<>\x00\xff"
 @example(b"+.-. .5 5. -.5 +x /a/b//c 1.2.3")
 def test_pdf_tokens_match_reference_on_byte_soup(content):
     _same_tokens(content)
+
+
+def reference_gopher_quality_flags(df, text_col="text", line_sep="\n",
+                                   min_words=50, max_words=100000,
+                                   min_mean_word_len=3.0,
+                                   max_mean_word_len=10.0,
+                                   max_symbol_ratio=0.1,
+                                   max_bullet_frac=0.9,
+                                   max_ellipsis_frac=0.3,
+                                   min_alpha_frac=0.8, min_stop_hits=2):
+    """The per-token lambda formulation: every statistic re-splits the
+    row, word lengths are an ``aggregate`` lambda and stop words an
+    ``array_contains`` over a literal array."""
+    t = F.coalesce(F.col(text_col), F.lit(""))
+    toks = F.filter(F.split(F.replace(t, F.lit(line_sep), F.lit(" ")), " "),
+                    lambda x: x != "")
+    lines = F.filter(F.split(t, textstats._lit_re(line_sep)),
+                     lambda x: x != "")
+    n_words = F.size(toks).cast("bigint")
+    n_lines = F.size(lines)
+    wchars = F.aggregate(toks, F.lit(0).cast("bigint"),
+                         lambda a, x: a + F.length(x))
+    mean_wl = F.when(n_words > 0,
+                     wchars.cast("double") / n_words).otherwise(0.0)
+
+    def _count(sub):
+        return ((F.length(t) - F.length(F.replace(t, F.lit(sub), F.lit(""))))
+                / len(sub)).cast("bigint")
+
+    symbols = _count("#") + _count("...") + _count("…")
+    sym_ratio = F.when(n_words > 0,
+                       symbols.cast("double") / n_words).otherwise(0.0)
+
+    def _is_bullet(x):
+        cond = x.startswith(textstats.GOPHER_BULLETS[0])
+        for p in textstats.GOPHER_BULLETS[1:]:
+            cond = cond | x.startswith(p)
+        return cond
+
+    bullet = F.when(
+        n_lines > 0,
+        F.size(F.filter(lines, _is_bullet)).cast("double") / n_lines
+    ).otherwise(0.0)
+    ellipsis = F.when(
+        n_lines > 0,
+        F.size(F.filter(lines, lambda x: x.endswith("...")
+                        | x.endswith("…"))).cast("double")
+        / n_lines).otherwise(0.0)
+    alpha = F.when(
+        n_words > 0,
+        F.size(F.filter(toks, lambda x: x.rlike(textstats.EN_ALPHA_RE)))
+        .cast("double") / n_words).otherwise(0.0)
+    stops = F.array(*[F.lit(w) for w in textstats.EN_STOPWORDS])
+    stop_hits = F.size(F.filter(toks,
+                                lambda x: F.array_contains(stops, x))
+                       ).cast("bigint")
+    out = (
+        df.withColumn("n_words", n_words)
+        .withColumn("mean_word_len", mean_wl)
+        .withColumn("symbol_word_ratio", sym_ratio)
+        .withColumn("bullet_line_frac", bullet)
+        .withColumn("ellipsis_line_frac", ellipsis)
+        .withColumn("alpha_word_frac", alpha)
+        .withColumn("stop_hits", stop_hits)
+    )
+    passed = (
+        (F.col("n_words") >= min_words) & (F.col("n_words") <= max_words)
+        & (F.col("mean_word_len") >= min_mean_word_len)
+        & (F.col("mean_word_len") <= max_mean_word_len)
+        & (F.col("symbol_word_ratio") < max_symbol_ratio)
+        & (F.col("bullet_line_frac") < max_bullet_frac)
+        & (F.col("ellipsis_line_frac") < max_ellipsis_frac)
+        & (F.col("alpha_word_frac") > min_alpha_frac)
+        & (F.col("stop_hits") >= min_stop_hits)
+    )
+    return out.withColumn("gopher_pass", passed.cast("int"))
+
+
+def _same_gopher_rows(spark, texts, line_sep, **thresholds):
+    # from pandas, so the rows reach the JVM as Arrow, not via Python tasks
+    df = spark.createDataFrame(
+        pd.DataFrame({"doc_id": range(len(texts)), "text": texts}),
+        "doc_id bigint, text string")
+    want = reference_gopher_quality_flags(df, line_sep=line_sep,
+                                          **thresholds)
+    got = textstats.gopher_quality_flags(df, line_sep=line_sep,
+                                         **thresholds)
+    assert got.columns == want.columns
+    # one job for both sides
+    rows = got.withColumn("_new", F.lit(True)).unionByName(
+        want.withColumn("_new", F.lit(False))).collect()
+    side = {True: [], False: []}
+    for r in rows:
+        side[r["_new"]].append(tuple(r)[:-1])
+    assert sorted(side[True]) == sorted(side[False])
+    assert len(side[True]) == len(texts)
+    return side[True]
+
+
+# runs of spaces and empty lines, every tested line_sep, stop words
+# (and near misses), both ellipsis spellings, bullets, non-BMP letters
+_GOPHER_PIECES = st.sampled_from([
+    " ", "  ", "   ", "\n", "\n\n", "\r\n", "\r", "x", "xx", "\t",
+    *textstats.EN_STOPWORDS, "The", "then", "ofx", "word", "tiếng", "việt",
+    "#", "...", "…", "....", "- ", "* ", "• ", "-", "1", "42", ".",
+    "𝐀", "𠀀", "😀", "a𝐀b",
+])
+_GOPHER_TEXTS = st.lists(
+    st.one_of(st.none(), st.lists(_GOPHER_PIECES, max_size=30).map("".join)),
+    min_size=1, max_size=40)
+
+
+@pytest.mark.parametrize("line_sep", ["\n", "\r\n", "x"])
+@settings(max_examples=20, deadline=None, derandomize=True)
+@given(texts=_GOPHER_TEXTS)
+@example(texts=[None])
+@example(texts=[None, "", " ", "\n\n", "x", "  \n  \r\n  x  "])
+@example(texts=["the cat sat on the", "with a\nb\n\nto the",
+                "and... or… then …\n- a ...\n* b…\n• c",
+                "𝐀𝐁 𠀀𠀁 😀 the of", "# ## ... …. …"])
+def test_gopher_flags_match_reference_on_text_soup(spark, line_sep, texts):
+    _same_gopher_rows(spark, texts, line_sep)
+
+
+def test_gopher_flags_match_reference_on_fixture_texts(spark):
+    texts = [fixtures.gen_page(i)[3] for i in range(300)]
+    # thresholds the fixture texts straddle, so gopher_pass takes both values
+    rows = _same_gopher_rows(spark, texts, "\n", min_words=5,
+                             min_mean_word_len=4.0, min_stop_hits=0)
+    assert {r[-1] for r in rows} == {0, 1}

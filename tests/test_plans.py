@@ -183,6 +183,22 @@ def test_gopher_flags_zero_exchange(spark):
     assert "pythonudf" not in plan.lower(), plan
 
 
+def test_gopher_flags_split_each_row_once(spark):
+    """The optimised gopher plan splits each row exactly twice: once on
+    ' ' into words and once on ``line_sep`` into lines. Every statistic
+    reads those two arrays; none re-splits the text."""
+    from webextract import textstats
+
+    df = spark.createDataFrame(
+        [(i, "the quick~~brown fox") for i in range(8)],
+        "doc_id bigint, text string")
+    plan = textstats.gopher_quality_flags(df, line_sep="~~") \
+        ._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("split(") == 2, plan
+    assert plan.count(",  , -1)") == 1, plan  # words: on ' '
+    assert plan.count(", \\~\\~, -1)") == 1, plan  # lines: on line_sep
+
+
 def test_repetition_signals_plan_shape(spark):
     """repetition_signals: two hash aggregations, no Window, the
     dup-gram arm ships an xxhash64 fingerprint instead of the gram text

@@ -142,6 +142,48 @@ def test_worker_import_path_trim(spark, pages_parquet):
     assert _same_import_state(before)
 
 
+def test_worker_trim_after_the_first_is_cheap(spark, pages_parquet):
+    """Once a worker has frozen its heap, trim_worker_imports no longer
+    asks ``gc.get_freeze_count()``: on CPython 3.11 that call walks the
+    whole permanent generation, milliseconds per call in a worker,
+    twice per extraction task."""
+    def probe(it):
+        import gc
+        import statistics
+        import time
+
+        import pyarrow as pa
+
+        from webextract import udfs
+        for _ in udfs.extract_batches(it):
+            pass
+        calls = []
+        count = gc.get_freeze_count
+        gc.get_freeze_count = lambda: calls.append(1) or count()
+        try:
+            ms = []
+            for _ in range(7):
+                t0 = time.perf_counter()
+                udfs.trim_worker_imports()
+                ms.append((time.perf_counter() - t0) * 1000.0)
+        finally:
+            gc.get_freeze_count = count
+        yield pa.RecordBatch.from_pylist(
+            [{"calls": len(calls), "median_ms": statistics.median(ms)}],
+            schema=pa.schema([("calls", pa.int64()),
+                              ("median_ms", pa.float64())]))
+
+    prepped = pipeline.with_bucket(
+        spark.read.parquet(pages_parquet).limit(8)
+        .select("url", "warc_ts", "html")).repartition(4)
+    rows = prepped.mapInArrow(probe, "calls bigint, median_ms double") \
+        .collect()
+    assert len(rows) == 4
+    for r in rows:
+        assert r["calls"] == 0, r
+        assert r["median_ms"] < 0.5, r
+
+
 def test_with_bucket_guards_a_kept_bucket_column(spark):
     df = spark.createDataFrame(
         [("https://a.example/x", 3), ("https://a.example/y", 63)],

@@ -374,57 +374,59 @@ def gopher_quality_flags(df: DataFrame, text_col: str = "text",
     identical in Java regex and RE2), ``stop_hits`` (English stopword
     occurrences), and ``gopher_pass`` (1 iff every rule passes, int for
     dialect-stable hashing). Thresholds are the paper's defaults,
-    overridable per corpus."""
+    overridable per corpus.
+
+    Cost model: each row is split once into words and once into lines.
+    The two arrays are helper columns of one projection, because
+    Catalyst does not inline a ``split`` that several expressions
+    reference; the statistics read them from a second projection, and
+    the helpers are dropped at the end. Word lengths take no per-token
+    lambda: their sum is the text's length net of separators. The
+    stop-word filter tests an ``IN`` list, not ``array_contains`` over
+    a literal array. Per-token lambdas remain for the stop-word, alpha,
+    bullet and ellipsis filters and the non-empty filters."""
     t = F.coalesce(F.col(text_col), F.lit(""))
-    toks = F.filter(F.split(F.replace(t, F.lit(line_sep), F.lit(" ")), " "),
-                    lambda x: x != "")
-    lines = F.filter(F.split(t, _lit_re(line_sep)), lambda x: x != "")
+    spaced = F.replace(t, F.lit(line_sep), F.lit(" "))
+    arrays = df.withColumns({
+        "_gq_toks": F.filter(F.split(spaced, " "), lambda x: x != ""),
+        "_gq_lines": F.filter(F.split(t, _lit_re(line_sep)),
+                              lambda x: x != ""),
+    })
+    toks, lines = F.col("_gq_toks"), F.col("_gq_lines")
     n_words = F.size(toks).cast("bigint")
     n_lines = F.size(lines)
-    wchars = F.aggregate(toks, F.lit(0).cast("bigint"),
-                         lambda a, x: a + F.length(x))
-    mean_wl = F.when(n_words > 0,
-                     wchars.cast("double") / n_words).otherwise(0.0)
+    # words are the non-empty runs between spaces, so their summed
+    # length is the text's length less its spaces
+    wchars = F.length(F.replace(spaced, F.lit(" "), F.lit(""))).cast("bigint")
 
     def _count(sub: str) -> Column:
         return ((F.length(t) - F.length(F.replace(t, F.lit(sub), F.lit(""))))
                 / len(sub)).cast("bigint")
 
-    symbols = _count("#") + _count("...") + _count("…")
-    sym_ratio = F.when(n_words > 0,
-                       symbols.cast("double") / n_words).otherwise(0.0)
+    def _frac(count: Column, total: Column) -> Column:
+        return F.when(total > 0, count.cast("double") / total).otherwise(0.0)
+
     def _is_bullet(x: Column) -> Column:
         cond = x.startswith(GOPHER_BULLETS[0])
         for p in GOPHER_BULLETS[1:]:
             cond = cond | x.startswith(p)
         return cond
 
-    bullet = F.when(
-        n_lines > 0,
-        F.size(F.filter(lines, _is_bullet)).cast("double") / n_lines
-    ).otherwise(0.0)
-    ellipsis = F.when(
-        n_lines > 0,
-        F.size(F.filter(lines, lambda x: x.endswith("...")
-                        | x.endswith("…"))).cast("double")
-        / n_lines).otherwise(0.0)
-    alpha = F.when(
-        n_words > 0,
-        F.size(F.filter(toks, lambda x: x.rlike(EN_ALPHA_RE))).cast("double")
-        / n_words).otherwise(0.0)
-    stops = F.array(*[F.lit(w) for w in EN_STOPWORDS])
-    stop_hits = F.size(F.filter(toks,
-                                lambda x: F.array_contains(stops, x))
-                       ).cast("bigint")
-    out = (
-        df.withColumn("n_words", n_words)
-        .withColumn("mean_word_len", mean_wl)
-        .withColumn("symbol_word_ratio", sym_ratio)
-        .withColumn("bullet_line_frac", bullet)
-        .withColumn("ellipsis_line_frac", ellipsis)
-        .withColumn("alpha_word_frac", alpha)
-        .withColumn("stop_hits", stop_hits)
-    )
+    symbols = _count("#") + _count("...") + _count("…")
+    out = arrays.withColumns({
+        "n_words": n_words,
+        "mean_word_len": _frac(wchars, n_words),
+        "symbol_word_ratio": _frac(symbols, n_words),
+        "bullet_line_frac": _frac(F.size(F.filter(lines, _is_bullet)),
+                                  n_lines),
+        "ellipsis_line_frac": _frac(
+            F.size(F.filter(lines, lambda x: x.endswith("...")
+                            | x.endswith("…"))), n_lines),
+        "alpha_word_frac": _frac(
+            F.size(F.filter(toks, lambda x: x.rlike(EN_ALPHA_RE))), n_words),
+        "stop_hits": F.size(F.filter(
+            toks, lambda x: x.isin(*EN_STOPWORDS))).cast("bigint"),
+    })
     passed = (
         (F.col("n_words") >= min_words) & (F.col("n_words") <= max_words)
         & (F.col("mean_word_len") >= min_mean_word_len)
@@ -435,7 +437,8 @@ def gopher_quality_flags(df: DataFrame, text_col: str = "text",
         & (F.col("alpha_word_frac") > min_alpha_frac)
         & (F.col("stop_hits") >= min_stop_hits)
     )
-    return out.withColumn("gopher_pass", passed.cast("int"))
+    return out.withColumn("gopher_pass", passed.cast("int")).drop(
+        "_gq_toks", "_gq_lines")
 
 
 def _lit_re(sep: str) -> str:
