@@ -2791,14 +2791,15 @@ _register("simhash_near_dup_pairs", _simhash_near_dup_pairs,
 # drops null/empty embeddings and vectors holding a NULL element on the
 # Spark side of every ANN kernel — the oracles must apply the SAME
 # filter or any fixture row with an invalid vector diverges the engines
-# (DuckDB list_sum SKIPS null elements and returns NULL on empty; the
-# Spark in-row fold returns NULL / 0.0 respectively). Pinned by
+# (DuckDB list_sum SKIPS null elements and returns NULL on empty, while
+# the Spark kernels would see NULL / NaN). Pinned by
 # tests/test_libs.py::test_ann_oracles_agree_on_invalid_rows, which runs
 # these very oracles against a fixture that DOES contain invalid rows.
 # validity mirrors webextract.ann._valid: non-empty, no NULL element,
 # and at least one non-zero element (zero-norm vectors have no cosine —
-# the fold kernel would DIVIDE_BY_ZERO under ANSI on any pair touching
-# one, so every kernel and every oracle excludes them identically)
+# the exact baselines would DIVIDE_BY_ZERO under ANSI on any pair
+# touching one, so every kernel and every oracle excludes them
+# identically)
 _EMB_VALID_DUCK = ("embedding IS NOT NULL AND len(embedding) > 0 "
                    "AND len(list_filter(embedding, x -> x IS NULL)) = 0 "
                    "AND len(list_filter(embedding, x -> x <> 0)) > 0")
@@ -3123,9 +3124,10 @@ _register("ann_lsh_topk", _ann_lsh_topk,
 
 # IVF variant: deterministic SAMPLED centroids (n_cells smallest-md5(id)
 # corpus vectors — swap in trained k-means at production scale, same plan
-# shape: assign → co-partition by cell → local exact rank). Distances
-# fold left-to-right over the array in both engines (F.aggregate /
-# list_reduce), so cell assignment is engine-exact.
+# shape: assign → co-partition by cell → local exact rank). The Spark
+# side ranks cells by a float64 matmul distance, the oracle by a
+# left-to-right list_reduce; the two differ only in the last ulps, far
+# below any gap between distinct centroid distances on the fixtures.
 _IVF_CELLS = 16
 
 
@@ -3181,60 +3183,6 @@ SELECT q_id, c_id AS neighbor_id, cosine FROM ranked WHERE rk = 1
 """
 
 _register("ann_ivf_topk", _ann_ivf_topk, _ANN_IVF_SQL)
-
-
-# Round-4 blas-kernel twins: kernel='blas' computes each bucket's cosine
-# block as one Arrow-batched float64 matmul (ann._topk_within_blas)
-# instead of per-pair zip_with folds. The kernel is row-identical to the
-# fold after the shared HALF_UP rounding (pinned by
-# tests/test_libs.py::test_blas_kernels_match_fold), so the SAME DuckDB
-# oracle SQL verifies both — a driver-green row here proves the
-# production kernel end-to-end, not just the oracled reference kernel.
-def _ann_lsh_topk_blas(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """[ANN blas kernel] ann.bucketed_topk(kernel='blas') — bucket-block
-    matmul in applyInPandas; same rows as ann_lsh_topk by contract."""
-    _prep(spark)
-    from webextract import ann
-    emb = _t(spark, sf_dir, "embeddings")
-    return ann.bucketed_topk(emb, k=1, bucket_cap=_ANN_BUCKET_CAP,
-                             kernel="blas")
-
-
-_register("ann_lsh_topk_blas", _ann_lsh_topk_blas,
-          _ann_lsh_topk_sql(_FLAT_DUCK, "(i - 1)"))
-
-
-def _ann_ivf_topk_blas(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """[ANN blas kernel #2] ann.ivf_topk(kernel='blas') — broadcast C×D
-    matmul assignment + bucket-block matmul rank; same rows as
-    ann_ivf_topk by contract."""
-    _prep(spark)
-    from webextract import ann
-    emb = _t(spark, sf_dir, "embeddings")
-    return ann.ivf_topk(emb, k=1, n_cells=_IVF_CELLS,
-                        bucket_cap=_ANN_BUCKET_CAP, kernel="blas")
-
-
-_register("ann_ivf_topk_blas", _ann_ivf_topk_blas, _ANN_IVF_SQL)
-
-
-def _embedding_near_dup_bucketed_blas(spark: SparkSession,
-                                      sf_dir: str) -> DataFrame:
-    """[dedup blas kernel] ann.bucketed_near_dups(kernel='blas') —
-    per-bucket upper-triangle matmul; same rows as
-    embedding_near_dup_bucketed by contract."""
-    _prep(spark)
-    from webextract import ann
-    emb = _t(spark, sf_dir, "embeddings")
-    return ann.bucketed_near_dups(emb, threshold=0.4,
-                                  bucket_cap=_ANN_BUCKET_CAP,
-                                  kernel="blas")
-
-
-# shares the fold query's generated SQL — the kernels are row-identical
-# by contract (tests/test_libs.py::test_blas_kernels_match_fold)
-_register("embedding_near_dup_bucketed_blas",
-          _embedding_near_dup_bucketed_blas, _near_dup_bucketed_sql())
 
 
 # ============================================== production-preset evidence
@@ -3575,16 +3523,16 @@ _register("ann_recall_at_k", _ann_recall_at_k, _ann_recall_sql())
 # (VERDICT r2 #5). Everything was driver- or judge-green in round 3, so
 # round 4 fronts only what changed: the two previously rows-only gates
 # that now carry golden-parquet oracles, the recall gate with its new
-# lsh_f2 multiprobe row, and the blas-kernel twins (oracled via the
-# fold queries' SQL — the kernels are row-identical by contract).
+# lsh_f2 multiprobe row, and the ANN scale queries, which now run the
+# single Arrow/numpy matmul kernel.
 _PRIORITY = [
     # new/changed this round — never driver-verified in this form
     "payload_kind_census", "lineage_run_summary", "hygiene_chain",
     "needs_ocr_route", "unicode_nfc_normalize", "content_blocklist_flags",
     "host_disjoint_split",
     "extract_flagship", "extract_pdf_pages", "ann_recall_at_k",
-    "ann_lsh_topk_blas", "ann_ivf_topk_blas",
-    "embedding_near_dup_bucketed_blas", "extract_cascade_in_batch_oracled",
+    "ann_lsh_topk", "ann_ivf_topk",
+    "embedding_near_dup_bucketed", "extract_cascade_in_batch_oracled",
     "compound_word_segment", "canonical_url_dedup",
     "paragraph_dedup_reassembly", "gopher_repetition_signals",
     "gopher_quality_flags", "pii_scrub", "host_quota_sample",

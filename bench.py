@@ -234,54 +234,40 @@ def _candidate_pair_count(bkt, cap: int) -> int:
                   & (F.col("a.vec_id") != F.col("b.vec_id"))).count()
 
 
-def run_ann_scale_bench(spark, n_vec: int = 20000, dim: int = 64,
-                        kernels: tuple = ("fold",)) -> dict:
+def run_ann_scale_bench(spark, n_vec: int = 20000, dim: int = 64) -> dict:
     """The ANN scale paths on a Catalyst-synthesized fixture. Brute force
     at these sizes would be O(N²) pairs (400M at 20k, 10B at 100k); the
     bucketed/IVF paths must stay in seconds. Alongside each wall the
     ACTUAL candidate-pair count is reported, so per-pair cost is a
-    derived, measured number: the r2→r3 kernel rewrite's claim is that
-    ONE row per pair crosses the shuffle at any embedding width — so
-    going from 64-dim to 768-dim the per-pair cost may grow with the
-    in-row fold (compute, ~linear in D) but never with D× shuffled rows
-    (the old exploded kernel). r3 verdict #1: this was previously only
-    measured at D=64. ``kernels`` selects which pair kernels to time:
-    'fold' (engine-exact, oracle-replayable) and/or 'blas' (Arrow
-    matmul, the production choice at real widths — bucket-identical to
-    the fold, pinned by tests/test_libs.py). Fold keys keep the
-    r1-r3-comparable names (``bucketed_topk_sec``); blas keys get a
-    ``_blas`` suffix. Pair counts are derived from the blas bucket
-    structures (cheap at any width; same buckets)."""
+    derived, measured number: the within-bucket kernel shuffles one row
+    per VECTOR and scores each bucket block with one float64 matmul, so
+    going from 64-dim to 768-dim the per-pair cost should stay ~flat."""
     from webextract import ann, cache
 
     path = _emb_fixture(spark, n_vec, dim)
-    _tune_corpus_splits(spark, path)  # in-row bucket assignment rides
-    # the scan: untuned, the whole N·planes·D fold runs as ONE task
+    _tune_corpus_splits(spark, path)  # bucket assignment rides the scan:
+    # untuned, the whole N·planes·D projection runs as ONE task
     emb = spark.read.parquet(path)
     out: dict = {"n_vec": n_vec, "dim": dim}
     cap = ann.DEFAULT_BUCKET_CAP
-    lsh_pairs = _candidate_pair_count(ann.lsh_buckets_blas(emb), cap)
+    lsh_pairs = _candidate_pair_count(ann.lsh_buckets(emb), cap)
     cents = ann.ivf_centroids(emb, n_cells=64)
-    ivf_pairs = _candidate_pair_count(
-        ann._assign_ranked_blas(emb, cents, "vec_id", "embedding", 1)
-        .select("vec_id", "bucket"), cap)
-    for kern in kernels:
-        sfx = "" if kern == "fold" else f"_{kern}"
-        for name, pairs, fn in [
-            ("bucketed_topk", lsh_pairs,
-             lambda k=kern: ann.bucketed_topk(emb, k=1, kernel=k)),
-            ("ivf_topk", ivf_pairs,
-             lambda k=kern: ann.ivf_topk(emb, k=1, n_cells=64, kernel=k)),
-        ]:
-            fn().write.format("noop").mode("overwrite").save()  # warm cache
-            t0 = time.monotonic()
-            fn().write.format("noop").mode("overwrite").save()
-            wall = time.monotonic() - t0
-            out[f"{name}{sfx}_sec"] = round(wall, 3)
-            out[f"{name}_pairs"] = pairs
-            out[f"{name}{sfx}_us_per_pair"] = round(
-                wall / max(pairs, 1) * 1e6, 3)
-            cache.release_all()
+    ivf_pairs = _candidate_pair_count(ann.ivf_assign(emb, cents), cap)
+    cache.release_all()
+    for name, pairs, fn in [
+        ("bucketed_topk", lsh_pairs,
+         lambda: ann.bucketed_topk(emb, k=1)),
+        ("ivf_topk", ivf_pairs,
+         lambda: ann.ivf_topk(emb, k=1, n_cells=64)),
+    ]:
+        fn().write.format("noop").mode("overwrite").save()  # warm cache
+        t0 = time.monotonic()
+        fn().write.format("noop").mode("overwrite").save()
+        wall = time.monotonic() - t0
+        out[f"{name}_sec"] = round(wall, 3)
+        out[f"{name}_pairs"] = pairs
+        out[f"{name}_us_per_pair"] = round(wall / max(pairs, 1) * 1e6, 3)
+        cache.release_all()
     return out
 
 
@@ -474,15 +460,12 @@ def main() -> None:
 
     queries = run_query_bench(spark, args.sf_dir)
     dedup_e2e = run_dedup_bench(spark, args.docs)
-    # three ANN fixture points (r3 verdict #1): the r1-r3-comparable
-    # 20k×64 (both kernels), the same N at real embedding width — the
-    # fold's per-pair cost grows ~D (interpreted compute) while its
-    # SHUFFLED ROWS stay one-per-pair, and the blas kernel erases the
-    # compute term — and the ≥100k×768 absolute-scale point
-    # (blas only: the fold there is ~200 s of interpreted folding)
-    ann_scale = [run_ann_scale_bench(spark, 20000, 64, ("fold", "blas")),
-                 run_ann_scale_bench(spark, 20000, 768, ("fold", "blas")),
-                 run_ann_scale_bench(spark, 100000, 768, ("blas",))]
+    # three ANN fixture points: the r1-r3-comparable 20k×64, the same N
+    # at real embedding width (per-pair cost should stay ~flat in D),
+    # and the ≥100k×768 absolute-scale point
+    ann_scale = [run_ann_scale_bench(spark, 20000, 64),
+                 run_ann_scale_bench(spark, 20000, 768),
+                 run_ann_scale_bench(spark, 100000, 768)]
     scale_docs = int(os.environ.get("WEBEXTRACT_SCALE_DOCS", "1000000"))
     scale = run_scale_bench(spark, scale_docs) if scale_docs else None
     warc_res = run_warc_bench(spark)

@@ -354,15 +354,6 @@ def test_ivf_multi_probe_recall_monotone(clustered_emb):
     assert r2 > 0.5
 
 
-def test_ivf_assign_multi_matches_single_at_one_probe(clustered_emb):
-    cents = ann.ivf_centroids(clustered_emb, n_cells=4)
-    single = {(r["vec_id"], r["bucket"]) for r in
-              ann.ivf_assign(clustered_emb, cents).collect()}
-    multi1 = {(r["vec_id"], r["bucket"]) for r in
-              ann.ivf_assign_multi(clustered_emb, cents, probes=1).collect()}
-    assert single == multi1
-
-
 def test_deduplicate_fuzzy_removes_near_dups(spark):
     rows = [
         (0, "the quick brown fox jumps over the lazy dog today"),
@@ -410,8 +401,8 @@ def test_fuzzy_dedup_hot_token_guard_default_on(spark):
 
 def test_ann_drops_null_and_empty_embeddings(spark):
     # failed-embed rows (null / empty arrays) must vanish from every ANN
-    # path — the in-row fold kernels would otherwise collapse them into
-    # bucket 0 with NULL cosines (r3 review finding)
+    # path — they would otherwise collapse into bucket 0 with NULL or
+    # NaN cosines (r3 review finding)
     rows = [(0, [1.0, 2.0, 3.0, 4.0]), (1, [1.0, 2.0, 3.0, 4.1]),
             (2, []), (3, None), (4, [0.9, 2.0, 3.0, 4.0])]
     emb = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
@@ -584,7 +575,7 @@ def test_ann_oracles_agree_on_invalid_rows(spark, tmp_path):
     qs, oracles = entry.queries(), entry.oracle_sql()
     for name in ["embedding_norms", "ann_lsh_buckets", "ann_lsh_topk",
                  "ann_ivf_topk", "cosine_topk_bruteforce",
-                 "embedding_near_dup_bucketed"]:
+                 "embedding_near_dup_bucketed", "ann_recall_at_k"]:
         try:
             sdf = qs[name](spark, sf_dir).toPandas()
         finally:
@@ -597,40 +588,9 @@ def test_ann_oracles_agree_on_invalid_rows(spark, tmp_path):
                 assert not set(sdf[col]) & {90, 91, 92, 93}, (name, col)
 
 
-def test_blas_kernels_match_fold(clustered_emb):
-    # kernel='blas' (Arrow matmul bucket blocks, r4) must emit EXACTLY
-    # the fold kernel's rows after the shared HALF_UP rounding — same
-    # buckets (lsh_buckets_blas replays the pseudo-plane weights), same
-    # tiebreaks (stable argsort over id-sorted candidates), on every
-    # path: LSH, multiprobe LSH, IVF, multiprobe IVF
-    from webextract import cache
-
-    def canon(df):
-        return sorted(tuple(r) for r in df.collect())
-
-    variants = [
-        lambda kern: ann.bucketed_topk(clustered_emb, k=3, kernel=kern),
-        lambda kern: ann.bucketed_topk(clustered_emb, k=3, probe_flips=2,
-                                       kernel=kern),
-        lambda kern: ann.ivf_topk(clustered_emb, k=3, n_cells=3,
-                                  kernel=kern),
-        lambda kern: ann.ivf_topk(clustered_emb, k=3, n_cells=5, probes=2,
-                                  kernel=kern),
-        lambda kern: ann.bucketed_near_dups(clustered_emb, threshold=0.5,
-                                            kernel=kern),
-        lambda kern: ann.deduplicate_embeddings(clustered_emb,
-                                                threshold=0.9, kernel=kern),
-    ]
-    for i, mk in enumerate(variants):
-        try:
-            assert canon(mk("fold")) == canon(mk("blas")), f"variant {i}"
-        finally:
-            cache.release_all()
-
-
-def test_blas_kernels_total_on_mixed_width_and_empty(spark):
+def test_ann_kernels_total_on_mixed_width_and_empty(spark):
     # ragged-width corpora (embedder drift, truncated writes) must not
-    # kill blas tasks: np.stack is per-width-group (r4 review); deviant
+    # kill ANN tasks: np.stack is per-width-group (r4 review); deviant
     # widths never pair cross-width, and a corpus with zero valid
     # vectors returns empty instead of crashing the driver
     from webextract import cache
@@ -638,10 +598,9 @@ def test_blas_kernels_total_on_mixed_width_and_empty(spark):
     rows = ([(i, [float(i + j + 1) for j in range(8)]) for i in range(20)]
             + [(99, [1.0, 2.0]), (98, [3.0, 4.0])])
     emb = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
-    topk = ann.bucketed_topk(emb, k=2, kernel="blas").collect()
-    nd = ann.bucketed_near_dups(emb, threshold=0.5, kernel="blas").collect()
-    ivf = ann.ivf_topk(emb, k=2, n_cells=3, probes=2,
-                       kernel="blas").collect()
+    topk = ann.bucketed_topk(emb, k=2).collect()
+    nd = ann.bucketed_near_dups(emb, threshold=0.5).collect()
+    ivf = ann.ivf_topk(emb, k=2, n_cells=3, probes=2).collect()
     cache.release_all()
     assert topk and nd and ivf
     wide = set(range(20))
@@ -654,8 +613,8 @@ def test_blas_kernels_total_on_mixed_width_and_empty(spark):
 
     empty = spark.createDataFrame([(0, None), (1, [])],
                                   "vec_id bigint, embedding array<float>")
-    assert ann.ivf_topk(empty, k=1, n_cells=2, kernel="blas").count() == 0
-    assert ann.bucketed_topk(empty, k=1, kernel="blas").count() == 0
+    assert ann.ivf_topk(empty, k=1, n_cells=2).count() == 0
+    assert ann.bucketed_topk(empty, k=1).count() == 0
     cache.release_all()
 
     # probes > surviving same-width centroids (r4 advice): the width
@@ -668,18 +627,18 @@ def test_blas_kernels_total_on_mixed_width_and_empty(spark):
     q = spark.createDataFrame(
         [(7, [1.0, 2.0, 3.0, 4.0]), (8, [2.0, 2.0, 2.0, 2.0])],
         "vec_id bigint, embedding array<float>")
-    ranked = ann._assign_ranked_blas(q, cents, "vec_id", "embedding",
-                                     probes=3).collect()
+    ranked = ann._assign_ranked(q, cents, "vec_id", "embedding",
+                                probes=3).collect()
     assert {(r["vec_id"], r["bucket"], r["_pr"]) for r in ranked} \
         == {(7, 0, 1), (8, 0, 1)}
 
 
-def test_blas_query_salting_invariant(spark):
-    # mega-bucket skew guard: the blas kernel groups by (bucket, salt)
-    # with the capped candidate set replicated per salt — results must
-    # be IDENTICAL at any salt count (each query meets each candidate
-    # exactly once), including with the cap engaged and self-pairs
-    # excluded across the replicated copies
+def test_ann_query_salting_invariant(spark):
+    # mega-bucket skew guard: the within-bucket kernel groups by
+    # (bucket, salt) with the capped candidate set replicated per salt —
+    # results must be IDENTICAL at any salt count (each query meets each
+    # candidate exactly once), including with the cap engaged and
+    # self-pairs excluded across the replicated copies
     from webextract import cache
 
     rows = ([(i, [c * (0.5 + 0.01 * i) for c in (1.0, 2.0, 3.0, 4.0)])
@@ -687,11 +646,11 @@ def test_blas_query_salting_invariant(spark):
             [(i, [c * (0.5 + 0.01 * i) for c in (4.0, 3.0, 2.0, 1.0)])
              for i in range(30, 60)])
     emb = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
-    bkt = ann.lsh_buckets_blas(emb)
+    bkt = ann.lsh_buckets(emb, persist=False)
 
     def run(s):
-        out = ann._topk_within_blas(emb, bkt, "vec_id", "embedding",
-                                    3, 10, 4, n_salts=s)
+        out = ann._topk_within(emb, bkt, "vec_id", "embedding",
+                               3, 10, 4, n_salts=s)
         try:
             return sorted(tuple(r) for r in out.collect())
         finally:
@@ -703,20 +662,21 @@ def test_blas_query_salting_invariant(spark):
 
 
 def test_blas_kernel_drops_invalid_and_releases(spark):
-    # the blas path must share the fold path's validity contract (null /
-    # empty vectors vanish) and its cache-release contract (release on
-    # the outermost result reclaims the whole persisted chain)
+    # the matmul kernel's multiprobe IVF path keeps the validity contract
+    # (null / empty vectors vanish) and the cache-release contract
+    # (release on the outermost result reclaims the whole persisted chain)
     from webextract import cache
 
     rows = [(0, [1.0, 2.0, 3.0, 4.0]), (1, [1.0, 2.0, 3.0, 4.1]),
             (2, []), (3, None), (4, [0.9, 2.0, 3.0, 4.0])]
     emb = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
     cache.release_all()
-    out = ann.ivf_topk(emb, k=2, n_cells=2, probes=2, kernel="blas")
+    out = ann.ivf_topk(emb, k=2, n_cells=2, probes=2)
     got = out.collect()
     assert got, "clustered 4-dim fixture must yield neighbors"
     for r in got:
         assert r["q_id"] not in {2, 3} and r["neighbor_id"] not in {2, 3}
+        assert r["cosine"] is not None
     cache.release(out)
     assert cache.release_all() == 0, "release(result) left frames cached"
 

@@ -125,9 +125,9 @@ def test_minhash_signature_frame_is_cached_for_fanout(spark):
 
 
 def test_lsh_bucket_assignment_zero_exchange(spark):
-    """Round 3: lsh_buckets projections are in-row zip_with folds —
-    bucket assignment must ride the scan with NO shuffle and NO
-    position-explode of the vectors."""
+    """lsh_buckets projections are one matmul per Arrow batch in
+    ``mapInPandas`` — bucket assignment must ride the scan with NO
+    shuffle and NO position-explode of the vectors."""
     from webextract import ann
 
     emb = spark.createDataFrame(
@@ -139,9 +139,10 @@ def test_lsh_bucket_assignment_zero_exchange(spark):
 
 
 def test_ann_topk_kernel_never_explodes_vectors(spark):
-    """The pair kernel joins array-typed vectors and folds zip_with —
-    the plan must contain no position-explode of the embedding column
-    (the r2 kernel pushed D component rows per pair through the join)."""
+    """The within-bucket kernel shuffles array-typed vectors into
+    per-bucket matmul blocks — the plan must contain no position-explode
+    of the embedding column (the r2 kernel pushed D component rows per
+    pair through the join)."""
     from webextract import ann, cache
 
     emb = spark.createDataFrame(
@@ -197,6 +198,26 @@ def test_gopher_flags_split_each_row_once(spark):
     assert plan.count("split(") == 2, plan
     assert plan.count(",  , -1)") == 1, plan  # words: on ' '
     assert plan.count(", \\~\\~, -1)") == 1, plan  # lines: on line_sep
+
+
+def test_quality_and_lang_id_split_each_row_once(spark):
+    """quality_scores and lang_id_stopwords each split a row into tokens
+    exactly once, and lang_id tests stop words with an ``IN`` list, not
+    ``array_contains`` over a literal array."""
+    from webextract import textstats
+
+    df = spark.createDataFrame(
+        [(i, "the cat, và các mat!") for i in range(8)],
+        "doc_id bigint, text string")
+
+    def optimized(out):
+        return out._jdf.queryExecution().optimizedPlan().toString()
+
+    plan = optimized(textstats.quality_scores(df))
+    assert plan.count("split(") == 1, plan
+    plan = optimized(textstats.lang_id_stopwords(df))
+    assert plan.count("split(") == 1, plan
+    assert "array_contains" not in plan, plan
 
 
 def test_repetition_signals_plan_shape(spark):

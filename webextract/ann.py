@@ -2,45 +2,51 @@
 
 Two paths, mirroring a production vector pipeline:
 
-- ``cosine_topk`` — exact brute force, restricted to an explicit query-id
-  list: the small-scale baseline / recall oracle. All-pairs by design;
-  never the scale path.
-- ``lsh_buckets`` + ``bucketed_topk`` — the scale path: assign each
-  vector to a hyperplane-sign bucket (deterministic pseudo-planes,
-  w(i, j) = ((i·(7j+3)) mod 11) − 5 over 0-based dim i), co-partition by
-  bucket, rank EXACT cosine within the bucket only. Candidates shrink
-  from O(N) to O(N/2^planes); the shuffle key is the bucket, so a search
-  is one partition-local sort — no global top-k.
+- ``cosine_topk`` / ``near_dup_pairs`` — exact brute force: the
+  small-scale baselines and the recall oracle. All-pairs by design;
+  never the scale path. Each cosine is an in-row
+  ``F.aggregate(F.zip_with(a, b, (x, y) -> x*y))`` fold over the two
+  ARRAY-typed vectors — one row per pair, the same left-to-right op
+  sequence DuckDB's list_reduce replays.
+- ``lsh_buckets`` + ``bucketed_topk`` / ``ivf_topk`` /
+  ``bucketed_near_dups`` — the scale path: assign each vector to a
+  hyperplane-sign bucket (deterministic pseudo-planes,
+  w(i, j) = ((i·(7j+3)) mod 11) − 5 over 0-based dim i) or to its
+  nearest IVF centroid, co-partition by bucket, rank EXACT cosine within
+  the bucket only. Candidates shrink from O(N) to O(N/buckets); the
+  shuffle key is the bucket, so a search is one partition-local pass —
+  no global top-k.
 
-Kernel shape (the VERDICT-r2 fix): every cosine is computed by joining
-the ARRAY-TYPED vectors to the pair frame and folding
-``F.aggregate(F.zip_with(a, b, (x, y) -> x*y))`` — ONE row per candidate
-pair through the shuffle. Round 2 joined position-exploded ``(id, i, e)``
-rows instead, which put D rows per pair through the pair join (768× row
-amplification at real embedding widths). ``ivf_assign`` proved the fold
-is engine-exact vs the DuckDB oracles; now EVERY kernel uses it —
-including ``lsh_buckets``, whose hyperplane projections are zero-shuffle
-in-row folds (no posexplode anywhere in this module's hot paths; the one
-explode left is ``ivf_centroids_kmeans``'s per-(cell, dim) mean, C·D
-groups crushed map-side).
+Kernel shape of the scale path: every score is a float64 matmul over an
+Arrow batch. Bucket projections and centroid distances are one matmul
+per batch in ``mapInPandas`` (zero shuffle; the C×D centroid matrix is
+collected once and closed over). Within a bucket, VECTORS shuffle by
+bucket (N rows, each carrying one array) and the Q×C cosine block is one
+matmul in ``applyInPandas`` — the candidate-pair frame never exists.
+Spark runs higher-order-function lambdas interpreted, per element, so a
+zip_with fold costs ~D interpreted steps per pair where the matmul costs
+one BLAS call per block (BENCH.md, "ANN at real embedding width").
 
 Hot buckets (a dense embedding cluster collapsing into one bucket) are
-the quadratic hazard at 100 TB: ``bucketed_topk(bucket_cap=…)``
-rank-limits the CANDIDATE side of each bucket deterministically (by id)
-so one degenerate bucket cannot go O(b²); query vectors are never
-dropped, they just rank against the capped candidate set. The cap itself
-is the aggregation-shaped two-phase cap shared with the MinHash path
-(dedup.cap_buckets) — no single-task window sort over a degenerate
-bucket.
+the quadratic hazard at 100 TB: ``bucket_cap`` rank-limits the CANDIDATE
+side of each bucket deterministically (by id) so one degenerate bucket
+cannot go O(b²); query vectors are never dropped, they just rank against
+the capped candidate set. The cap itself is the aggregation-shaped
+two-phase cap shared with the MinHash path (dedup.cap_buckets) — no
+single-task window sort over a degenerate bucket.
 
 Entry points persist fan-out intermediates and attach them to the result
 via cache.track; call ``cache.release(result)`` after materializing to
 unpersist (long-lived sessions would otherwise accumulate cached blocks).
 
 Semantics pinned by the driver's DuckDB oracles (__spark_entry__:
-ann_lsh_buckets / ann_lsh_topk / cosine_topk_bruteforce /
-embedding_near_dup_pairs). Ranking uses the ROUNDED cosine with an id
-tiebreak so engines agree on neighbor sets.
+ann_lsh_buckets / ann_lsh_topk / ann_ivf_topk / cosine_topk_bruteforce /
+embedding_near_dup_pairs / embedding_near_dup_bucketed /
+ann_recall_at_k). Ranking uses the ROUNDED cosine (sign-aware HALF_UP,
+like ``F.round``) with an id tiebreak so engines agree on neighbor sets;
+matmul summation order differs from the SQL sums only in the last ulps,
+which the rounding absorbs. A projection or threshold within one ulp of
+its cut could still fall the other way — measure-zero on real data.
 """
 
 from __future__ import annotations
@@ -54,20 +60,18 @@ from .dedup import cap_buckets
 
 DEFAULT_PLANES = 8
 DEFAULT_BUCKET_CAP = 64
+DEFAULT_QUERY_SALTS = 8
 
 
 def _valid(emb: DataFrame, vec_col: str) -> DataFrame:
     """Drop null/empty embeddings (size(null) = -1), vectors holding a
     NULL element, AND all-zero vectors: failed-embed rows are routine at
-    corpus scale, and the in-row fold kernels would otherwise turn them
-    into NULL projections (→ all piled into bucket 0) and NULL
-    norms/cosines — the r2 explode-based kernels skipped them via
-    posexplode/F.sum null semantics, so this keeps that contract
-    explicit. Zero-norm vectors have no defined cosine: under Spark 4's
-    ANSI default the fold's dot/(na·nb) would THROW DIVIDE_BY_ZERO on
-    any pair touching one (r4 review finding), and the blas kernels
-    would silently NaN-drop them — excluding them here keeps every
-    kernel total and fold/blas row-identical. Mirrored in the driver
+    corpus scale, and a NULL element would reach the float64 matrices as
+    NaN and poison every projection and cosine it touches. Zero-norm vectors
+    have no defined cosine: the matmul kernels would NaN-drop them and
+    the exact baselines' dot/(na·nb) would THROW DIVIDE_BY_ZERO under
+    Spark 4's ANSI default on any pair touching one — excluding them here
+    keeps every path total and in agreement. Mirrored in the driver
     oracles' _EMB_VALID_DUCK/_EMB_VALID_SPARK."""
     return emb.filter(
         (F.size(F.col(vec_col)) > 0)
@@ -78,9 +82,9 @@ def _valid(emb: DataFrame, vec_col: str) -> DataFrame:
 def _vecs(emb: DataFrame, id_col: str, vec_col: str,
           persist: bool = True) -> DataFrame:
     """(_vid, _vec:array<double>, _n): one row per vector with its L2
-    norm — the frame every pair kernel joins. The norm folds over the
-    array in-row (no explode, no shuffle); persisted because every
-    kernel joins it from two sides."""
+    norm — the frame the exact baselines join. The norm folds over the
+    array in-row (no explode, no shuffle); persisted because both
+    baselines join it from two sides."""
     vec = F.transform(F.col(vec_col), lambda x: x.cast("double"))
     out = (
         _valid(emb, vec_col)
@@ -95,62 +99,70 @@ def _vecs(emb: DataFrame, id_col: str, vec_col: str,
 
 def _dot(a, b):
     """zip_with product + left-to-right fold: the engine-exact dot kernel
-    (same op sequence DuckDB's list_reduce replays)."""
+    of the exact baselines (same op sequence DuckDB's list_reduce
+    replays)."""
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
                        F.lit(0.0), lambda acc, x: acc + x)
 
 
-def _score_pairs(pairs: DataFrame, vecs: DataFrame, left: str, right: str,
-                 nd: int) -> DataFrame:
-    """(left, right, _cos, _ratio): exact cosine per candidate pair — one
-    row per pair through both joins (the arrays travel, not D exploded
-    component rows). _ratio is the unrounded value for thresholding;
-    _cos the rounded display/ranking value."""
-    va, vb = vecs.alias("va"), vecs.alias("vb")
-    joined = (
-        pairs.join(va, F.col("va._vid") == F.col(left))
-        .join(vb, F.col("vb._vid") == F.col(right))
-        .select(left, right,
-                (_dot(F.col("va._vec"), F.col("vb._vec"))
-                 / (F.col("va._n") * F.col("vb._n"))).alias("_ratio"))
-    )
-    return joined.withColumn("_cos", F.round("_ratio", nd))
+def _stack_groups(series):
+    """Yield ``(positions, matrix)`` per distinct element length in a
+    pandas Series of array values. ``np.stack`` is only defined over
+    uniform lengths, so one deviant-width row (embedder version drift, a
+    truncated write) must not kill the whole task — each width group is
+    stacked and processed separately, and cross-width pairs are never
+    scored (cosine between different dimensionalities is undefined)."""
+    import numpy as np
+
+    lens = series.map(len).to_numpy()
+    for length in np.unique(lens):
+        pos = np.nonzero(lens == length)[0]
+        yield pos, np.stack(series.iloc[pos].to_numpy()).astype(
+            np.float64, copy=False)
+
+
+def _half_up(x, f: float):
+    """Sign-aware HALF_UP rounding to 1/f — Spark ``F.round`` and the
+    DuckDB oracles' ``round``; ``np.round`` is half-even."""
+    import numpy as np
+
+    return np.sign(x) * np.floor(np.abs(x) * f + 0.5) / f
 
 
 def lsh_buckets(emb: DataFrame, id_col: str = "vec_id",
                 vec_col: str = "embedding",
                 n_planes: int = DEFAULT_PLANES,
                 persist: bool = True) -> DataFrame:
-    """(id, bucket): hyperplane-sign LSH. Each projection is an IN-ROW
-    fold — zip the vector with its index sequence, weight by the
-    deterministic pseudo-plane w(i, j) = ((i·(7j+3)) mod 11) − 5, sum.
-    Null/empty embeddings are dropped (sequence(0, -1) DESCENDS and a
-    null fold would otherwise collapse them all into bucket 0; the r2
-    explode path dropped them implicitly).
-    ZERO shuffle: bucket assignment is a pure projection over the scan
-    (round 2 position-exploded N·D rows through a groupBy — at D=768
-    that shuffle is 768× the row count for no reason). Persisted by
-    default: every downstream join fans out over it."""
-    emb = _valid(emb, vec_col)
-    idx = F.sequence(F.lit(0), F.size(F.col(vec_col)) - 1)
+    """(id, bucket): hyperplane-sign LSH. The ``n_planes`` projections
+    are ONE float64 matmul per Arrow batch (``mapInPandas``) against the
+    deterministic pseudo-planes w(i, j) = ((i·(7j+3)) mod 11) − 5; bit j
+    of the bucket is set iff projection j > 0. Invalid embeddings are
+    dropped (see ``_valid``). ZERO shuffle: bucket assignment is a pure
+    map over the scan. Persisted by default: every downstream join fans
+    out over it."""
+    src = _valid(emb, vec_col).select(id_col, vec_col)
+    id_dt = emb.schema[id_col].dataType.simpleString()
 
-    def weighted(j):
-        # closure factory: PySpark infers lambda arity from the signature,
-        # so the plane index must be captured, not a defaulted third param
-        return lambda e, i: (e.cast("double")
-                             * ((i * (7 * j + 3)) % 11 - 5).cast("double"))
+    def body(it):
+        import numpy as np
+        import pandas as pd
+        W = None
+        for pdf in it:
+            if pdf.empty:
+                continue
+            ids = pdf[id_col].to_numpy()
+            for pos, V in _stack_groups(pdf[vec_col]):
+                if W is None or W.shape[1] != V.shape[1]:
+                    i = np.arange(V.shape[1])[None, :]
+                    j = np.arange(n_planes)[:, None]
+                    W = ((i * (7 * j + 3)) % 11 - 5).astype(np.float64)
+                proj = V @ W.T
+                bucket = ((proj > 0).astype(np.int64)
+                          << np.arange(n_planes, dtype=np.int64)[None, :]
+                          ).sum(axis=1)
+                yield pd.DataFrame({id_col: ids[pos], "bucket": bucket})
 
-    projs = [
-        F.aggregate(F.zip_with(F.col(vec_col), idx, weighted(j)),
-                    F.lit(0.0), lambda acc, x: acc + x).alias(f"p{j}")
-        for j in range(n_planes)
-    ]
-    proj = emb.select(id_col, *projs)
-    bucket = None
-    for j in range(n_planes):
-        term = F.when(F.col(f"p{j}") > 0, F.lit(1 << j)).otherwise(F.lit(0))
-        bucket = term if bucket is None else bucket + term
-    out = proj.select(id_col, bucket.cast("bigint").alias("bucket"))
+    out = src.mapInPandas(body, f"{id_col} {id_dt}, bucket bigint")
     if persist:
         out = _track(out.persist(StorageLevel.MEMORY_AND_DISK), out)
     return out
@@ -167,8 +179,7 @@ def bucketed_topk(emb: DataFrame, id_col: str = "vec_id",
                   vec_col: str = "embedding", k: int = 1,
                   n_planes: int = DEFAULT_PLANES,
                   bucket_cap: int | None = DEFAULT_BUCKET_CAP,
-                  nd: int = 4, probe_flips: int = 0,
-                  kernel: str = "fold") -> DataFrame:
+                  nd: int = 4, probe_flips: int = 0) -> DataFrame:
     """(q_id, neighbor_id, cosine): each vector's top-k neighbors WITHIN
     its LSH bucket — exact cosine, partition-local ranking.
 
@@ -178,29 +189,17 @@ def bucketed_topk(emb: DataFrame, id_col: str = "vec_id",
     query in one marginal hyperplane sign with high probability, so
     flipping single bits recovers most of what bucket boundaries cut.
     Candidates stay single-bucket/capped; cost grows ~linearly in
-    (1 + probe_flips).
-
-    ``kernel``: 'fold' (default) scores pairs with the engine-exact
-    zip_with fold — oracle-replayable, but interpreted per element;
-    'blas' shuffles vectors by bucket and matmuls each bucket block in
-    ``applyInPandas`` (_topk_within_blas) — the production choice at
-    real embedding widths (measured ~50× at D=768)."""
-    if kernel == "blas":
-        within = _topk_within_blas
-        bkt = lsh_buckets_blas(emb, id_col, vec_col, n_planes)
-        bkt = _track(bkt.persist(StorageLevel.MEMORY_AND_DISK), bkt)
-    else:
-        within = _topk_within
-        bkt = lsh_buckets(emb, id_col, vec_col, n_planes)
+    (1 + probe_flips)."""
+    bkt = lsh_buckets(emb, id_col, vec_col, n_planes)
     if probe_flips <= 0:
-        return within(emb, bkt, id_col, vec_col, k, bucket_cap, nd)
+        return _topk_within(emb, bkt, id_col, vec_col, k, bucket_cap, nd)
     probes = F.array(
         F.col("bucket"),
         *[F.col("bucket").bitwiseXOR(F.lit(1 << j))
           for j in range(min(probe_flips, n_planes))])
     qbkt = bkt.select(id_col, F.explode(probes).alias("bucket"))
-    return within(emb, bkt, id_col, vec_col, k, bucket_cap, nd,
-                  query_bkt=_track(qbkt, bkt))
+    return _topk_within(emb, bkt, id_col, vec_col, k, bucket_cap, nd,
+                        query_bkt=_track(qbkt, bkt))
 
 
 def ivf_centroids(emb: DataFrame, id_col: str = "vec_id",
@@ -223,13 +222,15 @@ def ivf_centroids_kmeans(emb: DataFrame, id_col: str = "vec_id",
                          vec_col: str = "embedding", n_cells: int = 16,
                          iters: int = 2) -> DataFrame:
     """(cell_id, cvec): Lloyd-refined centroids, deterministically
-    initialized from ``ivf_centroids`` (VERDICT r2 #8). Each round is the
-    standard distributed k-means shape: broadcast-assign (ivf_assign),
-    then per-(cell, dim) mean via hash aggregation — O(N·D) rows but
-    only C·D groups, crushed map-side; never a pair join. Cells that
-    lose all members vanish (standard Lloyd degeneracy — fewer, better
-    cells beats empty ones). Not oracle-replayable (float mean order);
-    the sampled path stays the oracled default."""
+    initialized from ``ivf_centroids``. Each round is the standard
+    distributed k-means shape: broadcast-assign (ivf_assign), then
+    per-(cell, dim) mean via hash aggregation — O(N·D) rows but only C·D
+    groups, crushed map-side; never a pair join. Cells that lose all
+    members vanish (standard Lloyd degeneracy — fewer, better cells beats
+    empty ones). Each round's assign collects the C current centroids
+    when the plan is built (the assigner closes over them), so building
+    this plan runs ``iters`` small Spark jobs. Not oracle-replayable
+    (float mean order); the sampled path stays the oracled default."""
     cents = ivf_centroids(emb, id_col, vec_col, n_cells)
     for _ in range(iters):
         assign = ivf_assign(emb, cents, id_col, vec_col)
@@ -248,258 +249,126 @@ def ivf_centroids_kmeans(emb: DataFrame, id_col: str = "vec_id",
     return cents
 
 
-def _cell_dists(emb: DataFrame, centroids: DataFrame, id_col: str,
-                vec_col: str) -> DataFrame:
-    """(id, cell_id, dist): N×C squared distances. The fold runs
-    LEFT-TO-RIGHT over the array (F.aggregate) in pure double — the same
-    deterministic op sequence the DuckDB oracle replays, so assignments
-    are engine-exact (no groupBy-order float drift). The centroid side is
-    tiny and broadcast; never materialized vectors."""
-    sq = F.zip_with(
-        F.col(vec_col), F.col("cvec"),
-        lambda a, b: (a.cast("double") - b.cast("double"))
-        * (a.cast("double") - b.cast("double")),
-    )
-    dist = F.aggregate(sq, F.lit(0.0), lambda acc, x: acc + x)
-    return _valid(emb, vec_col).crossJoin(F.broadcast(centroids)).select(
-        id_col, "cell_id", dist.alias("dist"))
-
-
-def ivf_assign_multi(emb: DataFrame, centroids: DataFrame,
-                     id_col: str = "vec_id", vec_col: str = "embedding",
-                     probes: int = 1) -> DataFrame:
-    """(id, bucket): each vector's ``probes`` nearest centroid cells
-    (standard IVF multi-probe — the QUERY side searches several cells to
-    buy recall; the candidate side stays single-cell). Aggregation-
-    shaped like ivf_assign: collect the C (cell, dist) pairs per vector
-    map-side, sort, slice — deterministic (dist, cell_id) ordering, no
-    N×C window sort."""
-    return _assign_ranked(emb, centroids, id_col, vec_col, probes) \
-        .select(id_col, "bucket")
-
-
 def _assign_ranked(emb: DataFrame, centroids: DataFrame, id_col: str,
                    vec_col: str, probes: int) -> DataFrame:
-    """(id, bucket, _pr): each vector's ``probes`` nearest cells with
-    their probe rank (1 = nearest). One N×C distance pass yields BOTH
-    the single-cell candidate assignment (_pr == 1, identical to
-    ivf_assign — the deterministic (dist, cell_id) ordering ties them)
-    and the multi-probe query assignment."""
-    assign = _cell_dists(emb, centroids, id_col, vec_col)
-    best = F.slice(
-        F.array_sort(F.collect_list(F.struct("dist", "cell_id"))), 1, probes)
-    return (
-        assign.groupBy(id_col).agg(best.alias("_cells"))
-        .select(id_col, F.posexplode("_cells").alias("_i", "_c"))
-        .select(id_col, F.col("_c.cell_id").alias("bucket"),
-                (F.col("_i") + 1).alias("_pr"))
-    )
+    """(id, bucket, _pr): each vector's ``probes`` nearest centroid cells
+    with their probe rank (1 = nearest). The C×D centroid matrix is tiny
+    by contract, so it is collected once and closed over a
+    ``mapInPandas`` body — squared distances per Arrow batch via one
+    matmul in the expanded ||v||² − 2v·c + ||c||² form. No N×C pair rows
+    exist anywhere. Ties break to the smaller cell_id (columns pre-sorted
+    + stable argsort). One pass yields BOTH the single-cell candidate
+    assignment (_pr == 1) and the multi-probe query assignment."""
+    import numpy as np
+
+    rows = centroids.collect()
+    id_dt = emb.schema[id_col].dataType.simpleString()
+    cell_dt = centroids.schema["cell_id"].dataType.simpleString()
+    schema = f"{id_col} {id_dt}, bucket {cell_dt}, _pr int"
+    if not rows:
+        # zero valid vectors → zero centroids → an empty assignment
+        # (np.stack would otherwise crash on the empty list)
+        return emb.sparkSession.createDataFrame([], schema)
+    order = sorted(range(len(rows)), key=lambda i: rows[i]["cell_id"])
+    # a mixed-width corpus can sample deviant-width centroids; keep only
+    # those matching the first (smallest cell_id) centroid's width —
+    # np.stack is undefined over ragged rows, and a deviant centroid
+    # could never win an assignment for the dominant width anyway
+    width = len(rows[order[0]]["cvec"])
+    order = [i for i in order if len(rows[i]["cvec"]) == width]
+    Cm = np.stack([np.asarray(rows[i]["cvec"], dtype=np.float64)
+                   for i in order])
+    cids = np.asarray([rows[i]["cell_id"] for i in order])
+    cn2 = (Cm * Cm).sum(axis=1)
+    src = _valid(emb, vec_col).select(id_col, vec_col)
+    # clamp AFTER the width filter: a mixed-width corpus can drop deviant
+    # centroids above, and probes > len(cids) would make np.repeat (n*p)
+    # mismatch cids[pr].ravel() (n*len(cids)) in the executor
+    p = max(1, min(probes, len(cids)))
+
+    def body(it):
+        import numpy as np
+        import pandas as pd
+        for pdf in it:
+            if pdf.empty:
+                continue
+            ids = pdf[id_col].to_numpy()
+            for pos, V in _stack_groups(pdf[vec_col]):
+                if V.shape[1] != Cm.shape[1]:
+                    # a deviant-width row cannot be scored against the
+                    # centroids — dropped
+                    continue
+                d2 = ((V * V).sum(axis=1)[:, None] - 2.0 * (V @ Cm.T)
+                      + cn2[None, :])
+                pr = np.argsort(d2, axis=1, kind="stable")[:, :p]
+                n = len(pos)
+                yield pd.DataFrame({
+                    id_col: np.repeat(ids[pos], p),
+                    "bucket": cids[pr].ravel(),
+                    "_pr": np.tile(np.arange(1, p + 1, dtype=np.int32), n),
+                })
+
+    return src.mapInPandas(body, schema)
 
 
 def ivf_assign(emb: DataFrame, centroids: DataFrame, id_col: str = "vec_id",
-               vec_col: str = "embedding") -> DataFrame:
-    """(id, bucket): nearest-centroid cell per vector (see _cell_dists
-    for the engine-exact distance kernel).  Functionally identical to
-    ``ivf_assign_multi(probes=1)`` but keeps the cheaper min(struct)
-    aggregation: lexicographic struct min IS argmin-with-id-tiebreak,
-    and a plain hash aggregate (map-side combined, constant-size buffer)
-    beats both a row_number window (full sort of N×C rows) and a
-    collect_list buffer at scale."""
-    assign = _cell_dists(emb, centroids, id_col, vec_col)
-    return (
-        assign.groupBy(id_col)
-        .agg(F.min(F.struct("dist", "cell_id")).alias("_best"))
-        .select(id_col, F.col("_best.cell_id").alias("bucket"))
-    )
+               vec_col: str = "embedding", probes: int = 1) -> DataFrame:
+    """(id, bucket): each vector's ``probes`` nearest centroid cells
+    (standard IVF multi-probe — the QUERY side searches several cells to
+    buy recall; the candidate side stays single-cell). See
+    ``_assign_ranked`` for the broadcast-matmul distance kernel."""
+    return _assign_ranked(emb, centroids, id_col, vec_col, probes) \
+        .select(id_col, "bucket")
 
 
 def ivf_topk(emb: DataFrame, id_col: str = "vec_id",
              vec_col: str = "embedding", k: int = 1, n_cells: int = 16,
              bucket_cap: int | None = DEFAULT_BUCKET_CAP,
              nd: int = 4, trained: bool = False,
-             probes: int = 1, kernel: str = "fold") -> DataFrame:
+             probes: int = 1) -> DataFrame:
     """IVF search: assign → co-partition by cell → exact cosine rank
     within the cell. Same scale shape as bucketed_topk with
     data-adaptive cells instead of fixed hyperplanes. ``trained=True``
     uses Lloyd-refined centroids (non-oracled path); ``probes > 1``
     makes each QUERY search its p nearest cells (recall dial — cost
-    grows ~linearly in probes, candidates stay single-cell/capped).
-
-    ``kernel='blas'`` switches BOTH stages to the Arrow/numpy kernels:
-    centroid assignment via broadcast C×D matmul (_assign_ranked_blas —
-    the N×C pair frame never exists) and within-cell ranking via the
-    bucket-block matmul (_topk_within_blas). The production choice at
-    real embedding widths; the fold default stays oracle-replayable."""
+    grows ~linearly in probes, candidates stay single-cell/capped)."""
     cents = (ivf_centroids_kmeans if trained else ivf_centroids)(
         emb, id_col, vec_col, n_cells)
-    if kernel == "blas":
-        # persist the assignment in BOTH branches: _topk_within_blas
-        # consumes it from the candidate side AND the query side, and an
-        # unpersisted frame would re-run the full mapInPandas assignment
-        # (emb scan + Arrow transfer) once per consumer (r4 review)
-        ranked = _assign_ranked_blas(emb, cents, id_col, vec_col, probes)
-        ranked = _track(ranked.persist(StorageLevel.MEMORY_AND_DISK),
-                        ranked)
-        cells = ranked.filter(F.col("_pr") == 1).select(id_col, "bucket")
-        if probes <= 1:
-            return _topk_within_blas(emb, _track(cells, ranked), id_col,
-                                     vec_col, k, bucket_cap, nd)
-        qcells = ranked.select(id_col, "bucket")
-        return _topk_within_blas(emb, cells, id_col, vec_col, k,
-                                 bucket_cap, nd,
-                                 query_bkt=_track(qcells, ranked))
-    if trained:
-        # a trained centroid plan is 2 full Lloyd rounds — materialize
-        # it once before the assign consumes it; C rows
-        cents = _track(cents.persist(StorageLevel.MEMORY_AND_DISK), cents)
-        cents.count()
-    if probes <= 1:
-        cells = ivf_assign(emb, cents, id_col, vec_col) \
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        cells = _track(cells, cells, cents)
-        return _topk_within(emb, cells, id_col, vec_col, k, bucket_cap, nd)
-    # ONE N×C distance pass yields both assignments: candidate cells =
-    # probe rank 1 (identical to ivf_assign), query cells = all probes
-    ranked = _assign_ranked(emb, cents, id_col, vec_col, probes) \
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    ranked = _track(ranked, ranked, cents)
-    cells = ranked.filter(F.col("_pr") == 1).select(id_col, "bucket")
-    qcells = ranked.select(id_col, "bucket")
+    # persisted: _topk_within reads the assignment from the candidate
+    # side AND the query side, and an unpersisted frame would re-run the
+    # mapInPandas assignment (emb scan + Arrow transfer) per consumer
+    ranked = _assign_ranked(emb, cents, id_col, vec_col, probes)
+    ranked = _track(ranked.persist(StorageLevel.MEMORY_AND_DISK), ranked)
+    cells = _track(ranked.filter(F.col("_pr") == 1).select(id_col, "bucket"),
+                   ranked)
+    qcells = None if probes <= 1 else _track(
+        ranked.select(id_col, "bucket"), ranked)
     return _topk_within(emb, cells, id_col, vec_col, k, bucket_cap, nd,
-                        query_bkt=_track(qcells, ranked))
+                        query_bkt=qcells)
 
 
-def _topk_within(emb: DataFrame, bkt: DataFrame, id_col: str, vec_col: str,
-                 k: int, bucket_cap: int | None, nd: int,
-                 query_bkt: DataFrame | None = None) -> DataFrame:
-    """Shared within-bucket exact-cosine ranking (LSH and IVF paths):
-    candidate side capped deterministically; queries never dropped. One
-    row per (query, candidate) pair everywhere — the vectors join as
-    arrays (zip_with fold), never as exploded components. ``query_bkt``
-    overrides the query-side bucket assignment (multi-probe: several
-    rows per query id); pairs are deduped so a candidate reachable via
-    two probes scores once."""
-    vecs = _vecs(emb, id_col, vec_col)
-    cand = _cap(bkt, id_col, bucket_cap)
-    a = (query_bkt if query_bkt is not None else bkt).alias("a")
-    b = cand.alias("b")
-    pairs = a.join(
-        b, (F.col("a.bucket") == F.col("b.bucket"))
-        & (F.col(f"a.{id_col}") != F.col(f"b.{id_col}"))
-    ).select(F.col(f"a.{id_col}").alias("q_id"),
-             F.col(f"b.{id_col}").alias("c_id"))
-    if query_bkt is not None:
-        pairs = pairs.distinct()
-    sims = _score_pairs(pairs, vecs, "q_id", "c_id", nd)
-    wr = Window.partitionBy("q_id").orderBy(F.desc("_cos"), F.asc("c_id"))
-    out = (
-        sims.withColumn("_rk", F.row_number().over(wr))
-        .filter(F.col("_rk") <= k)
-        .select("q_id", F.col("c_id").alias("neighbor_id"),
-                F.col("_cos").alias("cosine"))
-    )
-    # query_bkt must ride along too: multi-probe callers pass DERIVED
-    # frames as bkt (attribute tracking doesn't survive .filter/.select),
-    # so the persisted chain (ranked/centroids) arrives via query_bkt —
-    # dropping it broke the release-on-outermost-result contract (ADVICE r3)
-    return _track(out, vecs, bkt, query_bkt)
-
-
-def _stack_groups(series):
-    """Yield ``(positions, matrix)`` per distinct element length in a
-    pandas Series of array values. ``np.stack`` is only defined over
-    uniform lengths, so one deviant-width row (embedder version drift, a
-    truncated write) must not kill the whole task (r4 review) — each
-    width group is stacked and processed separately, and cross-width
-    pairs are never scored (cosine between different dimensionalities is
-    undefined; the fold kernel's zip_with null-pads them into NULL
-    cosines that never outrank a finite one)."""
-    import numpy as np
-
-    lens = series.map(len).to_numpy()
-    for length in np.unique(lens):
-        pos = np.nonzero(lens == length)[0]
-        yield pos, np.stack(series.iloc[pos].to_numpy()).astype(
-            np.float64, copy=False)
-
-
-def lsh_buckets_blas(emb: DataFrame, id_col: str = "vec_id",
-                     vec_col: str = "embedding",
-                     n_planes: int = DEFAULT_PLANES) -> DataFrame:
-    """(id, bucket): the same hyperplane-sign LSH as ``lsh_buckets`` —
-    identical pseudo-plane weights w(i, j) = ((i·(7j+3)) mod 11) − 5 —
-    but the projections are ONE float64 matmul per Arrow batch
-    (mapInPandas) instead of n_planes interpreted zip_with folds per
-    row. Spark HOF lambdas are CodegenFallback (interpreted per
-    element): the fold assignment measured ~17 s for 20k×64 on 32
-    cores; this is milliseconds of BLAS. Still zero shuffle — a pure
-    map over the scan. Sign decisions can differ from the fold in the
-    measure-zero case of a projection within one ulp of 0 (summation
-    order), so this is the blas-kernel companion, not the oracled
-    path."""
-    import numpy as np
-
-    src = _valid(emb, vec_col).select(id_col, vec_col)
-    id_dt = emb.schema[id_col].dataType.simpleString()
-    n_pl = n_planes
-
-    def body(it):
-        import numpy as np
-        import pandas as pd
-        W = None
-        for pdf in it:
-            if pdf.empty:
-                continue
-            ids = pdf[id_col].to_numpy()
-            for pos, V in _stack_groups(pdf[vec_col]):
-                if W is None or W.shape[1] != V.shape[1]:
-                    i = np.arange(V.shape[1])[None, :]
-                    j = np.arange(n_pl)[:, None]
-                    W = ((i * (7 * j + 3)) % 11 - 5).astype(np.float64)
-                proj = V @ W.T
-                bucket = ((proj > 0).astype(np.int64)
-                          << np.arange(n_pl, dtype=np.int64)[None, :]
-                          ).sum(axis=1)
-                yield pd.DataFrame({id_col: ids[pos], "bucket": bucket})
-
-    return src.mapInPandas(body, f"{id_col} {id_dt}, bucket bigint")
-
-
-DEFAULT_QUERY_SALTS = 8
-
-
-def _topk_within_blas(emb: DataFrame, bkt: DataFrame, id_col: str,
-                      vec_col: str, k: int, bucket_cap: int | None, nd: int,
-                      query_bkt: DataFrame | None = None,
-                      n_salts: int = DEFAULT_QUERY_SALTS) -> DataFrame:
-    """BLAS bucket kernel (r4): the scale variant of ``_topk_within`` for
-    real embedding widths. The fold kernel is engine-exact and
-    oracle-replayable, but its per-pair cost is interpreted-expression
-    compute — measured ~31-37 µs/pair at D=768 (201 s for 100k×768).
-    Here the pair frame never exists: VECTORS shuffle by bucket (N rows,
-    each carrying one array) and each bucket's Q×C cosine block is one
-    float64 matmul inside ``applyInPandas`` — the canonical
-    Spark-plus-Arrow shape for a kernel Catalyst can't express
-    efficiently. Rounding is sign-aware HALF_UP to match ``F.round``;
-    ranking ties break by ascending neighbor id exactly like the fold
-    path (candidates pre-sorted by id + stable argsort). Same contracts:
-    candidate side capped deterministically, queries never dropped,
-    multi-probe pairs deduped before the final rank. Not
-    oracle-registered: BLAS summation order differs from the
-    left-to-right fold in the last ulps, so outputs are equal after
-    rounding in practice (pinned by tests) but not bit-derivable in SQL.
+def _topk_within(emb: DataFrame, bkt: DataFrame, id_col: str,
+                 vec_col: str, k: int, bucket_cap: int | None, nd: int,
+                 query_bkt: DataFrame | None = None,
+                 n_salts: int = DEFAULT_QUERY_SALTS) -> DataFrame:
+    """Shared within-bucket exact-cosine ranking (LSH and IVF paths).
+    The pair frame never exists: VECTORS shuffle by bucket and each
+    bucket's Q×C cosine block is one float64 matmul inside
+    ``applyInPandas``. Candidate side capped deterministically; queries
+    never dropped. Ranking ties break by ascending neighbor id
+    (candidates pre-sorted by id + stable argsort). ``query_bkt``
+    overrides the query-side bucket assignment (multi-probe: several rows
+    per query id); pairs are deduped before the final rank so a candidate
+    reachable via two probes scores once.
 
     Degenerate-bucket skew: applyInPandas groups cannot be split by AQE,
     so a mega-bucket would otherwise concentrate ALL its queries in one
     task. The group key is therefore (bucket, salt): queries hash into
     ``n_salts`` salts and the CAPPED candidate set (≤ bucket_cap rows)
     is replicated to every salt — per-query results are unchanged (each
-    query still meets each candidate exactly once; pinned by the
-    fold-parity test) while the largest task shrinks ~n_salts×. The
+    query still meets each candidate exactly once; pinned by
+    tests/test_libs.py) while the largest task shrinks ~n_salts×. The
     replication cost is bounded by cap·n_salts rows per bucket."""
-    import numpy as np  # noqa: F401 — verified importable before shipping closure
-    import pandas as pd  # noqa: F401
-
     vecs = _valid(emb, vec_col).select(F.col(id_col).alias("_vid"),
                                        F.col(vec_col).alias("_vec"))
     cand = _cap(bkt, id_col, bucket_cap)
@@ -516,7 +385,7 @@ def _topk_within_blas(emb: DataFrame, bkt: DataFrame, id_col: str,
     rows = qq.unionByName(cc).join(vecs, "_vid")
     id_dt = emb.schema[id_col].dataType.simpleString()
     out_schema = f"q_id {id_dt}, neighbor_id {id_dt}, cosine double"
-    kk, f = k, 10.0 ** nd
+    f = 10.0 ** nd
 
     def body(pdf):
         import numpy as np
@@ -535,25 +404,19 @@ def _topk_within_blas(emb: DataFrame, bkt: DataFrame, id_col: str,
             if Q.shape[1] not in cgroups:
                 continue
             cpos, C = cgroups[Q.shape[1]]
-            # norms in-body (float64) — the fold path's _vecs norm is an
-            # N×D interpreted fold; ulp-level summation-order
-            # differences vanish under the HALF_UP rounding below
-            # (pinned by tests). _valid excludes zero-norm vectors, so
-            # the division is total; errstate is belt-and-braces
+            # _valid excludes zero-norm vectors, so the division is
+            # total; errstate is belt-and-braces
             with np.errstate(invalid="ignore", divide="ignore"):
                 sims = (Q @ C.T) / np.outer(
                     np.sqrt((Q * Q).sum(axis=1)),
                     np.sqrt((C * C).sum(axis=1)))
-            sims = np.where(np.isnan(sims), -np.inf, sims)
-            # Spark F.round is HALF_UP (away from zero); np.round is
-            # half-even
-            sims = np.sign(sims) * np.floor(np.abs(sims) * f + 0.5) / f
+            sims = _half_up(np.where(np.isnan(sims), -np.inf, sims), f)
             qid = qs["_vid"].to_numpy()[qpos]
             cid = cs["_vid"].to_numpy()[cpos]
             sims[qid[:, None] == cid[None, :]] = -np.inf
-            kq = min(kk, sims.shape[1])
+            kq = min(k, sims.shape[1])
             # stable argsort on -cos: equal cosines keep candidate-id
-            # order (cs sorted ascending) — the fold path's tiebreak
+            # order (cs sorted ascending)
             order = np.argsort(-sims, axis=1, kind="stable")[:, :kq]
             take_s = np.take_along_axis(sims, order, axis=1).ravel()
             keep = np.isfinite(take_s)
@@ -572,74 +435,10 @@ def _topk_within_blas(emb: DataFrame, bkt: DataFrame, id_col: str,
         out = (out.dropDuplicates(["q_id", "neighbor_id"])
                .withColumn("_rk", F.row_number().over(w))
                .filter(F.col("_rk") <= k).drop("_rk"))
-    return _track(out, vecs, bkt, query_bkt)
-
-
-def _assign_ranked_blas(emb: DataFrame, centroids: DataFrame, id_col: str,
-                        vec_col: str, probes: int) -> DataFrame:
-    """BLAS centroid assignment: the C×D centroid matrix is tiny by
-    contract, so it is collected once and closed over a ``mapInPandas``
-    body — squared distances per Arrow batch via one matmul. No N×C pair
-    rows exist anywhere (the fold path materializes them as a broadcast
-    crossJoin). Ties break to the smaller cell_id (columns pre-sorted +
-    stable argsort), mirroring ``_assign_ranked``'s (dist, cell_id)
-    ordering. Distances use the expanded ||v||²-2v·c+||c||² form — not
-    bit-identical to the fold's sequential sum, hence blas-kernel-only."""
-    import numpy as np
-
-    rows = centroids.collect()
-    id_dt0 = emb.schema[id_col].dataType.simpleString()
-    cell_dt0 = centroids.schema["cell_id"].dataType.simpleString()
-    if not rows:
-        # zero valid vectors → zero centroids; the fold path returns an
-        # empty frame here, so the blas path must too (np.stack would
-        # otherwise crash on the empty list — r4 review)
-        return emb.sparkSession.createDataFrame(
-            [], f"{id_col} {id_dt0}, bucket {cell_dt0}, _pr int")
-    order = sorted(range(len(rows)), key=lambda i: rows[i]["cell_id"])
-    # a mixed-width corpus can sample deviant-width centroids; keep only
-    # those matching the first (smallest cell_id) centroid's width —
-    # np.stack is undefined over ragged rows, and a deviant centroid
-    # could never win an assignment for the dominant width anyway
-    width = len(rows[order[0]]["cvec"])
-    order = [i for i in order if len(rows[i]["cvec"]) == width]
-    Cm = np.stack([np.asarray(rows[i]["cvec"], dtype=np.float64)
-                   for i in order])
-    cids = np.asarray([rows[i]["cell_id"] for i in order])
-    cn2 = (Cm * Cm).sum(axis=1)
-    id_dt = emb.schema[id_col].dataType.simpleString()
-    cell_dt = centroids.schema["cell_id"].dataType.simpleString()
-    schema = f"{id_col} {id_dt}, bucket {cell_dt}, _pr int"
-    src = _valid(emb, vec_col).select(id_col, vec_col)
-    # clamp AFTER the width filter: a mixed-width corpus can drop deviant
-    # centroids above, and probes > len(cids) would make np.repeat (n*p)
-    # mismatch cids[pr].ravel() (n*len(cids)) in the executor
-    p = max(1, min(probes, len(cids)))
-
-    def body(it):
-        import numpy as np
-        import pandas as pd
-        for pdf in it:
-            if pdf.empty:
-                continue
-            ids = pdf[id_col].to_numpy()
-            for pos, V in _stack_groups(pdf[vec_col]):
-                if V.shape[1] != Cm.shape[1]:
-                    # a deviant-width row cannot be scored against the
-                    # centroids — dropped (the fold path's NULL-distance
-                    # rows likewise never produce a usable cell)
-                    continue
-                d2 = ((V * V).sum(axis=1)[:, None] - 2.0 * (V @ Cm.T)
-                      + cn2[None, :])
-                pr = np.argsort(d2, axis=1, kind="stable")[:, :p]
-                n = len(pos)
-                yield pd.DataFrame({
-                    id_col: np.repeat(ids[pos], p),
-                    "bucket": cids[pr].ravel(),
-                    "_pr": np.tile(np.arange(1, p + 1, dtype=np.int32), n),
-                })
-
-    return src.mapInPandas(body, schema)
+    # query_bkt must ride along too: multi-probe callers pass DERIVED
+    # frames (attribute tracking doesn't survive .filter/.select), so the
+    # persisted chain may arrive only via query_bkt
+    return _track(out, bkt, query_bkt)
 
 
 def cosine_topk(emb: DataFrame, query_ids: list | None, k: int = 5,
@@ -676,58 +475,19 @@ def bucketed_near_dups(emb: DataFrame, threshold: float,
                        id_col: str = "vec_id", vec_col: str = "embedding",
                        n_planes: int = DEFAULT_PLANES,
                        bucket_cap: int | None = DEFAULT_BUCKET_CAP,
-                       nd: int = 4, kernel: str = "fold") -> DataFrame:
+                       nd: int = 4) -> DataFrame:
     """Near-duplicate pairs ABOVE a cosine threshold, searched only
     within LSH buckets — the scale path near_dup_pairs approximates
     exactly at O(N²): here candidates are bucket-local (high-cosine
     pairs land in the same sign-bucket with high probability; more
     planes / multi-probe trade recall for cost).
 
-    ``kernel='blas'`` scores each bucket's upper-triangle cosine block
-    as one Arrow-batched matmul (_near_dups_blas) — same pairs as the
-    fold after shared rounding (thresholding happens on the unrounded
-    float64 value in both kernels), the production choice at real
-    embedding widths."""
-    if kernel == "blas":
-        return _near_dups_blas(emb, threshold, id_col, vec_col,
-                               n_planes, bucket_cap, nd)
-    bkt = lsh_buckets(emb, id_col, vec_col, n_planes)
-    cand = _cap(bkt, id_col, bucket_cap)
-    a, b = cand.alias("a"), cand.alias("b")
-    pairs = a.join(
-        b, (F.col("a.bucket") == F.col("b.bucket"))
-        & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-    ).select(F.col(f"a.{id_col}").alias("vec_a"),
-             F.col(f"b.{id_col}").alias("vec_b"))
-    vecs = _vecs(emb, id_col, vec_col)
-    sims = _score_pairs(pairs, vecs, "vec_a", "vec_b", nd)
-    out = (
-        sims.filter(F.col("_ratio") >= threshold)
-        .select("vec_a", "vec_b", F.col("_cos").alias("cosine"))
-    )
-    return _track(out, vecs, bkt)
-
-
-def _near_dups_blas(emb: DataFrame, threshold: float, id_col: str,
-                    vec_col: str, n_planes: int,
-                    bucket_cap: int | None, nd: int) -> DataFrame:
-    """BLAS twin of the fold ``bucketed_near_dups`` body: capped bucket
-    members shuffle once (one row per VECTOR, not per pair), each
-    bucket's id-sorted upper-triangle cosine block is a single float64
-    matmul, thresholded on the unrounded value like the fold's
-    ``_ratio`` filter, emitted with the shared sign-aware HALF_UP
-    rounding. A vector lives in exactly one bucket (single-probe LSH)
-    so no cross-bucket pair dedupe is needed. Parity caveat (unlike the
-    rank kernels, where rounding sits between the float and the emitted
-    rows): the threshold compares the UNROUNDED blas sum, so a pair
-    whose true cosine lies within ~1 ulp of ``threshold`` could be
-    included/excluded differently from the fold — measure-zero on real
-    data, absent from the pinned fixtures, and inherent to any
-    reordered summation. Parity is pinned by tests/test_libs.py; the
-    driver twin reuses the fold query's SQL."""
-    import numpy as np  # noqa: F401 — verified importable before shipping closure
-
-    bkt = lsh_buckets_blas(emb, id_col, vec_col, n_planes)
+    Capped bucket members shuffle once (one row per VECTOR, not per
+    pair); each bucket's id-sorted upper-triangle cosine block is a
+    single float64 matmul, thresholded on the UNROUNDED value and emitted
+    HALF_UP-rounded. A vector lives in exactly one bucket (single-probe
+    LSH), so no cross-bucket pair dedupe is needed."""
+    bkt = lsh_buckets(emb, id_col, vec_col, n_planes, persist=False)
     cand = _cap(bkt, id_col, bucket_cap)
     vecs = _valid(emb, vec_col).select(F.col(id_col).alias("_vid"),
                                        F.col(vec_col).alias("_vec"))
@@ -758,14 +518,12 @@ def _near_dups_blas(emb: DataFrame, threshold: float, id_col: str,
             s = sims[iu]
             keep = np.isfinite(s) & (s >= thr)
             gids = ids[pos]
-            cos = np.sign(s[keep]) * np.floor(np.abs(s[keep]) * f + 0.5) / f
             outs.append(pd.DataFrame({"vec_a": gids[iu[0][keep]],
                                       "vec_b": gids[iu[1][keep]],
-                                      "cosine": cos}))
+                                      "cosine": _half_up(s[keep], f)}))
         return pd.concat(outs, ignore_index=True) if outs else empty
 
-    out = rows.groupBy("bucket").applyInPandas(body, out_schema)
-    return _track(out, vecs, bkt)
+    return rows.groupBy("bucket").applyInPandas(body, out_schema)
 
 
 def deduplicate_embeddings(emb: DataFrame, threshold: float,
@@ -773,18 +531,17 @@ def deduplicate_embeddings(emb: DataFrame, threshold: float,
                            vec_col: str = "embedding",
                            n_planes: int = DEFAULT_PLANES,
                            bucket_cap: int | None = DEFAULT_BUCKET_CAP,
-                           nd: int = 4, kernel: str = "fold") -> DataFrame:
+                           nd: int = 4) -> DataFrame:
     """End-to-end embedding-cosine near-duplicate REMOVAL — the vector
     twin of dedup.deduplicate_fuzzy: LSH-bucketed candidate pairs above
     ``threshold`` (bucketed_near_dups, never all-pairs) → connected
     components (dedup.cluster_pairs fixpoint) → keep each component's
     minimum id. Rows with invalid embeddings are KEPT (they can't be
-    near-duplicates of anything). ``kernel='blas'`` uses the matmul
-    pair scorer for the candidate stage."""
+    near-duplicates of anything)."""
     from .dedup import cluster_pairs
 
     pairs = bucketed_near_dups(emb, threshold, id_col, vec_col,
-                               n_planes, bucket_cap, nd, kernel=kernel)
+                               n_planes, bucket_cap, nd)
     labels = cluster_pairs(pairs.select("vec_a", "vec_b"),
                            "vec_a", "vec_b")
     drop = labels.filter(F.col("node") != F.col("cluster_id")) \
@@ -798,7 +555,7 @@ def near_dup_pairs(emb: DataFrame, threshold: float,
     """All pairs above a cosine threshold — EXACT baseline (O(N²) by
     construction, honestly a cartesian product; the scale path is
     bucketed_near_dups). One row per pair: N²/2 rows each carrying two
-    arrays, vs N²·D/2 exploded component rows in the round-2 kernel."""
+    arrays."""
     vecs = _vecs(emb, id_col, vec_col)
     a = vecs.select(F.col("_vid").alias("vec_a"),
                     F.col("_vec").alias("_va"), F.col("_n").alias("_na"))

@@ -59,16 +59,16 @@ def lang_id_stopwords(df: DataFrame, text_col: str = "text",
                       langs: dict[str, list[str]] | None = None) -> DataFrame:
     """Word-level language ID: count stopword hits per language over
     whitespace tokens; argmax with 'und' ties. Adds {lang}_hits columns +
-    pred_lang."""
+    pred_lang. Each row is split once, into a helper column that every
+    language's ``IN``-list filter reads (Catalyst does not inline a
+    ``split`` that several expressions reference); the helper is dropped
+    at the end."""
     langs = langs or {"en": EN_STOPWORDS, "vi": VI_STOPWORDS}
-    out = df
-    for lang, words in langs.items():
-        wset = F.array(*[F.lit(w) for w in words])
-        out = out.withColumn(
-            f"{lang}_hits",
-            F.size(F.filter(_tokens(text_col),
-                            lambda x: F.array_contains(wset, x))).cast("bigint"),
-        )
+    toks = F.col("_li_toks")
+    out = df.withColumn("_li_toks", _tokens(text_col)).withColumns({
+        f"{lang}_hits": F.size(F.filter(
+            toks, lambda x: x.isin(*words))).cast("bigint")
+        for lang, words in langs.items()})
     names = list(langs)
     pred = F.lit("und")
     for lang in names:
@@ -76,7 +76,7 @@ def lang_id_stopwords(df: DataFrame, text_col: str = "text",
         cond = F.col(f"{lang}_hits") > F.greatest(*others) if len(others) > 1 \
             else F.col(f"{lang}_hits") > others[0]
         pred = F.when(cond, F.lit(lang)).otherwise(pred)
-    return out.withColumn("pred_lang", pred)
+    return out.withColumn("pred_lang", pred).drop("_li_toks")
 
 
 def lang_id_char_ngrams(df: DataFrame, text_col: str = "text",
@@ -189,8 +189,10 @@ def quality_scores(df: DataFrame, text_col: str = "text",
                    len_target: int = 500, nd: int = 4) -> DataFrame:
     """Length / repetition / punctuation heuristics → quality_score in
     [0, 1]: 0.4·length-saturation + 0.3·type-token ratio + 0.3·(1 −
-    punctuation-density). Deterministic, no model."""
-    toks = _tokens(text_col)
+    punctuation-density). Deterministic, no model. Each row is split
+    into tokens once, into a helper column that every statistic reads;
+    the helper is dropped at the end."""
+    toks = F.col("_qs_toks")
     n_chars = F.length(text_col).cast("double")
     punct = None
     for ch in ".,!?":
@@ -205,15 +207,14 @@ def quality_scores(df: DataFrame, text_col: str = "text",
         + 0.3 * (1.0 - rep)
         + 0.3 * (1.0 - F.least(F.lit(1.0), 10.0 * punct.cast("double") / n_chars))
     )
-    return (
-        df.withColumn("n_tokens", F.size(toks).cast("bigint"))
-        .withColumn("n_distinct_tokens",
-                    F.size(F.array_distinct(toks)).cast("bigint"))
-        .withColumn("chars_per_token", F.round(n_chars / F.size(toks), nd))
-        .withColumn("repetition_ratio", F.round(rep, nd))
-        .withColumn("punct_ratio", F.round(punct.cast("double") / n_chars, nd))
-        .withColumn("quality_score", F.round(score, 6))
-    )
+    return df.withColumn("_qs_toks", _tokens(text_col)).withColumns({
+        "n_tokens": F.size(toks).cast("bigint"),
+        "n_distinct_tokens": F.size(F.array_distinct(toks)).cast("bigint"),
+        "chars_per_token": F.round(n_chars / F.size(toks), nd),
+        "repetition_ratio": F.round(rep, nd),
+        "punct_ratio": F.round(punct.cast("double") / n_chars, nd),
+        "quality_score": F.round(score, 6),
+    }).drop("_qs_toks")
 
 
 def repetition_signals(df: DataFrame, id_col: str = "doc_id",
