@@ -517,15 +517,20 @@ def _field_arm_sql(doc_type: str, name: str, ftype: str, required: bool,
   FROM {src} WHERE doc_type = '{doc_type}' AND NOT broken"""
 
 
-_F_ROWS_CTE = "f_rows AS (" + "\n  UNION ALL".join(
-    _field_arm_sql(dt, name, ftype, req)
-    for dt, flds in _wf.DOC_FIELDS.items()
-    for name, ftype, req in flds
-) + ")"
-
-# per-url overall confidence: decimal-summed (order-independent) mean of
-# nonzero field confidences (A3, ai_service.py:200-201)
-_CONF_CTE = """
+def _extract_prelude(src_cte: str, src: str) -> str:
+    """``WITH`` the page CTEs ``src_cte`` (ending in ``src``: any CTE
+    exposing url/doc_type/broken/etext + _ENRICH_COLS), then ``f_rows``
+    — every field arm of every doc type over ``src`` — and ``conf_agg``,
+    the per-url overall confidence: decimal-summed (order-independent)
+    mean of nonzero field confidences (A3, ai_service.py:200-201).
+    ``f_rows`` is MATERIALIZED because oracles read it up to four times
+    and DuckDB would otherwise re-evaluate the whole ensemble per read."""
+    arms = "\n  UNION ALL".join(
+        _field_arm_sql(dt_, name, ftype, req, src)
+        for dt_, flds in _wf.DOC_FIELDS.items()
+        for name, ftype, req in flds)
+    return f"""WITH {src_cte.strip()},
+f_rows AS MATERIALIZED ({arms}),
 conf_agg AS (
   SELECT url,
          CASE WHEN count(*) FILTER (WHERE conf > 0) = 0 THEN 0.0
@@ -533,10 +538,10 @@ conf_agg AS (
                         FILTER (WHERE conf > 0) as double)
                    / count(*) FILTER (WHERE conf > 0) END AS conf_url,
          count(*) AS n_fields
-  FROM f_rows GROUP BY url)
-"""
+  FROM f_rows GROUP BY url)"""
 
-_EXTRACT_PRELUDE = f"WITH {_PAGES_CTE.strip()},\n{_F_ROWS_CTE},\n{_CONF_CTE.strip()}"
+
+_EXTRACT_PRELUDE = _extract_prelude(_PAGES_CTE, "pages")
 
 # Golden-parquet oracles (VERDICT r3 #2): the two extraction arms SQL
 # cannot reconstruct (fixture tag soup, FlateDecode PDF streams) are
@@ -576,9 +581,7 @@ def _extract_cascade_in_batch_oracled(spark: SparkSession,
     corpus, against the SAME DuckDB oracle as the flagship: on this
     corpus the strict profile ties the full ensemble per url
     (main-content blocks are long), so gate-accepted and escalated
-    documents alike must reproduce the oracle's rows exactly.
-    Registered twice: ``extract_cascade_oracled`` is the older name of
-    the same check."""
+    documents alike must reproduce the oracle's rows exactly."""
     _prep(spark)
     from webextract import pipeline
     pipeline.ship_package(spark)
@@ -592,8 +595,6 @@ def _extract_cascade_in_batch_oracled(spark: SparkSession,
     )
 
 
-_register("extract_cascade_oracled", _extract_cascade_in_batch_oracled,
-          _FLAGSHIP_ORACLE_SQL)
 _register("extract_cascade_in_batch_oracled",
           _extract_cascade_in_batch_oracled, _FLAGSHIP_ORACLE_SQL)
 
@@ -753,25 +754,7 @@ pdfpages AS (
   FROM pdf0)
 """
 
-_F_ROWS_PDF_CTE = "f_rows_pdf AS (" + "\n  UNION ALL".join(
-    _field_arm_sql(dt_, name, ftype, req, src="pdfpages")
-    for dt_, flds in _wf.DOC_FIELDS.items()
-    for name, ftype, req in flds
-) + ")"
-
-_CONF_PDF_CTE = """
-conf_pdf AS (
-  SELECT url,
-         CASE WHEN count(*) FILTER (WHERE conf > 0) = 0 THEN 0.0
-              ELSE cast(sum(cast(round(conf, 6) as decimal(18,12)))
-                        FILTER (WHERE conf > 0) as double)
-                   / count(*) FILTER (WHERE conf > 0) END AS conf_url,
-         count(*) AS n_fields
-  FROM f_rows_pdf GROUP BY url)
-"""
-
-_PDF_PRELUDE = (f"WITH {_PDF_CTE.strip()},\n{_F_ROWS_PDF_CTE},"
-                f"\n{_CONF_PDF_CTE.strip()}")
+_PDF_PRELUDE = _extract_prelude(_PDF_CTE, "pdfpages")
 
 _register("extract_pdf_oracled", _extract_pdf_oracled, f"""
 {_PDF_PRELUDE}
@@ -782,7 +765,7 @@ SELECT p.url, p.doc_type,
        CASE WHEN p.broken THEN 'ValueError: pdf: no objects found' END AS error,
        CASE WHEN p.broken THEN 0.0 ELSE round(c.conf_url, 4) END AS confidence,
        cast(coalesce(c.n_fields, 0) as int) AS n_spans
-FROM pdfpages p LEFT JOIN conf_pdf c ON c.url = p.url
+FROM pdfpages p LEFT JOIN conf_agg c ON c.url = p.url
 """)
 
 _register("extract_pdf_pages_oracled", _extract_pdf_pages_oracled, f"""
@@ -2578,13 +2561,13 @@ _sqlq("jaccard_similar_pairs", ["documents"],
       _JACCARD_CORE.format(tok=_DUCK_TOK_NE))
 
 
-# Duplicate-cluster labeling: k-bounded min-label propagation over the
+# Duplicate-cluster labeling, replayed independently of the library's
+# one-aggregate shape: k-bounded min-label propagation over the
 # full-signature collision graph (connected components unrolled to 3
-# rounds — iterative algorithms land in Spark as bounded join chains;
-# both engines compute the identical k-bounded fixpoint). Bucket members
-# are wired in a STAR to the bucket's min id: identical components to
-# all-pairs wiring at O(members) instead of O(members²) edges (sf0.01
-# already holds a 221-member signature bucket).
+# rounds), bucket members wired in a STAR to the bucket's min id. Each
+# leader is its bucket's minimum, so one round already labels every
+# member with it: the replay must equal the per-bucket aggregate
+# (sf0.01 holds a 221-member signature bucket).
 _CLUSTER_CORE = """
 WITH sig AS ({core}),
 keys AS (SELECT doc_id, h0 || h1 || h2 || h3 AS bkey FROM sig),
@@ -2610,14 +2593,14 @@ FROM l3 GROUP BY lbl
 
 
 def _dedup_clusters_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """[dedup: clustering] webextract.dedup.duplicate_clusters — edges
-    built once + persisted (round-1's SQL re-derived sig per propagation
-    round: 10 s → this), star wiring."""
+    """[dedup: clustering] webextract.dedup.duplicate_clusters — one
+    hash aggregate over the full-signature key, replayed against the
+    oracle's independent 3-round star propagation."""
     _prep(spark)
     from webextract import dedup
     docs = _t(spark, sf_dir, "documents")
     sig = dedup.minhash_signatures(docs, "doc_id", "text", n_hashes=4)
-    return dedup.duplicate_clusters(sig, "doc_id", n_hashes=4, rounds=3).select(
+    return dedup.duplicate_clusters(sig, "doc_id", n_hashes=4).select(
         "cluster_id", "n_members", F.col("keep_id").alias("keep_doc_id"))
 
 

@@ -14,8 +14,13 @@ with the implementation it replaced, kept here as the reference:
   match per token) — the whole token stream against the per-byte loop;
 - the Gopher quality flags (textstats.gopher_quality_flags: each row
   split once, word lengths and stop words without per-token lambdas) —
-  every output row against the per-token lambda formulation."""
+  every output row against the per-token lambda formulation;
+- the MinHash duplicate clusters (dedup.duplicate_clusters and
+  dedup.deduplicate: one aggregate over the full-signature key) —
+  every cluster and every kept document against union-find over
+  signatures computed in plain Python."""
 
+import hashlib
 import re
 import sys
 
@@ -27,8 +32,8 @@ from hypothesis import strategies as st
 
 from test_fuzz import _mutants
 from test_property import _KW_WORDS
-from webextract import (boiler, dom, fields, fixtures, oracle, pdfrun,
-                        textstats)
+from webextract import (boiler, cache, dedup, dom, fields, fixtures, oracle,
+                        pdfrun, textstats)
 from webextract.dom import BLOCK_TAGS, VOID_ELEMENTS
 
 COMMON = dict(max_examples=300, deadline=None, derandomize=True)
@@ -852,3 +857,98 @@ def test_gopher_flags_match_reference_on_fixture_texts(spark):
     rows = _same_gopher_rows(spark, texts, "\n", min_words=5,
                              min_mean_word_len=4.0, min_stop_hits=0)
     assert {r[-1] for r in rows} == {0, 1}
+
+
+def reference_signature(text, n_hashes=4, prefix_len=12):
+    """dedup.minhash_signatures for one document: per hash seed, the
+    least md5 hex of '<seed>:<token>' over its distinct non-empty
+    whitespace tokens, cut to ``prefix_len``; None without tokens."""
+    toks = {t for t in (text or "").split(" ") if t}
+    if not toks:
+        return None
+    return "".join(
+        min(hashlib.md5(f"{s}:{t}".encode()).hexdigest() for t in toks)
+        [:prefix_len] for s in range(n_hashes))
+
+
+def reference_components(docs):
+    """Union-find over the full-signature collision graph of the
+    non-NULL ids (minhash_signatures folds the NULL-id rows into one
+    NULL-id signature, which names no cluster member) → {id: root}."""
+    parent = {}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    first_of_key = {}
+    for doc_id, text in docs:
+        key = reference_signature(text)
+        if doc_id is None or key is None:
+            continue
+        parent.setdefault(doc_id, doc_id)
+        other = first_of_key.setdefault(key, doc_id)
+        a, b = find(doc_id), find(other)
+        parent[max(a, b)] = min(a, b)
+    return {x: find(x) for x in parent}
+
+
+# a small vocabulary, so token sets — and with them signatures — collide
+_DUP_TEXTS = st.one_of(
+    st.none(),
+    st.lists(st.sampled_from(["", "a", "b", "c", "dd", "a b"]),
+             max_size=4).map(" ".join))
+
+
+@st.composite
+def _dup_docs(draw):
+    """(doc_id, text) rows: unique ids with some NULLs, singleton and
+    small buckets from the vocabulary, and one large identical bucket."""
+    texts = draw(st.lists(_DUP_TEXTS, max_size=30))
+    big = draw(st.integers(min_value=0, max_value=40))
+    texts += ["x y z"] * big
+    ids = draw(st.permutations(range(len(texts))))
+    nulls = draw(st.sets(st.sampled_from(range(len(texts))), max_size=4)
+                 if texts else st.just(set()))
+    return [(None if i in nulls else i, t) for i, t in zip(ids, texts)]
+
+
+def _row_key(row):
+    """Total order over (id, text) rows holding NULLs."""
+    doc_id, text = row
+    return (doc_id is None, doc_id or 0, text is None, text or "")
+
+
+@settings(max_examples=12, deadline=None, derandomize=True)
+@given(_dup_docs())
+@example([(None, "a"), (None, "b"), (0, "a b"), (1, "c"), (2, "c"),
+          (3, None), (4, ""), (5, "c c")])
+@example([(None, "q"), (0, "c"), (1, "c"), (2, "dd")])
+def test_duplicate_clusters_match_propagation_reference(spark, docs):
+    comps = reference_components(docs)
+    members = {}
+    for x, root in comps.items():
+        members.setdefault(root, []).append(x)
+    want_clusters = sorted((root, len(m), min(m))
+                           for root, m in members.items() if len(m) > 1)
+    want_kept = sorted(((i, t) for i, t in docs
+                        if i is None or comps.get(i, i) == i), key=_row_key)
+
+    df = spark.createDataFrame(
+        pd.DataFrame({"doc_id": pd.array([i for i, _ in docs],
+                                         dtype="Int64"),
+                      "text": [t for _, t in docs]}),
+        "doc_id bigint, text string")
+    sig = dedup.minhash_signatures(df)
+    kept = dedup.deduplicate(df)
+    try:
+        got_clusters = sorted(tuple(r) for r in
+                              dedup.duplicate_clusters(sig).collect())
+        got_kept = sorted((tuple(r) for r in kept.collect()), key=_row_key)
+    finally:
+        cache.release(sig)
+        cache.release(kept)
+    assert got_clusters == want_clusters
+    assert got_kept == want_kept

@@ -91,12 +91,12 @@ def test_salt_never_hashes_payload_columns(spark, pages_parquet):
     """skew.with_salt(id_cols=...) must hash ONLY the named id columns —
     round 1 hashed every column, funneling multi-100KB html blobs through
     xxhash64 just to pick a 4-bit salt (VERDICT r1 #8)."""
-    from webextract import skew
+    from webextract import skew, urls
 
     pages = spark.read.parquet(pages_parquet)
     import re
 
-    salted = skew.with_salt(pages, skew.host_of("url"), id_cols=["url"])
+    salted = skew.with_salt(pages, urls.host_of("url"), id_cols=["url"])
     plan = _explain(salted)
     calls = re.findall(r"xxhash64\(([^)]*)\)", plan)
     assert calls, plan
@@ -155,9 +155,11 @@ def test_ann_topk_kernel_never_explodes_vectors(spark):
 
 
 def test_dedup_clusters_plan_window_free(spark):
-    """Star wiring + bucket caps are aggregation/join-shaped: no Window
-    exec anywhere (a window's per-bucket sort serializes a degenerate
-    duplicate cluster into one task)."""
+    """Duplicate clusters are one hash aggregate over the signature key
+    (each document has one key, so the clusters are its buckets): no
+    Window exec (a window's per-bucket sort serializes a degenerate
+    duplicate cluster into one task) and no edge-list or propagation
+    Join."""
     from webextract import cache, dedup
 
     df = spark.createDataFrame(
@@ -167,7 +169,7 @@ def test_dedup_clusters_plan_window_free(spark):
     out = dedup.duplicate_clusters(sig, n_hashes=4)
     plan = _explain(out)
     assert "Window" not in plan, plan
-    cache.release(out)
+    assert "Join" not in plan, plan
     cache.release(sig)
 
 

@@ -3,13 +3,13 @@ fixture Zipf head must be detected (SURVEY.md §5.2 #4)."""
 
 import pyspark.sql.functions as F
 
-from webextract import skew
+from webextract import skew, urls
 
 
 def test_salted_agg_equals_direct(spark, pages_parquet):
     pages = spark.read.parquet(pages_parquet)
     df = pages.select("url", F.length("html").alias("nbytes"))
-    key = skew.host_of("url")
+    key = urls.host_of("url")
 
     direct = {
         r["_k"]: (r["cnt"], r["total"], r["avg_b"])
@@ -35,15 +35,15 @@ def test_salted_agg_equals_direct(spark, pages_parquet):
 
 def test_hot_host_detected(spark, pages_parquet):
     pages = spark.read.parquet(pages_parquet)
-    hosts = skew.hot_keys(pages, skew.host_of("url"), threshold_frac=0.15)
+    hosts = skew.hot_keys(pages, urls.host_of("url"), threshold_frac=0.15)
     assert hosts == ["archive00.example.org"]  # the fixture Zipf head (~30%)
 
 
 def test_selective_salting_leaves_cold_keys_single(spark, pages_parquet):
     pages = spark.read.parquet(pages_parquet)
-    df = skew.with_salt(pages, skew.host_of("url"), only_keys=["archive00.example.org"])
+    df = skew.with_salt(pages, urls.host_of("url"), only_keys=["archive00.example.org"])
     per_host = (
-        df.groupBy(skew.host_of("url").alias("h"))
+        df.groupBy(urls.host_of("url").alias("h"))
         .agg(F.countDistinct("_salt").alias("salts"))
         .collect()
     )

@@ -108,19 +108,6 @@ def ship_package(spark: SparkSession) -> None:
     spark.sparkContext.addPyFile(package_zip())
 
 
-def with_doc_type(df: DataFrame) -> DataFrame:
-    """F1 natively in Catalyst (ocr_service.py:170-179): basename-prefix
-    classify. Pure expressions — mirrors fields.detect_doc_type exactly
-    (upper(basename) startswith BIA / MUCLUC)."""
-    base = F.upper(F.element_at(F.split(F.col("url"), "/"), -1))
-    return df.withColumn(
-        "doc_type",
-        F.when(base.startswith("BIA"), F.lit("THONG_TIN_HO_SO"))
-        .when(base.startswith("MUCLUC"), F.lit("MUC_LUC_TAI_LIEU"))
-        .otherwise(F.lit("THONG_TIN_VAN_BAN")),
-    )
-
-
 def with_bucket(df: DataFrame, n_buckets: int = DEFAULT_BUCKETS,
                 key: Column | None = None) -> DataFrame:
     """Stable logical bucket id. ``key`` overrides the hashed key

@@ -21,7 +21,7 @@ with G commit groups the naive loop reads the full payload bytes G times
    prunes at the scan and amplification is zero. Preferred; nothing to do
    in the runner.
 2. **stage_input=True (raw input).** One full pass writes the pruned
-   (url, warc_ts, html, doc_type, bucket) columns partitioned by commit
+   (url, warc_ts, html, bucket) columns partitioned by commit
    group into the checkpoint dir; each group job then reads ONLY its
    partition directory. Total payload I/O = 1 read + 1 write + 1 read
    (~3×) instead of G reads, independent of G — and the staged copy is
@@ -151,8 +151,7 @@ def run_job(
             pending_groups[group_of(b)].append(b)
 
     key = _bucket_key(canonical_keys)
-    prepped = pipeline.with_bucket(pipeline.with_doc_type(pages), n_buckets,
-                                   key=key)
+    prepped = pipeline.with_bucket(pages, n_buckets, key=key)
     if done:
         done_df = spark.createDataFrame(
             [(b,) for b in sorted(done)], "bucket int"
@@ -164,7 +163,7 @@ def run_job(
         if stage_input and any(pending_groups):
             staged_dir = os.path.join(out_root, f"_staged_input_{run_id}")
             (
-                prepped.select("url", "warc_ts", "html", "doc_type", "bucket")
+                prepped.select("url", "warc_ts", "html", "bucket")
                 .withColumn(
                     "cgroup",
                     F.expr(f"CAST(bucket * {commit_groups} DIV {n_buckets} AS INT)"))

@@ -31,13 +31,6 @@ from pyspark.sql import Column, DataFrame
 
 DEFAULT_SALTS = 16
 
-HOST_RE = r"^[a-z]+://([^/]+)"
-
-
-def host_of(url_col: str | Column = "url") -> Column:
-    col = F.col(url_col) if isinstance(url_col, str) else url_col
-    return F.regexp_extract(col, HOST_RE, 1)
-
 
 def hot_keys(
     df: DataFrame, key: Column, threshold_frac: float = 0.05,
