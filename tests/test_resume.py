@@ -54,6 +54,18 @@ def test_idempotent_rerun(spark, pages_parquet, tmp_path):
     assert again.count() == n1  # no duplicate appends
 
 
+def test_run_without_commits_returns_extracted_schema(spark, pages_parquet,
+                                                      tmp_path):
+    # max_groups=0 on a fresh root commits nothing: the empty result
+    # still has the columns and types of an extraction
+    from webextract import pipeline
+
+    pages = _pages(spark, pages_parquet)
+    out = runner.run_job(spark, pages, str(tmp_path / "none"), max_groups=0)
+    assert out.count() == 0
+    assert out.schema == pipeline.run_extract(pages).schema
+
+
 def test_reprocess_from_parse_checkpoint(spark, pages_parquet, tmp_path):
     """C4: reprocess derives a new extracted table from the saved
     ``extracted`` text WITHOUT re-reading payloads (the input pages are

@@ -3,11 +3,12 @@ fixture generator, gzip member compression, corruption totality, and
 extraction parity with the parquet path."""
 
 import gzip
+import itertools
 import os
 
-import pytest
+import pyarrow as pa
 
-from webextract import fixtures, warc
+from webextract import fixtures, pipeline, udfs, warc
 
 
 def _rows(n=30):
@@ -70,8 +71,6 @@ def test_parse_total_on_garbage():
 def test_read_warc_extraction_parity(spark, tmp_path):
     """read_warc feeds run_extract and yields the SAME extraction as
     the parquet pages path over the same fixture rows."""
-    from webextract import pipeline
-
     n = 40
     wp = str(tmp_path / "pages.warc.gz")
     warc.write_warc(wp, _rows(n), gzip_members=True)
@@ -120,13 +119,73 @@ def test_parse_warc_fuzz_total():
     run()
 
 
+def _archive_batch(paths):
+    return pa.record_batch(
+        [pa.array(paths, pa.string()),
+         pa.array([open(p, "rb").read() for p in paths], pa.binary())],
+        names=["path", "content"])
+
+
+def test_page_batches_bounded_and_complete(tmp_path):
+    """The shared archive-to-rows body never holds more than
+    ARROW_BATCH_ROWS records in a batch, and its batches concatenate to
+    parse_warc's records, archive after archive."""
+    big = str(tmp_path / "big.warc.gz")
+    warc.write_warc(big, _rows(600), gzip_members=True)
+    small = str(tmp_path / "small.warc")
+    warc.write_warc(small, _rows(5))
+    n = pipeline.ARROW_BATCH_ROWS
+    batches = list(warc._page_batches(iter([_archive_batch([big, small])]),
+                                      n))
+    assert [b.num_rows for b in batches] == [n] * (600 // n) + [600 % n, 5]
+    got = pa.Table.from_batches(batches).to_pylist()
+    want = [rec for p in (big, small)
+            for rec in warc.parse_warc(open(p, "rb").read())]
+    assert [(r["url"], r["warc_ts"], r["html"]) for r in got] == want
+    assert all(r["text"] == r["lang"] == "" and r["error"] is None
+               for r in got)
+
+
+def test_raising_archive_gives_records_then_error_row(tmp_path, monkeypatch):
+    """An archive whose parse raises after 3 records yields those 3 and
+    ONE error row (url = the path) on both paths, and read → extract and
+    the fused body end in the same FAILED row."""
+    p = str(tmp_path / "a.warc")
+    warc.write_warc(p, _rows(6))
+    parse = warc.parse_warc
+
+    def raising(buf):
+        yield from itertools.islice(parse(buf), 3)
+        raise ValueError("boom")
+
+    monkeypatch.setattr(warc, "parse_warc", raising)
+    n = pipeline.ARROW_BATCH_ROWS
+    pages = pa.Table.from_batches(
+        list(warc._page_batches(iter([_archive_batch([p])]), n))).to_pylist()
+    assert len(pages) == 4
+    assert pages[-1] == {"url": p, "warc_ts": None, "html": None, "text": "",
+                         "lang": "", "error": "warc: ValueError: boom"}
+
+    def public(batches):
+        return pa.Table.from_batches(list(batches)).select(
+            pipeline.EXTRACTED_COLUMNS).to_pylist()
+
+    composed = public(udfs.extract_batches(
+        b.append_column("bucket", pa.array([0] * b.num_rows, pa.int32()))
+        for b in warc._page_batches(iter([_archive_batch([p])]), n)))
+    fused = public(warc._extracted_batches(iter([_archive_batch([p])]), n))
+    assert fused == composed and len(fused) == 4
+    assert [r["url"] for r in fused] == [r["url"] for r in pages]
+    assert fused[-1]["status"] == "FAILED"
+
+
 def test_extract_warc_fused_equals_composed(spark, tmp_path):
     """extract_warc (fused parse+extract, zero Arrow payload hops) is
-    row-identical on the public columns to read_warc → run_extract."""
-    from webextract import pipeline
-
+    row-identical on the public columns to read_warc → run_extract,
+    across an Arrow batch boundary."""
+    n = pipeline.ARROW_BATCH_ROWS + 44
     wp = str(tmp_path / "pages.warc.gz")
-    warc.write_warc(wp, _rows(40), gzip_members=True)
+    warc.write_warc(wp, _rows(n), gzip_members=True)
 
     def final(df):
         return sorted((r["url"], r["text"], r["status"], r["confidence"],
@@ -135,4 +194,4 @@ def test_extract_warc_fused_equals_composed(spark, tmp_path):
 
     fused = final(warc.extract_warc(spark, wp))
     composed = final(pipeline.run_extract(warc.read_warc(spark, wp)))
-    assert fused == composed and len(fused) == 40
+    assert fused == composed and len(fused) == n

@@ -3,13 +3,13 @@
 A from-scratch, Spark-first re-expression of the capabilities of the
 reference repo (phamduykien/doc-ocr, a FastAPI OCR/field-extraction
 microservice): deterministic HTML boilerplate stripping + PDF layout
-parsing + regex field-span extraction, run as vectorized pandas/Arrow
-UDFs over a Common-Crawl-style ``pages`` table
+parsing + regex field-span extraction, run as one fused Arrow-batched
+``mapInArrow`` pass over a Common-Crawl-style ``pages`` table
 (url:string, warc_ts:timestamp, html:binary, text:string, lang:string).
 
 Layering (see SURVEY.md §7):
 
-- ``dom``      — from-scratch HTML tokenizer + parent-pointer-array DOM
+- ``dom``      — from-scratch one-scan HTML tokenizer → text blocks
 - ``boiler``   — text-density / link-density block scoring, best-of-profiles
 - ``pdfrun``   — from-scratch PDF subset parser (text runs, reading order)
 - ``fields``   — regex field registry + char-span extraction
@@ -28,8 +28,8 @@ Training-data-pipeline library (round 2 — DataFrame-in/DataFrame-out,
 applicable to any user corpus):
 
 - ``dedup``    — exact / shingle-MinHash-LSH / SimHash dedup, Jaccard
-  verification, hot-token dropping, bucket caps, star-wired clustering,
-  convergent cluster_pairs, end-to-end ``deduplicate``
+  verification, hot-token dropping, bucket caps, signature-bucket
+  clusters, convergent cluster_pairs, end-to-end ``deduplicate``
 - ``ann``      — hyperplane-LSH and IVF similarity search, bucketed
   near-dup pairs, exact baselines
 - ``textstats`` — token counts, language ID, quality scores, winnowing

@@ -19,10 +19,6 @@ needs, with the same call shape it would use against a real catalog:
   read-modify-write manifest that could silently drop a concurrent
   writer's snapshot; now the race is serialized by the filesystem.
 
-``latest_version`` scans the ``_manifests`` directory (the committed
-truth); the ``_LATEST`` pointer file is written as an advisory
-human-readable fast-path only and may briefly lag under concurrency.
-
 Reference analogue: the in-memory result store + reprocess-from-cache
 (ocr-ai-service/app/services/document_service.py:44,253-282, S5/C4).
 On a real deployment swap this for ``df.writeTo("cat.db.tbl").append()``
@@ -126,14 +122,9 @@ class Catalog:
     def _manifest_path(self, name: str, version: int) -> str:
         return os.path.join(self._mdir(name), f"v{version}.json")
 
-    def _latest_path(self, name: str) -> str:
-        return os.path.join(self._tdir(name), "_LATEST")
-
     # -- snapshots ----------------------------------------------------------
     def latest_version(self, name: str) -> int | None:
-        """Highest COMMITTED manifest version — from the manifest dir,
-        not the advisory _LATEST pointer (which can lag a concurrent
-        winner)."""
+        """Highest COMMITTED manifest version, from the manifest dir."""
         try:
             files = os.listdir(self._mdir(name))
         except FileNotFoundError:
@@ -216,7 +207,6 @@ class Catalog:
                 os.unlink(tmp)
                 continue  # lost the race for this version: re-read, retry
             os.unlink(tmp)
-            self._write_latest_pointer(name, version, token)
             return man
         raise CommitConflictError(
             f"{op}({name}): lost the manifest commit race {max_retries} "
@@ -407,13 +397,6 @@ class Catalog:
             removed.append(rel)
         return {"expired_versions": [v for v, _ in expired],
                 "removed_parts": removed}
-
-    def _write_latest_pointer(self, name: str, version: int,
-                              token: str) -> None:
-        ltmp = self._latest_path(name) + f".tmp-{token}"
-        with open(ltmp, "w") as f:
-            f.write(str(version))
-        os.replace(ltmp, self._latest_path(name))
 
     # -- read path -----------------------------------------------------------
     def read(

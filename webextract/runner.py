@@ -213,7 +213,8 @@ def run_job(
 
     out = catalog.read(spark, EXTRACTED_TABLE)
     if out is None:
-        return spark.createDataFrame([], pipeline_schema(spark))
+        return (spark.createDataFrame([], udfs.EXTRACTED_FIELDS_SCHEMA)
+                .select(*pipeline.EXTRACTED_COLUMNS))
     return out
 
 
@@ -255,11 +256,3 @@ def reprocess_fields(
     finally:
         redone.unpersist()
     return catalog.read(spark, out_table)
-
-
-def pipeline_schema(spark: SparkSession):
-    return (
-        "url string, warc_ts timestamp, doc_type string, status string, "
-        f"text string, spans {udfs.SPAN_T}, blocks {udfs.BLOCK_T}, "
-        "confidence double, n_pages int, error string"
-    )
