@@ -173,7 +173,7 @@ def _extract_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     from webextract import pipeline
     pipeline.ship_package(spark)
     pages = _pages_from_documents(spark, sf_dir).unionByName(_fixture_pages(spark))
-    return pipeline.run_extract(pages, n_buckets=16)
+    return pipeline.run_extract(pages)
 
 
 def _flagship_syn(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -183,7 +183,7 @@ def _flagship_syn(spark: SparkSession, sf_dir: str) -> DataFrame:
     _prep(spark)
     from webextract import pipeline
     pipeline.ship_package(spark)
-    return pipeline.run_extract(_pages_from_documents(spark, sf_dir), n_buckets=16)
+    return pipeline.run_extract(_pages_from_documents(spark, sf_dir))
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -205,7 +205,7 @@ def _extract_flagship_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     _prep(spark)
     from webextract import pipeline
     pipeline.ship_package(spark)
-    ext = pipeline.run_extract(_fixture_pages(spark), n_buckets=16)
+    ext = pipeline.run_extract(_fixture_pages(spark))
     return ext.select(
         "url", "doc_type", "status", "text",
         F.round("confidence", 4).alias("confidence"), "n_pages", "error",
@@ -341,7 +341,7 @@ def _extract_pdf_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     _prep(spark)
     from webextract import pipeline
     pipeline.ship_package(spark)
-    ext = pipeline.run_extract(_fixture_pages(spark), n_buckets=16)
+    ext = pipeline.run_extract(_fixture_pages(spark))
     pdfs = ext.filter(F.col("url").endswith(".pdf") & (F.col("status") == "COMPLETED"))
     b = pdfs.select("url", "n_pages", F.explode("blocks").alias("b"))
     return b.select(
@@ -586,8 +586,7 @@ def _extract_cascade_in_batch_oracled(spark: SparkSession,
     from webextract import pipeline
     pipeline.ship_package(spark)
     ext = pipeline.run_extract_cascade_in_batch(
-        _pages_from_documents(spark, sf_dir), accept=0.7, n_buckets=16,
-        cheap_fields=False)
+        _pages_from_documents(spark, sf_dir), accept=0.7, cheap_fields=False)
     return ext.select(
         "url", "doc_type", "status", "text", "n_pages", "error",
         F.round("confidence", 4).alias("confidence"),
@@ -704,8 +703,7 @@ def _pdf_syn(spark: SparkSession, sf_dir: str) -> DataFrame:
     _prep(spark)
     from webextract import pipeline
     pipeline.ship_package(spark)
-    return pipeline.run_extract(_pdf_pages_from_documents(spark, sf_dir),
-                                n_buckets=16)
+    return pipeline.run_extract(_pdf_pages_from_documents(spark, sf_dir))
 
 
 def _extract_pdf_oracled(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -838,7 +836,7 @@ def _payload_kind_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     from webextract import pipeline
     pipeline.ship_package(spark)
     pages = _media_pages(spark, sf_dir).drop("doc_id")
-    ext = pipeline.run_extract(pages, n_buckets=16)
+    ext = pipeline.run_extract(pages)
     kind = (
         F.when(F.col("status") == "NEEDS_OCR", F.expr("substring(error, 12)"))
         .when(F.col("status") == "FAILED", F.lit("failed"))
@@ -886,7 +884,7 @@ def _needs_ocr_route(spark: SparkSession, sf_dir: str) -> DataFrame:
     from webextract import multimodal, pipeline
     pipeline.ship_package(spark)
     pages = _media_pages(spark, sf_dir)
-    ext = pipeline.run_extract(pages.drop("doc_id"), n_buckets=16)
+    ext = pipeline.run_extract(pages.drop("doc_id"))
     need = ext.filter(F.col("status") == "NEEDS_OCR").select(
         "url", "n_pages", F.expr("substring(error, 12)").alias("source"))
     media = pages.select("doc_id", "url", F.col("html").alias("media"))

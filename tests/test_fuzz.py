@@ -96,7 +96,7 @@ def test_spark_equals_oracle_on_mutants(spark):
         [(u, ts, bytearray(p), "", "vi") for u, p in muts],
         "url string, warc_ts timestamp, html binary, text string, lang string",
     )
-    got = {r["url"]: r for r in pipeline.run_extract(df, n_buckets=8).collect()}
+    got = {r["url"]: r for r in pipeline.run_extract(df).collect()}
     assert set(got) == set(want)
     for u, w in want.items():
         g = got[u]

@@ -42,22 +42,23 @@ def test_url_filter_pushed_to_scan(spark, pages_parquet):
 
 
 def test_fused_path_zero_exchange(spark, pages_parquet):
-    """The fused extraction plan must contain NO shuffle — extraction is
-    row-local and runs directly on scan partitions; shuffling payload
-    bytes is the single worst cost at 100 TB. (repartition=True is the
-    explicit opt-in used by the checkpointed runner.)"""
+    """The fused extraction plans must contain NO shuffle and compute no
+    bucket — extraction is row-local and runs directly on scan
+    partitions; shuffling payload bytes is the single worst cost at
+    100 TB, and the bucket is only the checkpointed runner's."""
     pages = spark.read.parquet(pages_parquet)
-    plan = _explain(pipeline.run_extract(pages), "simple")
-    assert plan.count("Exchange") == 0, plan
-    plan_r = _explain(pipeline.run_extract(pages, repartition=True), "simple")
-    assert plan_r.count("Exchange") == 1, plan_r
+    for df in (pipeline.run_extract(pages),
+               pipeline.run_extract_cascade_in_batch(pages)):
+        plan = _explain(df, "simple")
+        assert plan.count("Exchange") == 0, plan
+        assert "xxhash64" not in plan, plan
 
 
 def test_layout_by_url_range_partitions(spark, pages_parquet):
     """The write layout shuffles extracted ROWS (text-sized) by url range
     — RangePartitioning in the plan — never the input payloads."""
     pages = spark.read.parquet(pages_parquet)
-    df = pipeline.layout_by_url(pipeline.run_extract(pages), n_files=4)
+    df = pipeline.layout_by_url(pipeline.run_extract(pages))
     plan = _explain(df, "simple")
     assert "rangepartitioning(url" in plan.lower(), plan
     assert "Sort [url" in plan, plan

@@ -116,6 +116,33 @@ def test_resume_skips_empty_buckets(spark, pages_parquet, tmp_path,
     assert again.count() == 20
 
 
+def test_group_frame_has_one_bucket_shuffle(spark, pages_parquet, tmp_path,
+                                            monkeypatch):
+    """The runner hands each commit group to the extraction map
+    repartitioned by bucket, once: bucket-aligned output files."""
+    import io
+    from contextlib import redirect_stdout
+
+    from webextract import pipeline
+
+    plans = []
+    real = pipeline.run_extract_full
+
+    def spy(pages, body):
+        buf = io.StringIO()
+        with redirect_stdout(buf):
+            pages.explain("simple")
+        plans.append(buf.getvalue())
+        return real(pages, body)
+
+    monkeypatch.setattr(pipeline, "run_extract_full", spy)
+    runner.run_job(spark, spark.read.parquet(pages_parquet),
+                   str(tmp_path / "plan"), max_groups=1)
+    [plan] = plans
+    assert plan.count("Exchange") == 1, plan
+    assert plan.count("hashpartitioning(bucket") == 1, plan
+
+
 def test_lineage_counters(spark, pages_parquet, tmp_path):
     pages = _pages(spark, pages_parquet)
     out = str(tmp_path / "lin")

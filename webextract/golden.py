@@ -5,34 +5,11 @@ from __future__ import annotations
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-SPAN_PA = pa.struct(
-    [
-        ("name", pa.string()),
-        ("value", pa.string()),
-        ("field_type", pa.string()),
-        ("start", pa.int64()),
-        ("end", pa.int64()),
-        ("confidence", pa.float64()),
-        ("is_required", pa.bool_()),
-        ("method", pa.string()),
-    ]
-)
-BLOCK_PA = pa.struct(
-    [("page", pa.int32()), ("score", pa.float64()), ("n_chars", pa.int32())]
-)
-EXTRACTED_PA = pa.schema(
-    [
-        ("url", pa.string()),
-        ("doc_type", pa.string()),
-        ("status", pa.string()),
-        ("text", pa.string()),
-        ("spans", pa.list_(SPAN_PA)),
-        ("blocks", pa.list_(BLOCK_PA)),
-        ("confidence", pa.float64()),
-        ("n_pages", pa.int32()),
-        ("error", pa.string()),
-    ]
-)
+from .udfs import EXTRACTED_PA as _ROW_PA
+
+# the extracted row format minus the columns that depend on the run
+EXTRACTED_PA = pa.schema([f for f in _ROW_PA if f.name not in (
+    "warc_ts", "bucket", "bytes_in", "_wall_ms")])
 
 
 def write_golden(path: str, records: list[dict]) -> None:

@@ -3,24 +3,32 @@
 Re-expresses the reference's pipeline compose
 (ocr-ai-service/app/services/document_service.py:90-182, C1) as one lazy
 DataFrame plan. Extraction is ONE fused ``mapInArrow`` pass
-(udfs.extract_batches: Arrow record batches in and out, no pandas
-conversion) that runs the whole per-document oracle — parse, best-of
-argmax (O3), fields — so Spark output is the oracle's output by
-construction. The M12 cascade runs in the same single pass
-(udfs.cascade_batches).
+(``run_extract_full`` over udfs.extract_batches: Arrow record batches in
+and out, no pandas conversion) that runs the whole per-document oracle —
+parse, best-of argmax (O3), fields — so Spark output is the oracle's
+output by construction. The M12 cascade is the same map with another
+body (udfs.cascade_batches).
 
 Scale design (the part that must survive 1000 executors / 100 TB):
 - rows are heavy (html blobs up to 50 MB) → Arrow batch size is capped
   (ARROW_BATCH_ROWS) so a batch never holds more than ~tens of MB
-- ``bucket`` = pmod(xxhash64(url), n_buckets): a STABLE logical partition
-  id, independent of physical partitioning — the unit of lineage and of
-  anti-join resume (north_rule). Physical layout = repartition by bucket,
-  which also spreads any single skewed host across buckets because the
-  hash keys on the full url, not the host (see skew.py for the groupBy
-  side of skew handling).
+- extraction is row-local, so ``run_extract`` runs the map directly on
+  the scan partitions: no shuffle, no bucket. Shuffling payload bytes
+  before it buys nothing and costs a full disk round-trip of the input
+  (at 100 TB, the single worst cost in the job; measured 1.5-2.5×
+  end-to-end slowdown even at 240k docs). Parallelism comes from input
+  splits (tune_input_splits); skew cannot concentrate, as splits are
+  uniform bytes.
+- ``bucket`` = pmod(xxhash64(url), n_buckets) (with_bucket): a STABLE
+  logical partition id, independent of physical partitioning, and the
+  unit of lineage and of anti-join resume (north_rule). Only the
+  checkpointed runner computes it, and it alone repartitions by bucket
+  before the map, for bucket-aligned output files; the hash keys on the
+  full url, not the host, so one skewed host still spreads across
+  buckets (see skew.py for the groupBy side of skew handling).
 - column pruning: extraction reads only (url, warc_ts, html) + the
-  derived bucket; the wide ``text``/``lang`` input columns never leave
-  the scan (verified by test_plans.py on PushedFilters/ReadSchema).
+  bucket; the wide ``text``/``lang`` input columns never leave the scan
+  (verified by test_plans.py on PushedFilters/ReadSchema).
 """
 
 from __future__ import annotations
@@ -110,91 +118,43 @@ def ship_package(spark: SparkSession) -> None:
 
 def with_bucket(df: DataFrame, n_buckets: int = DEFAULT_BUCKETS,
                 key: Column | None = None) -> DataFrame:
-    """Stable logical bucket id. ``key`` overrides the hashed key
-    column (e.g. urls.canonical_url('url') so spelled variants of one
-    page co-locate in a bucket — runner canonical_keys). When ``key``
-    is None and the frame ALREADY carries a bucket column, it is kept:
-    callers like the runner pre-bucket with their chosen key, and the
-    extract paths must not silently re-key it back to raw url. A kept
-    bucket outside ``[0, n_buckets)`` (or NULL) — a stale column from a
-    different bucket count — fails the job when the row is evaluated:
-    the guard is a lazy ``raise_error`` in the projection, no extra
-    Spark action."""
-    if key is None:
-        if "bucket" in df.columns:
-            b = F.col("bucket")
-            return df.withColumn("bucket", F.when(
-                (b >= 0) & (b < n_buckets), b.cast("int")).otherwise(
-                F.raise_error(F.concat(
-                    F.lit(f"bucket outside [0, {n_buckets}): "),
-                    F.coalesce(b.cast("string"), F.lit("NULL"))))))
-        key = F.col("url")
-    return df.withColumn(
-        "bucket", F.pmod(F.xxhash64(key), F.lit(n_buckets)).cast("int")
-    )
+    """Stable logical bucket id ``pmod(xxhash64(key), n_buckets)``.
+    ``key`` overrides the hashed key column, the raw url by default
+    (e.g. urls.canonical_url('url') so spelled variants of one page
+    co-locate in a bucket — runner canonical_keys)."""
+    return df.withColumn("bucket", F.pmod(
+        F.xxhash64(F.col("url") if key is None else key),
+        F.lit(n_buckets)).cast("int"))
 
 
-def _prepped(pages: DataFrame, n_buckets: int, repartition: bool) -> DataFrame:
-    """The extraction input, pruned to url/warc_ts/html plus ``bucket``:
-    a caller-computed bucket rides along (the runner's canonical-url
-    keying — with_bucket keeps it instead of re-keying). Extraction runs
-    directly on the scan partitions unless ``repartition`` asks for the
-    explicit bucket shuffle."""
-    keep = ["url", "warc_ts", "html"] + (
-        ["bucket"] if "bucket" in pages.columns else [])
-    prepped = with_bucket(pages.select(*keep), n_buckets)
-    if repartition:
-        n_parts = prepped.sparkSession.conf.get("spark.sql.shuffle.partitions")
-        prepped = prepped.repartition(int(n_parts), "bucket")
-    return prepped
+def run_extract_full(pages: DataFrame,
+                     body=udfs.extract_batches) -> DataFrame:
+    """pages (url, warc_ts, html, bucket) → extracted, keeping the
+    lineage side-band columns (bucket, bytes_in, _wall_ms): ONE
+    mapInArrow pass of ``body`` (udfs.extract_batches, or
+    udfs.cascade_batches for the M12 cascade) running the complete
+    per-document oracle — candidate texts never cross the Arrow
+    boundary, and no pandas frame is built on either side of it.
+    It runs on the partitions it is given and adds no shuffle."""
+    return pages.select("url", "warc_ts", "html", "bucket").mapInArrow(
+        body, udfs.EXTRACTED_FIELDS_SCHEMA)
 
 
-def run_extract_full(pages: DataFrame, n_buckets: int = DEFAULT_BUCKETS,
-                     repartition: bool = False) -> DataFrame:
-    """pages → extracted, keeping the lineage side-band columns
-    (bucket, bytes_in, _wall_ms): ONE mapInArrow pass running the
-    complete per-document oracle (udfs.extract_batches) — candidate
-    texts never cross the Arrow boundary, and no pandas frame is built
-    on either side of it.
-
-    repartition=False (default): extraction runs DIRECTLY on the scan
-    partitions — zero shuffle. Extraction is row-local, so shuffling
-    payload bytes before it buys nothing and costs a full disk round-trip
-    of the input (at 100 TB, the single worst cost in the job; measured
-    1.5-2.5× end-to-end slowdown even at 240k docs). Parallelism comes
-    from input splits (tune_input_splits); skew cannot concentrate —
-    splits are uniform bytes. repartition=True restores the explicit
-    bucket shuffle for callers that need bucket-aligned output partitions
-    (the checkpointed runner's commit groups).
-    """
-    return _prepped(pages, n_buckets, repartition).mapInArrow(
-        udfs.extract_batches, udfs.EXTRACTED_FIELDS_SCHEMA)
+def _extracted(pages: DataFrame, body) -> DataFrame:
+    """The public extraction projection of ``body`` run directly on the
+    scan partitions; the bucket column is NULL, as no caller reads it."""
+    return run_extract_full(
+        pages.withColumn("bucket", F.lit(None).cast("int")), body
+    ).select(*EXTRACTED_COLUMNS)
 
 
-def run_extract(pages: DataFrame, n_buckets: int = DEFAULT_BUCKETS,
-                repartition: bool = False) -> DataFrame:
+def run_extract(pages: DataFrame) -> DataFrame:
     """pages → extracted (no checkpointing; see runner.py for the
     checkpointed, resumable job)."""
-    return run_extract_full(pages, n_buckets, repartition).select(
-        *EXTRACTED_COLUMNS)
-
-
-def run_extract_cascade_in_batch_full(
-        pages: DataFrame, accept: float = 0.7,
-        n_buckets: int = DEFAULT_BUCKETS, repartition: bool = False,
-        cheap_fields: bool = False) -> DataFrame:
-    """The M12 cascade keeping the lineage side-band columns (bucket,
-    bytes_in, _wall_ms) — the checkpointed runner's variant
-    (runner.run_job(cascade=True)). _wall_ms is the cumulative batch
-    wall including in-line escalations; lineage takes the per-bucket
-    max as usual."""
-    return _prepped(pages, n_buckets, repartition).mapInArrow(
-        udfs.cascade_batches(accept, cheap_fields),
-        udfs.EXTRACTED_FIELDS_SCHEMA)
+    return _extracted(pages, udfs.extract_batches)
 
 
 def run_extract_cascade_in_batch(pages: DataFrame, accept: float = 0.7,
-                                 n_buckets: int = DEFAULT_BUCKETS,
                                  cheap_fields: bool = False) -> DataFrame:
     """M12 — the reference's confidence-gated engine cascade
     (ai_service_local.py:513-537: local result ≥ threshold → accept;
@@ -214,40 +174,36 @@ def run_extract_cascade_in_batch(pages: DataFrame, accept: float = 0.7,
     Config-off by design: ``run_extract`` stays the fixed deterministic
     default (SURVEY §7.4); the cascade is itself deterministic, just a
     different accept policy."""
-    return run_extract_cascade_in_batch_full(
-        pages, accept, n_buckets,
-        cheap_fields=cheap_fields).select(*EXTRACTED_COLUMNS)
+    return _extracted(pages, udfs.cascade_batches(accept, cheap_fields))
 
 
-def layout_by_url(extracted: DataFrame, n_files: int | None = None,
+def layout_by_url(extracted: DataFrame,
                   key: Column | None = None) -> DataFrame:
-    """Output layout for the extracted table: range-partition by url and
-    sort within partitions (north_star: "bounds shuffle via
-    repartitionByRange on url"). This is the ONE place the extracted rows
-    shuffle — after extraction, when rows are text-sized, never payloads.
+    """Output layout for the extracted table: range-partition by url into
+    ``spark.sql.shuffle.partitions`` files and sort within partitions
+    (north_star: "bounds shuffle via repartitionByRange on url"). This
+    shuffles extracted rows, which are text-sized, never payloads.
     It buys Iceberg/parquet min-max pruning for P1 point lookups and
     url-prefix scans: each output file owns a contiguous url range.
     ``key`` overrides the range/sort key (runner canonical_keys lays
     out by urls.canonical_url so spelled variants of one page land in
     the same file/range; url stays the tiebreak sort)."""
-    n = n_files or int(extracted.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    n = int(extracted.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     if key is None:
         return extracted.repartitionByRange(n, "url").sortWithinPartitions("url")
     return (extracted.repartitionByRange(n, key)
             .sortWithinPartitions(key, "url"))
 
 
-def tune_input_splits(spark: SparkSession, input_bytes: int,
-                      cpus: int | None = None, waves: int = 5,
-                      floor_bytes: int = 1 << 20,
-                      cap_bytes: int = 128 << 20) -> int:
+def tune_input_splits(spark: SparkSession, input_bytes: int) -> int:
     """Set spark.sql.files.maxPartitionBytes so the scan yields about
-    ``waves`` task waves per core — fine-grained enough that the last
-    wave can't idle most of the cluster (wave quantization: 44 tasks on
-    32 cores = 1.4 waves = ~30% idle time), coarse enough that per-task
-    overhead stays negligible. Call BEFORE spark.read of the input."""
-    n_cpus = cpus or int(spark.sparkContext.defaultParallelism)
-    target = max(floor_bytes, min(cap_bytes, input_bytes // max(1, n_cpus * waves)))
+    five task waves per core — fine-grained enough that the last wave
+    can't idle most of the cluster (wave quantization: 44 tasks on 32
+    cores = 1.4 waves = ~30% idle time), coarse enough that per-task
+    overhead stays negligible; a split stays within [1 MiB, 128 MiB].
+    Call BEFORE spark.read of the input."""
+    n_cpus = int(spark.sparkContext.defaultParallelism)
+    target = max(1 << 20, min(128 << 20, input_bytes // (n_cpus * 5)))
     spark.conf.set("spark.sql.files.maxPartitionBytes", str(target))
     return target
 

@@ -107,8 +107,10 @@ def run_job(
     ``stage_input`` materializes the pending input once, partitioned by
     commit group, so per-group jobs read 1/G of the payload bytes
     instead of re-scanning everything (see module docstring).
-    ``cascade=True`` extracts each commit group with the M12
-    confidence-gated cascade (pipeline.run_extract_cascade_in_batch_full:
+    Each commit group is repartitioned by bucket (one shuffle per
+    group, for bucket-aligned output files) and extracted by ONE
+    pipeline.run_extract_full map. ``cascade=True`` runs that map with
+    the M12 confidence-gated cascade body (udfs.cascade_batches:
     ``accept`` gate, per-document escalation inside the fused map, the
     cheap pass patterns-only when ``cheap_fields``) — same
     resume/lineage mechanics, adaptive cost.
@@ -158,6 +160,9 @@ def run_job(
         )
         prepped = prepped.join(F.broadcast(done_df), "bucket", "left_anti")
 
+    body = (udfs.cascade_batches(accept, cheap_fields) if cascade
+            else udfs.extract_batches)
+    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     staged_dir = None
     try:
         if stage_input and any(pending_groups):
@@ -182,13 +187,8 @@ def run_job(
                 chunk = prepped.filter(F.col("cgroup") == g).drop("cgroup")
             else:
                 chunk = prepped.filter(F.col("bucket").isin(buckets))
-            if cascade:
-                extracted = pipeline.run_extract_cascade_in_batch_full(
-                    chunk, accept=accept, n_buckets=n_buckets,
-                    repartition=True, cheap_fields=cheap_fields)
-            else:
-                extracted = pipeline.run_extract_full(chunk, n_buckets,
-                                                      repartition=True)
+            extracted = pipeline.run_extract_full(
+                chunk.repartition(n_parts, "bucket"), body)
             # one pass per group: cache so extracted + lineage don't recompute
             extracted = extracted.persist()
             try:

@@ -27,38 +27,41 @@ import zipfile
 import zipimport
 from collections.abc import Iterator
 
-import pandas as pd
 import pyarrow as pa
 from pyspark import TaskContext
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from . import oracle
 from .fields import extract_spans
 
-# Struct DDL fragments shared by pipeline schemas
-BLOCK_T = "array<struct<page:int,score:double,n_chars:int>>"
-SPAN_T = (
-    "array<struct<name:string,value:string,field_type:string,"
-    "start:bigint,end:bigint,confidence:double,is_required:boolean,"
-    "method:string>>"
-)
-
-EXTRACTED_FIELDS_SCHEMA = (
-    "url string, warc_ts timestamp, doc_type string, bucket int, "
-    f"status string, text string, spans {SPAN_T}, blocks {BLOCK_T}, "
-    "confidence double, n_pages int, bytes_in bigint, error string, "
-    "_wall_ms double"
-)
-_EXTRACTED_NAMES = [c.split()[0] for c in EXTRACTED_FIELDS_SCHEMA.split(", ")]
-
-# Arrow types of the EXTRACTED_FIELDS_SCHEMA columns the bodies build
-# (url, warc_ts and bucket pass through from their input)
-SPANS_PA = pa.list_(pa.struct([
-    ("name", pa.string()), ("value", pa.string()),
-    ("field_type", pa.string()), ("start", pa.int64()), ("end", pa.int64()),
-    ("confidence", pa.float64()), ("is_required", pa.bool_()),
-    ("method", pa.string())]))
-BLOCKS_PA = pa.list_(pa.struct([
-    ("page", pa.int32()), ("score", pa.float64()), ("n_chars", pa.int32())]))
+# The extracted row format, spelled once: the bodies build these Arrow
+# types (url, warc_ts and bucket pass through from their input), and
+# the Spark schema is derived from it.
+EXTRACTED_PA = pa.schema([
+    ("url", pa.string()),
+    ("warc_ts", pa.timestamp("us", tz="UTC")),
+    ("doc_type", pa.string()),
+    ("bucket", pa.int32()),
+    ("status", pa.string()),
+    ("text", pa.string()),
+    ("spans", pa.list_(pa.struct([
+        ("name", pa.string()), ("value", pa.string()),
+        ("field_type", pa.string()), ("start", pa.int64()),
+        ("end", pa.int64()), ("confidence", pa.float64()),
+        ("is_required", pa.bool_()), ("method", pa.string())]))),
+    ("blocks", pa.list_(pa.struct([
+        ("page", pa.int32()), ("score", pa.float64()),
+        ("n_chars", pa.int32())]))),
+    ("confidence", pa.float64()),
+    ("n_pages", pa.int32()),
+    ("bytes_in", pa.int64()),
+    ("error", pa.string()),
+    ("_wall_ms", pa.float64()),
+])
+EXTRACTED_FIELDS_SCHEMA = from_arrow_schema(EXTRACTED_PA)
+_EXTRACTED_NAMES = EXTRACTED_PA.names
+SPANS_PA = EXTRACTED_PA.field("spans").type
+BLOCKS_PA = EXTRACTED_PA.field("blocks").type
 
 
 def _holds_python(archive: str) -> bool:
@@ -123,7 +126,7 @@ def trim_worker_imports() -> None:
         _heap_frozen = True
 
 
-def extract_batches(it: Iterator[pa.RecordBatch | pd.DataFrame]
+def extract_batches(it: Iterator[pa.RecordBatch]
                     ) -> Iterator[pa.RecordBatch]:
     """Fused single-pass body: the whole per-document pipeline
     (oracle.extract_document: parse → best-of → fields) in ONE Python
