@@ -40,9 +40,9 @@ def main() -> None:
                          "point-lookup min-max pruning")
     ap.add_argument("--cascade", action="store_true",
                     help="M12 confidence-gated cascade per commit group: "
-                         "cheap strict-profile pass, full ensemble only "
-                         "below --accept, escalating per document inside "
-                         "the fused map")
+                         "cheap strict-profile pass, best-of candidate of "
+                         "the same parse only below --accept, escalating "
+                         "per document inside the fused map")
     ap.add_argument("--accept", type=float, default=0.7,
                     help="cascade confidence gate (with --cascade)")
     ap.add_argument("--canonical-keys", action="store_true",

@@ -5,12 +5,13 @@ Reference shape: ai_service_local.py:513-537 (local result ≥ threshold →
 accept; below → run the expensive engine, keep the strictly-better
 result). Ours is deterministic on both arms, so the cascade's exact
 output is pinned against the two fixed engines it composes, run
-in-process through oracle.extract_document.
+in-process: the full path (oracle.extract_document) and the cheap pass
+(candidate 0 of oracle.parse_candidates, fields by fields.extract_spans).
 """
 
 import datetime as dt
 
-from webextract import oracle, pipeline
+from webextract import fields, oracle, pipeline
 
 
 def _spark_rows(df):
@@ -22,10 +23,28 @@ def _spark_rows(df):
     return out
 
 
-def _oracle_rows(rows, profiles=None, patterns_only=False):
-    return {r["url"]: oracle.extract_document(r["url"], bytes(r["html"]),
-                                              profiles, patterns_only)
+def _oracle_rows(rows):
+    return {r["url"]: oracle.extract_document(r["url"], bytes(r["html"]))
             for r in rows}
+
+
+def _cheap_rows(rows, patterns_only=False):
+    """The cascade's cheap pass, built from its parts: candidate 0 (the
+    strict profile, or the one PDF candidate) of the document's parse,
+    fields over its text."""
+    out = {}
+    for r in rows:
+        url = r["url"]
+        full = oracle.extract_document(url, bytes(r["html"]))
+        if full["status"] == "COMPLETED":
+            cand = oracle.parse_candidates(bytes(r["html"]))["candidates"][0]
+            assert cand["profile"] in ("strict", "pdf")
+            spans, conf = fields.extract_spans(cand["text"], full["doc_type"],
+                                               patterns_only)
+            full = dict(full, text=cand["text"], blocks=cand["blocks"],
+                        spans=spans, confidence=conf)
+        out[url] = full
+    return out
 
 
 def _short_block_pages(spark, n=3):
@@ -56,7 +75,7 @@ def _gate_pages(spark, pages_parquet):
 
 def test_cascade_gate_semantics(spark, pages_parquet):
     pages, rows = _gate_pages(spark, pages_parquet)
-    strict = _oracle_rows(rows, ("strict",))
+    strict = _cheap_rows(rows)
     full = _oracle_rows(rows)
     casc = _spark_rows(pipeline.run_extract_cascade_in_batch(pages,
                                                              accept=0.7))
@@ -84,7 +103,7 @@ def test_cascade_cheap_fields_gate_semantics(spark, pages_parquet):
     # fields. Same gate contract as the full cascade, pinned against the
     # two fixed engines it composes (r3 verdict #5).
     pages, rows = _gate_pages(spark, pages_parquet)
-    cheap = _oracle_rows(rows, ("strict",), patterns_only=True)
+    cheap = _cheap_rows(rows, patterns_only=True)
     full = _oracle_rows(rows)
     casc = _spark_rows(pipeline.run_extract_cascade_in_batch(
         pages, accept=0.7, cheap_fields=True))
@@ -107,7 +126,7 @@ def test_cascade_cheap_fields_gate_semantics(spark, pages_parquet):
 
 def test_cascade_accept_zero_equals_cheap_pass(spark, pages_parquet):
     pages = spark.read.parquet(pages_parquet).limit(80)
-    strict = _oracle_rows(pages.select("url", "html").collect(), ("strict",))
+    strict = _cheap_rows(pages.select("url", "html").collect())
     casc = _spark_rows(pipeline.run_extract_cascade_in_batch(pages,
                                                              accept=0.0))
     assert casc == strict
@@ -122,7 +141,8 @@ def test_cascade_deterministic(spark, pages_parquet):
     assert one == two
 
 
-def test_profiles_restrict_candidates():
+def test_candidates_are_strict_first():
+    """The cascade's cheap pass is candidate 0: the strict profile."""
     from webextract import boiler, dom
 
     html = (b"<html><body><p>plain text content with enough characters to"
@@ -130,8 +150,35 @@ def test_profiles_restrict_candidates():
     blocks = boiler.blocks_of(dom.parse_html(html))
     assert [c["profile"] for c in boiler.candidates(blocks)] \
         == ["strict", "lenient"]
-    assert [c["profile"] for c in boiler.candidates(blocks, ("strict",))] \
-        == ["strict"]
+
+
+def test_cascade_parses_each_document_once(spark, pages_parquet,
+                                           monkeypatch):
+    """At accept 1.01 every COMPLETED document escalates; the escalation
+    reuses the cheap pass's parse, so each HTML or PDF document is
+    parsed exactly once."""
+    _, rows = _gate_pages(spark, pages_parquet)
+    calls = []
+    for name in ("parse_html", "extract_pdf"):
+        real = getattr(oracle, name)
+        monkeypatch.setattr(
+            oracle, name,
+            lambda payload, real=real: calls.append(payload) or real(payload))
+    for cheap_fields in (False, True):
+        n_parsed = n_escalated = 0
+        for r in rows:
+            payload = bytes(r["html"])
+            calls.clear()
+            rec = oracle.extract_document_cascade(r["url"], payload, 1.01,
+                                                  cheap_fields)
+            if oracle.sniff_kind(payload) in ("html", "pdf") \
+                    and len(payload) > 0:
+                assert calls == [payload], (r["url"], len(calls))
+                n_parsed += 1
+                n_escalated += rec["status"] == "COMPLETED"
+            else:
+                assert calls == []
+        assert n_parsed > 90 and n_escalated > 80
 
 
 def _final(df):

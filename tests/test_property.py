@@ -79,19 +79,6 @@ def test_ensemble_total_on_keyword_soup(parts):
                 assert s["confidence"] == fields.ENTITY_CONFIDENCE
 
 
-@settings(**COMMON)
-@given(tagish)
-def test_profile_subset_consistency(text):
-    """candidates(profiles=subset) must equal the filtered full ensemble
-    on ANY input — the invariant the M12 cascade's cheap pass rests on."""
-    from webextract import boiler, dom
-
-    blocks = boiler.blocks_of(dom.parse_html(text.encode("utf-8")))
-    full = boiler.candidates(blocks)
-    strict = boiler.candidates(blocks, ("strict",))
-    assert strict == [c for c in full if c["profile"] == "strict"]
-
-
 _PII_ALPHABET = "0123456789@.+- ab<>#_%"  # digits/separators-heavy: the
                                           # corners where replacement could
                                           # mint a NEW match

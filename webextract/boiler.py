@@ -80,16 +80,13 @@ def _keep_mask(stats: list[tuple[int, float, bool]], max_ld: float,
     return kept
 
 
-def candidates(blocks: list[Block],
-               profiles: tuple[str, ...] | None = None) -> list[dict]:
+def candidates(blocks: list[Block]) -> list[dict]:
     """Build per-profile candidates: dedup (first occurrence), '\\n\\n' join,
     conf = mean(1 - link_density) over kept blocks, precomputed best-of
     score (D5). Returns a list of dicts
-    {profile, conf, score, text, blocks:[{page,score,n_chars}]}.
-    ``profiles`` restricts to the named subset (the M12 cascade's cheap
-    first pass); None = the full ensemble, profile order preserved."""
-    selected = PROFILES if profiles is None else tuple(
-        p for p in PROFILES if p[0] in profiles)
+    {profile, conf, score, text, blocks:[{page,score,n_chars}]}, one per
+    ``PROFILES`` entry in its order: candidate 0 is the strict profile,
+    the M12 cascade's cheap pass."""
     # (text_len, link_density, kept-as-heading) per block, for every profile
     stats = []
     for blk in blocks:
@@ -98,7 +95,7 @@ def candidates(blocks: list[Block],
                       blk.link_chars == 0 and tlen >= 3
                       and blk.tag in HEADING_TAGS))
     cands = []
-    for name, max_ld, min_chars in selected:
+    for name, max_ld, min_chars in PROFILES:
         seen: set[str] = set()
         texts: list[str] = []
         lds: list[float] = []

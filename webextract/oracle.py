@@ -73,15 +73,13 @@ def sniff_kind(payload: bytes) -> str:
     return fmt if fmt.startswith("riff/") else f"image/{fmt}"
 
 
-def parse_candidates(payload: bytes,
-                     profiles: tuple[str, ...] | None = None) -> dict:
+def parse_candidates(payload: bytes) -> dict:
     """Parse: payload → candidate texts + per-candidate blocks.
 
     Returns {kind, n_pages, candidates:[{profile,conf,score,text,
     blocks:[{page,score,n_chars}]}], error}. Candidates empty + error set
-    on failure (size guard S2, parse errors). ``profiles`` restricts the
-    HTML candidate ensemble (M12 cascade cheap pass); the PDF arm is a
-    single deterministic parse either way."""
+    on failure (size guard S2, parse errors). Candidate 0 (the strict
+    profile, or the one PDF candidate) is the M12 cascade's cheap pass."""
     if payload is None or len(payload) == 0:
         return {"kind": "html", "n_pages": 0, "candidates": [], "error": "empty payload"}
     if len(payload) > MAX_PAYLOAD_BYTES:
@@ -121,7 +119,7 @@ def parse_candidates(payload: bytes,
                 "blocks": blocks,
             }
             return {"kind": kind, "n_pages": len(pages), "candidates": [cand], "error": None}
-        cands = candidates(blocks_of(parse_html(payload)), profiles)
+        cands = candidates(blocks_of(parse_html(payload)))
         return {"kind": kind, "n_pages": 1, "candidates": cands, "error": None}
     except Exception as e:  # noqa: BLE001 — C2: never throw past the doc
         return {"kind": kind, "n_pages": 0, "candidates": [], "error": f"{type(e).__name__}: {e}"}
@@ -137,71 +135,65 @@ def best_candidate(cands: list[dict]) -> dict | None:
     return best
 
 
-def extract_document(url: str, payload: bytes,
-                     profiles: tuple[str, ...] | None = None,
-                     patterns_only: bool = False) -> dict:
-    """Full per-document pipeline → one row of the ``extracted`` table.
-    ``profiles`` restricts the candidate ensemble; ``patterns_only``
-    restricts the fields stage to the compiled-pattern arm (both M12
-    cascade cheap-pass knobs)."""
-    doc_type = detect_doc_type(url)
-    parsed = parse_candidates(payload, profiles)
-    if parsed["error"] is not None:
-        return {
-            "url": url,
-            "doc_type": doc_type,
-            "status": STATUS_FAILED,
-            "text": "",
-            "spans": [],
-            "blocks": [],
-            "confidence": 0.0,
-            "n_pages": 0,
-            "error": parsed["error"],
-        }
-    kind = parsed["kind"]
-    if kind == "pdf-raster" or kind.startswith("image/"):
+def _record(url: str, doc_type: str, parsed: dict, candidate: dict | None,
+            patterns_only: bool) -> dict:
+    """One ``extracted`` row: FAILED on a parse error, NEEDS_OCR for a
+    raster-only document, else COMPLETED with ``candidate``'s text and
+    blocks and the fields over that text (patterns only when asked)."""
+    kind, error = parsed["kind"], parsed["error"]
+    if error is not None:
+        status, text, spans, blocks, confidence = STATUS_FAILED, "", [], [], 0.0
+    elif kind == "pdf-raster" or kind.startswith("image/"):
         # raster-only document: classified, not failed — error carries
         # the sniffed format as routing metadata for an OCR stage
-        return {
-            "url": url,
-            "doc_type": doc_type,
-            "status": STATUS_NEEDS_OCR,
-            "text": "",
-            "spans": [],
-            "blocks": [],
-            "confidence": 0.0,
-            "n_pages": parsed["n_pages"],
-            "error": f"needs_ocr: {kind}",
-        }
-    best = best_candidate(parsed["candidates"])
-    text = best["text"] if best else ""
-    blocks = best["blocks"] if best else []
-    spans, confidence = extract_spans(text, doc_type, patterns_only)
+        status, text, spans, blocks, confidence = \
+            STATUS_NEEDS_OCR, "", [], [], 0.0
+        error = f"needs_ocr: {kind}"
+    else:
+        status = STATUS_COMPLETED
+        text = candidate["text"] if candidate else ""
+        blocks = candidate["blocks"] if candidate else []
+        spans, confidence = extract_spans(text, doc_type, patterns_only)
     return {
         "url": url,
         "doc_type": doc_type,
-        "status": STATUS_COMPLETED,
+        "status": status,
         "text": text,
         "spans": spans,
         "blocks": blocks,
         "confidence": confidence,
-        "n_pages": parsed["n_pages"],
-        "error": None,
+        "n_pages": parsed["n_pages"],  # 0 on a parse error
+        "error": error,
     }
+
+
+def extract_document(url: str, payload: bytes) -> dict:
+    """Full per-document pipeline → one row of the ``extracted`` table:
+    parse → best-of candidate → fields."""
+    parsed = parse_candidates(payload)
+    return _record(url, detect_doc_type(url), parsed,
+                   best_candidate(parsed["candidates"]), False)
 
 
 def extract_document_cascade(url: str, payload: bytes, accept: float = 0.7,
                              cheap_fields: bool = False) -> dict:
-    """Per-document M12 cascade: the cheap strict-profile pass first
-    (patterns-only fields when ``cheap_fields``); a COMPLETED result
-    below the ``accept`` gate is re-extracted with the full ensemble and
-    the strictly-better result wins (the cheap pass keeps ties, exactly
-    the reference's openai-vs-local pick, ai_service_local.py:513-537).
-    The escalation runs inside the same batch as the cheap pass, so the
-    Spark plan is the fixed path's single fused map."""
-    first = extract_document(url, payload, ("strict",),
-                             patterns_only=cheap_fields)
+    """Per-document M12 cascade over ONE parse: the cheap pass is
+    candidate 0 (the strict profile; patterns-only fields when
+    ``cheap_fields``); a COMPLETED result below the ``accept`` gate
+    escalates to the best-of candidate of the same parse with the full
+    field ensemble, and the strictly-better result wins (the cheap pass
+    keeps ties, the reference's pick, ai_service_local.py:513-537). An
+    escalation re-runs only the fields, so only ``cheap_fields`` can
+    make the cascade cheaper than ``extract_document``."""
+    doc_type = detect_doc_type(url)
+    parsed = parse_candidates(payload)
+    cands = parsed["candidates"]
+    cheap = cands[0] if cands else None
+    first = _record(url, doc_type, parsed, cheap, cheap_fields)
     if first["status"] != STATUS_COMPLETED or first["confidence"] >= accept:
         return first
-    full = extract_document(url, payload)
+    best = best_candidate(cands)
+    if best is cheap and not cheap_fields:
+        return first  # the full row would be this row
+    full = _record(url, doc_type, parsed, best, False)
     return full if full["confidence"] > first["confidence"] else first

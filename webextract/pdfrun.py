@@ -142,6 +142,9 @@ def _stream_of(body: bytes, budget: int) -> bytes | None:
 
 
 _REF_LIST_RE = re.compile(rb"(\d+)\s+0\s+R")
+_KIDS_RE = re.compile(rb"/Kids\s*\[(.*?)\]", re.S)
+_CONTENTS_RE = re.compile(rb"/Contents\s*(\[[^\]]*\]|\d+\s+0\s+R)")
+_CONTENTS_REF_RE = re.compile(rb"/Contents\s*(\d+\s+0\s+R)")
 
 
 def _page_content_ids(objs: dict[int, bytes]) -> list[list[int]]:
@@ -157,8 +160,10 @@ def _page_content_ids(objs: dict[int, bytes]) -> list[list[int]]:
         if re.search(rb"/Type\s*/Page\b", body)
     }
     order: list[int] = []
+    # an array closes before its body's last ']': searched past it, each
+    # '[' there would rescan the rest of the body (quadratic)
     for body in pages_nodes.values():
-        km = re.search(rb"/Kids\s*\[(.*?)\]", body, re.S)
+        km = _KIDS_RE.search(body, 0, body.rfind(b"]") + 1)
         if km:
             order = [int(x) for x in _REF_LIST_RE.findall(km.group(1))]
             break
@@ -169,7 +174,9 @@ def _page_content_ids(objs: dict[int, bytes]) -> list[list[int]]:
         body = page_objs.get(oid)
         if body is None:
             continue
-        cm = re.search(rb"/Contents\s*(\[(?:[^\]]*)\]|\d+\s+0\s+R)", body, re.S)
+        last = body.rfind(b"]") + 1
+        cm = _CONTENTS_RE.search(body, 0, last) \
+            or _CONTENTS_REF_RE.search(body, last)
         if not cm:
             out.append([])
             continue

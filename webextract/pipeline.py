@@ -159,17 +159,17 @@ def run_extract_cascade_in_batch(pages: DataFrame, accept: float = 0.7,
     """M12 — the reference's confidence-gated engine cascade
     (ai_service_local.py:513-537: local result ≥ threshold → accept;
     below → try the expensive engine, keep the strictly-better result),
-    run per document inside the single fused ``mapInArrow`` pass
-    (oracle.extract_document_cascade): a cheap strict-profile pass, and
-    only a COMPLETED document whose field confidence lands below
-    ``accept`` is re-extracted with the full candidate ensemble; the
-    cheap result keeps ties. The plan is the fixed path's plan — zero
-    shuffle, no cache, no second input scan.
-
-    ``cheap_fields=True`` also runs the cheap pass with the
-    patterns-only fields arm (fields.extract_spans patterns_only): it
-    accepts only when every REQUIRED field is pattern-hit, else the
-    document escalates.
+    per document inside the single fused ``mapInArrow`` pass
+    (oracle.extract_document_cascade), from ONE parse: the cheap pass
+    takes the strict-profile candidate; a COMPLETED document whose field
+    confidence lands below ``accept`` escalates to the best-of candidate
+    of the same parse; the cheap result keeps ties. Same plan as the
+    fixed path. ``cheap_fields=True`` runs the cheap pass with the
+    patterns-only fields arm: it accepts only when every REQUIRED field
+    is pattern-hit, else the document escalates. An escalation re-runs
+    only the fields, so the cascade costs about ``run_extract``; only
+    ``cheap_fields`` can make it cheaper, and with it the cascade costs
+    at most the full path plus the patterns-only fields step.
 
     Config-off by design: ``run_extract`` stays the fixed deterministic
     default (SURVEY §7.4); the cascade is itself deterministic, just a

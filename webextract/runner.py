@@ -111,9 +111,9 @@ def run_job(
     group, for bucket-aligned output files) and extracted by ONE
     pipeline.run_extract_full map. ``cascade=True`` runs that map with
     the M12 confidence-gated cascade body (udfs.cascade_batches:
-    ``accept`` gate, per-document escalation inside the fused map, the
-    cheap pass patterns-only when ``cheap_fields``) — same
-    resume/lineage mechanics, adaptive cost.
+    ``accept`` gate, per-document escalation from the same parse, the
+    cheap pass patterns-only when ``cheap_fields``) — same resume and
+    lineage; it costs about the fixed map, less only with cheap_fields.
 
     ``canonical_keys=True`` keys the resume bucketing AND the sorted
     output layout on ``urls.canonical_url(url)`` instead of the raw
