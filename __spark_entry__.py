@@ -1209,7 +1209,7 @@ WHERE EXISTS (SELECT 1 FROM orders o
 
 
 def _anti_join_quiet_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """[§2.11 anti-join — the resume mechanic's shape (runner.py)]:
+    """[§2.11 anti-join — dedup's drop-join shape (dedup.deduplicate)]:
     customers with NO order in the last data year."""
     _prep(spark)
     o = _t(spark, sf_dir, "orders").filter(

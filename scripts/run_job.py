@@ -5,7 +5,7 @@
     zip=$(python -c "from webextract.pipeline import package_zip; print(package_zip())")
     spark-submit --master local[32] --py-files "$zip" scripts/run_job.py \
         --input /path/to/pages_parquet --output /path/to/out \
-        [--commit-groups 8] [--buckets 64] [--no-resume]
+        [--commit-groups 8] [--buckets 64]
 
 Reads a pages table (url, warc_ts, html, text, lang), runs the resumable
 checkpointed extraction (webextract.runner.run_job), writes the extracted
@@ -30,11 +30,11 @@ def main() -> None:
     ap.add_argument("--buckets", type=int, default=64)
     ap.add_argument("--commit-groups", type=int, default=8)
     ap.add_argument("--max-groups", type=int, default=None)
-    ap.add_argument("--no-resume", action="store_true")
     ap.add_argument("--stage-input", action="store_true",
                     help="materialize pending input once, partitioned by "
-                         "commit group (kills the G-fold re-scan on raw, "
-                         "non-bucketed inputs; see runner.py docstring)")
+                         "commit group: the only bound on the G-fold "
+                         "re-scan, whatever the input's layout (see "
+                         "runner.py docstring)")
     ap.add_argument("--sorted-layout", action="store_true",
                     help="range-partition each commit's output by url for "
                          "point-lookup min-max pruning")
@@ -49,8 +49,9 @@ def main() -> None:
                     help="key resume buckets + sorted layout on "
                          "canonical_url(url): spelled variants of one "
                          "page co-locate (same commit group / output "
-                         "range); rows are unchanged. Use a fresh "
-                         "--output when flipping this flag")
+                         "range); rows are unchanged. Resuming an "
+                         "--output with the flag (or --buckets) flipped "
+                         "is an error")
     ap.add_argument("--cheap-fields", action="store_true",
                     help="the cascade's cheap pass runs the patterns-only "
                          "fields arm (accepts only when every required "
@@ -86,7 +87,7 @@ def main() -> None:
     out = runner.run_job(
         spark, pages, args.output,
         n_buckets=args.buckets, commit_groups=args.commit_groups,
-        max_groups=args.max_groups, resume=not args.no_resume,
+        max_groups=args.max_groups,
         stage_input=args.stage_input, sorted_layout=args.sorted_layout,
         cascade=args.cascade,
         accept=args.accept,

@@ -116,10 +116,12 @@ def test_resume_skips_empty_buckets(spark, pages_parquet, tmp_path,
     assert again.count() == 20
 
 
-def test_group_frame_has_one_bucket_shuffle(spark, pages_parquet, tmp_path,
-                                            monkeypatch):
-    """The runner hands each commit group to the extraction map
-    repartitioned by bucket, once: bucket-aligned output files."""
+def test_group_plan_has_no_boundary(spark, pages_parquet, tmp_path,
+                                    monkeypatch):
+    """A commit group is one bucket filter and one map over the scan
+    splits: no exchange and no join between the scan and the map, for
+    a fresh group, a resumed one (done buckets are excluded by the
+    group's own filter) and a staged one."""
     import io
     from contextlib import redirect_stdout
 
@@ -129,18 +131,55 @@ def test_group_frame_has_one_bucket_shuffle(spark, pages_parquet, tmp_path,
     real = pipeline.run_extract_full
 
     def spy(pages, body):
+        out = real(pages, body)
         buf = io.StringIO()
         with redirect_stdout(buf):
-            pages.explain("simple")
+            out.explain("simple")
         plans.append(buf.getvalue())
-        return real(pages, body)
+        return out
 
     monkeypatch.setattr(pipeline, "run_extract_full", spy)
-    runner.run_job(spark, spark.read.parquet(pages_parquet),
-                   str(tmp_path / "plan"), max_groups=1)
-    [plan] = plans
-    assert plan.count("Exchange") == 1, plan
-    assert plan.count("hashpartitioning(bucket") == 1, plan
+    pages = spark.read.parquet(pages_parquet)
+    out = str(tmp_path / "plan")
+    runner.run_job(spark, pages, out, commit_groups=4, max_groups=1)
+    assert runner.completed_buckets(spark, Catalog(out))
+    runner.run_job(spark, pages, out, commit_groups=4, max_groups=1)
+    runner.run_job(spark, pages, out, commit_groups=4, max_groups=1,
+                   stage_input=True)
+    assert len(plans) == 3
+    for plan in plans:
+        assert "MapInArrow" in plan, plan
+        assert "Exchange" not in plan, plan
+        assert "Join" not in plan, plan
+
+
+def test_resume_with_other_keying_raises(spark, pages_parquet, tmp_path,
+                                         monkeypatch):
+    """Bucket ids mean nothing under another bucket count or keying:
+    resuming a catalog with committed buckets under either raises before
+    any payload is read, leaves the recorded keying as it was, and the
+    recorded keying still resumes to the full table."""
+    import pytest
+
+    from webextract import pipeline
+
+    pages = _pages(spark, pages_parquet)
+    want = _final(runner.run_job(spark, pages, str(tmp_path / "ref")))
+    out = str(tmp_path / "rekey")
+    runner.run_job(spark, pages, out, n_buckets=64, max_groups=2)
+
+    calls = []
+    real = pipeline.run_extract_full
+    monkeypatch.setattr(pipeline, "run_extract_full",
+                        lambda *a, **k: calls.append(1) or real(*a, **k))
+    with pytest.raises(ValueError, match="committed under"):
+        runner.run_job(spark, pages, out, n_buckets=16)
+    with pytest.raises(ValueError, match="committed under"):
+        runner.run_job(spark, pages, out, n_buckets=64, canonical_keys=True)
+    assert calls == []
+    assert Catalog(out).properties(runner.EXTRACTED_TABLE) == {
+        "n_buckets": 64, "canonical_keys": False}
+    assert _final(runner.run_job(spark, pages, out, n_buckets=64)) == want
 
 
 def test_lineage_counters(spark, pages_parquet, tmp_path):

@@ -15,11 +15,11 @@ Layering (see SURVEY.md §7):
 - ``fields``   — regex field registry + char-span extraction
 - ``oracle``   — single-document pure-Python pipeline (golden source)
 - ``udfs``     — Arrow-batched wrappers of the oracle components
-- ``pipeline`` — the Spark DAG (scan → prune/bucket → extract → write)
-- ``checkpoint`` — parquet+manifest snapshot catalog shim, resume anti-join
+- ``pipeline`` — the Spark DAG (scan → prune → extract → write; the bucket id)
+- ``checkpoint`` — parquet+manifest snapshot catalog shim (commits, snapshots)
 - ``skew``     — hot-host detection + salting helpers
-- ``runner``   — resumable commit-group job + fields reprocess from the
-  ``extracted`` table (C4)
+- ``runner``   — resumable commit-group job (a bucket filter and one map
+  per group) + fields reprocess from the ``extracted`` table (C4)
 - ``multimodal`` — opaque-binary media plumbing (decode / features /
   resize plan / frame sampling; stub kernels, real Spark contract)
 - ``fixtures`` — deterministic synthetic pages generator (tests + bench)

@@ -1,4 +1,4 @@
-"""The Spark DAG: scan → prune/bucket → extract → write.
+"""The Spark DAG: scan → prune → extract → write.
 
 Re-expresses the reference's pipeline compose
 (ocr-ai-service/app/services/document_service.py:90-182, C1) as one lazy
@@ -10,8 +10,10 @@ output by construction. The M12 cascade is the same map with another
 body (udfs.cascade_batches).
 
 Scale design (the part that must survive 1000 executors / 100 TB):
-- rows are heavy (html blobs up to 50 MB) → Arrow batch size is capped
-  (ARROW_BATCH_ROWS) so a batch never holds more than ~tens of MB
+- rows are heavy (html blobs up to 50 MB); a batch is cut at
+  ARROW_BATCH_ROWS rows, which bounds no bytes: Spark's
+  ``arrow.maxBytesPerBatch`` (64 MiB) bounds an input batch, nothing
+  bounds an output batch
 - extraction is row-local, so ``run_extract`` runs the map directly on
   the scan partitions: no shuffle, no bucket. Shuffling payload bytes
   before it buys nothing and costs a full disk round-trip of the input
@@ -21,11 +23,10 @@ Scale design (the part that must survive 1000 executors / 100 TB):
   uniform bytes.
 - ``bucket`` = pmod(xxhash64(url), n_buckets) (with_bucket): a STABLE
   logical partition id, independent of physical partitioning, and the
-  unit of lineage and of anti-join resume (north_rule). Only the
-  checkpointed runner computes it, and it alone repartitions by bucket
-  before the map, for bucket-aligned output files; the hash keys on the
-  full url, not the host, so one skewed host still spreads across
-  buckets (see skew.py for the groupBy side of skew handling).
+  unit of lineage and of resume (north_rule). Only the checkpointed
+  runner computes it, to filter each commit group and key lineage; the
+  hash keys on the full url, not the host, so one skewed host still
+  spreads across buckets (see skew.py for the groupBy side of skew).
 - column pruning: extraction reads only (url, warc_ts, html) + the
   bucket; the wide ``text``/``lang`` input columns never leave the scan
   (verified by test_plans.py on PushedFilters/ReadSchema).
@@ -43,10 +44,10 @@ from pyspark.sql import Column, DataFrame, SparkSession
 
 from . import udfs
 
-ARROW_BATCH_ROWS = 256          # web payloads are typically KBs; the 50 MB
-                                # outliers are guarded by S2's size cap, so a
-                                # 256-row batch stays in the tens-of-MB range
-                                # (measured 2.4× faster than 64 end-to-end)
+ARROW_BATCH_ROWS = 256          # rows per Arrow batch (measured 2.4× faster
+                                # than 64 end-to-end); it bounds no bytes:
+                                # input batches are held to 64 MiB by Spark's
+                                # arrow.maxBytesPerBatch, output ones by nothing
 DEFAULT_BUCKETS = 64            # logical lineage/resume buckets per run
 
 EXTRACTED_COLUMNS = [
@@ -216,8 +217,9 @@ def lineage_of(stage_df: DataFrame, run_id: str, stage: str,
     the rows carry. A processed bucket with no input rows gets zero
     counters and ``wall_ms`` 0: it still counts as done, so a resume
     never re-runs its commit group. ``wall_ms`` is the max cumulative
-    batch wall time observed in the bucket's physical partition (upper
-    bound of the bucket's processing time).
+    batch wall time of the tasks holding the bucket's rows; as no
+    shuffle co-locates them, every bucket of a commit group gets about
+    the wall of the group's slowest task (an upper bound).
     NEEDS_OCR rows (error 'needs_ocr: <fmt>') count as OK — the job
     successfully CLASSIFIED them for a downstream OCR stage; fail_count
     remains exactly the FAILED rows, so lineage dashboards don't page

@@ -1,4 +1,4 @@
-"""Resumable batch job: commit-group loop + anti-join resume (north_rule).
+"""Resumable batch job: commit-group loop + bucket-filter resume (north_rule).
 
 A 10^12-row job WILL be killed mid-flight. Spark gives durability only at
 action boundaries, so the runner splits the stable bucket space
@@ -6,28 +6,25 @@ action boundaries, so the runner splits the stable bucket space
 ``commit_groups`` contiguous ranges and commits each group's
 ``extracted`` output + per-bucket ``lineage`` rows atomically to the
 checkpoint catalog. A killed run leaves complete groups durable; the next
-run anti-joins the already-completed buckets
-(pages LEFT ANTI JOIN lineage.ok_buckets) and processes only the rest —
-exactly the resume mechanic the north_rule demands, at bucket
-granularity. Re-running a finished job is a no-op (idempotence).
+run reads the completed buckets from lineage and runs each group as one
+filter ``bucket IN (its pending buckets)`` and one extraction map over
+the scan splits (no join, no shuffle) — the resume mechanic the
+north_rule demands, at bucket granularity. Re-running a finished job is
+a no-op (idempotence).
 
-Scan-amplification note (the round-1 judge's #9): the bucket predicate
-``pmod(xxhash64(url), n) IN (...)`` cannot prune parquet row groups, so
-with G commit groups the naive loop reads the full payload bytes G times
-— ~8× scan I/O at 100 TB. Three regimes:
+Scan-amplification note: ``bucket`` is computed
+from ``xxhash64(url)`` after the scan, so no input layout prunes the
+group filter (the group plan shows ``PushedFilters: []``): with G commit
+groups the loop reads the full payload bytes G times — ~8× scan I/O at
+100 TB. Only staging bounds it:
 
-1. **Bucketed table input (the real deployment).** If the Iceberg/parquet
-   input is bucketed/partitioned by the same url-hash, the group filter
-   prunes at the scan and amplification is zero. Preferred; nothing to do
-   in the runner.
-2. **stage_input=True (raw input).** One full pass writes the pruned
-   (url, warc_ts, html, bucket) columns partitioned by commit
-   group into the checkpoint dir; each group job then reads ONLY its
-   partition directory. Total payload I/O = 1 read + 1 write + 1 read
-   (~3×) instead of G reads, independent of G — and the staged copy is
-   already column-pruned. Staging is itself resume-safe: it happens
-   after the anti-join, so a resumed run stages only pending buckets.
-3. **stage_input=False (default).** Correct and durable, G full scans;
+1. **stage_input=True.** One full pass writes the pruned
+   (url, warc_ts, html, bucket) columns of the pending buckets,
+   partitioned by commit group, into the checkpoint dir; each group job
+   then reads ONLY its partition directory. Total payload I/O = 1 read +
+   1 write + 1 read (~3×) instead of G reads, independent of G — and
+   the staged copy is already column-pruned.
+2. **stage_input=False (default).** Correct and durable, G full scans;
    acceptable for small G / small inputs (tests, demos).
 
 On a 1000-executor cluster you'd size commit_groups so one group ≈
@@ -74,6 +71,13 @@ def _sweep_stale_staged(out_root: str) -> None:
             shutil.rmtree(os.path.join(out_root, e), ignore_errors=True)
 
 
+def _keying(catalog: Catalog) -> dict:
+    """The recorded bucket keying; raw url over DEFAULT_BUCKETS if none."""
+    props = catalog.properties(EXTRACTED_TABLE)
+    return {"n_buckets": props.get("n_buckets", pipeline.DEFAULT_BUCKETS),
+            "canonical_keys": bool(props.get("canonical_keys", False))}
+
+
 def _bucket_key(canonical_keys: bool):
     """The column a job hashes into buckets: None (the raw url) or the
     canonical url."""
@@ -91,7 +95,6 @@ def run_job(
     n_buckets: int = pipeline.DEFAULT_BUCKETS,
     commit_groups: int = 8,
     max_groups: int | None = None,
-    resume: bool = True,
     sorted_layout: bool = False,
     stage_input: bool = False,
     cascade: bool = False,
@@ -107,13 +110,12 @@ def run_job(
     ``stage_input`` materializes the pending input once, partitioned by
     commit group, so per-group jobs read 1/G of the payload bytes
     instead of re-scanning everything (see module docstring).
-    Each commit group is repartitioned by bucket (one shuffle per
-    group, for bucket-aligned output files) and extracted by ONE
-    pipeline.run_extract_full map. ``cascade=True`` runs that map with
-    the M12 confidence-gated cascade body (udfs.cascade_batches:
-    ``accept`` gate, per-document escalation from the same parse, the
-    cheap pass patterns-only when ``cheap_fields``) — same resume and
-    lineage; it costs about the fixed map, less only with cheap_fields.
+    Each group is extracted by ONE pipeline.run_extract_full map.
+    ``cascade=True`` runs that map with the M12 confidence-gated cascade
+    body (udfs.cascade_batches: ``accept`` gate, per-document escalation
+    from the same parse, the cheap pass patterns-only when
+    ``cheap_fields``) — same resume and lineage; it costs about the
+    fixed map, less only with cheap_fields.
 
     ``canonical_keys=True`` keys the resume bucketing AND the sorted
     output layout on ``urls.canonical_url(url)`` instead of the raw
@@ -125,8 +127,8 @@ def run_job(
     rows is dedup.exact_dedup / urls.with_canonical_url composition,
     kept out of the runner so the flag never shuffles payload bytes) —
     pinned by the kill/resume equivalence test at both flag values.
-    Flip the flag only on a FRESH out_root: resume joins on bucket ids,
-    and the two keyings number buckets differently.
+    Another ``n_buckets`` or keying numbers buckets differently, so
+    resuming with ones other than those recorded raises ValueError.
 
     Concurrency contract: ONE live run_job per ``out_root``. Two
     concurrent runners would both see the same pending buckets and
@@ -140,12 +142,17 @@ def run_job(
     run_id = run_id or pipeline.new_run_id()
     catalog = Catalog(out_root)
     _sweep_stale_staged(out_root)
-    # the bucket keying, for reprocess_fields' lineage rows
-    catalog.set_properties(EXTRACTED_TABLE, {
-        "n_buckets": n_buckets, "canonical_keys": canonical_keys})
-    done = completed_buckets(spark, catalog) if resume else set()
+    keying = {"n_buckets": n_buckets, "canonical_keys": canonical_keys}
+    done = completed_buckets(spark, catalog)
+    recorded = _keying(catalog)
+    if done and recorded != keying:
+        raise ValueError(
+            f"{out_root} holds buckets committed under {recorded}; "
+            f"resuming it with {keying} would skip or repeat rows")
+    # the bucket keying, for resumes and reprocess_fields' lineage rows
+    catalog.set_properties(EXTRACTED_TABLE, keying)
 
-    # lineage-driven anti-join resume: done buckets never re-read payloads
+    # lineage-driven resume: done buckets are in no group's filter
     group_of = lambda b: b * commit_groups // n_buckets  # noqa: E731
     pending_groups: list[list[int]] = [[] for _ in range(commit_groups)]
     for b in range(n_buckets):
@@ -154,21 +161,16 @@ def run_job(
 
     key = _bucket_key(canonical_keys)
     prepped = pipeline.with_bucket(pages, n_buckets, key=key)
-    if done:
-        done_df = spark.createDataFrame(
-            [(b,) for b in sorted(done)], "bucket int"
-        )
-        prepped = prepped.join(F.broadcast(done_df), "bucket", "left_anti")
-
     body = (udfs.cascade_batches(accept, cheap_fields) if cascade
             else udfs.extract_batches)
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     staged_dir = None
     try:
         if stage_input and any(pending_groups):
             staged_dir = os.path.join(out_root, f"_staged_input_{run_id}")
+            pending = [b for buckets in pending_groups for b in buckets]
             (
-                prepped.select("url", "warc_ts", "html", "bucket")
+                prepped.filter(F.col("bucket").isin(pending))
+                .select("url", "warc_ts", "html", "bucket")
                 .withColumn(
                     "cgroup",
                     F.expr(f"CAST(bucket * {commit_groups} DIV {n_buckets} AS INT)"))
@@ -187,8 +189,7 @@ def run_job(
                 chunk = prepped.filter(F.col("cgroup") == g).drop("cgroup")
             else:
                 chunk = prepped.filter(F.col("bucket").isin(buckets))
-            extracted = pipeline.run_extract_full(
-                chunk.repartition(n_parts, "bucket"), body)
+            extracted = pipeline.run_extract_full(chunk, body)
             # one pass per group: cache so extracted + lineage don't recompute
             extracted = extracted.persist()
             try:
@@ -207,7 +208,7 @@ def run_job(
     finally:
         if staged_dir is not None:
             # staged copy is scratch, not a checkpoint: resume re-stages the
-            # (anti-joined) remainder, so drop it even on a failed run —
+            # pending remainder, so drop it even on a failed run —
             # it is a full column-pruned payload copy, not something to leak
             shutil.rmtree(staged_dir, ignore_errors=True)
 
@@ -241,11 +242,11 @@ def reprocess_fields(
     saved = catalog.read(spark, EXTRACTED_TABLE, version=version)
     if saved is None:
         raise ValueError(f"no {EXTRACTED_TABLE} table under {out_root}")
-    props = catalog.properties(EXTRACTED_TABLE)
-    n_buckets = props.get("n_buckets", pipeline.DEFAULT_BUCKETS)
+    keying = _keying(catalog)
+    n_buckets = keying["n_buckets"]
     redone = (
         pipeline.with_bucket(saved, n_buckets,
-                             key=_bucket_key(props.get("canonical_keys")))
+                             key=_bucket_key(keying["canonical_keys"]))
         .withColumn("bytes_in", F.octet_length("text").cast("bigint"))
         .mapInArrow(udfs.respan_batches, udfs.EXTRACTED_FIELDS_SCHEMA)
         .persist())
