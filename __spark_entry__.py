@@ -1902,8 +1902,9 @@ def _host_quota_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """[host-level quota sampling] urls.host_quota — keep at most 20
     docs per host (lexicographically-smallest URLs win) over a
     synthesized skewed corpus: one mega-host owning half the docs plus
-    25 small hosts. Cascaded salted hash-aggregate cap (cap_buckets) —
-    no per-host window; also exercises host_of normalization
+    25 small hosts. Salted rank-limited cap (cap_buckets: a per-(host,
+    salt) window, then a per-host window over the few survivors) and
+    one semi-join back; also exercises host_of normalization
     (WWW./:443 stripping)."""
     _prep(spark)
     from webextract import urls

@@ -247,16 +247,33 @@ def test_simhash_rejects_bad_bits(docs):
         dedup.simhash(docs, bits=65)
 
 
-def test_cap_buckets_semantics_and_no_window(spark):
-    # 1 bucket, 250 members, cap 10 ⇒ exactly ids 0..9 survive, and the
-    # plan must be aggregation-shaped (no single-task Window sort)
+def test_cap_buckets_semantics(spark):
+    # 1 bucket, 250 members, cap 10 ⇒ exactly ids 0..9 survive (the
+    # plan shape is pinned in test_plans)
     rows = [(i, 0, "k") for i in range(250)]
     df = spark.createDataFrame(rows, "doc_id bigint, band int, bkey string")
     capped = dedup.cap_buckets(df, "doc_id", bucket_cap=10)
     assert sorted(r["doc_id"] for r in capped.collect()) == list(range(10))
-    plan = capped._jdf.queryExecution().executedPlan().toString()
-    assert "Window" not in plan
-    assert "Aggregate" in plan
+
+
+def test_cap_buckets_keeps_every_row_of_a_kept_id(spark):
+    # the contract: every row whose id is among the cap smallest
+    # DISTINCT ids of its bucket — a duplicated id ranks once and all
+    # of its rows stay or go together
+    ids = [3, 0, 2, 0, 1, 2, 4, 2, 5]
+    rows = [(i, 0, "k", f"r{n}") for n, i in enumerate(ids)] + [
+        (9, 1, "k", "other"), (9, 1, "k", "other2"), (8, 1, "k", "x")]
+    df = spark.createDataFrame(
+        rows, "doc_id bigint, band int, bkey string, tag string")
+    got = sorted((r["doc_id"], r["band"], r["bkey"], r["tag"]) for r in
+                 dedup.cap_buckets(df, "doc_id", bucket_cap=3).collect())
+    want = []
+    for key in {(b, k) for _, b, k, _ in rows}:
+        members = [r for r in rows if (r[1], r[2]) == key]
+        small = sorted({r[0] for r in members})[:3]
+        want += [r for r in members if r[0] in small]
+    assert got == sorted(want)
+    assert sum(1 for r in got if r[0] == 2) == 3   # all rows of id 2
 
 
 def test_cap_buckets_preserves_extra_columns(spark):
@@ -444,9 +461,9 @@ def test_iceberg_jar_version_aware(tmp_path):
 
 
 def test_cap_buckets_degenerate_mega_bucket(spark):
-    # 300k members in ONE bucket: the multi-level salted cascade must
-    # return exactly the 100 smallest ids without any group buffer
-    # scaling with the bucket (probed at 2M rows in 8 s during round 3)
+    # 300k members in ONE bucket: the salted first level must hand the
+    # unsalted one only its few survivors and still return exactly the
+    # 100 smallest ids
     import pyspark.sql.functions as F
 
     df = spark.range(300_000).select(
@@ -996,6 +1013,79 @@ def test_host_quota_duplicate_urls_count_once(spark):
     # the duplicate winning url keeps BOTH snapshots; /b loses
     assert sorted((r["url"], r["snap"]) for r in out) == [
         ("https://h.org/a", 1), ("https://h.org/a", 2)]
+
+
+def _host_quota_reference(rows, cap):
+    """Plain-Python host_quota over ``(url, host, tag)`` rows whose host
+    is known by construction: per host the ``cap`` smallest distinct
+    urls win, every row of a winning url stays, exempt ('' host) rows
+    all pass."""
+    won = set()
+    for host in {h for _, h, _ in rows if h}:
+        won |= set(sorted({u for u, h, _ in rows if h == host})[:cap])
+    return sorted((u, h, t) for u, h, t in rows if not h or u in won)
+
+
+def _host_quota_rows(df, cap):
+    from webextract import urls
+    return sorted((r["url"], r["host"], r["tag"]) for r in
+                  urls.host_quota(df, max_per_host=cap).collect())
+
+
+def test_host_quota_above_window_limit_threshold_matches_reference(spark):
+    """A quota above ``windowGroupLimitThreshold`` plans no partial
+    top-k: only the salt bounds the work, and the rows must still be
+    exact."""
+    import random
+
+    cap = 1001
+    threshold = int(spark.conf.get(
+        "spark.sql.optimizer.windowGroupLimitThreshold"))
+    assert cap > threshold
+    rnd = random.Random(7)
+    rows = [(f"https://big.org/p/{i:05d}", "big.org", f"b{i}")
+            for i in range(2500)]
+    rows += [rows[i][:2] + ("dup",) for i in (0, 999, 1000, 1001, 2400)]
+    rows += [(f"https://s{k}.org/{i}", f"s{k}.org", "s")
+             for k in range(3) for i in range(4)]
+    rows += [(f"rel/{i}", "", "x") for i in range(5)] + [("rel/0", "", "y")]
+    rnd.shuffle(rows)
+    df = spark.createDataFrame([(u, t) for u, _, t in rows],
+                               "url string, tag string")
+    from webextract import urls
+    plan = urls.host_quota(df, max_per_host=cap)._jdf.queryExecution() \
+        .executedPlan().toString()
+    assert "WindowGroupLimit" not in plan, plan
+    got = _host_quota_rows(df, cap)
+    assert got == _host_quota_reference(rows, cap)
+    assert sum(1 for _, h, _ in got if h == "big.org") == cap + 3
+
+
+def test_host_quota_duplicates_over_partitions_match_reference(spark):
+    """Duplicate quotable urls (winning and losing), duplicate exempt
+    urls, and a host whose rows are spread over 8 input partitions."""
+    rows = [(f"https://big.org/p/{i:03d}", "big.org", f"t{i}")
+            for i in range(64)]
+    rows += [(f"https://big.org/p/{i:03d}", "big.org", f"d{i}")
+             for i in (0, 4, 5, 63)]
+    rows += [("https://small.org/a", "small.org", "1"),
+             ("https://small.org/a", "small.org", "2")]
+    rows += [("no-scheme", "", "e1"), ("no-scheme", "", "e2"),
+             ("mailto:x@y.zz", "", "e3")]
+    df = spark.createDataFrame([(u, t) for u, _, t in rows],
+                               "url string, tag string").repartition(8)
+    spread = df.filter(F.col("url").startswith("https://big.org")) \
+        .select(F.spark_partition_id()).distinct().count()
+    assert spread == 8
+    for cap in (1, 5):
+        assert _host_quota_rows(df, cap) == _host_quota_reference(rows, cap)
+
+
+def test_host_quota_rejects_empty_quota(spark):
+    from webextract import urls
+    df = spark.createDataFrame([("https://h.org/a",)], "url string")
+    with pytest.raises(ValueError):
+        urls.host_quota(df, max_per_host=0)
 
 
 def test_normalize_nfc_reorders_and_composes(spark):

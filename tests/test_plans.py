@@ -4,6 +4,7 @@ column-pruned scan into a full-width read that only hurts at 100 TB.
 """
 
 import io
+import re
 from contextlib import redirect_stdout
 
 import pyspark.sql.functions as F
@@ -95,7 +96,6 @@ def test_salt_never_hashes_payload_columns(spark, pages_parquet):
     from webextract import skew, urls
 
     pages = spark.read.parquet(pages_parquet)
-    import re
 
     salted = skew.with_salt(pages, urls.host_of("url"), id_cols=["url"])
     plan = _explain(salted)
@@ -233,7 +233,6 @@ def test_repetition_signals_plan_shape(spark):
     once. Pinned so a change can never silently add a shuffle or a
     second input reference."""
     from webextract import textstats
-    import re
 
     df = spark.createDataFrame(
         [(i, "a b c a b c") for i in range(8)], "doc_id bigint, text string")
@@ -259,9 +258,76 @@ def test_dedup_paragraphs_window_free(spark):
     assert "Window" not in plan, plan
     assert "partial_min" in plan or "partial min" in plan.lower() \
         or "HashAggregate" in plan, plan
-    import re
     assert len(re.findall(r"\(\d+\) Exchange", plan)) <= 2, plan
     assert len(re.findall(r"\(\d+\) \w*Join", plan)) == 0, plan
+
+
+def _rank_limit_levels(df) -> list[tuple[str, bool]]:
+    """One ``(keys, partial)`` pair per window of ``df``'s physical
+    plan, top-down: the partition keys of the Exchange that feeds the
+    window, and whether a ``WindowGroupLimit … Partial`` (a top-k in
+    every map task) sits directly below that Exchange."""
+    lines = df._jdf.queryExecution().executedPlan().toString().splitlines()
+    levels = []
+    for i, ln in enumerate(lines):
+        if "Window [" not in ln:
+            continue
+        j = next(k for k in range(i + 1, len(lines))
+                 if "Exchange hashpartitioning(" in lines[k])
+        keys = re.search(r"hashpartitioning\((.*), \d+\)", lines[j])[1]
+        below = lines[j + 1]
+        levels.append((keys, "WindowGroupLimit" in below
+                       and below.rstrip().endswith("Partial")))
+    return levels
+
+
+def _salt_attr(df) -> str:
+    """The attribute the plan binds to the cap's salt expression."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    m = re.search(r"pmod\(xxhash64\([^()]*\), 1024\) AS (\w+#\d+L?)", plan)
+    assert m, plan
+    return m[1]
+
+
+def _assert_salted_rank_limits(df, key: str):
+    """No unbounded single-task sort of a mega-bucket: exactly two
+    window levels, the first (lower) keyed by the bucket AND the salt,
+    the second by the bucket alone, and each fed by an Exchange with a
+    partial top-k below it."""
+    levels = _rank_limit_levels(df)
+    assert len(levels) == 2, levels
+    (top, top_partial), (first, first_partial) = levels
+    salt = _salt_attr(df)
+    assert first.startswith(key) and salt in first, (first, salt)
+    assert top.startswith(key) and salt not in top, (top, salt)
+    assert top_partial and first_partial, levels
+
+
+def test_cap_buckets_salted_rank_limits(spark):
+    """cap_buckets is two rank-limited windows whose first level holds
+    the 1024-way salt, so no task ranks a whole degenerate bucket."""
+    from webextract import dedup
+
+    df = spark.createDataFrame(
+        [(i, 0, "k") for i in range(250)],
+        "doc_id bigint, band int, bkey string")
+    capped = dedup.cap_buckets(df, "doc_id", bucket_cap=10)
+    _assert_salted_rank_limits(capped, "band#")
+    plan = _explain(capped)
+    assert "collect_list" not in plan, plan
+
+
+def test_dedup_paragraphs_splits_each_row_once(spark):
+    """Each text is split once; with the default ``min_chars=1`` the
+    paragraph filter is ``x != ''`` and walks no paragraph's length."""
+    from webextract import dedup
+
+    df = spark.createDataFrame(
+        [(i, "a\nb\n\nc") for i in range(8)], "doc_id bigint, text string")
+    plan = dedup.dedup_paragraphs(df)._jdf.queryExecution() \
+        .optimizedPlan().toString()
+    assert plan.count("split(") == 1, plan
+    assert "length(" not in plan, plan
 
 
 def test_hygiene_chain_composition_bounded(spark):
@@ -269,10 +335,15 @@ def test_hygiene_chain_composition_bounded(spark):
     gopher_quality_flags composes into ONE plan without pathological
     recomputation (r4 verdict #7): dedup's sentinel election references
     its input exactly ONCE, so the quota subtree runs once and the only
-    join in the whole chain is the quota's own semi-join; zero windows,
-    zero Python stages. History: 23 exchanges with the winner join
-    (input ×3), 15 after the min-struct election (×2), 8 with the
-    sentinel shape (×1)."""
+    join in the whole chain is the quota's own semi-join; zero Python
+    stages. The plan has 6 exchanges: one per window level of the
+    quota's election, two for its semi-join and two for dedup. Run, the
+    small winner side broadcasts: 5 exchanges and 2 scans (the election
+    and the semi-join's full rows). No exchange keyed by host carries a
+    full row. History: 23 exchanges with the winner join (input ×3), 15
+    after the min-struct election (×2), 8 with the sentinel shape (×1),
+    6 with the rank-limited election and one semi-join (7 run, 3
+    scans, before it)."""
     from webextract import dedup, textstats, urls
 
     docs = spark.createDataFrame(
@@ -280,25 +351,36 @@ def test_hygiene_chain_composition_bounded(spark):
          for i in range(40)],
         "doc_id bigint, url string, text string")
     kept = urls.host_quota(docs, max_per_host=20).select("doc_id", "text")
-    plan = _explain(textstats.gopher_quality_flags(
-        dedup.dedup_paragraphs(kept)))
-    assert "Window" not in plan, plan
+    out = textstats.gopher_quality_flags(dedup.dedup_paragraphs(kept))
+    plan = _explain(out)
     assert "pythonudf" not in plan.lower(), plan
-    import re
-    n_ex = len(re.findall(r"\(\d+\) Exchange", plan))
-    assert n_ex <= 8, n_ex
+    assert len(re.findall(r"\(\d+\) Exchange", plan)) <= 6, plan
     assert len(re.findall(r"\(\d+\) \w*Join", plan)) <= 1, plan
+    shuffles = re.findall(r"\(\d+\) Exchange\nInput \[\d+\]: \[(.*)\]\n"
+                          r"Arguments: hashpartitioning\((.*)\)", plan)
+    for cols, keys in shuffles:
+        if keys.startswith("host#"):
+            assert "text#" not in cols, (cols, keys)
+    out.collect()
+    ran = out._jdf.queryExecution().executedPlan().toString() \
+        .split("== Initial Plan ==")[0]
+    assert ran.count("Exchange hashpartitioning(") <= 5, ran
+    assert ran.count("Scan ") == 2, ran
 
 
-def test_host_quota_window_free(spark):
-    """host_quota delegates to the cascaded salted cap — a mega-host
-    must never route through a single task's window sort."""
+def test_host_quota_salted_rank_limits(spark):
+    """host_quota elects through the salted rank-limited cap — a
+    mega-host never routes through a single task's sort — and joins
+    the winners back once, by url."""
     from webextract import urls
 
     df = spark.createDataFrame(
         [(f"https://big.org/p/{i}",) for i in range(64)], "url string")
-    plan = _explain(urls.host_quota(df, max_per_host=4))
-    assert "Window" not in plan, plan
+    quota = urls.host_quota(df, max_per_host=4)
+    _assert_salted_rank_limits(quota, "host#")
+    plan = _explain(quota)
+    assert len(re.findall(r"\(\d+\) \w*Join", plan)) == 1, plan
+    assert "Union" not in plan, plan
 
 
 def test_decontaminate_broadcasts_benchmark(spark):

@@ -31,9 +31,9 @@ Hot buckets (a dense embedding cluster collapsing into one bucket) are
 the quadratic hazard at 100 TB: ``bucket_cap`` rank-limits the CANDIDATE
 side of each bucket deterministically (by id) so one degenerate bucket
 cannot go O(b²); query vectors are never dropped, they just rank against
-the capped candidate set. The cap itself is the aggregation-shaped
-two-phase cap shared with the MinHash path (dedup.cap_buckets) — no
-single-task window sort over a degenerate bucket.
+the capped candidate set. The cap itself is the salted two-level
+rank-limited cap shared with the MinHash path (dedup.cap_buckets) — no
+single task sorts a whole degenerate bucket.
 
 Entry points persist fan-out intermediates and attach them to the result
 via cache.track; call ``cache.release(result)`` after materializing to
@@ -170,7 +170,7 @@ def lsh_buckets(emb: DataFrame, id_col: str = "vec_id",
 
 def _cap(bkt: DataFrame, id_col: str,
          bucket_cap: int | None) -> DataFrame:
-    """Aggregation-shaped candidate cap per bucket (smallest ids kept) —
+    """Salted candidate cap per bucket (smallest ids kept) —
     dedup.cap_buckets with the single-column bucket key."""
     return cap_buckets(bkt, id_col, bucket_cap, key_cols=("bucket",))
 

@@ -33,19 +33,16 @@ from __future__ import annotations
 import warnings
 
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.storagelevel import StorageLevel
 
 from .cache import track as _track
 
 DEFAULT_BUCKET_CAP = 100
-# salt fan-outs of the multi-phase bucket cap (coarse → fine). Phase i
-# caps each (bucket, salt_i) sub-group to ``cap`` smallest ids; the
-# final unsalted phase caps the <= salts[-1]*cap survivors. Bounds BOTH
-# rows-per-task AND the collect_list aggregation buffer (which cannot
-# spill within one group): max group buffer ≈
-# max(bucket_size/salts[0], salts[i]*cap/salts[i+1], salts[-1]*cap).
-CAP_SALT_LEVELS = (1024, 32)
+# salt fan-out of the first cap level: the ids of one bucket are ranked
+# in this many (bucket, salt) groups before the unsalted level, so no
+# task sorts more than ~bucket/CAP_SALT rows of one bucket.
+CAP_SALT = 1024
 
 
 def _persist(df: DataFrame) -> DataFrame:
@@ -183,14 +180,18 @@ def dedup_paragraphs(df: DataFrame, id_col: str = "doc_id",
     n_paras_kept)`` — ``text`` is the deduplicated reassembly (empty
     string when every paragraph was seen earlier)."""
     from .textstats import _lit_re
-    parts = F.filter(
+    # split once: `_parts` feeds both the count and the explode; the
+    # default needs no per-paragraph length() walk
+    keep = ((lambda x: x != "") if min_chars == 1
+            else (lambda x: F.length(x) >= min_chars))
+    parts = df.select(F.col(id_col), F.filter(
         F.split(F.coalesce(F.col(text_col), F.lit("")), _lit_re(sep)),
-        lambda x: F.length(x) >= min_chars)
-    combo = F.concat(F.array(F.lit("")), parts)
-    keyed = df.select(
+        keep).alias("_parts"))
+    keyed = parts.select(
         F.col(id_col),
-        F.size(parts).cast("bigint").alias("_np"),
-        F.posexplode(combo).alias("_pos", "_para"),
+        F.size("_parts").cast("bigint").alias("_np"),
+        F.posexplode(F.concat(F.array(F.lit("")), F.col("_parts")))
+        .alias("_pos", "_para"),
     ).withColumn(
         "_pkey",
         # 'S:'-prefixed keys never collide with md5 keys: an md5 is hex
@@ -309,45 +310,40 @@ def lsh_bands(sig: DataFrame, id_col: str = "doc_id", n_hashes: int = 4,
 def cap_buckets(bands: DataFrame, id_col: str = "doc_id",
                 bucket_cap: int | None = DEFAULT_BUCKET_CAP,
                 key_cols: tuple[str, ...] = ("band", "bkey")) -> DataFrame:
-    """Deterministically keep the ``bucket_cap`` smallest members (by id)
-    of each bucket — bounds any bucket's pair count at O(cap²) no matter
-    how degenerate the dup cluster.
+    """Deterministically keep, per bucket (``key_cols``), every row whose
+    id is among the ``bucket_cap`` smallest distinct ids of its bucket
+    — bounds any bucket's pair count at O(cap²) no matter how degenerate
+    the dup cluster. Rows sharing an id rank together: all of them stay
+    or all go (LSH bands and ANN buckets hold each id once). Extra
+    columns ride along.
 
-    Aggregation-shaped, not a window (VERDICT r2 #6): a ``row_number``
-    window routes ALL members of a degenerate bucket through one task's
-    sort. Here the cap is a cascade of hash aggregates over
-    ``CAP_SALT_LEVELS`` salt fan-outs: each phase salts members by
-    xxhash64(id) and keeps each sub-group's ``cap`` smallest (parallel
-    across tasks — the overall cap smallest are necessarily among every
-    phase's survivors); the final unsalted phase caps the few that
-    remain. Multi-level because a single collect_list group buffer
-    cannot spill: with levels (1024, 32) no group ever collects more
-    than ~max(bucket/1024, 32·cap) structs, so a 10M-member degenerate
-    bucket costs ~10k-element buffers, never one giant array. All
-    phases get map-side partial aggregation. Extra columns ride along
-    in the sort struct (id leads, so ordering semantics are unchanged
-    vs the old window)."""
+    Two ``dense_rank`` windows, each filtered at ``<= bucket_cap``: the
+    first keyed by ``(key_cols, pmod(xxhash64(id), CAP_SALT))``, the
+    second by ``key_cols``. The cap smallest ids of a bucket are among
+    the cap smallest of their own salt group, so the first level loses
+    none of them. Spark plans each level as ``WindowGroupLimit``
+    Partial → Exchange → Final (a top-k in every map task before the
+    shuffle) while ``bucket_cap`` is within
+    ``spark.sql.optimizer.windowGroupLimitThreshold``. Without that
+    partial limit the salt alone bounds the work: a first-level task
+    sorts at most bucket/CAP_SALT rows of one bucket, and a second-level
+    key sees at most CAP_SALT·cap distinct ids — and window sorts spill.
+
+    History: VERDICT r2 #6 rejected an unsalted ``row_number`` window,
+    which routes ALL members of a degenerate bucket through one task's
+    sort. Its replacement was a cascade of salted ``collect_list``
+    aggregations over two salt levels (1024, 32), whose group buffers
+    cannot spill. The salted windows keep its bound, spill where it
+    could not, and drop the struct packing and a level."""
     if bucket_cap is None:
         return bands
-    keys = list(key_cols)
-    others = [c for c in bands.columns if c not in {*keys, id_col}]
-    payload = F.struct(F.col(id_col).alias("_id"),
-                       *[F.col(c) for c in others])
-    kept = F.slice(F.array_sort(F.collect_list("_p")), 1, bucket_cap)
-    cur = bands.select(*keys, payload.alias("_p"))
-    for salts in CAP_SALT_LEVELS:
-        cur = (
-            cur.withColumn(
-                "_salt",
-                F.pmod(F.xxhash64(F.col("_p._id").cast("string")),
-                       F.lit(salts)))
-            .groupBy(*keys, "_salt").agg(kept.alias("_ids"))
-            .select(*keys, F.explode("_ids").alias("_p"))
-        )
-    out = (cur.groupBy(*keys).agg(kept.alias("_ids"))
-           .select(*keys, F.explode("_ids").alias("_p")))
-    return out.select(*keys, F.col("_p._id").alias(id_col),
-                      *[F.col(f"_p.{c}").alias(c) for c in others])
+    salt = F.pmod(F.xxhash64(id_col), F.lit(CAP_SALT))
+    for part in ([*key_cols, salt], key_cols):
+        rank = F.dense_rank().over(
+            Window.partitionBy(*part).orderBy(id_col))
+        bands = bands.withColumn("_rk", rank).filter(
+            F.col("_rk") <= bucket_cap)
+    return bands.drop("_rk")
 
 
 def candidate_pairs(sig: DataFrame, id_col: str = "doc_id",

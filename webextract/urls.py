@@ -107,36 +107,40 @@ def host_quota(df: DataFrame, url_col: str = "url",
     pooling them under one '' bucket would silently discard all but
     ``max_per_host`` of them.
 
-    Scale shape: the cap runs on a slim ``(host, url)`` projection
-    via ``dedup.cap_buckets`` — a cascade of salted hash
-    aggregations, NOT a per-host window, so a host owning 10⁸ pages
-    never routes through a single task's sort, and the collect_list
-    buffers hold URL strings, never payload columns (capping the full
-    row would buffer whole documents in one non-spillable
-    aggregation). Winners semi-join back to the full rows — duplicate
-    URLs therefore count ONCE toward the quota and travel together.
-    Extra columns ride along; adds ``host_col``.
+    Scale shape: one election on a slim ``(host, url, _exempt)``
+    projection via ``dedup.cap_buckets``, then one semi-join of the
+    winning urls back to the full rows. ``_exempt`` is the url itself
+    when the host is '' and NULL otherwise, so the election is keyed by
+    ``(host, _exempt)``: every exempt url is its own group and ranks
+    first, and needs no second pass. ``dense_rank`` counts distinct
+    urls, so duplicate URLs count ONCE toward the quota and travel
+    together. The cap is two salted rank-limited windows, never one
+    per-host window: without relying on Spark's partial top-k, a
+    first-level task sorts at most host/1024 slim rows and a
+    second-level key sees at most 1024·max_per_host distinct urls, and
+    both sorts spill. Full rows are never grouped by host; only the
+    semi-join shuffles them, keyed by url. Extra columns ride along;
+    adds ``host_col``.
 
     Composition note: this op references its input subtree TWICE (the
     slim election + the full-row semi-join side) — deliberate, because
-    the single-reference alternative would buffer payload columns in
-    the cap's non-spillable aggregation. Over a parquet scan the
-    second reference is a cheap pruned re-scan; over an EXPENSIVE
-    lazy upstream, checkpoint/persist the input first (the measured
-    cost of multiply-referenced upstreams is in BENCH.md's composed-
-    chain A/B; dedup_paragraphs and repetition_signals are
-    single-reference and compose freely)."""
+    the single-reference alternative would carry payload columns
+    through the per-host ranking. Over a parquet scan the second
+    reference is a cheap pruned re-scan; over an EXPENSIVE lazy
+    upstream, checkpoint/persist the input first (the measured cost of
+    multiply-referenced upstreams is in BENCH.md's composed-chain A/B;
+    dedup_paragraphs and repetition_signals are single-reference and
+    compose freely)."""
     from .dedup import cap_buckets
+    if max_per_host < 1:
+        raise ValueError("max_per_host must be >= 1")
     h = df.withColumn(host_col, host_of(url_col))
-    quotable = h.filter(F.col(host_col) != "")
-    winners = cap_buckets(
-        quotable.select(host_col, url_col).distinct(),
-        id_col=url_col, bucket_cap=max_per_host, key_cols=(host_col,),
-    ).select(url_col)
-    return (
-        quotable.join(winners, url_col, "left_semi")
-        .unionByName(h.filter(F.col(host_col) == ""))
-    )
+    slim = h.select(host_col, url_col,
+                    F.when(F.col(host_col) == "", F.col(url_col))
+                    .alias("_exempt"))
+    winners = cap_buckets(slim, id_col=url_col, bucket_cap=max_per_host,
+                          key_cols=(host_col, "_exempt")).select(url_col)
+    return h.join(winners, url_col, "left_semi")
 
 
 # The DuckDB replay of the same seven steps lives in __spark_entry__
